@@ -1,37 +1,36 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, sum, xxhash64}
+import graft.GraftSession.{checksum, median, medianOf, sample}
 
 /** Benchmark main: runs every declared query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line (driver contract).
   *
-  * Each query is consumed through a row checksum (xxhash64 over every
-  * output column, summed), NOT count(): under a bare count Catalyst
+  * Each query is consumed through [[GraftSession.checksum]] (xxhash64 over
+  * every output column, summed), NOT count(): under a bare count Catalyst
   * legitimately prunes unreferenced columns and whole provably-
   * cardinality-neutral joins — q69's entire rebuild stage, for example —
   * so count-based timings over-report. The checksum forces every output
   * cell to materialize; only the final presentation ORDER BY is still
   * elided (the checksum is order-insensitive), which matches how Verify
-  * is the sorted-output path. The legacy count() consumer is kept as a
-  * secondary metric so rounds benched before the checksum change stay
-  * comparable.
+  * is the sorted-output path.
   *
-  * The checksum consumer is sampled SPARK_GRAFT_BENCH_SAMPLES times
-  * (default 3; r17: 2 when the first sample costs >= 8 s — noise is
-  * proportionally irrelevant on the heavy tail, and the tail was most
-  * of the r16 budget overrun) and the MEDIAN is reported; the legacy
-  * count() consumer runs ONE sample (a secondary continuity metric,
-  * declared incomparable with checksum in the record). A single sample is
-  * hostage to one-time costs that are not the query's plan — codegen
-  * compilation of fresh expression trees, a GC pause inherited from the
-  * previous query, broadcast cleanup — and one contaminated sample then
-  * becomes the official record (this exactly happened in round 2: six
+  * The consumer is sampled SPARK_GRAFT_BENCH_SAMPLES times (default 3;
+  * r17: 2 when the first sample costs >= 8 s — noise is proportionally
+  * irrelevant on the heavy tail, and the tail was most of the r16 budget
+  * overrun) and the MEDIAN is reported. A single sample is hostage to
+  * one-time costs that are not the query's plan — codegen compilation of
+  * fresh expression trees, a GC pause inherited from the previous query,
+  * broadcast cleanup — and one contaminated sample then becomes the
+  * official record (this exactly happened in round 2: six
   * custom-expression-heavy queries read 4-10x their reproducible times
-  * in one driver sample). Between samples the cache is cleared and the
-  * JVM gets an explicit System.gc() breather so each sample starts from
-  * the same heap state and no query is billed for its predecessor's
-  * garbage.
+  * in one driver sample). Each sample is one [[GraftSession.sample]]:
+  * cache scope, cleared caches and an explicit System.gc() breather, so
+  * each sample starts from the same heap state.
+  *
+  * A query whose sample throws is FAILED, never timed: it is named in
+  * "failed", not sampled again, left out of "value", the file record's
+  * "queries" map and its JSONL line, and its index-aligned "checksum_ms"
+  * entry is -1 — a failure must never read as a fast query.
   *
   * r15 verdict #1 — the bench must TERMINATE inside the driver's wall
   * budget and FAIL OPEN when it can't (the r15 driver run was rc=124
@@ -45,9 +44,9 @@ import org.apache.spark.sql.functions.{col, sum, xxhash64}
   *    BENCH_PARTIAL.jsonl), so even a timed-out run leaves per-query
   *    data instead of nothing;
   *  - a soft wall budget (SPARK_GRAFT_BENCH_BUDGET_SEC, default 2100 s
-  *    of bench wall) degrades remaining queries to ONE sample per
-  *    consumer once crossed (recorded in "degraded"), and skips the
-  *    post-suite isolated re-runs — the metric line always prints.
+  *    of bench wall) degrades remaining queries to ONE sample once
+  *    crossed (recorded in "degraded"), and skips the post-suite
+  *    isolated re-runs — the metric line always prints.
   */
 object Bench {
 
@@ -56,74 +55,56 @@ object Bench {
     * ms arrays + named isolated/drift maps + a 130-char note — outgrew
     * the window and the fallback dropped BOTH arrays, leaving the
     * driver's PERF comparison empty). Fix: stdout carries ONLY the
-    * checksum consumer's ms array plus the scalar fields; everything
-    * else (legacy-count map, isolated/drift triage, prior/anchor
-    * pointers, the consumer-comparability note) lives in the FILE
+    * checksum ms array plus the scalar fields; everything else
+    * (isolated/drift triage, prior/anchor pointers) lives in the FILE
     * record, which survives any clipping. If the suite ever grows the
     * plain array past 1950 chars, the array degrades to a base-36
     * dot-separated string (≤ 4 chars per 6-digit-ms entry), never to
     * nothing — asserted against worst-case entries in PropertySpec.
+    *
+    * `times` holds one (name, median seconds) per query in ascii order,
+    * None for a failed query: "value" sums the timed queries only,
+    * "failed" names the rest, and their "checksum_ms" entries are -1.
     */
-  private[graft] def stdoutRecord(total: Double, nQueries: Int,
-      queriesFile: String, checksumMs: Seq[Long], failedJson: String,
-      nDegraded: Int, wallS: Double, sfDir: String, samples: Int): String = {
-    def r3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val head = s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
-      s""""consumer":"checksum","n_queries":$nQueries,""" +
+  private[graft] def stdoutRecord(times: Seq[(String, Option[Double])],
+      queriesFile: String, nDegraded: Int, wallS: Double, sfDir: String,
+      samples: Int): String = {
+    val head = s"""{"metric":"total","value":${r3(times.flatMap(_._2).sum)},""" +
+      s""""unit":"sec","consumer":"checksum","n_queries":${times.size},""" +
       s""""queries_file":"$queriesFile","""
-    val tail = s""""failed":$failedJson,"n_degraded":$nDegraded,""" +
+    val tail = s""""failed":${failedJson(times)},"n_degraded":$nDegraded,""" +
       s""""bench_wall_s":${r3(wallS)},"sf":"$sfDir","samples":$samples}"""
-    val plain =
-      head + s""""checksum_ms":${checksumMs.mkString("[", ",", "]")},""" + tail
+    val ms = checksumMs(times)
+    val plain = head + s""""checksum_ms":${ms.mkString("[", ",", "]")},""" + tail
     if (plain.length <= 1950) plain
     else {
-      val b36 = head + s""""checksum_ms_b36":"${checksumMs
+      val b36 = head + s""""checksum_ms_b36":"${ms
           .map(java.lang.Long.toString(_, 36)).mkString(".")}",""" + tail
       if (b36.length <= 1950) b36 else head + tail
     }
   }
 
-  def main(args: Array[String]): Unit = {
+  private def r3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+
+  private def checksumMs(times: Seq[(String, Option[Double])]): Seq[Long] =
+    times.map(_._2.fold(-1L)(t => math.round(t * 1000)))
+
+  private def failedJson(times: Seq[(String, Option[Double])]): String =
+    times.collect { case (n, None) => "\"" + n + "\"" }.mkString("[", ",", "]")
+
+  def main(args: Array[String]): Unit = GraftSession.main { spark =>
     val wall0 = System.nanoTime()
     def wallSec: Double = (System.nanoTime() - wall0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val samples = sys.env.getOrElse("SPARK_GRAFT_BENCH_SAMPLES", "3").toInt
     val budgetSec =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "2100").toDouble
     // the bench-only layout memo: sound here because every query-path
     // layout builder is deterministic per (tag, sfDir) within one JVM
     System.setProperty(graft.operators.Footer.LayoutMemoProp, "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // driver heap is set at JVM launch (build.sbt javaOptions -Xmx from
-      // SPARK_DRIVER_MEM); a spark.driver.memory conf here would be a no-op
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN (r15 verdict #7): the driver's 2000-char stderr
-    // tail was 100% WindowExec partition warnings (the documented
-    // bounded-histogram SinglePartition windows), burying the record.
-    spark.sparkContext.setLogLevel("ERROR")
     // Untimed JVM/codegen/parquet-footer warmup so the alphabetically
     // first query doesn't absorb one-time session costs.
     Tables.all.foreach(t => Tables(spark, sfDir, t).count())
-
-    var failed = Set.empty[String]
-
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.length % 2 == 1) s(s.length / 2)
-      else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-    }
-
-    def checksum(df: DataFrame): Unit =
-      df.select(xxhash64(df.columns.map(col): _*).as("h")).agg(sum("h")).head()
 
     // Optional comma-separated query-name filter for targeted local
     // iteration; the driver leaves it unset and benches everything.
@@ -131,26 +112,6 @@ object Bench {
       .map(_.split(",").map(_.trim).toSet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    // One timed sample: build the plan fresh, consume it, then drop any
-    // query-local persists and give the collector a breather so the next
-    // sample (or query) isn't billed for its predecessor's garbage.
-    def sample(name: String, fn: (SparkSession, String) => DataFrame)(
-        consume: DataFrame => Unit): Double = {
-      val t0 = System.nanoTime()
-      var t = 0.0
-      // the scope drops this sample's persisted intermediates on close;
-      // t is taken before the close so release cost isn't billed to the
-      // query (same accounting as the pre-scope releaseAll)
-      CachePool.scoped {
-        try consume(fn(spark, sfDir))
-        catch { case _: Throwable => failed += name }
-        t = (System.nanoTime() - t0) / 1e9
-      }
-      spark.catalog.clearCache()
-      System.gc()
-      t
-    }
-    def r3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     // ---- fail-open incremental record (r15 verdict #1b) ---------------
     // One JSONL line per FINISHED query, to stdout AND an append-only
     // sidecar file: a run the driver kills at its wall limit still
@@ -170,31 +131,30 @@ object Bench {
     var degraded = List.empty[String]
     // r17 (r16 verdict #8): fit the driver budget WITH multi-sample
     // medians — the r16 run degraded 111/277 queries to 1 sample after
-    // the 2100 s wall. Three structural cuts, each recorded honestly:
-    //  - the legacy count() consumer runs ONE sample always (it is a
-    //    secondary continuity metric the note already declares
-    //    incomparable with checksum; 3 samples of it bought nothing);
-    //  - a query whose FIRST checksum sample costs >= HeavySampleSec
-    //    takes one confirming sample instead of two (even-length median
-    //    = the mean of both) — the multi-sample defense exists for
-    //    contamination NOISE, which is proportionally irrelevant at
-    //    10+ s, and the heavy tail was most of the r16 overrun;
-    //  - the budget degrade tier is unchanged but should now be the
-    //    exception again (per-query "samples" in the JSONL record).
+    // the 2100 s wall. A query whose FIRST sample costs >= HeavySampleSec
+    // takes one confirming sample instead of two — the multi-sample
+    // defense exists for contamination NOISE, which is proportionally
+    // irrelevant at 10+ s, and the heavy tail was most of the r16
+    // overrun; the budget degrade tier should stay the exception
+    // (per-query "samples" in the JSONL record).
     val HeavySampleSec =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_HEAVY_SEC", "8").toDouble
     val results = selected.zipWithIndex.map { case ((name, fn), qi) =>
       // soft wall budget (r15 verdict #1c): past it, remaining queries
-      // run ONE sample per consumer — a thinner but honest record beats
-      // a timeout that yields nothing
+      // run ONE sample — a thinner but honest record beats a timeout
+      // that yields nothing
       val over = wallSec > budgetSec
       if (over) degraded ::= name
-      val checksumSamples =
-        if (over) Seq(sample(name, fn)(checksum))
-        else {
-          val first = sample(name, fn)(checksum)
-          val more = if (first >= HeavySampleSec) 1 else samples - 1
-          first +: Seq.fill(more)(sample(name, fn)(checksum))
+      val taken = scala.collection.mutable.ArrayBuffer.empty[Double]
+      def want: Int =
+        if (over) 1
+        else if (taken.headOption.exists(_ >= HeavySampleSec)) 2
+        else samples
+      var ok = true
+      while (ok && taken.size < want)
+        sample(fn(spark, sfDir))(checksum) match {
+          case Some(t) => taken += t
+          case None    => ok = false
         }
       // heavy tier (exactly 2 samples): report the MIN — the first
       // sample carries this composition's one-time codegen compile
@@ -202,15 +162,16 @@ object Bench {
       // which is exactly what the 3-sample MEDIAN discards for normal
       // queries; a 2-sample mean would bill half the compile to the
       // plan. Full-sample queries keep the median.
-      val tChecksum =
-        if (checksumSamples.size == 2) checksumSamples.min
-        else median(checksumSamples)
-      val tCount = sample(name, fn)(_.count())
-      emitPartial(s"""{"q":"$name","checksum_s":${r3(tChecksum)},""" +
-        s""""count_s":${r3(tCount)},"samples":${checksumSamples.size},""" +
+      val t =
+        if (!ok) None
+        else if (taken.size == 2) Some(taken.min)
+        else Some(median(taken.toSeq))
+      val timing = t.fold(""""failed":true,""")(v => s""""checksum_s":${r3(v)},""")
+      emitPartial(s"""{"q":"$name",$timing"samples":${taken.size},""" +
         s""""done":${qi + 1},"of":${selected.size},"wall_s":${r3(wallSec)}}""")
-      (name, tChecksum, tCount)
+      (name, t)
     }
+    val timed = results.collect { case (n, Some(t)) => (n, t) }
 
     // ---- isolated-median re-run of round-over-round drifters ----------
     // In-suite totals inflate with suite SIZE (shared-JVM GC pressure:
@@ -248,78 +209,57 @@ object Bench {
     val anchorPath =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_ANCHOR", "BENCH_ANCHOR.json")
     val anchor = loadRecord(anchorPath)
-    val priorDrifters = results
-      .flatMap { case (name, tc, _) =>
-        prior.get(name)
-          .filter(p => p > 0 && tc >= 0.5 && tc / p >= 1.5)
-          .map(p => (name, tc / p))
-      }
-      .sortBy(-_._2).take(10)
-    val anchorDrifters = results
-      .flatMap { case (name, tc, _) =>
-        anchor.get(name)
-          .filter(a => a > 0 && tc >= 0.5 && tc / a >= 2.0)
-          .map(a => (name, tc / a))
-      }
-      .sortBy(-_._2).take(10)
+    def drifters(ref: Map[String, Double], gate: Double): Seq[(String, Double)] =
+      timed
+        .flatMap { case (name, tc) =>
+          ref.get(name)
+            .filter(p => p > 0 && tc >= 0.5 && tc / p >= gate)
+            .map(p => (name, tc / p))
+        }
+        .sortBy(-_._2).take(10)
+    val priorDrifters = drifters(prior, 1.5)
+    val anchorDrifters = drifters(anchor, 2.0)
       .filterNot { case (n, _) => priorDrifters.exists(_._1 == n) }
     // past the wall budget the isolated re-runs are the first diagnostic
     // to shed — they are triage data, not the record (r15 verdict #1c)
-    val drifters =
+    val toIsolate =
       if (wallSec > budgetSec) Seq.empty else priorDrifters ++ anchorDrifters
-    val isolated = drifters.map { case (name, ratio) =>
+    val isolated = toIsolate.flatMap { case (name, ratio) =>
       // memoized registrations (q201/q214/q223/... via CachePool.memo)
       // would otherwise hand the isolated column a localCheckpoint READ
       // where the in-suite column measured a BUILD — clear memos so both
       // columns price the same work (the ScalingBench discipline)
-      val t = median(Seq.fill(samples)({
+      medianOf(samples) {
         CachePool.memoClear()
-        sample(name, SparkEntry.queries(name))(checksum)
-      }))
-      (name, t, ratio)
+        sample(SparkEntry.queries(name)(spark, sfDir))(checksum)
+      }.map(t => (name, t, ratio))
     }
     // The driver's stdout scrape keeps only the LAST 2000 chars of the
     // line, so a full named per-query map (8+ KB at 162 queries) gets
-    // clipped — and WHICH map survives the clip depends on print order.
-    // That exact failure produced r9's phantom "regression": r8's tail
-    // kept the END of the line (the legacy count() map), r9's compacted
-    // line printed only the checksum map, and the two consumers got
-    // compared against each other (count() lets Catalyst prune the
-    // expensive expression work; checksum forces it — a 4-9x built-in
-    // gap on expression-heavy queries). The stdout line is therefore
-    // now GUARANTEED to fit the scrape window: totals + failures +
-    // BOTH consumer columns as integer-millisecond arrays index-aligned
-    // with the ascii-sorted query names (~4 chars/query instead of ~30),
-    // each explicitly labeled with its consumer. The named full-precision
-    // maps live in the FILE record below, which survives any clipping.
-    def json(sel: ((String, Double, Double)) => (String, Double)): String =
-      results.map(sel).map { case (k, v) => "\"" + k + "\":" + r3(v) }
-        .mkString("{", ",", "}")
-    def msArray(sel: ((String, Double, Double)) => Double): String =
-      results.map(sel).map(v => math.round(v * 1000).toString)
-        .mkString("[", ",", "]")
-    val qs = json(r => (r._1, r._2))
-    val qsCount = json(r => (r._1, r._3))
-    val total = results.map(_._2).sum
-    val totalCount = results.map(_._3).sum
-    val failedJson = failed.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // named full-precision isolated columns (small: <= 10 movers), placed
-    // in both records — they ride the tail, which the clip fallback keeps
-    // when it drops the big ms arrays
-    val isolatedJson = isolated
-      .map { case (n, t, r) => "\"" + n + "\":" + r3(t) }
-      .mkString("{", ",", "}")
-    val driftJson = isolated
-      .map { case (n, _, r) => "\"" + n + "\":" + r3(r) }
-      .mkString("{", ",", "}")
-    val anchorDriftJson = anchorDrifters
-      .map { case (n, r) => "\"" + n + "\":" + r3(r) }
-      .mkString("{", ",", "}")
+    // clipped. The stdout line is therefore GUARANTEED to fit the scrape
+    // window (see stdoutRecord): totals + failures + the checksum column
+    // as an integer-millisecond array index-aligned with the ascii-sorted
+    // query names (~4 chars/query instead of ~30). The named
+    // full-precision maps live in the FILE record below, which survives
+    // any clipping.
+    def json(kvs: Seq[(String, Double)]): String =
+      kvs.map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
+    // named full-precision isolated columns (small: <= 10 movers)
+    val isolatedJson = json(isolated.map { case (n, t, _) => (n, t) })
+    val driftJson = json(isolated.map { case (n, _, r) => (n, r) })
+    val anchorDriftJson = json(anchorDrifters)
     // the stdout line must stay inside the scrape window — only the
     // degraded COUNT rides it; the full name list lands in the file
     val degradedJson =
       degraded.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val tail = s""""value_legacy_count":${r3(totalCount)},"failed":$failedJson,""" +
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
+    val stdoutLine =
+      stdoutRecord(results, out, degraded.size, wallSec, sfDir, samples)
+    val fileLine = s"""{"metric":"total","value":${timed.map(_._2).sum},""" +
+      s""""unit":"sec","queries":${json(timed)},"degraded":$degradedJson,""" +
+      s""""checksum_ms":${checksumMs(results).mkString("[", ",", "]")},""" +
+      s""""note":"checksum_ms aligns with ascii-sorted query names; -1 marks a failed query",""" +
+      s""""failed":${failedJson(results)},""" +
       s""""isolated":$isolatedJson,"drift_in_suite":$driftJson,""" +
       s""""drift_vs_anchor":$anchorDriftJson,""" +
       s""""prior":"${if (prior.isEmpty) "" else priorPath}",""" +
@@ -327,17 +267,7 @@ object Bench {
       s""""n_degraded":${degraded.size},"budget_sec":${r3(budgetSec)},""" +
       s""""bench_wall_s":${r3(wallSec)},""" +
       s""""sf":"$sfDir","samples":$samples,""" +
-      s""""legacy_count_samples":1,"heavy_sample_sec":${r3(HeavySampleSec)}"""
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
-    // r18 (r17 verdict #1): the stdout line carries ONLY the checksum ms
-    // array + scalars — sized to the scrape window by construction (see
-    // stdoutRecord). The named maps, the legacy-count column, the
-    // isolated/drift triage and the consumer-comparability note all live
-    // in the file record below.
-    val stdoutLine = stdoutRecord(total, results.size, out,
-      results.map(r => math.round(r._2 * 1000)), failedJson,
-      degraded.size, wallSec, sfDir, samples)
-    val fileLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_legacy_count":$qsCount,"degraded":$degradedJson,"checksum_ms":${msArray(_._2)},"legacy_count_ms":${msArray(_._3)},"note":"ms arrays align with ascii-sorted query names; legacy_count lets Catalyst prune unconsumed work - never compare it with checksum",$tail}"""
+      s""""heavy_sample_sec":${r3(HeavySampleSec)}}"""
     println(stdoutLine)
     // Also land the FULL record in a file: a file survives any log
     // clipping. Default is cwd-relative — the record belongs to the
@@ -346,11 +276,5 @@ object Bench {
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $out: ${e.getMessage}")
     }
-    spark.stop()
-    // See Verify: the wire stubs' JDK HttpServer dispatcher thread is
-    // non-daemon; exit explicitly so the bench JVM cannot hang after
-    // the JSON line is already out.
-    System.out.flush()
-    sys.exit(0)
   }
 }

@@ -1,34 +1,21 @@
 package graft
 
 /** Optimization-round tooling: dump `.explain("formatted")` for the
-  * named queries to `plans/r18/<query>_<tag>.txt` — the judge-facing
-  * before/after plan artifacts. Usage:
+  * named queries to `<outDir>/<query>_<tag>.txt` — the before/after plan
+  * artifacts of an optimization round (e.g. `plans/r18`). Usage:
   *
-  *   sbt "runMain graft.PlanDump <tag> <sfDir> q216_image_neardup,q233_..."
+  *   sbt "runMain graft.PlanDump <sfDir> <outDir> <tag> q216_image_neardup,q233_..."
   *
   * Reads nothing the bench does not; plans only — though queries whose
   * CONSTRUCTION executes eager seams (the funnel's localCheckpoints,
   * the iterative contractions) do run those jobs while planning.
   */
 object PlanDump {
-  def main(args: Array[String]): Unit = {
-    val tag = args(0)
-    val sfDir = args(1)
-    val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  def main(args: Array[String]): Unit = GraftSession.main { spark =>
+    val Array(sfDir, outArg, tag, queries) = args
+    val names = queries.split(",").map(_.trim).filter(_.nonEmpty)
     System.setProperty(graft.operators.Footer.LayoutMemoProp, "true")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val outDir = java.nio.file.Paths.get("plans", "r18")
+    val outDir = java.nio.file.Paths.get(outArg)
     java.nio.file.Files.createDirectories(outDir)
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)
@@ -37,7 +24,5 @@ object PlanDump {
       java.nio.file.Files.writeString(outDir.resolve(s"${n}_$tag.txt"), txt)
       println(s"[plandump] wrote ${n}_$tag.txt (${txt.length} chars)")
     }
-    spark.stop()
-    sys.exit(0)
   }
 }

@@ -3,7 +3,8 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.functions.{col, sum, xxhash64}
+
+import graft.GraftSession.{checksum, sample}
 
 /** r17 optimization tooling: run ONE query under the bench's exact
   * session shape with a stage listener, and print a per-stage time
@@ -16,23 +17,11 @@ import org.apache.spark.sql.functions.{col, sum, xxhash64}
   *   sbt "runMain graft.ProfileQuery <sfDir> <query> [samples]"
   */
 object ProfileQuery {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = GraftSession.main { spark =>
     val sfDir = args(0)
     val name = args(1)
     val samples = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     System.setProperty(graft.operators.Footer.LayoutMemoProp, "true")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     Tables.all.foreach(t => Tables(spark, sfDir, t).count())
 
     case class StageRec(id: Int, name: String, tasks: Int,
@@ -53,24 +42,15 @@ object ProfileQuery {
       }
     }
 
-    def checksum(df: org.apache.spark.sql.DataFrame): Unit =
-      df.select(xxhash64(df.columns.map(col): _*).as("h")).agg(sum("h")).head()
-
     (1 to samples).foreach { s =>
       stages.clear()
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      CachePool.scoped {
-        checksum(SparkEntry.queries(name)(spark, sfDir))
-      }
-      val t = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.removeSparkListener(listener)
-      spark.catalog.clearCache()
       CachePool.memoClear()
-      System.gc()
+      spark.sparkContext.addSparkListener(listener)
+      val t = sample(SparkEntry.queries(name)(spark, sfDir))(checksum)
+      spark.sparkContext.removeSparkListener(listener)
       Thread.sleep(300) // let late stage-completed events drain
-      println(f"[profile] sample $s: $name total ${t}%.3f s, " +
-        s"${stages.size} stages")
+      println(s"[profile] sample $s: $name total " +
+        t.fold("failed")(v => f"$v%.3f s") + s", ${stages.size} stages")
       stages.sortBy(-_.wallMs).take(25).foreach { r =>
         println(f"[profile]   stage ${r.id}%4d wall=${r.wallMs}%6d ms " +
           f"taskSum=${r.taskMs}%7d ms tasks=${r.tasks}%3d " +
@@ -78,10 +58,8 @@ object ProfileQuery {
           f"sw=${r.shufWrite / 1024}%6d KB  ${r.name.take(80)}%s")
       }
       val wallSum = stages.map(_.wallMs).sum
-      println(f"[profile] stage wall sum ${wallSum / 1000.0}%.3f s " +
-        f"(gaps = driver/planning time: ${t - wallSum / 1000.0}%.3f s)")
+      println(f"[profile] stage wall sum ${wallSum / 1000.0}%.3f s" +
+        t.fold("")(v => f" (gaps = driver/planning time: ${v - wallSum / 1000.0}%.3f s)"))
     }
-    spark.stop()
-    sys.exit(0)
   }
 }

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession.{checksum, medianOf, sample}
 
 /** Scaling-curve harness for the dedup/ANN tier: times q42/q46/q58/q49/
   * q59 on the base corpus and on a synthetic FACTOR× blow-up, so the
@@ -28,19 +30,12 @@ import org.apache.spark.sql.functions._
 object ScalingBench {
   private val Factor = 10
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = GraftSession.main { spark =>
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val workDir =
       if (args.length > 1) args(1) else "/tmp/graft_scale10x"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = spark.sparkContext.defaultParallelism
     val samples = sys.env.getOrElse("SPARK_GRAFT_BENCH_SAMPLES", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-scaling-bench").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR") // r15 verdict #7: WARN spam
-    // (WindowExec partition warnings) floods the driver scrape tails
 
     // ---- build the blown-up corpus (untimed, overwritten each run) ----
     val docs = Tables(spark, baseDir, "documents")
@@ -52,7 +47,7 @@ object ScalingBench {
           w => concat(w, lit(s"~$k")))).as("text"),
         col("lang"), col("source"), col("n_chars"))
     }.reduce(_ unionByName _)
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$workDir/documents.parquet")
 
     val emb = Tables(spark, baseDir, "embeddings")
@@ -65,7 +60,7 @@ object ScalingBench {
             * lit(0.3)).cast("float")).as("embedding"),
         col("label"))
     }.reduce(_ unionByName _)
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$workDir/embeddings.parquet")
 
     // customer (q201): quasi-identifier columns copied VERBATIM — every
@@ -79,7 +74,7 @@ object ScalingBench {
       else cust.select((col("c_custkey") + lit(k * 100000000L)).as("c_custkey"),
         col("c_name"), col("c_nationkey"), col("c_acctbal"), col("c_mktsegment"))
     }.reduce(_ unionByName _)
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$workDir/customer.parquet")
     Tables(spark, baseDir, "nation")
       .write.mode("overwrite").parquet(s"$workDir/nation.parquet")
@@ -96,28 +91,18 @@ object ScalingBench {
         col("ts"), (col("user_id") + lit(k * 100000000L)).as("user_id"),
         col("event_type"), col("value"), col("props"))
     }.reduce(_ unionByName _)
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$workDir/events.parquet")
 
-    // ---- timing: median-of-N checksum consumer (same as Bench) ----
-    def median(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.length / 2) }
-    def checksum(df: DataFrame): Unit =
-      df.select(xxhash64(df.columns.map(col): _*).as("h")).agg(sum("h")).head()
-    def time(fn: => DataFrame): Double = median(Seq.fill(samples) {
+    // ---- timing: median-of-N checksum consumer (same as Bench); None
+    // when a sample fails, printed as "failed" ----
+    def time(fn: => DataFrame): Option[Double] = medianOf(samples) {
       // scaling curves measure BUILDS: drop the session audit memos so a
       // memoized registration (q201/q202/q214/q222/q223/q225) can't turn
       // samples 2..n into checkpoint reads and fake a flat curve
       CachePool.memoClear()
-      val t0 = System.nanoTime()
-      var t = 0.0
-      CachePool.scoped {
-        checksum(fn)
-        t = (System.nanoTime() - t0) / 1e9
-      }
-      spark.catalog.clearCache()
-      System.gc()
-      t
-    })
+      sample(fn)(checksum)
+    }
 
     val tier = Seq("q42_exact_dedup", "q46_minhash_neardup",
       "q58_ngram_jaccard", "q49_ann_lsh", "q59_ann_ivf",
@@ -320,7 +305,7 @@ object ScalingBench {
       val skewDir = s"$workDir-skew"
       spark.read.parquet(s"$workDir/documents.parquet")
         .withColumn("source", lit("src_hot"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$skewDir/documents.parquet")
       Seq(
         "skew1src_q133" ->
@@ -333,27 +318,19 @@ object ScalingBench {
     // row times one full un-memoized pipeline build) — plus the
     // star-contraction ROUND count at both scales, so the r8 verdict's
     // "rounds independent of diameter" claim is a measured number.
-    def componentsBuild(dir: String): (Double, Int) = {
+    def componentsBuild(dir: String): (Option[Double], Int) = {
       var rounds = 0
-      val t = median(Seq.fill(samples) {
-        val t0 = System.nanoTime()
-        var tt = 0.0
-        CachePool.scoped {
-          val (labels, r) = graft.operators.Dedup.connectedComponentsWithRounds(
-            graft.operators.Dedup.minhashNearDupPairs(
-              graft.operators.Dedup.shingled(
-                graft.operators.Dedup.spreadIfUnderSplit(
-                  Tables(spark, dir, "documents")))
-                .filter(size(col("sh")) > 0)),
-            assumeCanonical = true) // same flag the production builder passes
-          checksum(labels)
-          rounds = r
-          tt = (System.nanoTime() - t0) / 1e9
-        }
-        spark.catalog.clearCache()
-        System.gc()
-        tt
-      })
+      val t = medianOf(samples)(sample {
+        val (labels, r) = graft.operators.Dedup.connectedComponentsWithRounds(
+          graft.operators.Dedup.minhashNearDupPairs(
+            graft.operators.Dedup.shingled(
+              graft.operators.Dedup.spreadIfUnderSplit(
+                Tables(spark, dir, "documents")))
+              .filter(size(col("sh")) > 0)),
+          assumeCanonical = true) // same flag the production builder passes
+        rounds = r
+        labels
+      }(checksum))
       (t, rounds)
     }
     val compCurve = if (sys.env.get("SPARK_GRAFT_SCALING_ONLY")
@@ -397,27 +374,24 @@ object ScalingBench {
       }))
     else None
 
-    def js(kvs: Seq[(String, Double)]): String =
-      kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    def v(t: Option[Double]): String = t.fold("\"failed\"")(_.toString)
+    def kvs(ts: Seq[(String, Option[Double])]): Seq[String] =
+      ts.map { case (k, t) => "\"" + k + "\":" + v(t) }
+    def js(ts: Seq[(String, Option[Double])]): String = kvs(ts).mkString("{", ",", "}")
+    def fields(ts: Seq[(String, Option[Double])]): String = kvs(ts).map(_ + ",").mkString
     println(s"""{"metric":"scaling","factor":$Factor,"base":${js(base)},""" +
       s""""blown":${js(blown)},""" +
-      lshFixed16.map(v => s""""blown_q49_fixed16":$v,""").getOrElse("") +
-      ivfFixed16.map(v => s""""blown_q59_fixed_k16":$v,""").getOrElse("") +
-      semScaledK.map(v => s""""blown_q113_scaled_k":$v,""").getOrElse("") +
-      deconFixedBench.map(v =>
-        s""""blown_q139_fixed_bench":$v,""").getOrElse("") +
-      hnegFixedAnchors.map(v =>
-        s""""blown_q140_fixed_anchors":$v,""").getOrElse("") +
-      adcFixedProbes.map(v =>
-        s""""blown_q171_fixed_probes":$v,""").getOrElse("") +
+      fields(lshFixed16.map("blown_q49_fixed16" -> _).toSeq ++
+        ivfFixed16.map("blown_q59_fixed_k16" -> _) ++
+        semScaledK.map("blown_q113_scaled_k" -> _) ++
+        deconFixedBench.map("blown_q139_fixed_bench" -> _) ++
+        hnegFixedAnchors.map("blown_q140_fixed_anchors" -> _) ++
+        adcFixedProbes.map("blown_q171_fixed_probes" -> _)) +
       compCurve.map { case ((tb, rb), (tx, rx)) =>
-        s""""components_base":$tb,"components_blown":$tx,""" +
+        s""""components_base":${v(tb)},"components_blown":${v(tx)},""" +
         s""""components_rounds_base":$rb,"components_rounds_blown":$rx,"""
       }.getOrElse("") +
-      budgetSkew.map { case (k, v) => s""""$k":$v,""" }.mkString +
+      fields(budgetSkew) +
       s""""samples":$samples,"base_dir":"$baseDir"}""")
-    spark.stop()
-    System.out.flush()
-    sys.exit(0) // wire stubs' non-daemon HttpServer thread must not pin the JVM
   }
 }

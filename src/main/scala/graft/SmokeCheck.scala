@@ -2,8 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Temporary driver-mimic smoke: a PLAIN session (none of Verify/Bench's
+/** Driver-mimic smoke: a PLAIN session (none of [[GraftSession.local]]'s
   * confs) calling SparkEntry.entry, exactly like the driver's rows>0 check.
+  * It deliberately does not use GraftSession: the driver hands the library
+  * a bare session, and this main exists to exercise that path (Tables'
+  * runtime conf-set included).
   */
 object SmokeCheck {
   def main(args: Array[String]): Unit = {

@@ -17,7 +17,10 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Runtime confs, set here so any caller-provided session works:
+    // Runtime confs, set here on EVERY read so any caller-provided
+    // session works: GraftSession.local already sets them, but the driver
+    // hands in its own bare session (the path SmokeCheck mimics), and
+    // queries read tables through here and nowhere else:
     //  - nanosAsLong lets a TIMESTAMP(NANOS) events.ts (one of the fixture
     //    encodings seen across testdata generations) load as LongType nanos
     //    instead of failing the scan outright.

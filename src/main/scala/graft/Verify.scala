@@ -1,22 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = GraftSession.main { spark =>
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR") // r15 verdict #7: WARN spam
-    // (WindowExec partition warnings) floods the driver scrape tails
     // Start from an EMPTY outDir: a query that fails before writing must
     // not leave a previous run's parquet in place for the compare to
     // silently pass against.
@@ -62,12 +50,5 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
-    // The wire queries lazily start in-process stub endpoints whose JDK
-    // HttpServer dispatcher thread is non-daemon — without an explicit
-    // exit the dump JVM completes all work and then hangs forever,
-    // stalling the whole correctness run. fork := true makes this safe.
-    System.out.flush()
-    sys.exit(0)
   }
 }

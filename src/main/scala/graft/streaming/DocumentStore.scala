@@ -12,9 +12,11 @@ import graft.streaming.AnsModel._
   * Semantics preserved:
   *  - point lookup by id (`tag.py:12-17`);
   *  - upsert PUT, last-writer-wins, no locking (`README.md:250`);
-  *  - the PUT response is discarded — fire-and-forget (`tag.py:28`) — so
-  *    the write path must be IDEMPOTENT; that is guaranteed by the tag
-  *    append being a set-insert (`tag.py:39-40` / TagOps.appendIfAbsent).
+  *  - the write path is IDEMPOTENT, so a redelivered batch is safe; that
+  *    is guaranteed by the tag append being a set-insert (`tag.py:39-40`
+  *    / TagOps.appendIfAbsent). Unlike the reference, which discards the
+  *    PUT response (`tag.py:28`), a store must throw on a write it could
+  *    not make rather than return as if it had.
   *
   * In production this is an HTTP client pooled per partition (or a keyed
   * Delta table); tests use [[InMemoryDocumentStore]]. The trait keeps the

@@ -78,7 +78,13 @@ private[streaming] object AnsJson {
   *    an `ETag`, the write-back PUTs with `If-Match` (or `If-None-Match:
   *    *` for create), and a 412 re-reads and retries — the
   *    revision-check discipline `README.md:250` says the reference
-  *    lacks, expressed in standard HTTP conditionals.
+  *    lacks, expressed in standard HTTP conditionals;
+  *  - a write is done only on a 2xx answer. Any other status below 500
+  *    (except a conditional write's 412) throws [[DocumentWriteRejected]]
+  *    naming the id and status, and a 5xx that outlasts [[HttpRetry]]'s
+  *    bound throws IOException: either way the micro-batch fails and no
+  *    id is reported as tagged (the reference discards the PUT response,
+  *    `tag.py:28`).
   *
   * Paths: `GET/PUT {base}/documents/{id}`, `GET {base}/documents`.
   */
@@ -119,15 +125,17 @@ class HttpDocumentStore(
     * (`tag.py:19-29`, no locking per `README.md:250`).
     */
   override def upsert(doc: AnsDoc): Unit = {
-    send(HttpRequest.newBuilder(docUri(doc._id))
+    val r = send(HttpRequest.newBuilder(docUri(doc._id))
       .timeout(Duration.ofMillis(timeoutMs))
       .header("Content-Type", "application/json")
       .PUT(HttpRequest.BodyPublishers.ofString(AnsJson.write(doc))).build())
-    ()
+    if (r.statusCode() / 100 != 2)
+      throw new DocumentWriteRejected(doc._id, r.statusCode())
   }
 
   /** Conditional read-modify-write: `If-Match` on the GET's ETag (or
-    * `If-None-Match: *` when creating), 412 → re-read and retry. The
+    * `If-None-Match: *` when creating): 2xx commits, 412 → re-read and
+    * retry, any other status throws [[DocumentWriteRejected]]. The
     * server enforces the version check atomically, so no client-side
     * lock file exists to break or leak — the production answer to
     * [[FileDocumentStore]]'s documented residual lock window.
@@ -146,7 +154,9 @@ class HttpDocumentStore(
       val r = send(cond
         .PUT(HttpRequest.BodyPublishers.ofString(AnsJson.write(next)))
         .build())
-      if (r.statusCode() != 412) return next
+      val code = r.statusCode()
+      if (code / 100 == 2) return next
+      if (code != 412) throw new DocumentWriteRejected(id, code)
       // lost the race — loop, re-read, recompute
     }
     throw new IllegalStateException("unreachable")
@@ -163,6 +173,12 @@ class HttpDocumentStore(
 
   def size: Int = snapshot.size
 }
+
+/** The Draft API answered a PUT with a status that is neither 2xx nor
+  * (for a conditional write) 412: the write did not happen.
+  */
+class DocumentWriteRejected(val id: String, val status: Int)
+    extends RuntimeException(s"PUT of document '$id' rejected with HTTP $status")
 
 /** In-process Draft-API stub (JDK `com.sun.net.httpserver`, no deps):
   * versioned documents with atomic `If-Match`/`If-None-Match` PUT

@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -251,9 +251,21 @@ private[graft] object KinesisStubOffset {
 
 private[streaming] class KinesisStubStream(stream: String,
     startingPosition: String, maxFetchPerShard: Int)
-    extends MicroBatchStream with SupportsAdmissionControl {
+    extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   private def ends: Map[String, Long] = KinesisStubRegistry.shardEnds(stream)
+
+  // Under Trigger.AvailableNow: the shard ends at query start, the bound
+  // every capped batch of the run stops at. None under any other trigger.
+  @volatile private var availableNowEnds: Option[Map[String, Long]] = None
+
+  /** Without this, Spark wraps the source and asks it ONCE for all
+    * available data — and the per-shard cap then ends the whole run after
+    * its first capped batch, leaving the backlog unread. With it, the
+    * run drains the backlog present at start in capped batches.
+    */
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNowEnds = Some(ends)
 
   override def initialOffset(): Offset =
     KinesisStubOffset(
@@ -269,11 +281,12 @@ private[streaming] class KinesisStubStream(stream: String,
   /** The Limit=20 governor: each trigger advances every shard cursor by
     * at most maxFetchPerShard past the RESTORED start — exactly a
     * bounded get_records loop per shard, restart-safe because `start`
-    * comes from the checkpoint.
+    * comes from the checkpoint. Under AvailableNow the ends are the ones
+    * snapshotted at query start, so the run stops at the backlog it saw.
     */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[KinesisStubOffset].cursors
-    KinesisStubOffset(ends.map { case (sh, end) =>
+    KinesisStubOffset(availableNowEnds.getOrElse(ends).map { case (sh, end) =>
       sh -> math.min(end, s.getOrElse(sh, 0L) + maxFetchPerShard)
     })
   }

@@ -373,13 +373,13 @@ class PropertySpec extends SparkSpec {
   test("bench stdout line fits the driver's scrape window at the full query count, worst-case entries (r17 verdict #1)") {
     val n = SparkEntry.queries.size
     // realistic worst case: every query at 6-digit milliseconds (a
-    // 999 s query — the suite budget itself is 2100 s), a populated
-    // failed list, a 5-digit degrade count, the real sf path
-    val worst = Seq.fill(n)(999999L)
-    val failed = (1 to 3).map(i => "\"q999_xxxxxxxxxxxxxxxx_" + i + "\"")
-      .mkString("[", ",", "]")
-    val line = Bench.stdoutRecord(9999.999, n, "BENCH_LOCAL.json", worst,
-      failed, 99999, 99999.999, "/root/testdata/sf0.1", 3)
+    // 999 s query — the suite budget itself is 2100 s), three more
+    // failed queries with long names, a 5-digit degrade count, the real
+    // sf path
+    val worst = (1 to n).map(i => s"q$i" -> Some(999.999)) ++
+      (1 to 3).map(i => s"q999_xxxxxxxxxxxxxxxx_$i" -> None)
+    val line = Bench.stdoutRecord(worst, "BENCH_LOCAL.json", 99999,
+      99999.999, "/root/testdata/sf0.1", 3)
     assert(line.length <= 1950, s"stdout line ${line.length} chars")
     // the checksum column must SURVIVE the fit — as the plain JSON array
     // when it fits, else as the base-36 fallback; never dropped
@@ -387,12 +387,22 @@ class PropertySpec extends SparkSpec {
       line.contains("\"checksum_ms_b36\":\""))
     // typical-case entries (≤ 5-digit ms, i.e. every query under 100 s)
     // keep the PLAIN array — the form the driver's PERF parser reads
-    val typical = Bench.stdoutRecord(228.770, n, "BENCH_LOCAL.json",
-      Seq.fill(n)(99999L), "[]", 0, 1333.834, "/root/testdata/sf0.1", 3)
+    val typical = Bench.stdoutRecord((1 to n).map(i => s"q$i" -> Some(99.999)),
+      "BENCH_LOCAL.json", 0, 1333.834, "/root/testdata/sf0.1", 3)
     assert(typical.length <= 1950)
     assert(typical.contains("\"checksum_ms\":["))
     // the base-36 fallback round-trips the values
     val enc = java.lang.Long.toString(987654L, 36)
     assert(java.lang.Long.parseLong(enc, 36) == 987654L)
+  }
+
+  test("bench stdout line: a failed query is named, left out of value, and its checksum_ms entry is -1") {
+    val line = Bench.stdoutRecord(
+      Seq("q1_a" -> Some(1.5), "q2_b" -> None, "q3_c" -> Some(0.25)),
+      "BENCH_LOCAL.json", 0, 10.0, "/root/testdata/sf0.01", 3)
+    assert(line.contains("\"value\":1.750,"), line)
+    assert(line.contains("\"n_queries\":3,"), line)
+    assert(line.contains("\"checksum_ms\":[1500,-1,250],"), line)
+    assert(line.contains("\"failed\":[\"q2_b\"],"), line)
   }
 }

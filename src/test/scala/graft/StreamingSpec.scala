@@ -136,6 +136,41 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("kinesis AvailableNow: a capped backlog drains every id in ceil(N/(k*c)) data triggers, then the query ends") {
+    val stream = "unit-available-now"
+    KinesisStubRegistry.clear(stream)
+    val (n, shards, cap) = (30, 3, 4)
+    (1 to n).foreach(i => KinesisStubRegistry.put(stream, s"shard-${i % shards}",
+      gz(story(s"AN$i")), t(i)))
+    val store = new InMemoryDocumentStore
+    val ckpt = Files.createTempDirectory("graft-kinesis-an-").toString
+    val wire = spark.readStream.format("aws-kinesis")
+      .option("kinesis.streamName", stream)
+      .option("kinesis.startingPosition", "TRIM_HORIZON")
+      .option("kinesis.executor.maxFetchRecordsPerShard", cap)
+      .load()
+      .select(col("data"), col("shardId").as("shard"),
+        col("approximateArrivalTimestamp").as("ts"))
+    val q = TagPipeline.start(spark, wire, store, ckpt,
+      trigger = Trigger.AvailableNow(), storeKey = "kinesis-an")
+    try {
+      assert(q.awaitTermination(120000), "AvailableNow must end on its own")
+      assert(q.exception.isEmpty)
+      (1 to n).foreach(i => assert(
+        store.get(s"AN$i").exists(_.taxonomy.get.tags.get == Seq(AutoTag)),
+        s"AN$i not tagged"))
+      val data = q.recentProgress.filter(_.numInputRows > 0)
+      val expected = math.ceil(n.toDouble / (shards * cap)).toInt
+      assert(data.length == expected,
+        s"expected $expected capped triggers, got ${data.map(_.numInputRows).toSeq}")
+      assert(data.forall(_.numInputRows <= shards * cap))
+      assert(data.map(_.numInputRows).sum == n)
+    } finally {
+      q.stop()
+      KinesisStubRegistry.clear(stream)
+    }
+  }
+
   test("first-publish filter works unchanged on a stream (batch/stream unification)") {
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[Wire]
@@ -757,6 +792,46 @@ class StreamingSpec extends SparkSpec {
     val e = intercept[java.io.IOException](store.get("X"))
     assert(e.getMessage.contains("2 attempts"),
       s"retries must be bounded and reported, got: ${e.getMessage}")
+  }
+
+  test("http-backed store: a refused PUT (403) fails the batch loudly and no id is counted as tagged") {
+    implicit val sqlCtx = spark.sqlContext
+    import com.sun.net.httpserver.{HttpExchange, HttpServer}
+    val puts = new java.util.concurrent.atomic.AtomicInteger(0)
+    // documents are absent (GET 404), every write is forbidden (PUT 403)
+    val server = HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/documents", (x: HttpExchange) => {
+      val put = x.getRequestMethod == "PUT"
+      if (put) { puts.incrementAndGet(); x.getRequestBody.readAllBytes() }
+      x.sendResponseHeaders(if (put) 403 else 404, -1)
+      x.close()
+    })
+    server.start()
+    try {
+      val http = new HttpDocumentStore(
+        s"http://127.0.0.1:${server.getAddress.getPort}", backoffMs = 5L)
+      val e1 = intercept[DocumentWriteRejected](
+        http.update("X")(_ => AnsDoc("X", None, None)))
+      assert(e1.id == "X" && e1.status == 403)
+      val e2 = intercept[DocumentWriteRejected](http.upsert(AnsDoc("Y", None, None)))
+      assert(e2.id == "Y" && e2.status == 403)
+      val store = new CountingStore(http)
+      val ms = MemoryStream[Wire]
+      val ckpt = Files.createTempDirectory("graft-http-403-").toString
+      val q = TagPipeline.start(spark, ms.toDF(), store, ckpt,
+        trigger = Trigger.ProcessingTime(0), storeKey = "http-403")
+      try {
+        ms.addData(ev(story("A"), 0), ev(story("B"), 1))
+        val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+          q.processAllAvailable())
+        val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .map(_.getMessage).mkString(" | ")
+        assert(chain.contains("rejected with HTTP 403"), chain)
+      } finally q.stop()
+      assert(puts.get() > 2, "the pipeline's PUTs must have reached the server")
+      assert(store.updates.get() == 0, "a refused write was reported as done")
+    } finally server.stop(0)
   }
 
   test("optimistic update: concurrent tagger and editor never drop either change") {
@@ -2332,6 +2407,19 @@ class StreamingSpec extends SparkSpec {
 
 object StreamingSpec {
   case class Wire(data: Array[Byte], shard: String, ts: Timestamp)
+
+  /** Counts the updates a store reported as done. */
+  class CountingStore(inner: DocumentStore) extends DocumentStore {
+    val updates = new java.util.concurrent.atomic.AtomicInteger(0)
+    def get(id: String): Option[AnsDoc] = inner.get(id)
+    def upsert(doc: AnsDoc): Unit = inner.upsert(doc)
+    def snapshot: Seq[AnsDoc] = inner.snapshot
+    def update(id: String)(f: Option[AnsDoc] => AnsDoc): AnsDoc = {
+      val next = inner.update(id)(f)
+      updates.incrementAndGet()
+      next
+    }
+  }
   case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
       event_type: String, value: Double)
 }
