@@ -1551,25 +1551,12 @@ object Multimodal extends QueryGroup {
   /** Ranged-fetch result: exactly the requested slice, digested. */
   case class RangedBlob(doc_id: Long, n_bytes: Long, blob_md5: String)
 
-  /** Per-executor daemon pool for overlapping ranged fetches: a wire
-    * round trip is ~all wait, so a partition issuing them one at a time
-    * leaves the NIC idle between requests. Session-lifetime JVM state
-    * (the blobServer stance), daemon threads so it can never pin the
-    * JVM open; the JDK HttpClient is thread-safe and pools connections,
-    * so concurrent senders share its keep-alives.
-    */
-  @transient private lazy val fetchPool =
-    java.util.concurrent.Executors.newFixedThreadPool(64, r => {
-      val t = new Thread(r, "graft-ranged-fetch")
-      t.setDaemon(true)
-      t
-    })
-
   /** Ranged deref stage: one pooled HTTP client per executor (the
     * fetcher serializes as config only), one MD5 instance per
     * partition; no shuffle. r18 (r17 verdict #7, guide §2.6 — overlap
     * independent wire waits): each partition keeps `concurrency`
-    * requests in flight through [[fetchPool]] instead of fetching
+    * requests in flight through the shared
+    * [[graft.streaming.HttpRetry.wirePool]] instead of fetching
     * serially — a wire-bound stage's throughput is its in-flight
     * request count, not its task count. Retry/backoff semantics are
     * untouched (each future runs the same fetchRange); results are
@@ -1593,7 +1580,8 @@ object Multimodal extends QueryGroup {
       else it.grouped(concurrency).flatMap { batch =>
         val futs = batch.map { p =>
           java.util.concurrent.CompletableFuture.supplyAsync(
-            () => fetcher.fetchRange(p.path, p.offset, p.length), fetchPool)
+            () => fetcher.fetchRange(p.path, p.offset, p.length),
+            graft.streaming.HttpRetry.wirePool)
         }
         batch.zip(futs).map { case (p, f) =>
           // unwrap so a failed fetch surfaces the fetcher's own loud

@@ -12,12 +12,12 @@ import java.time.Duration
   * the task, which Spark then retries (at-least-once, safe under
   * idempotent consumers).
   */
-private[streaming] object HttpRetry {
-  /** Daemon-thread pool for the in-process stub endpoints: the session
-    * holds them in lazy vals with no lifecycle hook (the real endpoint
-    * is remote), so their worker threads must never pin the JVM open
-    * after `main` returns — a non-daemon pool here hangs every
-    * Verify/Bench run that touched a wire query.
+private[graft] object HttpRetry {
+  /** Daemon-thread pool for the in-process stub endpoints and
+    * [[wirePool]]: the session holds them in lazy vals with no lifecycle
+    * hook (the real endpoint is remote), so their worker threads must
+    * never pin the JVM open after `main` returns — a non-daemon pool
+    * here hangs every Verify/Bench run that touched a wire query.
     */
   def daemonPool(n: Int): java.util.concurrent.ExecutorService =
     java.util.concurrent.Executors.newFixedThreadPool(n, r => {
@@ -25,6 +25,16 @@ private[streaming] object HttpRetry {
       t.setDaemon(true)
       t
     })
+
+  /** The one per-JVM pool for overlapping wire round trips (ranged blob
+    * fetches in `Multimodal.derefRanged`, the tag sink's document
+    * updates in [[TagPipeline]]): a round trip is ~all wait, so a task
+    * issuing them one at a time leaves the wire idle between requests.
+    * Its fixed size is the JVM's in-flight bound. The JDK HttpClient is
+    * thread-safe and pools connections, so concurrent senders share its
+    * keep-alives.
+    */
+  lazy val wirePool: java.util.concurrent.ExecutorService = daemonPool(64)
   def send[T](client: HttpClient, req: HttpRequest,
       handler: HttpResponse.BodyHandler[T],
       maxAttempts: Int, backoffMs: Long): HttpResponse[T] = {

@@ -36,10 +36,19 @@ trait DocumentStore extends Serializable {
     * side of a concurrent tagger + editor race; flows that READ before
     * they write (the tag append, any field edit) go through here so
     * neither side's change is dropped (the fixed-semantics discipline
-    * applied to the no-locking caveat).
+    * applied to the no-locking caveat). The in-memory and HTTP stores
+    * throw [[DocumentConflict]] after [[DocumentStore.MaxUpdateAttempts]]
+    * lost races instead of spinning on a hot document.
     */
   def update(id: String)(f: Option[AnsDoc] => AnsDoc): AnsDoc
 }
+
+/** An optimistic update lost the version race on every one of its
+  * `attempts` reads: the write did not happen.
+  */
+class DocumentConflict(val id: String, val attempts: Int)
+    extends RuntimeException(
+      s"update of document '$id' lost the version race $attempts times")
 
 /** Shared internals for the two JVM-local stores (typed AnsDoc and raw
   * JSON): ONE implementation of the optimistic read-modify-write loop
@@ -58,18 +67,16 @@ private[streaming] class CasMap[V <: AnyRef] extends Serializable {
   def values: Seq[V] = m.values.asScala.toSeq
   def entries: Map[String, V] = m.asScala.toMap
   def size: Int = m.size
-  def update(id: String)(f: Option[V] => V): V = {
-    while (true) {
+  def update(id: String)(f: Option[V] => V): V =
+    DocumentStore.retryConflicts(id, 1L) {
       val cur = Option(m.get(id))
       val next = f(cur)
       val committed = cur match {
         case None    => m.putIfAbsent(id, next) == null
         case Some(c) => m.replace(id, c, next)
       }
-      if (committed) return next
+      if (committed) Some(next) else None
     }
-    throw new IllegalStateException("unreachable")
-  }
 }
 
 /** Executor-side store registry — task closures capture a KEY and
@@ -319,6 +326,38 @@ object DocumentStore {
     registry.register(key, store)
 
   def resolve(key: String): DocumentStore = registry.resolve(key)
+
+  /** Reads an optimistic update makes before it gives up with
+    * [[DocumentConflict]]: without a bound, a document other writers
+    * keep changing livelocks the task that updates it.
+    */
+  val MaxUpdateAttempts = 32
+
+  /** The bounded conflict loop of the optimistic stores: runs `tryOnce`
+    * (one read-modify-write; Some = committed, None = lost the race)
+    * until it commits, and throws [[DocumentConflict]] after
+    * [[MaxUpdateAttempts]] losses. The first re-read is immediate: the
+    * conflict means a newer version is already there. Later ones wait
+    * between half and all of `baseMs` · 2^(attempt-2) ms (capped at
+    * 64 · `baseMs`), so writers that keep colliding fall out of step and
+    * a loser outlasts another writer's burst of updates: while the
+    * winner's PUT is in flight every read the loser makes is already
+    * stale, so an unpaced loser can lose twenty races in a row.
+    */
+  @annotation.tailrec
+  private[streaming] def retryConflicts[T](id: String, baseMs: Long,
+      attempt: Int = 1)(tryOnce: => Option[T]): T = tryOnce match {
+    case Some(v) => v
+    case None if attempt == MaxUpdateAttempts =>
+      throw new DocumentConflict(id, attempt)
+    case None =>
+      if (attempt > 1) {
+        val d = baseMs << math.min(attempt - 2, 6)
+        Thread.sleep(d / 2 +
+          java.util.concurrent.ThreadLocalRandom.current().nextLong(d - d / 2 + 1))
+      }
+      retryConflicts(id, baseMs, attempt + 1)(tryOnce)
+  }
 
   /** The reference's `modify_ans` with the intended (bug-fixed) semantics:
     * append `tag` iff absent; a missing taxonomy or missing tags list

@@ -76,9 +76,12 @@ private[streaming] object AnsJson {
   *    append);
   *  - [[update]] is true server-side optimistic concurrency: GET carries
   *    an `ETag`, the write-back PUTs with `If-Match` (or `If-None-Match:
-  *    *` for create), and a 412 re-reads and retries — the
-  *    revision-check discipline `README.md:250` says the reference
-  *    lacks, expressed in standard HTTP conditionals;
+  *    *` for create), and a 412 re-reads and retries, at most
+  *    [[DocumentStore.MaxUpdateAttempts]] reads with backoff, then
+  *    throws [[DocumentConflict]] — the revision-check discipline
+  *    `README.md:250` says the reference lacks, expressed in standard
+  *    HTTP conditionals. An update that changes nothing (`f(cur) ==
+  *    cur`, e.g. a tag the document already carries) sends no PUT;
   *  - a write is done only on a 2xx answer. Any other status below 500
   *    (except a conditional write's 412) throws [[DocumentWriteRejected]]
   *    naming the id and status, and a 5xx that outlasts [[HttpRetry]]'s
@@ -135,32 +138,36 @@ class HttpDocumentStore(
 
   /** Conditional read-modify-write: `If-Match` on the GET's ETag (or
     * `If-None-Match: *` when creating): 2xx commits, 412 → re-read and
-    * retry, any other status throws [[DocumentWriteRejected]]. The
-    * server enforces the version check atomically, so no client-side
-    * lock file exists to break or leak — the production answer to
-    * [[FileDocumentStore]]'s documented residual lock window.
+    * retry (bounded, see [[DocumentStore.retryConflicts]]; past the
+    * bound it throws [[DocumentConflict]]), any other status throws
+    * [[DocumentWriteRejected]]. When `f` returns the document it read,
+    * the update returns after the GET alone: there is nothing to write.
+    * The server enforces the version check atomically, so no
+    * client-side lock file exists to break or leak — the production
+    * answer to [[FileDocumentStore]]'s documented residual lock window.
     */
-  override def update(id: String)(f: Option[AnsDoc] => AnsDoc): AnsDoc = {
-    while (true) {
+  override def update(id: String)(f: Option[AnsDoc] => AnsDoc): AnsDoc =
+    DocumentStore.retryConflicts(id, backoffMs) {
       val (cur, tag) = getWithTag(id)
       val next = f(cur)
-      val b = HttpRequest.newBuilder(docUri(id))
-        .timeout(Duration.ofMillis(timeoutMs))
-        .header("Content-Type", "application/json")
-      val cond = tag match {
-        case Some(t) => b.header("If-Match", t)
-        case None    => b.header("If-None-Match", "*")
+      if (cur.contains(next)) Some(next)
+      else {
+        val b = HttpRequest.newBuilder(docUri(id))
+          .timeout(Duration.ofMillis(timeoutMs))
+          .header("Content-Type", "application/json")
+        val cond = tag match {
+          case Some(t) => b.header("If-Match", t)
+          case None    => b.header("If-None-Match", "*")
+        }
+        val r = send(cond
+          .PUT(HttpRequest.BodyPublishers.ofString(AnsJson.write(next)))
+          .build())
+        val code = r.statusCode()
+        if (code / 100 == 2) Some(next)
+        else if (code == 412) None // lost the race — re-read, recompute
+        else throw new DocumentWriteRejected(id, code)
       }
-      val r = send(cond
-        .PUT(HttpRequest.BodyPublishers.ofString(AnsJson.write(next)))
-        .build())
-      val code = r.statusCode()
-      if (code / 100 == 2) return next
-      if (code != 412) throw new DocumentWriteRejected(id, code)
-      // lost the race — loop, re-read, recompute
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   override def snapshot: Seq[AnsDoc] = {
     val r = send(HttpRequest.newBuilder(URI.create(s"$baseUrl/documents"))

@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.util.concurrent.{CompletableFuture, CompletionException}
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -34,8 +36,10 @@ object TagPipeline {
     *
     * This is the `foreachBatch` body: the reference's EP3 shape
     * (`tag.py:49-66` — GET by id, modify, PUT), executed PARTITION-LOCALLY
-    * on the executors: no driver collect, upsert parallelism == partition
-    * count. Task closures capture only the store's registry key
+    * on the executors with no driver collect; each partition keeps all
+    * its ids' updates in flight at once ([[updateEach]]), so upsert
+    * parallelism is the wire pool's size, not the partition count. Task
+    * closures capture only the store's registry key
     * (see [[DocumentStore.resolve]]); each partition resolves its
     * executor-local handle, the way a production sink resolves a pooled
     * HTTP/DB connection. A failed lookup never fails the batch
@@ -61,23 +65,59 @@ object TagPipeline {
         DocumentStore.resolve(storeKey)
           .get(commitMarkerId(storeKey, batchId, runNs)).nonEmpty)
       return
-    batch.select(col("id")).na.drop().distinct()
-      .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-        val store = DocumentStore.resolve(storeKey)
-        rows.foreach { row =>
-          val id = row.getString(0)
-          // optimistic read-modify-write (not raw PUT): a concurrent
-          // editor's change and this tag append both survive; see
-          // DocumentStore.update
-          store.update(id)(cur =>
-            DocumentStore.modifyAns(cur.getOrElse(AnsDoc(id, None, None)), tag))
-        }
-      }
+    updateEach(batch) { () =>
+      val store = DocumentStore.resolve(storeKey)
+      // optimistic read-modify-write (not raw PUT): a concurrent
+      // editor's change and this tag append both survive; see
+      // DocumentStore.update
+      id => store.update(id)(cur =>
+        DocumentStore.modifyAns(cur.getOrElse(AnsDoc(id, None, None)), tag))
+    }
     if (exactlyOnce)
       DocumentStore.resolve(storeKey)
         .upsert(AnsDoc(commitMarkerId(storeKey, batchId, runNs),
           Some(batchId), None))
   }
+
+  /** The sink loop of both sinks: `update(id)` for every non-null id of
+    * `batch`; `forPartition` runs once per partition on the executor and
+    * resolves the store handle.
+    *
+    * Each id's update goes to [[HttpRetry.wirePool]] as the partition's
+    * iterator yields it, so a partition keeps all its updates in flight
+    * (bounded by the pool's size) instead of paying its round trips one
+    * after another. No `distinct()` sits in front: the callers' id-dedup
+    * already makes ids unique per batch, and a blocking aggregate would
+    * hold every update back until the dedup's state commit finished. A
+    * duplicate id would still be safe: the optimistic update and the
+    * idempotent tag append serialize it.
+    *
+    * The partition returns only after every update has finished, then
+    * rethrows the first failure unwrapped (the store's own exception,
+    * not a `CompletionException`): a failed batch leaves no update
+    * running, and the exactly-once marker, written after this returns,
+    * is never written for it.
+    */
+  private def updateEach(batch: DataFrame)(
+      forPartition: () => String => Any): Unit =
+    batch.select(col("id")).na.drop().foreachPartition { rows: Iterator[Row] =>
+      val update = forPartition()
+      val inFlight = Vector.newBuilder[CompletableFuture[Void]]
+      val readFailure =
+        try {
+          rows.foreach { row =>
+            val id = row.getString(0)
+            inFlight += CompletableFuture.runAsync(
+              () => update(id), HttpRetry.wirePool)
+          }
+          None
+        } catch { case e: Throwable => Some(e) }
+      val failures = readFailure ++ inFlight.result().flatMap { f =>
+        try { f.join(); None }
+        catch { case e: CompletionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach(e => throw e)
+    }
 
   /** Reserved-id commit marker for the exactly-once ledger — lives in
     * the sink store itself so marker and data share a failure domain.
@@ -163,15 +203,11 @@ object TagPipeline {
         InMemoryRawDocumentStore.resolve(storeKey)
           .get(commitMarkerId(storeKey, batchId, runNs)).nonEmpty)
       return
-    batch.select(col("id")).na.drop().distinct()
-      .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-        val store = InMemoryRawDocumentStore.resolve(storeKey)
-        rows.foreach { row =>
-          val id = row.getString(0)
-          store.update(id)(cur => RawAns.appendTagIfAbsent(
-            cur.getOrElse(RawAns.minimalDoc(id)), tag))
-        }
-      }
+    updateEach(batch) { () =>
+      val store = InMemoryRawDocumentStore.resolve(storeKey)
+      id => store.update(id)(cur => RawAns.appendTagIfAbsent(
+        cur.getOrElse(RawAns.minimalDoc(id)), tag))
+    }
     if (exactlyOnce)
       InMemoryRawDocumentStore.resolve(storeKey)
         .upsert(commitMarkerId(storeKey, batchId, runNs),

@@ -834,6 +834,150 @@ class StreamingSpec extends SparkSpec {
     } finally server.stop(0)
   }
 
+  test("http-backed store: a no-op update costs one GET and no PUT; a changing one still costs two requests") {
+    val stub = new DraftApiStub
+    try {
+      val store = new HttpDocumentStore(stub.baseUrl, backoffMs = 5L)
+      val client = java.net.http.HttpClient.newHttpClient()
+      def etag(id: String): String = client.send(
+        java.net.http.HttpRequest.newBuilder(
+          java.net.URI.create(s"${stub.baseUrl}/documents/$id")).GET().build(),
+        java.net.http.HttpResponse.BodyHandlers.discarding())
+        .headers().firstValue("ETag").get()
+      store.upsert(AnsDoc("T", Some(2L), Some(Taxonomy(Some(Seq(AutoTag))))))
+      val before = etag("T")
+      val h0 = stub.hits.get()
+      val same = store.update("T")(c => DocumentStore.modifyAns(c.get, AutoTag))
+      assert(stub.hits.get() - h0 == 1, "an already-tagged document paid a PUT")
+      assert(same == store.get("T").get)
+      assert(etag("T") == before, "a no-op update changed the document's version")
+      val h1 = stub.hits.get()
+      store.update("T")(c => DocumentStore.modifyAns(c.get, Tag("x", "x")))
+      assert(stub.hits.get() - h1 == 2, "a changing update must GET and PUT")
+      assert(etag("T") != before)
+      assert(store.get("T").get.taxonomy.get.tags.get == Seq(AutoTag, Tag("x", "x")))
+    } finally stub.stop()
+  }
+
+  test("bounded conflicts: an endless 412 storm (and an always-moving CAS entry) ends in DocumentConflict") {
+    import com.sun.net.httpserver.{HttpExchange, HttpServer}
+    val puts = new java.util.concurrent.atomic.AtomicInteger(0)
+    // every GET finds the document, every conditional PUT loses the race
+    val server = HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/documents", (x: HttpExchange) => {
+      if (x.getRequestMethod == "PUT") {
+        puts.incrementAndGet(); x.getRequestBody.readAllBytes()
+        x.sendResponseHeaders(412, -1)
+      } else {
+        val body = """{"_id":"X","revision":1}""".getBytes(UTF_8)
+        x.getResponseHeaders.set("ETag", "\"v1\"")
+        x.sendResponseHeaders(200, body.length)
+        x.getResponseBody.write(body)
+      }
+      x.close()
+    })
+    server.start()
+    try {
+      val http = new HttpDocumentStore(
+        s"http://127.0.0.1:${server.getAddress.getPort}", backoffMs = 1L)
+      val e = intercept[DocumentConflict](
+        http.update("X")(c => DocumentStore.modifyAns(c.get, AutoTag)))
+      assert(e.id == "X" && e.attempts == DocumentStore.MaxUpdateAttempts)
+      assert(puts.get() == DocumentStore.MaxUpdateAttempts,
+        s"expected one PUT per attempt, got ${puts.get()}")
+    } finally server.stop(0)
+    // the in-memory CAS: another writer commits between every read and
+    // its compare-and-set
+    val mem = new InMemoryDocumentStore
+    val reads = new java.util.concurrent.atomic.AtomicInteger(0)
+    mem.upsert(AnsDoc("Y", Some(0L), None))
+    val e = intercept[DocumentConflict](mem.update("Y") { c =>
+      val n = reads.incrementAndGet()
+      mem.upsert(AnsDoc("Y", Some(n.toLong), None))
+      DocumentStore.modifyAns(c.get, AutoTag)
+    })
+    assert(e.id == "Y" && e.attempts == DocumentStore.MaxUpdateAttempts)
+    assert(reads.get() == DocumentStore.MaxUpdateAttempts)
+  }
+
+  test("tag sink: one partition keeps several updates in flight at once") {
+    import spark.implicits._
+    // each update waits until four are running together: a partition
+    // that paid its updates one after another would time out on the first
+    val latch = new java.util.concurrent.CountDownLatch(4)
+    val store = new InMemoryDocumentStore {
+      override def update(id: String)(f: Option[AnsDoc] => AnsDoc): AnsDoc = {
+        latch.countDown()
+        if (!latch.await(20, java.util.concurrent.TimeUnit.SECONDS))
+          throw new IllegalStateException(s"update of $id ran alone")
+        super.update(id)(f)
+      }
+    }
+    DocumentStore.register("overlap", store)
+    val batch = Seq("A", "B", "C", "D").toDF("id").coalesce(1)
+    assert(batch.rdd.getNumPartitions == 1)
+    TagPipeline.enrichAndUpsert("overlap", AutoTag)(batch, 0L)
+    assert(Seq("A", "B", "C", "D").forall(id =>
+      store.get(id).exists(_.taxonomy.get.tags.get == Seq(AutoTag))))
+  }
+
+  test("tag sink: one refused id fails the batch with DocumentWriteRejected, after every other update finished, and writes no marker") {
+    import spark.implicits._
+    import com.sun.net.httpserver.{HttpExchange, HttpServer}
+    // GETs find nothing; the PUT of "B" is refused at once, every other
+    // PUT commits after a pause, so they are still on the wire when B fails
+    val putIds = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val server = HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.setExecutor(HttpRetry.daemonPool(8))
+    server.createContext("/documents", (x: HttpExchange) => {
+      val id = java.net.URLDecoder.decode(
+        x.getRequestURI.getPath.stripPrefix("/documents/"), UTF_8)
+      if (x.getRequestMethod == "PUT") {
+        x.getRequestBody.readAllBytes()
+        putIds.add(id)
+        if (id != "B") Thread.sleep(300)
+        x.sendResponseHeaders(if (id == "B") 403 else 200, -1)
+      } else x.sendResponseHeaders(404, -1)
+      x.close()
+    })
+    server.start()
+    try {
+      val running = new java.util.concurrent.atomic.AtomicInteger(0)
+      val done = new java.util.concurrent.atomic.AtomicInteger(0)
+      val http = new HttpDocumentStore(
+        s"http://127.0.0.1:${server.getAddress.getPort}", backoffMs = 5L)
+      DocumentStore.register("refuse-one", new DocumentStore {
+        def get(id: String): Option[AnsDoc] = http.get(id)
+        def upsert(doc: AnsDoc): Unit = http.upsert(doc)
+        def snapshot: Seq[AnsDoc] = Nil
+        def update(id: String)(f: Option[AnsDoc] => AnsDoc): AnsDoc = {
+          running.incrementAndGet()
+          try { val d = http.update(id)(f); done.incrementAndGet(); d }
+          finally running.decrementAndGet()
+        }
+      })
+      // B first: a loop that rethrew at the first failed join would
+      // return while C..F are still on the wire
+      val ids = Seq("B", "C", "D", "E", "F")
+      val batch = ids.toDF("id").coalesce(1)
+      val e = intercept[Exception](TagPipeline.enrichAndUpsert(
+        "refuse-one", AutoTag, exactlyOnce = true, runNs = "r")(batch, 3L))
+      assert(running.get() == 0, s"${running.get()} updates still running")
+      assert(done.get() == ids.size - 1, s"only ${done.get()} updates finished")
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists {
+        case r: DocumentWriteRejected => r.id == "B" && r.status == 403
+        case _ => false
+      }, chain.map(_.toString).mkString(" | "))
+      assert(!chain.exists(_.isInstanceOf[java.util.concurrent.CompletionException]),
+        chain.map(_.toString).mkString(" | "))
+      assert(!putIds.asScala.exists(_.startsWith("__batch_commit")),
+        s"a failed batch wrote its exactly-once marker: $putIds")
+    } finally server.stop(0)
+  }
+
   test("optimistic update: concurrent tagger and editor never drop either change") {
     val fileDir = Files.createTempDirectory("graft-cas-").toString
     val stub = new DraftApiStub
