@@ -36,9 +36,10 @@ trait DocumentStore extends Serializable {
     * side of a concurrent tagger + editor race; flows that READ before
     * they write (the tag append, any field edit) go through here so
     * neither side's change is dropped (the fixed-semantics discipline
-    * applied to the no-locking caveat). The in-memory and HTTP stores
-    * throw [[DocumentConflict]] after [[DocumentStore.MaxUpdateAttempts]]
-    * lost races instead of spinning on a hot document.
+    * applied to the no-locking caveat). The in-memory, file and HTTP
+    * stores throw [[DocumentConflict]] after
+    * [[DocumentStore.MaxUpdateAttempts]] lost races instead of spinning
+    * on a hot document.
     */
   def update(id: String)(f: Option[AnsDoc] => AnsDoc): AnsDoc
 }
@@ -210,6 +211,11 @@ class FileDocumentStore(
     * requires release+reacquire inside a single stat→move — accepted for
     * this test/streaming utility; a production store uses server-side
     * revisions instead of files.
+    *
+    * Lost races run on [[DocumentStore.retryConflicts]]: after
+    * [[DocumentStore.MaxUpdateAttempts]] reads the update throws
+    * [[DocumentConflict]] (a lock orphaned by a dead writer is broken
+    * after the stale-lock timeout).
     */
   override def update(id: String)(f: Option[AnsDoc] => AnsDoc): AnsDoc = {
     val lock = {
@@ -218,7 +224,7 @@ class FileDocumentStore(
     }
     val ownerTag =
       java.util.UUID.randomUUID().toString.getBytes("UTF-8")
-    while (true) {
+    DocumentStore.retryConflicts(id, 1L) {
       val before = get(id) // optimistic read, no lock held
       val next = f(before)
       var acquired = false
@@ -271,8 +277,8 @@ class FileDocumentStore(
       try {
         if (get(id) == before) { // nobody committed since our read
           upsert(next)
-          return next
-        }
+          Some(next)
+        } else None // lost the race: re-read, recompute
       } finally {
         // Release only a lock we still OWN. If ours was broken while we
         // ran, the file (if any) carries a successor's UUID — deleting it
@@ -283,9 +289,7 @@ class FileDocumentStore(
             Files.delete(lock)
         } catch { case _: java.io.IOException => }
       }
-      // lost the race — loop, re-read, recompute
     }
-    throw new IllegalStateException("unreachable")
   }
 
   override def snapshot: Seq[AnsDoc] = {

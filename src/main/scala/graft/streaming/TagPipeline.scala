@@ -4,7 +4,7 @@ import java.util.concurrent.{CompletableFuture, CompletionException}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 import graft.streaming.AnsModel._
 
@@ -26,6 +26,12 @@ import graft.streaming.AnsModel._
   * below the source is connector-specific. Trigger cadence and batch cap
   * mirror the reference's governors (`app.py:78`: 3 s poll; `app.py:22`:
   * Limit=20 ≙ maxOffsetsPerTrigger on a rate-limited source).
+  *
+  * The checkpoint is written through [[LocalCheckpointFileManager]]: on
+  * a machine without `libhadoop`, Spark's default manager forks a
+  * `chmod` for every checkpoint file it creates (38-66 ms per atomic
+  * write, about ten per trigger). [[checkpointedStream]] says what a
+  * checkpoint pins.
   */
 object TagPipeline {
 
@@ -164,6 +170,35 @@ object TagPipeline {
       .dropDuplicatesWithinWatermark("id")
   }
 
+  /** The shared writer half of [[start]]/[[startRaw]]: the deduped
+    * stream, checkpointed at `checkpointDir` through
+    * [[LocalCheckpointFileManager]].
+    *
+    * The file manager is set on the wire's session unless the session
+    * already names one.
+    *
+    * What a checkpoint pins: the state-store provider and the state
+    * partition count (`spark.sql.shuffle.partitions` when the checkpoint
+    * was created) are recorded in the offset log's metadata and win over
+    * the session's confs on every restart. The file manager is not
+    * pinned: a checkpoint written under Spark's default manager restarts
+    * under this one and back again.
+    */
+  private def checkpointedStream(wire: DataFrame, checkpointDir: String,
+      trigger: Trigger): DataStreamWriter[Row] = {
+    val conf = wire.sparkSession.conf
+    if (conf.getOption(CheckpointFileManagerKey).isEmpty)
+      conf.set(CheckpointFileManagerKey,
+        classOf[LocalCheckpointFileManager].getName)
+    dedupedStream(wire).writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+  }
+
+  private[graft] val CheckpointFileManagerKey =
+    "spark.sql.streaming.checkpointFileManagerClass"
+
   /** Full streaming job: wire frame in, upserts out.
     *
     * @param wire streaming DataFrame with (data binary, shard string,
@@ -175,10 +210,7 @@ object TagPipeline {
       storeKey: String = "default",
       exactlyOnce: Boolean = false): StreamingQuery = {
     DocumentStore.register(storeKey, store)
-    dedupedStream(wire).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+    checkpointedStream(wire, checkpointDir, trigger)
       .foreachBatch(
         enrichAndUpsert(storeKey, tag, exactlyOnce,
           runNamespace(checkpointDir)) _)
@@ -227,10 +259,7 @@ object TagPipeline {
       storeKey: String = "default-raw",
       exactlyOnce: Boolean = false): StreamingQuery = {
     InMemoryRawDocumentStore.register(storeKey, store)
-    dedupedStream(wire).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+    checkpointedStream(wire, checkpointDir, trigger)
       .foreachBatch(enrichAndUpsertRaw(storeKey, tag, exactlyOnce,
         runNamespace(checkpointDir)) _)
       .start()

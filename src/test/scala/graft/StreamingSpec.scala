@@ -31,6 +31,22 @@ class StreamingSpec extends SparkSpec {
     s"""{"id":"$id","operation":"insert-story","published":true,
        |"body":{"headlines":{"basic":"h-$id"},"revision":1}}""".stripMargin
 
+  /** Runs `body` with the session's checkpoint file manager set to
+    * `manager`, or unset (so [[TagPipeline]] picks its own); restores the
+    * session's setting after.
+    */
+  private def withCheckpointFileManager[T](manager: Option[String])(
+      body: => T): T = {
+    val key = TagPipeline.CheckpointFileManagerKey
+    val saved = spark.conf.getOption(key)
+    manager.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    try body finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+  private def checkpointFileManager(ckpt: String) =
+    org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+      .create(new org.apache.hadoop.fs.Path(ckpt),
+        spark.sessionState.newHadoopConf())
+
   test("tag pipeline end-to-end: filter + enrich + idempotent upsert across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[Wire]
@@ -417,6 +433,165 @@ class StreamingSpec extends SparkSpec {
       q2.stop()
       KinesisStubRegistry.clear(stream)
     }
+  }
+
+  test("checkpoint file managers: a kinesis checkpoint restarts default → local → default with no loss and no re-tag") {
+    // The file manager is not pinned by the checkpoint: each restart may
+    // switch it, and the offsets and dedup state written under one are
+    // read under the other. A redelivered id after each switch proves
+    // the dedup state crossed it (the counting store would see a second
+    // update otherwise).
+    val stream = "unit-fm-restart-stream"
+    KinesisStubRegistry.clear(stream)
+    val store = new CountingStore(new InMemoryDocumentStore)
+    val ckpt = Files.createTempDirectory("graft-fm-restart-").toString
+    def put(i: Int): Unit = KinesisStubRegistry.put(stream,
+      "shardId-000000000000", gz(story(s"R$i")), t(i))
+    def phase(manager: Option[String])(whileUp: => Unit): Unit =
+      withCheckpointFileManager(manager) {
+        val q = TagPipeline.start(spark,
+          WireSource.kinesis(spark, stream, "us-east-1", maxFetchPerShard = 2),
+          store, ckpt, trigger = Trigger.ProcessingTime(0),
+          storeKey = "fm-restart")
+        try {
+          q.processAllAvailable()
+          whileUp
+          q.processAllAvailable()
+          assert(checkpointFileManager(ckpt).getClass.getName ==
+            manager.getOrElse(classOf[LocalCheckpointFileManager].getName))
+        } finally q.stop()
+      }
+    try {
+      phase(Some(DefaultCheckpointFileManager)) { put(1); put(2) }
+      put(3); put(1) // while down: a new id and a redelivered one
+      phase(None) { put(4) }
+      put(5); put(3)
+      phase(Some(DefaultCheckpointFileManager)) {}
+      (1 to 5).foreach { i =>
+        assert(store.get(s"R$i").exists(_.taxonomy.get.tags.get == Seq(AutoTag)),
+          s"R$i lost across a file-manager switch")
+      }
+      assert(store.updates.get == 5,
+        s"a redelivered id was tagged again: ${store.updates.get} updates")
+    } finally KinesisStubRegistry.clear(stream)
+  }
+
+  test("local checkpoint file manager: the pipeline writes the default manager's file set, every file checksummed") {
+    import org.apache.hadoop.fs.{ChecksumException, FileSystem, Path => HPath}
+    implicit val sqlCtx = spark.sqlContext
+    // two runs of one query on one checkpoint, the second a restart with
+    // a redelivered id
+    def run(manager: Option[String]): String = {
+      val ckpt = Files.createTempDirectory("graft-fm-files-").toString
+      val ms = MemoryStream[Wire]
+      withCheckpointFileManager(manager) {
+        Seq(Seq(ev(story("F1"), 0), ev(story("F2"), 1)),
+            Seq(ev(story("F1"), 2), ev(story("F3"), 3))).foreach { events =>
+          ms.addData(events: _*)
+          val q = TagPipeline.start(spark, ms.toDF(), new InMemoryDocumentStore,
+            ckpt, trigger = Trigger.AvailableNow(), storeKey = "fm-files")
+          q.processAllAvailable(); q.stop()
+        }
+        assert(checkpointFileManager(ckpt).getClass.getName ==
+          manager.getOrElse(classOf[LocalCheckpointFileManager].getName))
+      }
+      ckpt
+    }
+    def files(dir: String): Seq[java.nio.file.Path] = {
+      val s = Files.walk(java.nio.file.Paths.get(dir))
+      try s.iterator().asScala.filter(Files.isRegularFile(_)).toSeq
+      finally s.close()
+    }
+    def masked(dir: String): Set[String] = files(dir).map(p =>
+      java.nio.file.Paths.get(dir).relativize(p).toString
+        .replaceAll("[0-9]+", "N")).toSet
+
+    val default = run(Some(DefaultCheckpointFileManager))
+    val local = run(None)
+    assert(masked(local) == masked(default))
+    Seq("offsets/.N.crc", "commits/.N.crc", "state/N/N/N.delta",
+        "state/N/N/.N.delta.crc", "state/N/N/N.delta.crc").foreach { f =>
+      assert(masked(local).contains(f), s"$f missing from ${masked(local)}")
+    }
+
+    // every file reads back through Hadoop with its checksum verified
+    val lfs = FileSystem.getLocal(spark.sessionState.newHadoopConf())
+    lfs.setVerifyChecksum(true)
+    files(local).filterNot(p => p.getFileName.toString.startsWith(".") &&
+        p.getFileName.toString.endsWith(".crc")).foreach { p =>
+      val in = lfs.open(new HPath(p.toUri))
+      try in.readAllBytes() finally in.close()
+    }
+
+    // a flipped byte in the latest offset-log entry stops the restart
+    val offsets = files(local).filter(p =>
+      p.getParent.getFileName.toString == "offsets" &&
+        p.getFileName.toString.forall(_.isDigit))
+      .maxBy(_.getFileName.toString.toLong)
+    val bytes = Files.readAllBytes(offsets)
+    bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 1).toByte
+    Files.write(offsets, bytes)
+    val ms = MemoryStream[Wire]
+    ms.addData(ev(story("F4"), 4))
+    val e = intercept[Throwable] {
+      val q = TagPipeline.start(spark, ms.toDF(), new InMemoryDocumentStore,
+        local, trigger = Trigger.AvailableNow(), storeKey = "fm-files")
+      try q.processAllAvailable() finally q.stop()
+    }
+    assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ChecksumException]), e)
+  }
+
+  test("local checkpoint file manager: atomic writes refuse an existing file, cancel without a trace, and overwrite the checksum too") {
+    import org.apache.hadoop.conf.Configuration
+    import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path => HPath}
+    import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager}
+    val conf = new Configuration()
+    val dir = Files.createTempDirectory("graft-fm-atomic-")
+    val ref = Files.createTempDirectory("graft-fm-atomic-ref-")
+    val fm = new LocalCheckpointFileManager(new HPath(dir.toUri), conf)
+    val refFm = new FileContextBasedCheckpointFileManager(new HPath(ref.toUri), conf)
+    def write(m: CheckpointFileManager, root: java.nio.file.Path,
+        bytes: Array[Byte], overwrite: Boolean): Unit = {
+      val out = m.createAtomic(new HPath(root.resolve("0").toUri), overwrite)
+      out.write(bytes); out.close()
+    }
+    def listing: Set[String] = {
+      val s = Files.list(dir)
+      try s.iterator().asScala.map(_.getFileName.toString).toSet
+      finally s.close()
+    }
+    def bytesOf(name: String, root: java.nio.file.Path = dir) =
+      Files.readAllBytes(root.resolve(name)).toSeq
+
+    // 1300 bytes: two full 512-byte chunks and a partial one
+    val first = Array.tabulate[Byte](1300)(i => (i * 7).toByte)
+    write(fm, dir, first, overwrite = false)
+    write(refFm, ref, first, overwrite = false)
+    assert(listing == Set("0", ".0.crc"))
+    assert(bytesOf(".0.crc") == bytesOf(".0.crc", ref),
+      "the side file must be Hadoop's own checksum file")
+
+    intercept[FileAlreadyExistsException](
+      write(fm, dir, "late writer".getBytes(UTF_8), overwrite = false))
+    assert(bytesOf("0") == first.toSeq && bytesOf(".0.crc") == bytesOf(".0.crc", ref))
+    assert(listing == Set("0", ".0.crc"))
+
+    val cancelled = fm.createAtomic(new HPath(dir.resolve("1").toUri), false)
+    cancelled.write(first)
+    cancelled.cancel()
+    assert(listing == Set("0", ".0.crc"), "cancel left a file behind")
+
+    val second = "overwritten".getBytes(UTF_8)
+    write(fm, dir, second, overwrite = true)
+    write(refFm, ref, second, overwrite = true)
+    assert(listing == Set("0", ".0.crc"))
+    assert(bytesOf(".0.crc") == bytesOf(".0.crc", ref),
+      "an overwrite must replace the stale checksum")
+    val lfs = FileSystem.getLocal(conf)
+    lfs.setVerifyChecksum(true)
+    val in = lfs.open(new HPath(dir.resolve("0").toUri))
+    try assert(in.readAllBytes().toSeq == second.toSeq) finally in.close()
   }
 
   test("watermarked cross-dump dedup: bounded state — in-horizon dups collapse, post-eviction re-arrivals re-emit") {
@@ -889,16 +1064,34 @@ class StreamingSpec extends SparkSpec {
     } finally server.stop(0)
     // the in-memory CAS: another writer commits between every read and
     // its compare-and-set
-    val mem = new InMemoryDocumentStore
+    assertConflictsAreBounded(new InMemoryDocumentStore, "Y")
+  }
+
+  /** Another writer commits between every read `update` makes and its
+    * commit: the update must give up after exactly
+    * [[DocumentStore.MaxUpdateAttempts]] reads.
+    */
+  private def assertConflictsAreBounded(store: DocumentStore,
+      id: String): Unit = {
     val reads = new java.util.concurrent.atomic.AtomicInteger(0)
-    mem.upsert(AnsDoc("Y", Some(0L), None))
-    val e = intercept[DocumentConflict](mem.update("Y") { c =>
+    store.upsert(AnsDoc(id, Some(0L), None))
+    val e = intercept[DocumentConflict](store.update(id) { c =>
       val n = reads.incrementAndGet()
-      mem.upsert(AnsDoc("Y", Some(n.toLong), None))
+      store.upsert(AnsDoc(id, Some(n.toLong), None))
       DocumentStore.modifyAns(c.get, AutoTag)
     })
-    assert(e.id == "Y" && e.attempts == DocumentStore.MaxUpdateAttempts)
+    assert(e.id == id && e.attempts == DocumentStore.MaxUpdateAttempts)
     assert(reads.get() == DocumentStore.MaxUpdateAttempts)
+  }
+
+  test("bounded conflicts: an always-moving file document ends in DocumentConflict") {
+    // the file store re-checks under its lock file
+    val dir = Files.createTempDirectory("graft-file-conflict-").toString
+    assertConflictsAreBounded(new FileDocumentStore(dir), "Z")
+    val left = Files.list(java.nio.file.Paths.get(dir))
+    try assert(!left.iterator().asScala.exists(
+      _.getFileName.toString.endsWith(".lock")), "a lock outlived the update")
+    finally left.close()
   }
 
   test("tag sink: one partition keeps several updates in flight at once") {
@@ -2551,6 +2744,9 @@ class StreamingSpec extends SparkSpec {
 
 object StreamingSpec {
   case class Wire(data: Array[Byte], shard: String, ts: Timestamp)
+
+  val DefaultCheckpointFileManager =
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
 
   /** Counts the updates a store reported as done. */
   class CountingStore(inner: DocumentStore) extends DocumentStore {
