@@ -339,8 +339,8 @@ object Similarity extends QueryGroup {
     // r18 (guide §2.6 — single-row-group parallelism floor): the stream
     // side of the nested-loop broadcast join inherits the scan's ONE
     // partition locally, so the n*n integer-dot sweep — the query's
-    // whole cost — ran in a single task on a 32-core box (ProfileQuery:
-    // one 1.6 s task, every other stage <100 ms). Spread floors it at
+    // whole cost — ran in a single task on a 32-core box (r18 per-stage
+    // profile: one 1.6 s task, every other stage <100 ms). Spread floors it at
     // session parallelism; structural no-op at production split counts.
     // The broadcast side stays unspread (it ships whole either way).
     Tables.spread(q.alias("a")).join(broadcast(q.alias("b")),

@@ -146,9 +146,7 @@ object InMemoryRawDocumentStore {
   * but the atomic-rename-per-key upsert pattern is exactly this).
   * Filenames are the sha-256 of the id, so any id is path-safe.
   */
-class FileDocumentStore(
-    root: String,
-    lockStaleMs: Long = FileDocumentStore.LockStaleMs) extends DocumentStore {
+class FileDocumentStore(root: String) extends DocumentStore {
   import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
   private def rootPath: Path = {
@@ -185,109 +183,31 @@ class FileDocumentStore(
 
   /** Optimistic concurrency over files: rename cannot be made
     * conditional, so the validate-and-commit step runs under a per-key
-    * lock FILE (Files.createFile is atomic) — but the read and the
-    * (arbitrary) `f` run OUTSIDE the lock, and commit happens only if
-    * the stored document still value-equals the snapshot `f` saw;
-    * otherwise the writer retries against fresh state. The critical
-    * section is one read + one atomic-rename write. A crash while
-    * holding the lock orphans the lock file; waiters BREAK such a lock
-    * once it is older than [[FileDocumentStore.LockStaleMs]] (the
-    * critical section is microseconds, so a lock that old has no living
-    * owner), and park briefly between attempts instead of busy-spinning
-    * — a kill -9 therefore costs one stale-timeout, not a permanent
-    * silent hang on that key. (A production Draft API does this
+    * lock — but the read and the (arbitrary) `f` run OUTSIDE the lock,
+    * and commit happens only if the stored document still value-equals
+    * the snapshot `f` saw; otherwise the writer retries against fresh
+    * state, at most [[DocumentStore.MaxUpdateAttempts]] times
+    * ([[DocumentStore.retryConflicts]]). The critical section is one
+    * read + one atomic-rename write. (A production Draft API does this
     * server-side with document revisions.)
     *
-    * Locks are SELF-IDENTIFYING: the holder writes a per-acquire UUID
-    * into its lock file and at release deletes the file only if it still
-    * carries that UUID — so a holder whose lock was (wrongly) judged
-    * stale mid-section (a >staleMs GC pause) cannot delete a successor's
-    * fresh lock and admit a third writer. Residual honesty: file renames
-    * cannot be made conditional, so if a LIVE lock is claimed inside the
-    * stat→move window and the restore collides, the live owner and the
-    * new holder briefly overlap in the critical section (double-hold).
-    * The value-equality re-check before commit (`get(id) == before`)
-    * turns that overlap into a retry, not a lost update, and the window
-    * requires release+reacquire inside a single stat→move — accepted for
-    * this test/streaming utility; a production store uses server-side
-    * revisions instead of files.
-    *
-    * Lost races run on [[DocumentStore.retryConflicts]]: after
-    * [[DocumentStore.MaxUpdateAttempts]] reads the update throws
-    * [[DocumentConflict]] (a lock orphaned by a dead writer is broken
-    * after the stale-lock timeout).
+    * The lock is the kernel's: an exclusive `FileChannel.lock()` on the
+    * key's `<sha>.doc.lock` file, taken under a JVM-wide monitor (see
+    * [[FileDocumentStore.locked]]). Two processes never hold it at once,
+    * and the kernel releases it when its holder dies, so a killed writer
+    * never wedges the key. The lock file itself is never deleted.
     */
   override def update(id: String)(f: Option[AnsDoc] => AnsDoc): AnsDoc = {
-    val lock = {
-      val t = fileFor(id)
-      t.resolveSibling(t.getFileName.toString + ".lock")
-    }
-    val ownerTag =
-      java.util.UUID.randomUUID().toString.getBytes("UTF-8")
+    val doc = fileFor(id)
+    val lock = doc.resolveSibling(doc.getFileName.toString + ".lock")
     DocumentStore.retryConflicts(id, 1L) {
       val before = get(id) // optimistic read, no lock held
       val next = f(before)
-      var acquired = false
-      while (!acquired) {
-        try {
-          Files.createFile(lock) // atomic claim; file is empty for an instant
-          Files.write(lock, ownerTag) // stamp ownership
-          acquired = true
-        }
-        catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            try {
-              val age = System.currentTimeMillis() -
-                Files.getLastModifiedTime(lock).toMillis
-              if (age > lockStaleMs) {
-                // Break the orphan via an ATOMIC claim: rename the stale
-                // lock to a waiter-unique name — exactly one waiter's move
-                // succeeds; the rest hit NoSuchFileException and re-contend
-                // through createFile. (Deleting in place was a race: two
-                // waiters could both judge the lock stale, the first
-                // delete-then-create, and the second's delete then removed
-                // the first's FRESH lock — re-opening the lost-update
-                // window this method exists to close.)
-                val claim = lock.resolveSibling(lock.getFileName.toString +
-                  s".claim-${java.util.UUID.randomUUID()}")
-                Files.move(lock, claim, StandardCopyOption.ATOMIC_MOVE)
-                // Re-judge staleness on the claimed file itself: if a LIVE
-                // lock slid under us inside the stat→move window (owner
-                // released + another waiter acquired), restore it rather
-                // than break it; if the restore target is already occupied
-                // the claim is moot either way — drop it.
-                val claimedAge = System.currentTimeMillis() -
-                  Files.getLastModifiedTime(claim).toMillis
-                if (claimedAge > lockStaleMs)
-                  Files.delete(claim)
-                else
-                  try Files.move(claim, lock, StandardCopyOption.ATOMIC_MOVE)
-                  catch {
-                    case _: java.nio.file.FileAlreadyExistsException =>
-                      Files.delete(claim)
-                  }
-              } else Thread.sleep(1)
-            } catch {
-              // lock vanished between the existence check and the
-              // stat/move — owner released it; retry immediately
-              case _: java.nio.file.NoSuchFileException =>
-            }
-        }
-      }
-      try {
+      FileDocumentStore.locked(lock) {
         if (get(id) == before) { // nobody committed since our read
           upsert(next)
           Some(next)
         } else None // lost the race: re-read, recompute
-      } finally {
-        // Release only a lock we still OWN. If ours was broken while we
-        // ran, the file (if any) carries a successor's UUID — deleting it
-        // would hand the key to a third writer. A vanished lock (broken,
-        // successor already released) needs no action.
-        try {
-          if (java.util.Arrays.equals(Files.readAllBytes(lock), ownerTag))
-            Files.delete(lock)
-        } catch { case _: java.io.IOException => }
       }
     }
   }
@@ -307,12 +227,36 @@ class FileDocumentStore(
 }
 
 object FileDocumentStore {
-  /** Age past which a waiter breaks another writer's lock file — the
-    * crash-orphan bound. The held window is one read + one rename
-    * (microseconds), so 10 s of slack is orders of magnitude above any
-    * live owner's hold time.
+  import java.nio.channels.FileChannel
+  import java.nio.file.{Path, StandardOpenOption}
+
+  /** JVM-wide monitors, striped by the lock file's real path, so every
+    * store instance over one root shares them. */
+  private val stripes = Array.fill(64)(new Object)
+
+  /** Runs `body` holding the kernel lock on `lock`, which is created on
+    * first use and never deleted.
+    *
+    * Two POSIX rules shape this. (1) Closing ANY descriptor of a file
+    * releases every lock the process holds on it, and a second lock on
+    * the same file from inside this JVM throws
+    * `OverlappingFileLockException` instead of waiting: so the file is
+    * opened only under the stripe's monitor, which serializes the JVM's
+    * threads before the kernel lock serializes processes. (2) The lock
+    * belongs to an inode, not a name: deleting the file would let a
+    * process that opened the old inode and one that created a new
+    * inode under the same name lock at the same time. So one small
+    * `.lock` file per document persists (`snapshot` skips it), and a
+    * leftover one is reused.
     */
-  private[streaming] val LockStaleMs = 10000L
+  private def locked[T](lock: Path)(body: => T): T = {
+    val key = lock.getParent.toRealPath().resolve(lock.getFileName)
+    stripes(Math.floorMod(key.hashCode, stripes.length)).synchronized {
+      val ch = FileChannel.open(lock,
+        StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+      try { ch.lock(); body } finally ch.close()
+    }
+  }
 }
 
 object DocumentStore {

@@ -209,44 +209,23 @@ private[streaming] class KinesisStubTable(options: CaseInsensitiveStringMap)
 }
 
 /** Shard-cursor offset: `{"shard": nextIndex, ...}` (sorted keys so the
-  * checkpoint representation is stable). Shard names are escaped on
-  * write and unescaped on parse — a quote or backslash in a name must
-  * round-trip the checkpoint intact, not corrupt it into a silent
-  * cursor reset (re-delivery).
+  * checkpoint representation is stable), written and read by Jackson —
+  * a quote or backslash in a shard name must round-trip the checkpoint
+  * intact, not corrupt it into a silent cursor reset (re-delivery).
   */
 private[graft] case class KinesisStubOffset(cursors: Map[String, Long])
     extends Offset {
-  override def json(): String =
-    cursors.toSeq.sortBy(_._1)
-      .map { case (s, n) =>
-        "\"" + KinesisStubOffset.escape(s) + "\":" + n
-      }
-      .mkString("{", ",", "}")
+  override def json(): String = KinesisStubOffset.mapper.writeValueAsString(
+    new java.util.TreeMap[String, Long](cursors.asJava))
 }
 
 private[graft] object KinesisStubOffset {
-  private[graft] def escape(s: String): String =
-    s.flatMap {
-      case '\\' => "\\\\"
-      case '"'  => "\\\""
-      case c    => c.toString
-    }
-  private def unescape(s: String): String = {
-    val b = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      if (s(i) == '\\' && i + 1 < s.length) { b += s(i + 1); i += 2 }
-      else { b += s(i); i += 1 }
-    }
-    b.toString
-  }
-  // key = any run of non-quote chars or escaped pairs, so an escaped
-  // quote inside a shard name does not terminate the match
-  private val Entry = "\"((?:[^\"\\\\]|\\\\.)+)\"\\s*:\\s*(\\d+)".r
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
   def parse(json: String): KinesisStubOffset =
-    KinesisStubOffset(
-      Entry.findAllMatchIn(json)
-        .map(m => unescape(m.group(1)) -> m.group(2).toLong).toMap)
+    KinesisStubOffset(mapper.readValue(json,
+      new com.fasterxml.jackson.core.`type`.TypeReference[
+        java.util.Map[String, Number]] {})
+      .asScala.map { case (s, n) => s -> n.longValue }.toMap)
 }
 
 private[streaming] class KinesisStubStream(stream: String,

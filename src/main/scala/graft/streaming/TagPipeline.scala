@@ -20,7 +20,16 @@ import graft.streaming.AnsModel._
   *  - shard count is the source's partition count, not hard-coded 2
   *    (`app.py:92-93`);
   *  - a failed enrichment never fails the batch (`app.py:71-75`): rows
-  *    missing from the store pass through untagged (left join semantics).
+  *    missing from the store pass through untagged (left join semantics);
+  *  - a write the store refuses is never dropped, where the reference's
+  *    fire-and-forget PUT (`tag.py:28`) discards the answer. A rejected
+  *    id — [[DocumentWriteRejected]] (a non-2xx answer),
+  *    [[DocumentConflict]] (lost races past the bound) or an
+  *    `IOException` after the wire's retries — fails the micro-batch, and
+  *    with it the query; a restart replays that batch from the
+  *    checkpoint, the idempotent tag append making the replay safe for
+  *    the ids that did commit. There is no dead-letter: an id that is
+  *    always refused stops the pipeline until it is fixed.
   *
   * The Kinesis connector is a config swap on the source DataFrame; nothing
   * below the source is connector-specific. Trigger cadence and batch cap
@@ -174,8 +183,10 @@ object TagPipeline {
     * stream, checkpointed at `checkpointDir` through
     * [[LocalCheckpointFileManager]].
     *
-    * The file manager is set on the wire's session unless the session
-    * already names one.
+    * The query runs on `wire`'s session, so `wire` must be built on
+    * `spark`: a wire from another session is refused before any query
+    * starts. The file manager is set on `spark` unless it already names
+    * one.
     *
     * What a checkpoint pins: the state-store provider and the state
     * partition count (`spark.sql.shuffle.partitions` when the checkpoint
@@ -184,9 +195,12 @@ object TagPipeline {
     * pinned: a checkpoint written under Spark's default manager restarts
     * under this one and back again.
     */
-  private def checkpointedStream(wire: DataFrame, checkpointDir: String,
-      trigger: Trigger): DataStreamWriter[Row] = {
-    val conf = wire.sparkSession.conf
+  private def checkpointedStream(spark: SparkSession, wire: DataFrame,
+      checkpointDir: String, trigger: Trigger): DataStreamWriter[Row] = {
+    require(wire.sparkSession eq spark,
+      s"the wire frame belongs to session ${wire.sparkSession}, not to " +
+        s"the session $spark passed in: build the wire on that session")
+    val conf = spark.conf
     if (conf.getOption(CheckpointFileManagerKey).isEmpty)
       conf.set(CheckpointFileManagerKey,
         classOf[LocalCheckpointFileManager].getName)
@@ -210,7 +224,7 @@ object TagPipeline {
       storeKey: String = "default",
       exactlyOnce: Boolean = false): StreamingQuery = {
     DocumentStore.register(storeKey, store)
-    checkpointedStream(wire, checkpointDir, trigger)
+    checkpointedStream(spark, wire, checkpointDir, trigger)
       .foreachBatch(
         enrichAndUpsert(storeKey, tag, exactlyOnce,
           runNamespace(checkpointDir)) _)
@@ -259,7 +273,7 @@ object TagPipeline {
       storeKey: String = "default-raw",
       exactlyOnce: Boolean = false): StreamingQuery = {
     InMemoryRawDocumentStore.register(storeKey, store)
-    checkpointedStream(wire, checkpointDir, trigger)
+    checkpointedStream(spark, wire, checkpointDir, trigger)
       .foreachBatch(enrichAndUpsertRaw(storeKey, tag, exactlyOnce,
         runNamespace(checkpointDir)) _)
       .start()

@@ -1088,10 +1088,28 @@ class StreamingSpec extends SparkSpec {
     // the file store re-checks under its lock file
     val dir = Files.createTempDirectory("graft-file-conflict-").toString
     assertConflictsAreBounded(new FileDocumentStore(dir), "Z")
-    val left = Files.list(java.nio.file.Paths.get(dir))
-    try assert(!left.iterator().asScala.exists(
-      _.getFileName.toString.endsWith(".lock")), "a lock outlived the update")
-    finally left.close()
+    assertNoLockHeld(dir)
+  }
+
+  /** Every `.lock` file under `dir` is free: a `tryLock` from this JVM
+    * gets it, so no thread or process still holds it. Call only while no
+    * update runs: closing this channel releases the JVM's locks on the
+    * file.
+    */
+  private def assertNoLockHeld(dir: String): Unit = {
+    import java.nio.channels.FileChannel
+    import java.nio.file.StandardOpenOption.WRITE
+    val locks = Files.list(java.nio.file.Paths.get(dir))
+    try {
+      val paths = locks.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".lock")).toSeq
+      assert(paths.nonEmpty, s"no lock file under $dir")
+      paths.foreach { l =>
+        val ch = FileChannel.open(l, WRITE)
+        try assert(ch.tryLock() != null, s"$l is still locked")
+        finally ch.close()
+      }
+    } finally locks.close()
   }
 
   test("tag sink: one partition keeps several updates in flight at once") {
@@ -1173,17 +1191,22 @@ class StreamingSpec extends SparkSpec {
 
   test("optimistic update: concurrent tagger and editor never drop either change") {
     val fileDir = Files.createTempDirectory("graft-cas-").toString
+    val sharedDir = Files.createTempDirectory("graft-cas-shared-").toString
     val stub = new DraftApiStub
-    try for (store <- Seq(new InMemoryDocumentStore,
-        new FileDocumentStore(fileDir),
-        new HttpDocumentStore(stub.baseUrl, backoffMs = 5L))) {
+    def same(s: DocumentStore) = (s, s)
+    // (tagger's store, editor's store); the last pair is two file stores
+    // over one root, which must exclude each other like one store does
+    try for ((store, editorStore) <- Seq(same(new InMemoryDocumentStore),
+        same(new FileDocumentStore(fileDir)),
+        same(new HttpDocumentStore(stub.baseUrl, backoffMs = 5L)),
+        (new FileDocumentStore(sharedDir), new FileDocumentStore(sharedDir)))) {
       store.upsert(AnsDoc("X", Some(0L), None))
       val tags = (1 to 40).map(i => Tag(s"t$i", s"text $i"))
       val tagger = new Thread(() =>
         tags.foreach(t => store.update("X")(c =>
           DocumentStore.modifyAns(c.get, t))))
       val editor = new Thread(() =>
-        (1 to 40).foreach(_ => store.update("X")(c =>
+        (1 to 40).foreach(_ => editorStore.update("X")(c =>
           c.get.copy(revision = c.get.revision.map(_ + 1)))))
       tagger.start(); editor.start()
       tagger.join(60000); editor.join(60000)
@@ -1202,104 +1225,73 @@ class StreamingSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-lock-").toString
     val store = new FileDocumentStore(dir)
     store.upsert(AnsDoc("X", Some(0L), None))
-    // fabricate the kill -9 orphan: the lock exists, its owner is gone,
-    // and its mtime is past the stale bound
+    // a dead writer's leftover: the lock file exists, nobody holds it
+    // (the kernel dropped the lock with its process), and it carries an
+    // earlier build's owner stamp
     val md = java.security.MessageDigest.getInstance("SHA-256")
     val hex = md.digest("X".getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val lock = java.nio.file.Paths.get(dir, hex + ".doc.lock")
-    Files.createFile(lock)
-    Files.setLastModifiedTime(lock,
-      java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - 60000L))
+    Files.write(java.nio.file.Paths.get(dir, hex + ".doc.lock"),
+      java.util.UUID.randomUUID().toString.getBytes(UTF_8))
     val t0 = System.nanoTime()
     val out = store.update("X")(c => c.get.copy(
       revision = c.get.revision.map(_ + 1)))
     val secs = (System.nanoTime() - t0) / 1e9
     assert(out.revision.contains(1L))
-    assert(secs < 8.0, s"stale lock should break immediately, took $secs s")
-    assert(!Files.exists(lock), "broken/released lock must not persist")
+    assert(secs < 8.0, s"a leftover lock file delayed the update $secs s")
+    assertNoLockHeld(dir)
   }
 
-  test("stale-lock break under contention: two waiters never double-break into the critical section") {
-    // Regression for the delete-in-place race: two waiters both judge the
-    // orphan stale; the first deletes + creates its fresh lock; the second's
-    // delete then removed that FRESH lock, letting a third writer in and
-    // re-opening the lost-update window. The fix claims the stale lock by
-    // ATOMIC rename, so at most one waiter breaks it. Drive many rounds of
-    // (fabricated orphan) + (two racing updates) and require every update
-    // to land.
-    val dir = Files.createTempDirectory("graft-lockrace-").toString
-    val store = new FileDocumentStore(dir, lockStaleMs = 20L)
+  test("file store lock: another process's writer excludes this one, and its death frees the key") {
+    val dir = Files.createTempDirectory("graft-lockproc-").toString
+    val store = new FileDocumentStore(dir)
     store.upsert(AnsDoc("X", Some(0L), None))
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    val hex = md.digest("X".getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val lock = java.nio.file.Paths.get(dir, hex + ".doc.lock")
-    val rounds = 50
-    for (r <- 1 to rounds) {
-      Files.createFile(lock)
-      Files.setLastModifiedTime(lock,
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() - 60000L))
-      val ts = (1 to 2).map(_ => new Thread(() =>
-        store.update("X")(c => c.get.copy(
-          revision = c.get.revision.map(_ + 1)))))
-      ts.foreach(_.start()); ts.foreach(_.join(30000))
-      assert(store.get("X").get.revision.contains(2L * r),
-        s"round $r: an update was dropped after a stale-lock break")
-    }
-    assert(!Files.exists(lock), "no lock may outlive its round")
-    val leftovers = Files.list(java.nio.file.Paths.get(dir))
+    // the child takes X's lock, prints "held", and dies inside the
+    // critical section without writing (see FileLockHolder)
+    val child = new ProcessBuilder(
+      java.nio.file.Paths.get(sys.props("java.home"), "bin", "java").toString,
+      "-Xmx64m", "-cp", sys.props("java.class.path"),
+      FileLockHolder.getClass.getName.stripSuffix("$"), dir, "X")
+      .redirectErrorStream(true).start()
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
     try {
-      import scala.jdk.CollectionConverters._
-      val claims = leftovers.iterator().asScala
-        .filter(_.getFileName.toString.contains(".claim-")).toSeq
-      assert(claims.isEmpty, s"orphaned claim files: $claims")
-    } finally leftovers.close()
+      val reader = new java.io.BufferedReader(
+        new java.io.InputStreamReader(child.getInputStream, UTF_8))
+      val output = Vector.newBuilder[String]
+      val held = Await.result(Future {
+        var line = reader.readLine()
+        while (line != null && line != "held") {
+          output += line; line = reader.readLine()
+        }
+        line != null
+      }, 60.seconds)
+      assert(held, "the child never took the lock: " +
+        output.result().mkString(" | "))
+      val t0 = System.nanoTime()
+      val out = Await.result(Future(store.update("X")(c => c.get.copy(
+        revision = c.get.revision.map(_ + 1)))), 8.seconds)
+      val secs = (System.nanoTime() - t0) / 1e9
+      assert(out == AnsDoc("X", Some(1L), None))
+      assert(store.get("X").contains(AnsDoc("X", Some(1L), None)),
+        "the final document must hold exactly this update's change")
+      assert(secs >= FileLockHolder.HoldMs / 2000.0,
+        s"the update committed after $secs s, inside the other process's hold")
+    } finally child.destroyForcibly()
   }
 
-  test("a holder whose lock was broken mid-section never deletes the successor's lock") {
-    // ADVICE r8 regression: locks are self-identifying (owner UUID). If a
-    // holder overstays staleMs (GC pause stand-in: a slow upsert) and a
-    // waiter legitimately breaks its lock, the original holder's release
-    // must leave the successor's FRESH lock in place — deleting it would
-    // admit a third writer into the critical section.
-    val dir = Files.createTempDirectory("graft-lockowner-").toString
-    class SlowUpsertStore extends FileDocumentStore(dir, lockStaleMs = 100L) {
-      val sleepMs = new java.util.concurrent.atomic.AtomicLong(0L)
-      override def upsert(doc: AnsDoc): Unit = {
-        val s = sleepMs.get(); if (s > 0) Thread.sleep(s)
-        super.upsert(doc)
-      }
+  test("start refuses a wire frame built on another session before any query starts") {
+    val other = spark.newSession()
+    val ms = {
+      implicit val otherCtx = other.sqlContext
+      MemoryStream[Wire]
     }
-    val store = new SlowUpsertStore
-    store.upsert(AnsDoc("X", Some(0L), None))
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    val hex = md.digest("X".getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val lock = java.nio.file.Paths.get(dir, hex + ".doc.lock")
-
-    store.sleepMs.set(1500L) // holder A overstays its 100 ms stale bound
-    val a = new Thread(() => store.update("X")(c => c.get.copy(
-      revision = c.get.revision.map(_ + 1))))
-    a.start()
-    Thread.sleep(400) // A is mid-upsert, its lock is already stale
-    store.sleepMs.set(3000L) // successor B holds well past A's finish
-    val b = new Thread(() => store.update("X")(c => c.get.copy(
-      revision = c.get.revision.map(_ + 10))))
-    b.start()
-    Thread.sleep(400) // B has broken A's stale lock and is mid-upsert
-    assert(Files.exists(lock), "successor must be holding a fresh lock")
-    a.join(10000)
-    assert(!a.isAlive, "holder A must have finished")
-    assert(Files.exists(lock),
-      "A's release deleted the successor's lock — ownership check broken")
-    b.join(10000)
-    assert(!b.isAlive, "successor B must have finished")
-    assert(!Files.exists(lock), "B must release its own lock")
-    // the key stays serviceable afterwards
-    store.sleepMs.set(0L)
-    val t0 = System.nanoTime()
-    store.update("X")(c => c.get.copy(revision = c.get.revision.map(_ + 100)))
-    assert((System.nanoTime() - t0) / 1e9 < 5.0, "key left wedged")
+    val ckpt = Files.createTempDirectory("graft-ckpt-other-").toString
+    val e = intercept[IllegalArgumentException](TagPipeline.start(spark,
+      ms.toDF(), new InMemoryDocumentStore, ckpt, storeKey = "other-session"))
+    assert(e.getMessage.contains("build the wire on that session"), e.getMessage)
+    assert(spark.streams.active.isEmpty && other.streams.active.isEmpty,
+      "a query started on a mismatched session")
   }
 
   test("kinesis offset json round-trips shard names containing quotes and backslashes") {
@@ -1307,6 +1299,11 @@ class StreamingSpec extends SparkSpec {
     val off = KinesisStubOffset(cur)
     assert(KinesisStubOffset.parse(off.json()).cursors == cur,
       s"corrupted round-trip through ${off.json()}")
+    // the checkpoint text of earlier builds: it must parse, and be
+    // re-emitted byte for byte
+    val written = """{"plain-0":0,"shard\"A":3,"shard\\B":7}"""
+    assert(KinesisStubOffset.parse(written).cursors == cur)
+    assert(KinesisStubOffset.parse(written).json() == written)
   }
 
   test("event-log replay source drives the batch twin of the pipeline") {
