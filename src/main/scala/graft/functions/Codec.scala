@@ -60,10 +60,16 @@ object Codec {
   /** Error-tolerant gunzip as a native Catalyst expression.
     *
     * Decode failure => null (row survives, `app.py:37-38` semantics).
-    * Non-codegen (CodegenFallback) is acceptable here: decompression cost
-    * dominates the virtual call overhead, and keeping it an Expression
-    * (vs a Scala UDF) avoids the UDF serialization wrapper and keeps
-    * null-handling in the planner.
+    * Keeping it an Expression (vs a Scala UDF) avoids the UDF
+    * serialization wrapper and keeps null-handling in the planner.
+    *
+    * It is a `CodegenFallback`, and that costs more than a virtual call:
+    * `CollapseCodegenStages` refuses whole-stage codegen for any operator
+    * holding a non-leaf `CodegenFallback`. `from_json` (`JsonToStructs`)
+    * is one too in Spark 4.1, so the decode `Project` runs unfused either
+    * way, and every task generates an `UnsafeProjection` for it: 19% of
+    * the task threads' samples in a JFR profile of the tag pipeline
+    * (`tag_live_mem`, 4 cores), inside the 37% spent generating code.
     */
   case class GunzipToString(child: Expression)
       extends UnaryExpression with CodegenFallback {

@@ -97,7 +97,7 @@ private[streaming] class StoreRegistry[S](what: String) {
 }
 
 /** JVM-local store (driver + executors share the JVM under local[k], the
-  * same reachability a foreachBatch HTTP client has on a cluster).
+  * same reachability a sink's HTTP client has on a cluster).
   */
 class InMemoryDocumentStore extends DocumentStore {
   private val m = new CasMap[AnsDoc]
@@ -149,16 +149,15 @@ object InMemoryRawDocumentStore {
 class FileDocumentStore(root: String) extends DocumentStore {
   import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-  private def rootPath: Path = {
-    val p = Paths.get(root)
-    Files.createDirectories(p)
-    p
-  }
+  // created once per instance (and again after deserialization: a Path
+  // is not serializable)
+  @transient private lazy val rootPath: Path =
+    Files.createDirectories(Paths.get(root))
 
   private def fileFor(id: String): Path = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    val hex = md.digest(id.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    rootPath.resolve(hex + ".doc")
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(id.getBytes("UTF-8"))
+    rootPath.resolve(java.util.HexFormat.of().formatHex(sha) + ".doc")
   }
 
   private def write(doc: AnsDoc, target: Path): Unit = {
@@ -174,10 +173,10 @@ class FileDocumentStore(root: String) extends DocumentStore {
     try ois.readObject().asInstanceOf[AnsDoc] finally ois.close()
   }
 
-  override def get(id: String): Option[AnsDoc] = {
-    val f = fileFor(id)
-    if (Files.exists(f)) Some(read(f)) else None
-  }
+  private def readIfExists(p: Path): Option[AnsDoc] =
+    if (Files.exists(p)) Some(read(p)) else None
+
+  override def get(id: String): Option[AnsDoc] = readIfExists(fileFor(id))
 
   override def upsert(doc: AnsDoc): Unit = write(doc, fileFor(doc._id))
 
@@ -201,29 +200,32 @@ class FileDocumentStore(root: String) extends DocumentStore {
     val doc = fileFor(id)
     val lock = doc.resolveSibling(doc.getFileName.toString + ".lock")
     DocumentStore.retryConflicts(id, 1L) {
-      val before = get(id) // optimistic read, no lock held
+      val before = readIfExists(doc) // optimistic read, no lock held
       val next = f(before)
       FileDocumentStore.locked(lock) {
-        if (get(id) == before) { // nobody committed since our read
-          upsert(next)
+        if (readIfExists(doc) == before) { // nobody committed since our read
+          upsert(next) // not write(): an overridden upsert sees the commit
           Some(next)
         } else None // lost the race: re-read, recompute
       }
     }
   }
 
-  override def snapshot: Seq[AnsDoc] = {
+  /** The stored documents' files: `.doc`, without temp files and locks. */
+  private def docFiles[T](f: Iterator[Path] => T): T = {
     val s = Files.list(rootPath)
     try {
       import scala.jdk.CollectionConverters._
-      s.iterator().asScala
-        .filter(p => p.getFileName.toString.endsWith(".doc") &&
-          !p.getFileName.toString.startsWith(".tmp-"))
-        .map(read).toSeq
+      f(s.iterator().asScala.filter { p =>
+        val n = p.getFileName.toString
+        n.endsWith(".doc") && !n.startsWith(".tmp-")
+      })
     } finally s.close()
   }
 
-  def size: Int = snapshot.size
+  override def snapshot: Seq[AnsDoc] = docFiles(_.map(read).toSeq)
+
+  def size: Int = docFiles(_.size)
 }
 
 object FileDocumentStore {

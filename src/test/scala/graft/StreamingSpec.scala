@@ -1133,6 +1133,37 @@ class StreamingSpec extends SparkSpec {
       store.get(id).exists(_.taxonomy.get.tags.get == Seq(AutoTag))))
   }
 
+  test("tag sinks: one SQL execution per trigger, typed and raw") {
+    implicit val sqlCtx = spark.sqlContext
+    val rounds = 3
+    for (raw <- Seq(false, true)) {
+      val ms = MemoryStream[Wire]
+      val ckpt = Files.createTempDirectory("graft-exec-ckpt-").toString
+      val execs = new SqlExecutionLog
+      spark.sparkContext.addSparkListener(execs)
+      try {
+        val q =
+          if (raw) TagPipeline.startRaw(spark, ms.toDF(),
+            new InMemoryRawDocumentStore, ckpt,
+            trigger = Trigger.ProcessingTime(0), storeKey = "exec-count-raw")
+          else TagPipeline.start(spark, ms.toDF(), new InMemoryDocumentStore,
+            ckpt, trigger = Trigger.ProcessingTime(0), storeKey = "exec-count")
+        // processAllAvailable returns only once no batch (no-data
+        // batches included) is left to run, so stop() cuts none short
+        try (1 to rounds).foreach { i =>
+          ms.addData(ev(story(s"E$i"), i))
+          q.processAllAvailable()
+        } finally q.stop()
+        execs.drain(spark)
+        val sinkRuns = q.recentProgress.filter(_.durationMs.containsKey("addBatch"))
+        assert(sinkRuns.count(_.numInputRows > 0) == rounds)
+        assert(execs.of(q.runId) == sinkRuns.length,
+          s"raw=$raw: ${execs.of(q.runId)} SQL executions for " +
+            s"${sinkRuns.length} triggers that ran the sink")
+      } finally spark.sparkContext.removeSparkListener(execs)
+    }
+  }
+
   test("tag sink: one refused id fails the batch with DocumentWriteRejected, after every other update finished, and writes no marker") {
     import spark.implicits._
     import com.sun.net.httpserver.{HttpExchange, HttpServer}
@@ -2759,4 +2790,39 @@ object StreamingSpec {
   }
   case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
       event_type: String, value: Double)
+
+  /** The SQL executions Spark started, by the streaming run they ran in
+    * (the run id is in the batch description the engine sets as the
+    * execution's description).
+    */
+  class SqlExecutionLog extends org.apache.spark.scheduler.SparkListener {
+    import org.apache.spark.scheduler.{SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    private val descriptions =
+      new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    private val marker = s"drain-${java.util.UUID.randomUUID()}"
+    private val drained = new java.util.concurrent.CountDownLatch(1)
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => descriptions.add(s.description)
+      case _ =>
+    }
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (Option(e.properties).exists(
+          _.getProperty("spark.job.description") == marker))
+        drained.countDown()
+
+    /** Waits until every event posted so far has reached this listener:
+      * the bus delivers in order, so it waits for a marker job's start. */
+    def drain(spark: org.apache.spark.sql.SparkSession): Unit = {
+      val sc = spark.sparkContext
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener bus did not drain")
+    }
+
+    def of(runId: java.util.UUID): Int =
+      descriptions.asScala.count(_.contains(s"runId = $runId"))
+  }
 }
