@@ -1595,7 +1595,7 @@ object Footer extends QueryGroup {
       val base =
         if (paths.isEmpty)
           spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-            spark.read.parquet(allFiles.head).schema)
+            graft.Tables.footerSchema(spark, allFiles.head))
         else spark.read.parquet(paths: _*)
       base.filter(pred)
         .agg(count(lit(1)).as(nCol), coalesce(bit_xor(rowHash), lit(0L)).as(xCol))

@@ -118,8 +118,8 @@ object WireSource {
     // the RAW file schema (whatever encoding this fixture generation
     // used); ts normalization happens post-load through the SAME dtype
     // dispatch Tables uses for batch, so batch ≡ stream holds across
-    // testdata regenerations
-    val raw = spark.read.parquet(eventsDir).schema
+    // testdata regenerations; read from a footer, so no inference job
+    val raw = graft.Tables.footerSchema(spark, eventsDir)
     val reader = spark.readStream.schema(raw)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     graft.Tables.normalizeEventsTs(reader.parquet(eventsDir))
