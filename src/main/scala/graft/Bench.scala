@@ -228,7 +228,7 @@ object Bench {
       // memoized registrations (q201/q214/q223/... via CachePool.memo)
       // would otherwise hand the isolated column a localCheckpoint READ
       // where the in-suite column measured a BUILD — clear memos so both
-      // columns price the same work (the ScalingBench discipline)
+      // columns price the same work
       medianOf(samples) {
         CachePool.memoClear()
         sample(SparkEntry.queries(name)(spark, sfDir))(checksum)

@@ -103,9 +103,10 @@ object CachePool {
       build: => DataFrame): DataFrame =
     memos.computeIfAbsent((key, dir), _ => build.localCheckpoint())
 
-  /** Drop every memoized frame. ScalingBench calls this between samples
-    * so scaling curves measure BUILDS, not cache reads — the bench/card
-    * amortization is the feature there, a measurement bug here.
+  /** Drop every memoized frame. `Bench`'s isolated re-runs and the
+    * `perfbench` suite workloads call this before each sample so they
+    * time BUILDS, not cache reads: the amortization a memo buys is the
+    * feature in a suite run and a measurement bug in a per-query timing.
     * Driver-side model memos (e.g. the q237 trained-cost table) register
     * a clear hook so one call resets every session memo class.
     */

@@ -13,13 +13,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, St
   * struct candidates, each with its own dot-against-a-64-double-literal —
   * generates code (and an interpreted-eval fallback path) whose size
   * grows with k·dim: at the k=8 registered queries it codegens fine, but
-  * at the SemDeDup scale policy (k ∝ n; k=80 at the 10× ScalingBench
-  * corpus) the generated method blows past JIT limits and a single
-  * map-only assignment pass measured ~14 s for 50k×80×64 ≈ 256M
-  * multiply-adds (~100× below compiled-loop speed). This expression is
-  * the same arithmetic as a compact double loop over a reference-object
-  * matrix: codegen size is CONSTANT in k, and the matrix lives once per
-  * executor instead of being re-parsed as k literal arrays.
+  * at the SemDeDup scale policy (k ∝ n; k=80 on a 10× corpus, see
+  * BASELINE.md's scaling rows) the generated method blows past JIT
+  * limits and a single map-only assignment pass measured ~14 s for
+  * 50k×80×64 ≈ 256M multiply-adds (~100× below compiled-loop speed).
+  * This expression is the same arithmetic as a compact double loop over
+  * a reference-object matrix: codegen size is CONSTANT in k, and the
+  * matrix lives once per executor instead of being re-parsed as k
+  * literal arrays.
   *
   * Determinism contract (bit-identical to the least()-chain it replaces,
   * and to the DuckDB oracle's `row_number() OVER (ORDER BY d2, cluster)`

@@ -85,7 +85,7 @@ object TextOps {
   }
 
   /** THE build side of every Bloom gate in the engine (q155 erasure,
-    * q158 decontamination, the streaming ingest gates): tree-aggregate
+    * q158 decontamination, q144 cross-dump near-dup): tree-aggregate
     * `keys.(column)` into a `spark.util.sketch.BloomFilter` sized
     * m ≈ 10 bits/key (fpp = 1%) and ship its serialized form as ONE
     * broadcast — the probe side rides [[bloomAnyContain]]. Callers pass

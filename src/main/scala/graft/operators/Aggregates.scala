@@ -348,21 +348,14 @@ object Aggregates extends QueryGroup {
 
   /** The d×w cell counts — the SKETCH, and the only state the operator
     * keeps: one partial-aggregating rollup to ≤ CmDepth·CmWidth rows.
-    * Shared VERBATIM by the batch query and the streaming maintenance
-    * twin (`StreamOps.countMinStream` — cell counts are a commutative
-    * monoid, which is exactly what makes the rollup a valid streaming
-    * aggregate), so batch ≡ stream is structural, not re-implemented.
     */
-  private[graft] def cmCellsOfTokens(toks: org.apache.spark.sql.DataFrame)
+  private def cmCells(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
-    toks
+    cmTokens(docs)
       .select(col("token"), explode(array(
         (0 until CmDepth).map(s => lit(s)): _*)).as("seed"))
       .groupBy(col("seed"), cmBucket(col("token"), col("seed")).as("bucket"))
       .agg(count(lit(1)).as("c"))
-
-  private[graft] def cmCells(docs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = cmCellsOfTokens(cmTokens(docs))
 
   private[graft] def countMinHeavy(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {

@@ -974,8 +974,8 @@ object Curation extends QueryGroup {
     // bloom-filter join injects, made explicit and oracle-checkable:
     //  1. build: the deny list tree-aggregates into a broadcast
     //     `spark.util.sketch.BloomFilter` at m ≈ 10·|deny| bits
-    //     (fpp 1%) — `TextOps.bloomBits`, the SAME build q158 and the
-    //     streaming ingest gate use (one Bloom code path engine-wide);
+    //     (fpp 1%) — `TextOps.bloomBits`, the SAME build q158 and q144
+    //     use (one Bloom code path engine-wide);
     //  2. probe: a MAP-ONLY `BloomAnyProbe` pass flags candidate rows.
     //     No false negatives by sketch contract, so the unflagged
     //     majority — (1 − |deny|/|keys| − fpp) of the corpus — passes
@@ -1258,7 +1258,7 @@ object Curation extends QueryGroup {
     * One Bloom code path engine-wide (r10, closing the r9 verdict's
     * consistency ask): the sketch is the same broadcast
     * `spark.util.sketch.BloomFilter` + [[graft.expressions.BloomAnyProbe]]
-    * pair q158 and the streaming ingest gate use — m ≈ 10·|deny| bits
+    * pair q158 and q144 use — m ≈ 10·|deny| bits
     * (fpp 1%) actually executed, not a documented upgrade path. The
     * probe is NULL-propagating (NULL user_id → NULL verdict), so both
     * consumers below route NULL keys down the pass-through branch with a

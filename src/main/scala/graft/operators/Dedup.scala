@@ -73,7 +73,8 @@ object Dedup extends QueryGroup {
     * MinHash and Jaccard verification need — see ShingleHashes scaladoc).
     */
   private[graft] def shingled(df: DataFrame): DataFrame =
-    shingled(df, Nil)
+    df.select(col("doc_id"),
+      TextOps.shingleHashes(TextOps.tokens(col("text")), 3).as("sh"))
 
   /** Spread an under-split scan across the cluster before the (narrow,
     * compute-heavy) shingle+signature pipeline: a scan with fewer splits
@@ -232,34 +233,10 @@ object Dedup extends QueryGroup {
       .select(col("a_id"), col("b_id"))
   }
 
-  /** q144's pipeline: band the two corpora separately, equi-join the
-    * band tables on (band, hash) — |new|×occupancy pair work, no
-    * self-join — then verify candidates with exact Jaccard over the
-    * full shingle sets and roll up per new doc. Buckets larger than
-    * `MaxLshBucket` on either side are dropped whole (the q46 skew
-    * guard, per corpus): a hot boilerplate bucket caps at a constant
-    * instead of |new_bucket|·|corpus_bucket| pairs.
-    */
-  /** MinHash signatures over a shingled `(doc_id, sh)` frame — shared by
-    * q144's batch pipeline and its streaming twin.
-    */
+  /** MinHash signatures over a shingled `(doc_id, sh)` frame. */
   private[graft] def minhashSigs(docs: DataFrame): DataFrame =
-    minhashSigs(docs, Nil)
-
-  /** [[minhashSigs]] carrying extra pass-through columns (the streaming
-    * watermarked tier threads the event-time column through the
-    * pipeline rather than re-joining the stream to itself for it).
-    */
-  private[graft] def minhashSigs(docs: DataFrame, carry: Seq[String]): DataFrame =
-    docs.select(col("doc_id") +: col("sh") +:
-      TextOps.minhashSignature(col("sh"), perms).as("sig") +:
-      carry.map(col): _*)
-
-  /** [[shingled]] carrying extra pass-through columns. */
-  private[graft] def shingled(df: DataFrame, carry: Seq[String]): DataFrame =
-    df.select(col("doc_id") +:
-      TextOps.shingleHashes(TextOps.tokens(col("text")), 3).as("sh") +:
-      carry.map(col): _*)
+    docs.select(col("doc_id"), col("sh"),
+      TextOps.minhashSignature(col("sh"), perms).as("sig"))
 
   /** `(doc_id, band, bh)` band-key rows from a signature frame. */
   private[graft] def minhashBandRows(s: DataFrame): DataFrame = s
@@ -284,6 +261,14 @@ object Dedup extends QueryGroup {
       (bh, band) => xxhash64(bh, band))
   }
 
+  /** q144's pipeline: band the two corpora separately, equi-join the
+    * band tables on (band, hash) — |new|×occupancy pair work, no
+    * self-join — then verify candidates with exact Jaccard over the
+    * full shingle sets and roll up per new doc. Buckets larger than
+    * `MaxLshBucket` on either side are dropped whole (the q46 skew
+    * guard, per corpus): a hot boilerplate bucket caps at a constant
+    * instead of |new_bucket|·|corpus_bucket| pairs.
+    */
   private[graft] def crossDumpNearDup(
       newDocs: DataFrame, corpus: DataFrame): DataFrame = {
     def capped(bands: DataFrame): DataFrame =
@@ -450,8 +435,8 @@ object Dedup extends QueryGroup {
       pairs: DataFrame, assumeCanonical: Boolean = false): DataFrame =
     connectedComponentsWithRounds(pairs, assumeCanonical)._1
 
-  /** [[connectedComponents]] plus the round count, for the ScalingBench
-    * round-growth record and the deep-chain OperatorSpec pin.
+  /** [[connectedComponents]] plus the round count, which the deep-chain
+    * OperatorSpec pin reads (BASELINE.md records its growth at 10×).
     *
     * `assumeCanonical = true` (r18, guide §2.4 — "a `distinct` on data
     * that is already unique"): every registered pair producer
@@ -1068,8 +1053,7 @@ object Dedup extends QueryGroup {
       // `bloomBits` build is two extra Spark jobs and at bench scale
       // those fixed costs doubled q103's time (1.9 s → 3.9 s) while the
       // pruned equi-join saved less than they cost. q144 keeps the gate
-      // where it cuts 2.8×, the streaming twin keeps it where the build
-      // amortizes once per stream; a deployment running this batch
+      // where it cuts 2.8×; a deployment running this batch
       // query against a 100 TB corpus enables the same gate by
       // composing `TextOps.bloomBits` + `bloomAnyContain` exactly as
       // `crossDumpNearDup` does.

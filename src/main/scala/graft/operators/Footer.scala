@@ -1398,11 +1398,10 @@ object Footer extends QueryGroup {
       java.nio.file.Paths.get(layoutDir, ManifestName),
       (units.map(manifestLine).mkString("\n") + "\n").getBytes("UTF-8"))
 
-  /** q268's IVM append: a NEW unit's stats land as one appended line —
-    * the [[graft.streaming.StreamOps.ClusteredTable]] discipline on
-    * disk: appends never rewrite existing entries, so readers see the
-    * old units unchanged plus the new one (envelope soundness under
-    * appends is per-unit locality).
+  /** q268's IVM append: a NEW unit's stats land as one appended line.
+    * Appends never rewrite existing entries, so readers see the old
+    * units unchanged plus the new one (envelope soundness under appends
+    * is per-unit locality).
     */
   private[graft] def appendManifest(layoutDir: String,
       units: Seq[UnitStats]): Unit =
@@ -1590,13 +1589,16 @@ object Footer extends QueryGroup {
     val rowHash = conv(substring(md5(concat(
       hashCols.flatMap(c => Seq(sep, col(c).cast("string"))): _*)),
       1, 15), 16, 10).cast("long")
+    // one footer read on the driver: an inferring read would start a
+    // schema job per scan over units whose schema is already on disk
+    val schema = graft.Tables.footerSchema(spark, allFiles.head)
     def scanAgg(paths: Seq[String], pred: org.apache.spark.sql.Column,
         nCol: String, xCol: String): DataFrame = {
       val base =
         if (paths.isEmpty)
           spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-            graft.Tables.footerSchema(spark, allFiles.head))
-        else spark.read.parquet(paths: _*)
+            schema)
+        else spark.read.schema(schema).parquet(paths: _*)
       base.filter(pred)
         .agg(count(lit(1)).as(nCol), coalesce(bit_xor(rowHash), lit(0L)).as(xCol))
     }
@@ -2614,10 +2616,9 @@ object Footer extends QueryGroup {
     ("nchars_300_399", 300L, 399L),
     ("nchars_500_599", 500L, 599L))
 
-  /** q261: LAYOUT OPTIMIZE — the compaction [[
-    * graft.streaming.StreamOps.clusteredIngestStream]]'s scaladoc
-    * defers to, executed and priced: per-batch clustering leaves the
-    * table as interleaved batch-LOCAL sort runs (at the fixture's
+  /** q261: LAYOUT OPTIMIZE — the compaction an append-per-batch
+    * clustered ingest needs, executed and priced: per-batch clustering
+    * leaves the table as interleaved batch-LOCAL sort runs (at the fixture's
     * fragmentation each run is a single unit spanning the key's WHOLE
     * range, so every range predicate reads every unit — the fully
     * fragmented state; at larger batch sizes the same effect appears
@@ -2737,7 +2738,7 @@ object Footer extends QueryGroup {
 
   /** q263: the DISTRIBUTED CLUSTERED WRITE surfaced as its own contract
     * row — the operator the whole pruned-scan tier (q245/q251/q254/
-    * q256/q257/q259/q260/q261 and the streaming clustered ingest) rides
+    * q256/q257/q259/q260/q261) rides
     * through [[writeUnits]], now executed as a range-partitioned
     * PARALLEL write with exact rank-derived unit boundaries. The query
     * emits one row per unit: its index, row count, and per-column
@@ -3068,7 +3069,7 @@ object Footer extends QueryGroup {
       HouseWriter.roundtrip(spark, dir)),
 
     // q261 [north star, r14]: LAYOUT OPTIMIZE — the maintenance loop's
-    // layout half: interleaved batch-local sort runs (the streaming
+    // layout half: interleaved batch-local sort runs (an append-per-batch
     // ingest's honest state) re-clustered into one global layout, both
     // geometries executed under the xor proof, the rewrite priced as
     // units_read_pre vs units_read_post at identical match legs.

@@ -123,7 +123,7 @@ object Joins extends QueryGroup {
     }),
 
     // q16 [CLOSURE]: interval self-join (batch form of the stream-stream
-    // time-range join; streaming twin lives in graft.streaming).
+    // time-range join).
     "q16_interval_join" -> ((spark, dir) => {
       val e = Tables(spark, dir, "events").alias("e")
       val s = Tables(spark, dir, "events").alias("s")

@@ -919,11 +919,7 @@ object Multimodal extends QueryGroup {
     }
   }
 
-  /** q217's extraction projection over (doc_id, html) pages — shared
-    * verbatim by batch q217 and the streaming ingest twin
-    * (`StreamOps.boilerplateExtractStream`), so batch≡stream equality
-    * is structural (the Tokenizer.tokenized stance).
-    */
+  /** q217's extraction projection over (doc_id, html) pages. */
   private[graft] def boilerplateProjected(pages: DataFrame): DataFrame = {
     import org.apache.spark.sql.graftbridge.{toColumn, toExpression}
     pages
@@ -1345,8 +1341,7 @@ object Multimodal extends QueryGroup {
   }
 
   /** One image's dHash through the real codec — the per-row core of
-    * [[perceptualHashes]], shared by the streaming near-dup gate so the
-    * door and the daily batch pass cannot hash differently.
+    * [[perceptualHashes]].
     */
   private[graft] def dhashOfMedia(docId: Long, media: Array[Byte]): Long = {
     val img = javax.imageio.ImageIO.read(
@@ -1828,8 +1823,8 @@ object Multimodal extends QueryGroup {
     // contract the sparsified graph. Components provably equal q233's
     // (see [[dhashClusterCollapseSparse]]); the oracle is q233's
     // reachability closure VERBATIM, and OperatorSpec pins q235 == q233
-    // row-for-row plus the edge-list linearity that restores the 10x
-    // ScalingBench row q233 had to exclude.
+    // row-for-row plus the edge-list linearity that q233 lacks (q233 was
+    // excluded from BASELINE.md's 10× scaling rows).
     "q235_image_cluster_sparse" -> ((spark, dir) => {
       import spark.implicits._
       val media = graft.Tables.spread(Tables(spark, dir, "documents")

@@ -87,9 +87,9 @@ object Similarity extends QueryGroup {
   private[graft] val MaxBucketHead = 256
 
   /** q49's operator at an explicit key width (the registered query feeds
-    * it lshBits(count); ScalingBench also measures a pinned width as the
-    * fixed-key counterfactual). Probe side capped to the bucket head set
-    * — see [[MaxBucketHead]].
+    * it lshBits(count); BASELINE.md's 10× scaling rows also timed a
+    * pinned width as the fixed-key counterfactual). Probe side capped to
+    * the bucket head set — see [[MaxBucketHead]].
     */
   private[graft] def annLsh(emb0: DataFrame, bits: Int): DataFrame = {
     // CachePool: three plan branches scan this projection (heads
@@ -209,9 +209,9 @@ object Similarity extends QueryGroup {
     *
     * K is THE scale knob: a cell holds ~n/K vectors, so probe work is
     * n·(n/K) dots total. Fixed K goes quadratic as the corpus grows —
-    * hold cell size constant by growing K with n (ScalingBench measures
-    * exactly this at 10×; classic IVF picks K ∝ √n to balance the n·K
-    * assignment term against the probe term).
+    * hold cell size constant by growing K with n (BASELINE.md's 10×
+    * scaling rows measure exactly this; classic IVF picks K ∝ √n to
+    * balance the n·K assignment term against the probe term).
     */
   private[graft] def ivfTop1(emb0: DataFrame, numCentroids: Int): DataFrame = {
     // norms hoisted to once per row/centroid (bit-identical reuse —
@@ -938,10 +938,7 @@ object Similarity extends QueryGroup {
 
   /** q139's probe: every train row against the broadcast benchmark,
     * gate cross-multiplied into BIGINT, hit count partial-aggregated.
-    * Split out so ScalingBench can measure the DEPLOYMENT shape — a
-    * fixed-size benchmark probed by a growing corpus — separately from
-    * the registered entry, whose md5-gated benchmark grows with the
-    * fixture.
+    * Shared by q139 and q143, which probe the same staged benchmark.
     */
   private[graft] def deconProbe(train: DataFrame, bench: DataFrame): DataFrame =
     train
@@ -964,9 +961,8 @@ object Similarity extends QueryGroup {
         quantizeInt8(col("embedding"), col("mx")).as("qvec"))
 
   /** q140's probe: corpus scan × broadcast anchors on label inequality,
-    * top-3 per anchor via the bounded TopKAgg. Split out for the same
-    * reason as deconProbe — the deployment shape is a fixed anchor
-    * batch.
+    * top-3 per anchor via the bounded TopKAgg. Split out so SkewSpec's
+    * tie-storm case can probe a hand-built anchor batch.
     */
   private[graft] def hardNegProbe(corpus: DataFrame,
       anchors: DataFrame): DataFrame = {
@@ -1002,10 +998,10 @@ object Similarity extends QueryGroup {
   /** q113's operator over any embeddings-shaped input — see the query
     * comment above. `k` is THE scale knob: SemDeDup grows cluster count
     * with the corpus (k ≈ n / target-cluster-size) so per-cluster pair
-    * work stays bounded; ScalingBench measures both the fixed-k and the
-    * scaled-k policies, the q59/ivfTop1 discipline. The head-set cap
-    * (MaxClusterHead) bounds the blast radius when the k assumption
-    * breaks.
+    * work stays bounded (BASELINE.md's 10× scaling rows compare the
+    * fixed-k and scaled-k policies, the q59/ivfTop1 discipline). The
+    * head-set cap (MaxClusterHead) bounds the blast radius when the k
+    * assumption breaks.
     */
   private[graft] def semanticDedup(emb: DataFrame, k: Int): DataFrame = {
     val topk = udaf(new graft.functions.TopKAgg(MaxClusterHead),

@@ -37,9 +37,6 @@ import graft.Tables
   * ≤ k longs, the global agg reduces ≤ k per partition. The exact legs
   * are the one linear token-keyed rollup the VERIFIED artifact pays;
   * the set algebra itself runs on two ≤k-element arrays in one row.
-  * Streaming: the same synopsis builder is a valid complete-mode
-  * aggregate (commutative + associative + idempotent), maintained live
-  * in [[graft.streaming.StreamOps.kmvStream]].
   */
 object Sketches extends QueryGroup {
 
@@ -73,9 +70,7 @@ object Sketches extends QueryGroup {
         sequence(lit(1), size(col("ws")) - 2),
         i => concat_ws(" ", slice(col("ws"), i, lit(3))))).as("token"))
 
-  /** The synopsis builder over a (h: bigint) frame — shared VERBATIM by
-    * the batch query and the streaming maintenance twin.
-    */
+  /** The synopsis builder over a (h: bigint) frame. */
   private[graft] def kmvSynopsis(hashes: DataFrame): DataFrame = {
     val mink = udaf(new graft.functions.MinKAgg(KmvK), Encoders.scalaLong)
     hashes.agg(mink(col("h")).as("synopsis"))
@@ -150,11 +145,9 @@ object Sketches extends QueryGroup {
   private[graft] val HllM = 256
   private[graft] val HllWBits = 52
 
-  /** The register build — q207's state and its streaming twin's
-    * aggregate: per bucket, max(rho). Max is a commutative, associative,
-    * IDEMPOTENT monoid (the q203 stance), so the build consumes the raw
-    * stream, partials carry ≤ m rows, and the same rollup is a valid
-    * complete-mode streaming aggregate with ≤ m rows of state.
+  /** The register build — q207's state: per bucket, max(rho). Max is
+    * a commutative, associative, IDEMPOTENT monoid (the q203 stance), so
+    * the build consumes the raw stream and partials carry ≤ m rows.
     */
   private[graft] def hllRegisters(hashes: DataFrame): DataFrame = {
     val w = pmod(col("h"), lit(1L << HllWBits))

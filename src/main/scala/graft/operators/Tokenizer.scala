@@ -573,9 +573,7 @@ object Tokenizer extends QueryGroup {
     spark.createDataFrame(ids).toDF("token", "token_id")
   }
 
-  /** The tokenize projection itself — shared verbatim by batch q167 and
-    * the streaming ingest twin (`StreamOps.bpeTokenizeStream`), so
-    * batch≡stream equality is structural, not re-implemented. The text
+  /** The tokenize projection itself (q167's corpus pass). The text
     * feeding the BPE chain passes the loud alphabet gate first (one
     * rlike per doc; NULL text sails through to the NULL-count path) —
     * the corpus side now enforces the same contract the dict side

@@ -130,40 +130,6 @@ class TableLog extends Serializable {
     horizon = retain
   }
 
-  // ---- streaming exactly-once tier -----------------------------------
-
-  private val batchMarks =
-    new ConcurrentHashMap[(String, Long), java.lang.Long]()
-
-  /** Exactly-once micro-batch commit — the `foreachBatch` side of the
-    * protocol (the TagPipeline runNs-marker discipline, upgraded from a
-    * file marker to the manifest itself): each (runNs, batchId) commits
-    * AT MOST one version. A replayed batch (restart re-delivery) returns
-    * its original version without touching the log; a genuinely new
-    * batch localCheckpoints its rows (the frame must outlive the
-    * micro-batch), derives its delta-sized key set, and commits through
-    * the same validate-stage-CAS loop as any writer — so a concurrent
-    * batch writer touching the stream's keys gets the SAME loud
-    * [[LostUpdateException]], and vice versa. Empty batches are absorbed
-    * without burning a version (marked -1).
-    */
-  def commitBatch(runNs: String, batchId: Long, dump: DataFrame): Long = {
-    val k = (runNs, batchId)
-    val prev = batchMarks.get(k)
-    if (prev != null) return prev.longValue()
-    val snap = dump.select(col("doc_id"), col("op"), col("txt"))
-      .localCheckpoint()
-    val keys = snap.select(col("doc_id")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    val v =
-      if (keys.isEmpty) -1L
-      else commit(s"stream:$runNs", snapshotVersion, Some(keys),
-        my => snap.select(col("doc_id"), lit(my).as("version"),
-          col("op"), col("txt")))
-    batchMarks.put(k, java.lang.Long.valueOf(v))
-    v
-  }
-
   /** Snapshot-isolation read AS OF `v` (q228 semantics) through the
     * checkpoint + surviving deltas; REFUSES a vacuumed version.
     */
@@ -263,23 +229,10 @@ object Txn extends QueryGroup {
   private[graft] def changeFeed(dumps: Seq[DataFrame], from: Long,
       to: Long): DataFrame = {
     require(from < to, s"q241: change feed needs from < to, got $from >= $to")
-    feedBetween(Relational.timeTravelRead(dumps, from),
-      Relational.timeTravelRead(dumps, to), from)
-  }
-
-  /** The diff-and-classify core of [[changeFeed]] over two ALREADY-READ
-    * snapshots (the q223 compaction schema: doc_id, alive, text_md5) —
-    * factored out so the STREAMING feed can diff consecutive manifest
-    * versions through [[TableLog.readAsOf]] with the identical
-    * classification (batch ≡ stream by shared code, the q223/q228
-    * discipline).
-    */
-  private[graft] def feedBetween(aRead: DataFrame, bRead: DataFrame,
-      from: Long): DataFrame = {
-    val a = aRead.select(col("doc_id"), col("alive").as("a_alive"),
-      col("text_md5").as("pre_md5"))
-    val b = bRead.select(col("doc_id"), col("alive").as("b_alive"),
-      col("text_md5").as("post_md5"))
+    val a = Relational.timeTravelRead(dumps, from).select(col("doc_id"),
+      col("alive").as("a_alive"), col("text_md5").as("pre_md5"))
+    val b = Relational.timeTravelRead(dumps, to).select(col("doc_id"),
+      col("alive").as("b_alive"), col("text_md5").as("post_md5"))
     a.join(b, Seq("doc_id"), "full_outer")
       .withColumn("change",
         when(coalesce(col("a_alive"), lit(false)) && !col("b_alive"), "delete")

@@ -189,9 +189,7 @@ private[graft] object Warc {
   /** One parsed response record, post-validation: doc id (from the
     * record id), the WARC Content-Length (octets), the HTML, the
     * extracted main text, and the raw record headers. The SINGLE
-    * extraction loop shared by batch q169, the streaming twin, and the
-    * q174 pipeline — so the batch≡stream claim is structural (the
-    * Tokenizer.tokenized stance).
+    * extraction loop shared by q169 and the q174 pipeline.
     */
   final case class Extracted(docId: Long, contentLength: Long,
       html: String, text: String, headers: Map[String, String])

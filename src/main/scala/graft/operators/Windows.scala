@@ -12,9 +12,9 @@ import graft.Tables
   * within a shard (`app.py:16-30`) ≙ `partitionBy(shard) orderBy(seq)`.
   *
   * q39–q41 are the streaming windows declared in batch form over
-  * `events.parquet` so the DuckDB oracle applies; the streaming runtime in
-  * `graft.streaming` reuses the identical expressions (batch≡stream
-  * unification, Structured Streaming SIGMOD'18).
+  * `events.parquet` so the DuckDB oracle applies (the same expressions
+  * run unchanged on a stream: batch≡stream unification, Structured
+  * Streaming SIGMOD'18).
   *
   * Timestamp discipline: event ts is nanosecond parquet that Spark
   * truncates to µs on read, so queries never output raw ts — only epoch

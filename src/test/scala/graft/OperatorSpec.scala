@@ -2949,6 +2949,36 @@ class OperatorSpec extends SparkSpec {
       s"q177 residual twin-recall ${twinR(residT)} must not lose to raw PQ's ${twinR(adcT)}")
     assert(twinR(residT) >= 0.60,
       s"q177 residual twin-recall@10 ${twinR(residT)} below the 0.60 floor")
+
+    // q170's encoder on the same books: a twin (±2 raw jitter, ≤ ±1
+    // after int8 quantization) keeps its 4 codes except where it
+    // crosses a codeword boundary — measured 0.971, the Voronoi-edge
+    // residue any quantizer has
+    val pqCodes = Pq.encoded(base, books).collect()
+      .map(r => r.getLong(0) -> (1 to Pq.SubSpaces).map(r.getLong)).toMap
+    assert(pqCodes.size == n)
+    val stability = (0 until n by 2).count(i =>
+      pqCodes(i.toLong) == pqCodes(AnnFixture.twinOf(i.toLong))).toDouble / (n / 2)
+    info(f"q170 twin code stability $stability%.3f")
+    assert(stability >= 0.95,
+      f"q170 PQ codes unstable across twin jitter: $stability%.3f < 0.95")
+
+    // q139's decon gate on the planted clusters: with cluster 0's even
+    // members as the benchmark, the gate (cos ≥ 0.35) flags exactly
+    // cluster 0's other members — cos≈1 in-cluster, ≈0.1 across
+    val benchIds = (0L until n).filter(id =>
+      AnnFixture.clusterOf(id) == 0 && id % 2 == 0)
+    val inBench = col("vec_id").isin(benchIds: _*)
+    val staged = Similarity.deconStage(fix)
+    val flagged = Similarity.deconProbe(staged.filter(!inBench),
+        staged.filter(inBench).select(col("vec_id").as("b_id"),
+          col("qvec").as("b_qvec"), col("n2").as("bb")))
+      .collect().map(_.getLong(0)).toSet
+    val expect = (0L until n).filter(id =>
+      AnnFixture.clusterOf(id) == 0 && id % 2 == 1).toSet
+    assert(expect.nonEmpty && flagged == expect,
+      s"q139 decon on planted clusters: missed=${(expect -- flagged).size} " +
+        s"spurious=${(flagged -- expect).size}")
   }
 
   test("q198 unigram viterbi: DP == exponential enumeration; BPE-path dominance; NULL discipline") {
@@ -4986,9 +5016,9 @@ class OperatorSpec extends SparkSpec {
     assert(Footer.readManifest(loDir).isEmpty,
       "a stale manifest must fall back to the footer walk, not plan")
     // 3. APPEND: rebuild the lo layout, then append the hi rows as new
-    // units (the streaming ClusteredTable discipline on disk) — the
-    // manifest grows by exactly the new lines, a predicate matching
-    // only appended rows reads the new units, and the xor proof holds
+    // units — the manifest grows by exactly the new lines, a predicate
+    // matching only appended rows reads the new units, and the xor proof
+    // holds
     val loStats = Footer.writeUnits(loRows,
       Seq(col("n_chars"), col("doc_id")), "q268_spec_lo", 64L)
     val hiStats = Footer.writeUnits(hiRows,

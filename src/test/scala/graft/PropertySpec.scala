@@ -237,7 +237,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("BloomAnyProbe never lies negative, for arbitrary key sets") {
-    // the q155/q158/erasureScrubStream safety property: a true member
+    // the q155/q158/q144 safety property: a true member
     // (scalar mode) — or any array containing one — always probes true,
     // whatever the key distribution; the empty array can never hit.
     // False-positive RATE is geometry-dependent and covered by the

@@ -2,32 +2,17 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Skew
-
-/** Salted-join semantics: exactly the plain equi-join's result, spread
-  * over `salts` reducers per key.
+/** Skew guards: AQE's runtime skew split on the engine's join shapes,
+  * and the caps that keep hot buckets, clusters and ties of the batch
+  * dedup/ANN operators from going quadratic.
   */
 class SkewSpec extends SparkSpec {
 
-  test("saltedJoin == plain join, row for row") {
-    val e = Tables(spark, Sf, "events")
-    val c = Tables(spark, Sf, "customer")
-      .withColumnRenamed("c_custkey", "user_id")
-    val plain = e.join(c, Seq("user_id"))
-      .select("event_id", "user_id", "c_name")
-    val salted = Skew.saltedJoin(e, c, "user_id", salts = 7, saltBy = "event_id")
-      .select("event_id", "user_id", "c_name")
-    assert(salted.count() == plain.count())
-    assert(salted.exceptAll(plain).count() == 0)
-    assert(plain.exceptAll(salted).count() == 0)
-  }
-
   test("AQE skew join: q10's SMJ splits the hot key and matches the unsplit result") {
     import spark.implicits._
-    // r8 verdict item 5: Skew.saltedJoin covers deterministic salting;
-    // this exercises Spark's OWN runtime skew split on the engine's q10
-    // join shape — the mechanism a 100 TB run leans on first, before any
-    // hand salting.
+    // r8 verdict item 5: Spark's OWN runtime skew split on the engine's
+    // q10 join shape — the mechanism a 100 TB run leans on first, before
+    // any hand salting.
     val dir = java.nio.file.Files.createTempDirectory("graft-skewaqe-").toString
     // one hot order owns 30k lineitems (non-sequential linenumbers so the
     // shuffle blocks don't compress away), the other 49 are tiny

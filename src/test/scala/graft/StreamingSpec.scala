@@ -14,10 +14,11 @@ import graft.functions.Codec
 import graft.streaming._
 import graft.streaming.AnsModel._
 
-/** Streaming-semantics tests (SURVEY.md §5 rule 4): MemoryStream-driven
-  * micro-batches through the real StreamExecution engine — watermarks,
-  * state-backed dedup, arbitrary state, and the end-to-end tag pipeline
-  * with its idempotent upsert sink.
+/** Streaming-semantics tests (SURVEY.md §5 rule 4): MemoryStream- and
+  * Kinesis-stub-driven micro-batches through the real StreamExecution
+  * engine — the end-to-end tag pipeline (decode, first-publish filter,
+  * watermarked id dedup, idempotent upsert sink), its checkpoints and
+  * restarts, and the document stores it writes to.
   */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -204,108 +205,6 @@ class StreamingSpec extends SparkSpec {
     q.processAllAvailable(); q.stop()
     val ids = spark.table("first_pub").collect().map(_.getAs[String]("id"))
     assert(ids.toSeq == Seq("first"))
-  }
-
-  test("dropDuplicatesWithinWatermark: redelivered ids collapse to one row") {
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[Ev]
-    val out = StreamOps.dedupWithinWatermark(ms.toDF(), "event_id")
-    val q = out.writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append").start()
-    ms.addData(Ev(1, t(0), 10, "signup", 1.0), Ev(2, t(1), 11, "signup", 2.0))
-    q.processAllAvailable()
-    ms.addData(Ev(1, t(0), 10, "signup", 1.0)) // redelivery, same id
-    q.processAllAvailable()
-    q.stop()
-    val ids = spark.table("dedup_out").select("event_id")
-      .collect().map(_.getLong(0)).sorted
-    assert(ids.toSeq == Seq(1L, 2L))
-  }
-
-  test("tumbling window with watermark: late event beyond watermark is dropped") {
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[Ev]
-    val agg = StreamOps.tumblingCounts(ms.toDF(), watermarkDelay = "10 minutes")
-    val q = agg.writeStream.format("memory").queryName("tumble_out")
-      .outputMode("append").start()
-    // hour-0 events, then advance event time far enough that the
-    // watermark (max ts - 10 min) passes the end of hour 0.
-    ms.addData(Ev(1, t(5), 1, "view", 1.0), Ev(2, t(10), 1, "view", 1.0))
-    q.processAllAvailable()
-    ms.addData(Ev(3, t(80), 1, "view", 1.0)) // watermark → :70 > hour-0 end
-    q.processAllAvailable()
-    ms.addData(Ev(4, t(6), 1, "view", 99.0)) // LATE: inside closed hour 0
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("tumble_out")
-      .select(col("window.start").cast("long").as("ws"), col("n"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    // hour-0 window emitted exactly once, with 2 rows — the late 4th never counted
-    assert(rows.values.toSeq == Seq(2L))
-  }
-
-  test("session windows split on 30-minute gaps per user") {
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[Ev]
-    val agg = StreamOps.sessionCounts(ms.toDF(), watermarkDelay = "5 minutes")
-    val q = agg.writeStream.format("memory").queryName("sess_out")
-      .outputMode("append").start()
-    ms.addData(
-      Ev(1, t(0), 1, "view", 1.0), Ev(2, t(10), 1, "view", 1.0), // session 1
-      Ev(3, t(60), 1, "view", 1.0),                              // session 2 (50-min gap)
-      Ev(4, t(0), 2, "view", 1.0))                               // user 2
-    q.processAllAvailable()
-    ms.addData(Ev(5, t(200), 3, "view", 1.0)) // advance watermark, close sessions
-    q.processAllAvailable()
-    q.stop()
-    val sess = spark.table("sess_out")
-      .select(col("user_id"), col("n")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(sess.contains((1L, 2L)) && sess.contains((1L, 1L)) && sess.contains((2L, 1L)))
-  }
-
-  test("TagHistory (flatMapGroupsWithState): emits only first application per (doc, slug)") {
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[TagHistory.TagEvent]
-    val q = TagHistory.changes(spark, ms.toDS()).writeStream
-      .format("memory").queryName("hist_out").outputMode("append").start()
-    ms.addData(
-      TagHistory.TagEvent("d1", "auto", "auto"),
-      TagHistory.TagEvent("d1", "auto", "auto"), // duplicate within batch
-      TagHistory.TagEvent("d1", "manual", "manual"),
-      TagHistory.TagEvent("d2", "auto", "auto"))
-    q.processAllAvailable()
-    ms.addData(TagHistory.TagEvent("d1", "auto", "auto")) // duplicate across batches
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("hist_out").as[TagHistory.TagChange].collect()
-    assert(got.length == 3)
-    assert(got.count(_.doc_id == "d1") == 2)
-    val firstD1 = got.filter(_.doc_id == "d1").sortBy(_.n_tags_after).head
-    assert(firstD1.first_application && firstD1.n_tags_after == 1)
-  }
-
-  test("stream-stream interval join: pairs same-user events within the lookback, bounded state") {
-    implicit val sqlCtx = spark.sqlContext
-    val msL = MemoryStream[Ev]
-    val msR = MemoryStream[Ev]
-    val joined = StreamOps.intervalJoin(
-      msL.toDF().select(col("event_id").as("l_id"), col("user_id"), col("ts")),
-      msR.toDF().select(col("event_id").as("r_id"),
-        col("user_id").as("r_user"), col("ts").as("r_ts"))
-        .withColumnRenamed("r_user", "user_id").withColumnRenamed("r_ts", "ts"),
-      lookback = "5 minutes")
-      .select(col("e.l_id"), col("s.r_id"))
-    val q = joined.writeStream.format("memory").queryName("ij_out")
-      .outputMode("append").start()
-    msR.addData(Ev(100, t(0), 1, "purchase", 1.0), // 3 min before L1 → pairs
-      Ev(101, t(20), 1, "purchase", 1.0),          // after L1 → no pair
-      Ev(102, t(0), 2, "purchase", 1.0))           // other user → no pair
-    msL.addData(Ev(1, t(3), 1, "view", 1.0))
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("ij_out").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == Set((1L, 100L)))
   }
 
   test("checkpoint recovery: a restarted query resumes without re-tagging") {
@@ -592,50 +491,6 @@ class StreamingSpec extends SparkSpec {
     lfs.setVerifyChecksum(true)
     val in = lfs.open(new HPath(dir.resolve("0").toUri))
     try assert(in.readAllBytes().toSeq == second.toSeq) finally in.close()
-  }
-
-  test("watermarked cross-dump dedup: bounded state — in-horizon dups collapse, post-eviction re-arrivals re-emit") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val corpus = Seq((100L, "the quick brown fox jumps over the lazy dog today"))
-      .toDF("doc_id", "text")
-    val ms = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val q = StreamOps.crossDumpNearDupStreamWatermarked(
-        ms.toDF().toDF("doc_id", "text", "ts"), corpus, "10 minutes")
-      .writeStream.format("memory").queryName("xdup_wm_out")
-      .outputMode("append").start()
-    // batch 1: doc 1 matches the corpus → pair emitted, state created
-    ms.addData((1L, "the quick brown fox jumps over the lazy dog today", t(0)))
-    q.processAllAvailable()
-    // batch 2: the same pair re-arrives INSIDE the horizon → deduped; a
-    // much-later MATCHING doc advances the watermark past t0 + 10min
-    // (content filters sit below the watermark node, so only rows that
-    // survive them feed event-time stats — the operator's documented
-    // caveat; watermark-advancing traffic must itself match)
-    ms.addData(
-      (1L, "the quick brown fox jumps over the lazy dog today", t(1)),
-      (2L, "the quick brown fox jumps over the lazy dog today", t(120)))
-    q.processAllAvailable()
-    // batch 3: another matching doc runs the eviction pass under the
-    // advanced watermark (state removal happens at batch boundaries)
-    ms.addData((3L, "the quick brown fox jumps over the lazy dog today", t(121)))
-    q.processAllAvailable()
-    // batch 4: pair (1,100) re-arrives AFTER its state was evicted
-    // (event time fresh, beyond the old horizon) → re-emitted: the
-    // documented bounded-state trade of the watermarked tier
-    ms.addData((1L, "the quick brown fox jumps over the lazy dog today", t(125)))
-    q.processAllAvailable()
-    q.stop()
-    val pairs = spark.table("xdup_wm_out")
-      .select(col("new_id"), col("c_id")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    // (1,100) exactly twice — once per horizon, the in-horizon
-    // redelivery collapsed; docs 2 and 3 emit their own pairs once
-    assert(pairs.count(_ == (1L, 100L)) == 2,
-      s"expected the pair once per horizon, got ${pairs.toSeq}")
-    assert(pairs.count(_ == (2L, 100L)) == 1 &&
-      pairs.count(_ == (3L, 100L)) == 1 && pairs.length == 4,
-      s"unexpected pair inventory: ${pairs.toSeq}")
   }
 
   test("ranged blob fetch: Range honored, ignored-Range degraded, 5xx absorbed, 404 loud") {
@@ -1373,373 +1228,6 @@ class StreamingSpec extends SparkSpec {
     assert(rate > 100, f"unexpectedly slow: $rate%.0f rec/s")
   }
 
-  test("streaming tumbling agg == batch q39 expression on the same bounded data") {
-    implicit val sqlCtx = spark.sqlContext
-    val data = (0 until 100).map(i =>
-      Ev(i.toLong, t(i * 3), i % 7L, if (i % 2 == 0) "view" else "click", i.toDouble))
-    val ms = MemoryStream[Ev]
-    val q = StreamOps.tumblingCounts(ms.toDF(), "0 seconds").writeStream
-      .format("memory").queryName("unify_out").outputMode("append").start()
-    ms.addData(data: _*)
-    q.processAllAvailable()
-    // one more far-future row so every earlier window is past the watermark
-    ms.addData(Ev(999, t(100000), 0, "view", 0.0))
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("unify_out")
-      .select(col("window.start").cast("long"), col("event_type"), col("n"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-    val batch = data.toDF()
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").cast("long"), col("event_type"), col("n"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-    assert(streamed == batch)
-  }
-
-  test("stream-static incremental dedup: corpus members and re-arrivals never pass") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val corpus = Seq((100L, "existing doc alpha"), (101L, "existing doc beta"))
-      .toDF("doc_id", "text")
-    val ms = MemoryStream[(Long, String)]
-    val q = StreamOps.incrementalDedupStream(
-        ms.toDF().toDF("doc_id", "text"), corpus).writeStream
-      .format("memory").queryName("incdedup_out")
-      .outputMode("append").start()
-    ms.addData((1L, "fresh doc one"), (2L, "existing doc alpha"))
-    q.processAllAvailable()
-    // second micro-batch: an in-stream re-arrival and another corpus hit
-    ms.addData((3L, "fresh doc one"), (4L, "existing doc beta"),
-      (5L, "fresh doc two"))
-    q.processAllAvailable()
-    q.stop()
-    val kept = spark.table("incdedup_out")
-      .select(col("doc_id")).collect().map(_.getLong(0)).toSet
-    // 2/4 are corpus dups (stream-static anti join); 3 is an in-stream
-    // re-arrival of 1 (stateful dedup across micro-batches)
-    assert(kept == Set(1L, 5L))
-  }
-
-  test("ingest-time erasure gate: deny-listed subjects never enter, the rest pass") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val deny = Seq(7L, 9L).toDF("user_id")
-    val ms = MemoryStream[(Long, Long, String)]
-    val q = StreamOps.erasureScrubStream(
-        ms.toDF().toDF("event_id", "user_id", "event_type"), deny).writeStream
-      .format("memory").queryName("erasure_out")
-      .outputMode("append").start()
-    ms.addData((1L, 7L, "view"), (2L, 8L, "view"), (3L, 9L, "buy"))
-    q.processAllAvailable()
-    // second micro-batch: a denied re-arrival and a fresh subject
-    ms.addData((4L, 7L, "buy"), (5L, 10L, "view"))
-    q.processAllAvailable()
-    q.stop()
-    val out = spark.table("erasure_out")
-      .select(col("event_id")).collect().map(_.getLong(0)).toSet
-    // 1/3/4 belong to deny-listed users 7 and 9 — gone on ingest; the
-    // bloom fast path (no join) carried 2 and 5 through untouched
-    assert(out == Set(2L, 5L))
-  }
-
-  test("ingest-time erasure gate keeps NULL-keyed rows (exact anti-join parity)") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val deny = Seq(7L).toDF("user_id")
-    val ms = MemoryStream[(Long, Option[Long], String)]
-    val q = StreamOps.erasureScrubStream(
-        ms.toDF().toDF("event_id", "user_id", "event_type"), deny).writeStream
-      .format("memory").queryName("erasure_null_out")
-      .outputMode("append").start()
-    ms.addData((1L, Some(7L), "view"), (2L, None, "view"), (3L, Some(8L), "buy"))
-    q.processAllAvailable()
-    q.stop()
-    val out = spark.table("erasure_null_out")
-      .select(col("event_id")).collect().map(_.getLong(0)).toSet
-    // a NULL user_id never equals a deny key, so the exact anti-join
-    // keeps row 2 — the bloom-gated split must route the probe's NULL
-    // verdict down the pass-through branch, not drop it from both
-    // branches (the r9 advice's latent divergence)
-    assert(out == Set(2L, 3L))
-  }
-
-  test("streaming chunk dedup == batch q97 kept set on doc-ordered arrival") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val boiler = ("x" * 199) + "y"
-    val docs = Seq(
-      (1L, boiler + "tail one"),
-      (2L, boiler + "tail two"),
-      (3L, "short original"),
-      (4L, boiler + "tail one")) // doc 4 clones doc 1 entirely
-    val ms = MemoryStream[(Long, String)]
-    val q = StreamOps.chunkDedupStream(
-        ms.toDF().toDF("doc_id", "text")).writeStream
-      .format("memory").queryName("chunk_dedup_out")
-      .outputMode("append").start()
-    // one micro-batch per doc: arrival order == (doc_id, chunk_id) order,
-    // the replay/backfill case where the tiers must agree exactly
-    docs.foreach { d => ms.addData(d); q.processAllAvailable() }
-    q.stop()
-    val streamed = spark.table("chunk_dedup_out")
-      .select(col("doc_id"), col("chunk_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // doc 2 keeps only its tail chunk (chunk_id 1); doc 4 keeps nothing
-    assert(streamed == Set((1L, 0L), (1L, 1L), (2L, 1L), (3L, 0L)))
-    val kept = graft.operators.Curation.chunkDedup(docs.toDF("doc_id", "text"))
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    // per-doc survivor counts agree between the tiers
-    assert(streamed.groupBy(_._1).view.mapValues(_.size.toLong).toMap ==
-      kept.filter(_._2 > 0))
-  }
-
-  test("streaming sliding agg == batch q40 expression on the same bounded data") {
-    implicit val sqlCtx = spark.sqlContext
-    // every event lands in 4 overlapping 1h/15min windows, so the twin
-    // checks the overlap fan-out, not just windowing arithmetic
-    val data = (0 until 100).map(i =>
-      Ev(i.toLong, t(i * 3), i % 7L, if (i % 2 == 0) "view" else "click", i.toDouble))
-    val ms = MemoryStream[Ev]
-    val q = StreamOps.slidingCounts(ms.toDF(), "0 seconds").writeStream
-      .format("memory").queryName("slide_out").outputMode("append").start()
-    ms.addData(data: _*)
-    q.processAllAvailable()
-    // one more far-future row so every earlier window is past the watermark
-    ms.addData(Ev(999, t(100000), 0, "view", 0.0))
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("slide_out")
-      .select(col("window.start").cast("long"), col("event_type"), col("n"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-    val batch = data.toDF()
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").cast("long"), col("event_type"), col("n"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-    assert(streamed == batch)
-  }
-
-  test("streaming sessionizer tags every event exactly like batch q125") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.Sessionizer
-    val evs = Tables(spark, Sf, "events")
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"))
-      .as[Sessionizer.Ev].collect().sortBy(e => (e.us, e.event_id))
-    val ms = MemoryStream[Sessionizer.Ev]
-    val q = Sessionizer.tag(spark, ms.toDS()).writeStream
-      .format("memory").queryName("sess_out").outputMode("append").start()
-    val half = evs.length / 2
-    ms.addData(evs.take(half).toSeq); q.processAllAvailable()
-    // redelivered tail of batch 1: high-water guard must emit nothing
-    ms.addData(evs.slice(half - 5, half).toSeq); q.processAllAvailable()
-    val mid = spark.table("sess_out").count()
-    assert(mid == half, s"redelivery leaked ${mid - half} rows")
-    ms.addData(evs.drop(half).toSeq); q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("sess_out")
-      .select(col("event_id"), col("session_seq"), col("session_start"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val batch = SparkEntry.queries("q125_session_ids")(spark, Sf)
-      .collect().map(r => r.getLong(0) -> (r.getLong(2), r.getLong(3))).toMap
-    assert(streamed == batch)
-  }
-
-  test("streaming funnel state machine converges to the batch q107 report") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.Funnel
-    val evs = Tables(spark, Sf, "events")
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        unix_micros(col("ts")).as("us"))
-      .as[Funnel.Ev].collect().sortBy(e => (e.us, e.event_id))
-    val ms = MemoryStream[Funnel.Ev]
-    val q = Funnel.advances(spark, ms.toDS()).writeStream
-      .format("memory").queryName("funnel_out").outputMode("append").start()
-    val third = evs.length / 3
-    Seq(evs.take(third), evs.slice(third, 2 * third), evs.drop(2 * third))
-      .foreach { b => ms.addData(b.toSeq); q.processAllAvailable() }
-    // redeliver the whole first batch: the monotone state machine must
-    // absorb it without emitting a single new advance
-    val before = spark.table("funnel_out").count()
-    ms.addData(evs.take(third).toSeq); q.processAllAvailable()
-    assert(spark.table("funnel_out").count() == before, "redelivery must be silent")
-    q.stop()
-    // final stage per user (last advance) must equal the batch report
-    val streamed = spark.table("funnel_out")
-      .groupBy(col("user_id"))
-      .agg(max(struct(col("stage"), col("view_us"), col("click_us"),
-        col("purch_us"))).as("s"))
-      .select(col("user_id"), col("s.*"))
-      .collect().map(r => r.getLong(0) ->
-        (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-    val batch = SparkEntry.queries("q107_funnel")(spark, Sf)
-      .filter(col("stage") > 0)
-      .collect().map(r => r.getLong(0) ->
-        (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-    assert(streamed == batch)
-  }
-
-  test("streaming transition pairs == batch q115 counts; late events drop, state stays O(1)/user") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.Transitions
-    // real fixture data, split across two micro-batches mid-stream
-    val evs = Tables(spark, Sf, "events")
-      .select(col("user_id"), col("event_id"), col("event_type"))
-      .as[Transitions.Ev].collect().sortBy(_.event_id)
-    val (b1, b2) = evs.splitAt(evs.length / 2)
-    val ms = MemoryStream[Transitions.Ev]
-    val q = Transitions.pairs(spark, ms.toDS()).writeStream
-      .format("memory").queryName("trans_out").outputMode("append").start()
-    ms.addData(b1.toSeq); q.processAllAvailable()
-    // redeliver an already-consumed event: crosses the state's high-water
-    // event_id, must emit nothing
-    ms.addData(b1.last); q.processAllAvailable()
-    ms.addData(b2.toSeq); q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("trans_out")
-      .groupBy(col("prev_type"), col("next_type"))
-      .agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val batch = SparkEntry.queries("q115_transitions")(spark, Sf)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(streamed == batch)
-  }
-
-  test("streaming cross-dump near-dup == batch q144 rollup on the same split") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    // the registered q144 split: md5('xdup:'||id) >= 'b3' is the new
-    // batch, the rest is the static prior corpus
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def isNew(id: Long): Boolean =
-      md.digest(s"xdup:$id".getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.substring(0, 2) >= "b3"
-    val all = Tables(spark, Sf, "documents")
-      .select(col("doc_id"), col("text"))
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    val (newRows, corpusRows) = all.partition(t => isNew(t._1))
-    val corpus = corpusRows.toSeq.toDF("doc_id", "text")
-    val ms = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamOps.crossDumpNearDupStream(
-        ms.toDF().toDF("doc_id", "text"), corpus).writeStream
-      .format("memory").queryName("xdup_out")
-      .outputMode("append").start()
-    val (b1, b2) = newRows.splitAt(newRows.length / 2)
-    ms.addData(b1.toSeq); q.processAllAvailable()
-    // redeliver the first batch: the pair-key state must emit nothing new
-    ms.addData(b1.toSeq); q.processAllAvailable()
-    ms.addData(b2.toSeq); q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("xdup_out")
-      .groupBy(col("new_id"))
-      .agg(count(lit(1)).as("n"), min(col("c_id")).as("m"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val batch = SparkEntry.queries("q144_cross_dump_neardup")(spark, Sf)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(streamed == batch,
-      s"stream/batch drift: only-stream=${streamed.keySet -- batch.keySet} " +
-        s"only-batch=${batch.keySet -- streamed.keySet}")
-    assert(streamed.nonEmpty, "fixture must flag at least one new doc")
-  }
-
-  test("streaming decontamination == batch q139 hit counts on the same split") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    // the registered q139 split: md5('decon:'||id) >= 'e6' is the
-    // benchmark, the rest stream in as arriving training vectors
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def benchGate(id: Long): Boolean =
-      md.digest(s"decon:$id".getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.substring(0, 2) >= "e6"
-    val all = Tables(spark, Sf, "embeddings")
-      .select(col("vec_id"), col("embedding"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-    val (benchRows, trainRows) = all.partition(t => benchGate(t._1))
-    val benchmark = benchRows.toSeq.toDF("vec_id", "embedding")
-    val ms = MemoryStream[(Long, Seq[Float])]
-    val q = graft.streaming.StreamOps.deconStream(
-        ms.toDF().toDF("vec_id", "embedding"), benchmark).writeStream
-      .format("memory").queryName("decon_out")
-      .outputMode("append").start()
-    // two micro-batches — the gate is stateless, so the split is free
-    val (b1, b2) = trainRows.splitAt(trainRows.length / 2)
-    ms.addData(b1.toSeq); q.processAllAvailable()
-    ms.addData(b2.toSeq); q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("decon_out")
-      .groupBy(col("vec_id")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val batch = SparkEntry.queries("q139_semantic_decon")(spark, Sf)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(streamed == batch,
-      s"stream/batch drift: only-stream=${streamed.keySet -- batch.keySet} " +
-        s"only-batch=${batch.keySet -- streamed.keySet}")
-    assert(streamed.nonEmpty, "fixture must produce at least one hit")
-  }
-
-  test("streaming merge state == batch q223; out-of-order + replay absorbed; writer conflict loud") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.operators.Relational
-    val dumps = Relational.mergeDumps(spark, Sf).map(_.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2),
-        if (r.isNullAt(3)) null else r.getString(3))).toSeq)
-    val ms = MemoryStream[(Long, Long, String, String)]
-    val q = graft.streaming.StreamOps.mergeStateStream(
-        ms.toDF().toDF("doc_id", "version", "op", "txt")).writeStream
-      .format("memory").queryName("ms_out")
-      .outputMode("update").start()
-    // OUT OF ORDER: deliver v3 dumps before the v2 delta, then REPLAY
-    // the base dump — both must be absorbed
-    ms.addData(dumps(0)); q.processAllAvailable() // base v1
-    ms.addData(dumps(2)); q.processAllAvailable() // v3 updates
-    ms.addData(dumps(3)); q.processAllAvailable() // v3 births
-    ms.addData(dumps(1)); q.processAllAvailable() // v2 delta — LATE
-    ms.addData(dumps(0)); q.processAllAvailable() // replayed base
-    q.stop()
-    // latest emitted state per key == the batch compaction
-    val emitted = spark.table("ms_out").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2),
-        if (r.isNullAt(3)) null else r.getString(3)))
-    val last = emitted.zipWithIndex.groupBy(_._1._1)
-      .map { case (k, g) => k -> g.maxBy(_._2)._1 }
-    val batch = SparkEntry.queries("q223_merge_compaction")(spark, Sf)
-      .collect()
-      .map(r => r.getLong(0) -> ((r.getLong(0), r.getLong(1), r.getBoolean(2),
-        if (r.isNullAt(3)) null else r.getString(3)))).toMap
-    assert(last == batch,
-      "streamed merge state drifted from the batch compaction")
-    // WRITER CONFLICT: same (key, version), different payload → loud
-    val ms2 = MemoryStream[(Long, Long, String, String)]
-    val q2 = graft.streaming.StreamOps.mergeStateStream(
-        ms2.toDF().toDF("doc_id", "version", "op", "txt")).writeStream
-      .format("memory").queryName("ms_conflict")
-      .outputMode("update").start()
-    ms2.addData(Seq((1L, 1L, "U", "writer one")))
-    q2.processAllAvailable()
-    ms2.addData(Seq((1L, 1L, "U", "writer two")))
-    val e = intercept[Exception] { q2.processAllAvailable() }
-    assert(e.getMessage != null || e.getCause != null)
-    q2.stop()
-    // SUPERSEDED-SLOT CONFLICT: state has advanced to v2, then a
-    // conflicting duplicate for the SUPERSEDED v1 arrives — batch q223
-    // raises on any double-claimed slot anywhere in history, and the
-    // per-version digest ledger gives the stream side the same guard
-    // (a same-payload v1 replay, by contrast, stays absorbed — checked
-    // by the replayed-base-dump leg above)
-    val ms3 = MemoryStream[(Long, Long, String, String)]
-    val q3 = graft.streaming.StreamOps.mergeStateStream(
-        ms3.toDF().toDF("doc_id", "version", "op", "txt")).writeStream
-      .format("memory").queryName("ms_conflict_superseded")
-      .outputMode("update").start()
-    ms3.addData(Seq((1L, 1L, "U", "writer one"), (1L, 2L, "U", "newer")))
-    q3.processAllAvailable()
-    ms3.addData(Seq((1L, 1L, "U", "writer two claims old slot")))
-    val e3 = intercept[Exception] { q3.processAllAvailable() }
-    assert(e3.getMessage != null || e3.getCause != null)
-    q3.stop()
-  }
-
   test("q236 commit protocol: adversarial two-writer races, vacuum refusals, exactly-one-winner") {
     import spark.implicits._
     import graft.operators.{LostUpdateException, TableLog}
@@ -1813,443 +1301,6 @@ class StreamingSpec extends SparkSpec {
     assert(log3.readAsOf(2L).collect().map(_.getLong(1)).toSeq == Seq(2L))
   }
 
-  test("streaming commit sink: exactly-once versions per micro-batch; replay no-op; cross-writer conflicts loud") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.operators.{LostUpdateException, TableLog}
-    val log = new TableLog
-    val ms = MemoryStream[(Long, String, String)]
-    val q = graft.streaming.StreamOps.commitStream(
-      ms.toDF().toDF("doc_id", "op", "txt"), log, "t1").start()
-    ms.addData(Seq((1L, "U", "a"), (2L, "U", "b"))); q.processAllAvailable()
-    ms.addData(Seq((2L, "U", "b2"), (3L, "U", "c"))); q.processAllAvailable()
-    q.stop()
-    assert(log.snapshotVersion == 2L,
-      "two micro-batches must land as exactly two versions")
-    val state = log.readAsOf(2L).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2), r.getString(3)))
-      .toMap
-    def md5(s: String) = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    assert(state(1L) == ((1L, true, md5("a"))))
-    assert(state(2L) == ((2L, true, md5("b2"))), "latest-wins across batches")
-    assert(state(3L) == ((2L, true, md5("c"))))
-    // REPLAY: re-delivering batch 0 (restart semantics) returns its
-    // original version and burns nothing
-    val replay = Seq((1L, "U", "a"), (2L, "U", "b")).toDF("doc_id", "op", "txt")
-    assert(log.commitBatch("t1", 0L, replay) == 1L)
-    assert(log.snapshotVersion == 2L, "a replayed batch must not re-commit")
-    // cross-writer conflict: a batch writer based on v1 touching the
-    // stream's key 3 (committed at v2) must get the loud refusal...
-    intercept[LostUpdateException] {
-      log.commit("batchwriter", 1L, Some(Set(3L)),
-        v => Seq((3L, v, "U", "steal")).toDF("doc_id", "version", "op", "txt"))
-    }
-    // ...and a disjoint batch writer coexists with the stream
-    assert(log.commit("batchwriter", 1L, Some(Set(9L)),
-      v => Seq((9L, v, "U", "ok")).toDF("doc_id", "version", "op", "txt")) == 3L)
-  }
-
-  test("streaming change feed: per-batch CDC through the commit protocol; applying the feed reproduces the to-version; replay emits nothing") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.operators.{TableLog, Txn}
-    val log = new TableLog
-    val feeds = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Seq[(Long, String, Option[String], Option[String])])]
-    val ms = MemoryStream[(Long, String, String)]
-    val q = graft.streaming.StreamOps.changeFeedStream(
-        ms.toDF().toDF("doc_id", "op", "txt"), log, "cf1") { df =>
-      val rows = df.collect().map(r => (r.getLong(1), r.getString(2),
-        if (r.isNullAt(3)) None else Some(r.getString(3)),
-        if (r.isNullAt(4)) None else Some(r.getString(4)))).toSeq
-      feeds += ((df.select(col("from_v")).head().getLong(0), rows))
-    }.start()
-    ms.addData(Seq((1L, "U", "a"), (2L, "U", "b"), (3L, "U", "c")))
-    q.processAllAvailable()
-    ms.addData(Seq((2L, "U", "b2"), (3L, "D", null), (4L, "U", "d")))
-    q.processAllAvailable()
-    q.stop()
-    assert(log.snapshotVersion == 2L)
-    assert(feeds.map(_._1).toSeq == Seq(0L, 1L),
-      "one feed per committed version transition, tagged with its from-version")
-    def md5(s: String) = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    // batch 0: three inserts from nothing
-    assert(feeds(0)._2.toSet == Set(
-      (1L, "insert", None, Some(md5("a"))),
-      (2L, "insert", None, Some(md5("b"))),
-      (3L, "insert", None, Some(md5("c")))))
-    // batch 1: update / delete / insert all classified
-    assert(feeds(1)._2.toSet == Set(
-      (2L, "update", Some(md5("b")), Some(md5("b2"))),
-      (3L, "delete", Some(md5("c")), None),
-      (4L, "insert", None, Some(md5("d")))))
-    // batch == stream: the emitted v1->v2 feed equals the shared core's
-    // diff of the same manifest versions
-    val direct = Txn.feedBetween(log.readAsOf(1L), log.readAsOf(2L), 1L)
-      .collect().map(r => (r.getLong(1), r.getString(2),
-        if (r.isNullAt(3)) None else Some(r.getString(3)),
-        if (r.isNullAt(4)) None else Some(r.getString(4)))).toSet
-    assert(direct == feeds(1)._2.toSet)
-    // THE CDC-CONSISTENCY LAW: applying the streamed feed to the
-    // from-version state reproduces the to-version exactly
-    def stateAt(v: Long): Map[Long, Option[String]] =
-      log.readAsOf(v).collect().map(r => r.getLong(0) ->
-        (if (r.getBoolean(2)) Some(r.getString(3)) else None)).toMap
-    val applied = feeds(1)._2.foldLeft(stateAt(1L)) {
-      case (st, (id, "delete", _, _))       => st.updated(id, None)
-      case (st, (id, _, _, post))           => st.updated(id, post)
-    }
-    assert(applied == stateAt(2L),
-      "applying the streamed feed must reproduce the to-version state")
-    // REPLAY through the STREAM path: a restarted query re-delivers
-    // batch 0 under the same runNs — the marker makes it a
-    // version-preserving no-op and the feed emits NOTHING
-    val nFeeds = feeds.size
-    val ms2 = MemoryStream[(Long, String, String)]
-    val q2 = graft.streaming.StreamOps.changeFeedStream(
-        ms2.toDF().toDF("doc_id", "op", "txt"), log, "cf1") { df =>
-      feeds += ((-1L, Seq.empty))
-    }.start()
-    ms2.addData(Seq((1L, "U", "a"), (2L, "U", "b"), (3L, "U", "c")))
-    q2.processAllAvailable()
-    q2.stop()
-    assert(log.snapshotVersion == 2L, "replay must not burn a version")
-    assert(feeds.size == nFeeds, "a replayed batch must emit nothing")
-  }
-
-  test("streaming boilerplate extract == batch q217 on the same pages (shared projection)") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.operators.Warc
-    val pages = Tables(spark, Sf, "documents")
-      .filter(col("text").isNotNull).select("doc_id", "text").collect()
-      .map(r => (r.getLong(0),
-        Warc.richPageFor(r.getLong(0), r.getString(1) + Warc.NonAsciiProbe)))
-      .toSeq
-    val ms = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamOps.boilerplateExtractStream(
-        ms.toDF().toDF("doc_id", "html")).writeStream
-      .format("memory").queryName("bp_out")
-      .outputMode("append").start()
-    val (b1, b2) = pages.splitAt(pages.length / 2)
-    ms.addData(b1); q.processAllAvailable()
-    ms.addData(b2); q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("bp_out").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getString(4))).toSet
-    val batch = SparkEntry.queries("q217_boilerplate_extract")(spark, Sf)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getString(4))).toSet
-    assert(streamed == batch, "streamed extraction drifted from batch q217")
-    assert(streamed.nonEmpty)
-  }
-
-  test("streaming WordPiece == batch q215 on the same docs (static two-sided vocab)") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.operators.Tokenizer
-    val docsDf = Tables(spark, Sf, "documents")
-    val merges = Tokenizer.bpeTrain(Tokenizer.wordDict(spark, Sf))
-    val inv = Tokenizer.vocabTable(spark, docsDf, merges)
-      .orderBy("token_id").collect().map(_.getString(0)).toSeq
-    val docs = docsDf.select(col("doc_id"), col("text")).collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
-    val ms = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamOps.wordpieceStream(
-        ms.toDF().toDF("doc_id", "text"), inv, inv).writeStream
-      .format("memory").queryName("wp_out")
-      .outputMode("append").start()
-    val (b1, b2) = docs.splitAt(docs.length / 2)
-    ms.addData(b1); q.processAllAvailable()
-    ms.addData(b2); q.processAllAvailable()
-    q.stop()
-    def keyed(rows: Array[org.apache.spark.sql.Row]) = rows.map(r =>
-      r.getLong(0) -> (r.getLong(1),
-        if (r.isNullAt(2)) None else Some((r.getLong(2), r.getLong(3))))).toMap
-    val streamed = keyed(spark.table("wp_out").collect())
-    val batch = keyed(SparkEntry.queries("q215_wordpiece")(spark, Sf).collect())
-    assert(streamed == batch, "streamed WordPiece drifted from batch q215")
-    assert(streamed.nonEmpty)
-  }
-
-  test("streaming perceptual dedup: first image per dHash survives; re-renders collapse across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.operators.Multimodal
-    val docIds = Tables(spark, Sf, "documents")
-      .select(col("doc_id")).collect().map(_.getLong(0)).sorted.toSeq
-    val media = docIds.map(id => (id, Multimodal.encodeBmpDhash(id)))
-    val ms = MemoryStream[(Long, Array[Byte])]
-    val q = graft.streaming.StreamOps.perceptualDedupStream(
-        ms.toDF().toDF("doc_id", "media")).writeStream
-      .format("memory").queryName("pd_out")
-      .outputMode("append").start()
-    val (b1, b2) = media.splitAt(media.length / 2)
-    ms.addData(b1); q.processAllAvailable()
-    ms.addData(b2); q.processAllAvailable()
-    // a replayed first batch must add NOTHING (hash state holds)
-    ms.addData(b1); q.processAllAvailable()
-    q.stop()
-    val survivors = spark.table("pd_out").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // expectation: one survivor per DISTINCT hash, and it is the first
-    // arrival (ascending ids here) — recompute hashes via the batch path
-    val hashes = Multimodal.perceptualHashes(spark,
-      spark.createDataset(docIds)
-        .map(id => Multimodal.MediaRow(id, Multimodal.encodeBmpDhash(id))))
-      .collect().map(h => h.doc_id -> h.dhash).toMap
-    val firstPerHash = docIds.groupBy(hashes).map { case (h, ids) =>
-      ids.min -> h
-    }
-    assert(survivors == firstPerHash,
-      "streaming dedup must keep exactly the first arrival per hash")
-    assert(survivors.size < docIds.size,
-      "fixture must actually collapse re-renders")
-  }
-
-  test("streaming near-dup gate: exact Hamming verdicts == greedy batch reference; TTL evicts state; bounded by signatures") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.operators.Multimodal
-    val docIds = Tables(spark, Sf, "documents")
-      .select(col("doc_id")).collect().map(_.getLong(0)).sorted.toSeq
-    val base = 1700000000000L // fixed epoch — deterministic event times
-    val horizon = 3600L
-    val hMs = horizon * 1000L
-    def ts(ms: Long) = new java.sql.Timestamp(base + ms)
-    val media = docIds.zipWithIndex.map { case (id, i) =>
-      (id, Multimodal.encodeBmpDhash(id), ts(i * 1000L))
-    }
-    val ms0 = MemoryStream[(Long, Array[Byte], java.sql.Timestamp)]
-    // the chained-stateful analyzer exemption is scoped to THIS start —
-    // later stateful queries in the session keep the safety check
-    val q = graft.streaming.StreamOps.allowChainedStateful(spark) {
-      graft.streaming.StreamOps.perceptualNearDupGateStream(
-          ms0.toDF().toDF("doc_id", "media", "ts"), horizon).writeStream
-        .format("memory").queryName("ndgate_out")
-        .outputMode("append").start()
-    }
-    def gateStateRows(): Long =
-      q.lastProgress.stateOperators
-        .find(_.operatorName.contains("flatMapGroupsWithState"))
-        .map(_.numRowsTotal).getOrElse(-1L)
-    // phase 1: the fixture arrives in doc_id order, all within one horizon
-    val (b1, b2) = media.splitAt(media.length / 2)
-    ms0.addData(b1); q.processAllAvailable()
-    ms0.addData(b2); q.processAllAvailable()
-    val stateLive = gateStateRows()
-    // flush dummies (group-1 imagery, ids filtered out below) advance the
-    // watermark past phase 1 + horizon so verdicts emit and TTL expires
-    val g1doc = docIds(1)
-    ms0.addData(Seq((999999L, Multimodal.encodeBmpDhash(g1doc), ts(2 * hMs))))
-    q.processAllAvailable()
-    ms0.addData(Seq((999998L, Multimodal.encodeBmpDhash(g1doc), ts(3 * hMs))))
-    q.processAllAvailable()
-    // TTL arm: a re-render of group 0 arrives long past the horizon —
-    // its originals are evicted, so it must SURVIVE; its own immediate
-    // re-render (1 s later, same batch) must be gated
-    val g0doc = docIds.head
-    ms0.addData(Seq(
-      (200001L, Multimodal.encodeBmpDhash(g0doc), ts(3 * hMs + 2000L)),
-      (200002L, Multimodal.encodeBmpDhash(g0doc), ts(3 * hMs + 3000L))))
-    q.processAllAvailable()
-    ms0.addData(Seq((999997L, Multimodal.encodeBmpDhash(g1doc), ts(6 * hMs))))
-    q.processAllAvailable()
-    val stateAfter = gateStateRows()
-    q.stop()
-    val all = spark.table("ndgate_out").collect()
-      .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    val got = all.filter { case (id, _) => id < 200000L }
-    // greedy batch reference: ascending arrival, near-dup iff ANY earlier
-    // doc sits within Hamming <= 3 (exact, over full 64-bit hashes)
-    val hashes = Multimodal.perceptualHashes(spark,
-      spark.createDataset(docIds)
-        .map(id => Multimodal.MediaRow(id, Multimodal.encodeBmpDhash(id))))
-      .collect().map(h => h.doc_id -> h.dhash).toMap
-    val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val ref = docIds.map { id =>
-      val h = hashes(id)
-      val dup = seen.exists(p =>
-        java.lang.Long.bitCount(p ^ h) <= Multimodal.DhashMaxHamming)
-      seen += h
-      id -> dup
-    }.toMap
-    assert(got == ref, "gate verdicts drifted from the greedy batch reference")
-    assert(got.values.exists(identity) && got.values.exists(!_),
-      "fixture must exercise both verdicts")
-    // TTL: the post-horizon re-render survives, its immediate twin is gated
-    assert(all.get(200001L) == Some(false),
-      "originals past the horizon must be evicted (TTL)")
-    assert(all.get(200002L) == Some(true),
-      "an in-horizon re-render must still be gated")
-    // state bound: one state row per live (band, value) bucket, never docs
-    val nSig = hashes.values.toSet.size
-    assert(stateLive > 0 && stateLive <= 4L * nSig,
-      s"gate state ($stateLive rows) must be bounded by 4 x $nSig signatures")
-    assert(stateAfter < stateLive,
-      s"TTL must evict expired buckets (live=$stateLive after=$stateAfter)")
-  }
-
-  test("streaming BPE tokenize == batch q167 on the same docs (static merge table)") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.operators.Tokenizer
-    val merges = Tokenizer.bpeTrain(Tokenizer.wordDict(spark, Sf))
-    val docs = Tables(spark, Sf, "documents")
-      .select(col("doc_id"), col("text")).collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
-    val ms = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamOps.bpeTokenizeStream(
-        ms.toDF().toDF("doc_id", "text"), merges).writeStream
-      .format("memory").queryName("bpe_out")
-      .outputMode("append").start()
-    val (b1, b2) = docs.splitAt(docs.length / 2)
-    ms.addData(b1); q.processAllAvailable()
-    ms.addData(b2); q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("bpe_out")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val batch = SparkEntry.queries("q167_bpe_tokenize")(spark, Sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(streamed == batch, "streamed tokenize drifted from batch q167")
-    assert(streamed.nonEmpty)
-  }
-
-  test("streaming PQ encode == batch q170 codes (static codebooks)") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.operators.{Pq, Similarity}
-    val books = Pq.trainedBooks(spark, Sf)
-    val rows = Similarity.withQuantized(Tables(spark, Sf, "embeddings"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1)))
-    val ms = MemoryStream[(Long, Seq[Long])]
-    val q = graft.streaming.StreamOps.pqEncodeStream(
-        ms.toDF().toDF("vec_id", "qvec"), books).writeStream
-      .format("memory").queryName("pq_out")
-      .outputMode("append").start()
-    val (b1, b2) = rows.splitAt(rows.length / 2)
-    ms.addData(b1.toSeq); q.processAllAvailable()
-    ms.addData(b2.toSeq); q.processAllAvailable()
-    q.stop()
-    def keyed(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getLong(0) -> (1 to Pq.SubSpaces).map(r.getLong).toSeq).toMap
-    val streamed = keyed(spark.table("pq_out"))
-    val batch = keyed(SparkEntry.queries("q170_pq_encode")(spark, Sf))
-    assert(streamed == batch, "streamed PQ codes drifted from batch q170")
-    assert(streamed.nonEmpty)
-  }
-
-  test("streaming decon + PQ encode on the planted-cluster fixture: planted semantics hold at ingest") {
-    // r11 verdict item 9: the streaming twins were only ever asserted on
-    // the near-uniform driver fixture, inheriting its recall blind spot.
-    // On AnnFixture's planted clusters the twins' SEMANTICS are
-    // checkable, not just stream≡batch equality: decon must flag
-    // exactly the benchmark's cluster (cos≈1 in-cluster, ≈0.1 across),
-    // and PQ codes must be stable across twin jitter.
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.operators.{Pq, Similarity}
-    val fix = AnnFixture.planted(spark)
-    val qrows = Similarity.withQuantized(fix)
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1)))
-    // --- decon twin: benchmark = the EVEN members of cluster 0 ---
-    val benchIds = qrows.map(_._1)
-      .filter(id => AnnFixture.clusterOf(id) == 0 && id % 2 == 0).toSet
-    val fixRows = fix.collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-    val (benchRows, trainRows) = fixRows.partition(t => benchIds(t._1))
-    val benchmark = benchRows.toSeq.toDF("vec_id", "embedding")
-    val ms = MemoryStream[(Long, Seq[Float])]
-    val q = graft.streaming.StreamOps.deconStream(
-        ms.toDF().toDF("vec_id", "embedding"), benchmark).writeStream
-      .format("memory").queryName("decon_fix_out")
-      .outputMode("append").start()
-    val (b1, b2) = trainRows.splitAt(trainRows.length / 2)
-    ms.addData(b1.toSeq); q.processAllAvailable()
-    ms.addData(b2.toSeq); q.processAllAvailable()
-    q.stop()
-    val flagged = spark.table("decon_fix_out")
-      .select(col("vec_id")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    // planted truth: every cluster-0 train vector sits at cos≈1 to some
-    // benchmark vector; every other cluster at cos≈0.1 < the 0.35 gate
-    val expect = trainRows.map(_._1)
-      .filter(id => AnnFixture.clusterOf(id) == 0).toSet
-    assert(flagged == expect,
-      s"decon on planted clusters: missed=${(expect -- flagged).size} " +
-        s"spurious=${(flagged -- expect).size}")
-    assert(expect.nonEmpty)
-    // --- PQ-encode twin: codes stable across twin jitter ---
-    val base = graft.CachePool.track(Similarity.withQuantized(fix))
-    val books = (0 until Pq.SubSpaces).map(m => Pq.trainSub(base, m))
-    val ms2 = MemoryStream[(Long, Seq[Long])]
-    val q2 = graft.streaming.StreamOps.pqEncodeStream(
-        ms2.toDF().toDF("vec_id", "qvec"), books).writeStream
-      .format("memory").queryName("pq_fix_out")
-      .outputMode("append").start()
-    val (c1, c2) = qrows.splitAt(qrows.length / 2)
-    ms2.addData(c1.toSeq); q2.processAllAvailable()
-    ms2.addData(c2.toSeq); q2.processAllAvailable()
-    q2.stop()
-    val codes = spark.table("pq_fix_out").collect()
-      .map(r => r.getLong(0) -> (1 to Pq.SubSpaces).map(r.getLong).toSeq)
-      .toMap
-    assert(codes.size == AnnFixture.N)
-    val stablePairs = (0 until AnnFixture.N by 2).count(i =>
-      codes(i.toLong) == codes(AnnFixture.twinOf(i.toLong)))
-    val stability = stablePairs.toDouble / (AnnFixture.N / 2)
-    info(f"twin code stability $stability%.3f")
-    // measured 0.971 on the seeded fixture: twin jitter (±2 raw, ≤ ±1
-    // after int8 quantization) crosses a codeword boundary for ~3% of
-    // pairs — the Voronoi-edge residue any quantizer has
-    assert(stability >= 0.95,
-      f"PQ codes unstable across twin jitter: $stability%.3f < 0.95")
-  }
-
-  test("streaming dedup state: dump/retract changelog converges to q186's batch combine; severed keeper promotes live") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.operators.Dedup
-    val docs = Tables(spark, Sf, "documents").filter(col("text").isNotNull)
-    def gate(prefix: String) = substring(org.apache.spark.sql.functions.md5(
-      concat(lit(prefix), col("doc_id").cast("string"))), 1, 2)
-    val old = docs.filter(gate("ddump:") < "cd")
-    val removed = old.filter(gate("dretract:") < "10")
-    val delta = docs.filter(gate("ddump:") >= "cd")
-    def updates(df: org.apache.spark.sql.DataFrame, w: Long) =
-      df.select(sha2(col("text"), 256).as("h"), col("doc_id"), lit(w).as("w"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    val ms = MemoryStream[(String, Long, Long)]
-    val q = graft.streaming.StreamOps.dedupStateStream(
-        ms.toDF().toDF("h", "doc_id", "w")).writeStream
-      .format("memory").queryName("dstate_out")
-      .outputMode("update").start()
-    // the dump lands, the retraction batch lands, the new dump lands —
-    // three separate micro-batches, exactly the release point fix
-    ms.addData(updates(old, 1L)); q.processAllAvailable()
-    ms.addData(updates(removed, -1L)); q.processAllAvailable()
-    ms.addData(updates(delta, 1L)); q.processAllAvailable()
-    q.stop()
-    // changelog materialization: last update per key (max ver), deletes
-    // (tombstones) dropped
-    val streamed = spark.table("dstate_out")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .groupBy(_._1).map { case (h, rows) =>
-        val last = rows.maxBy(_._4)
-        (h, last._2, last._3)
-      }.filter(_._3 > 0L).toSet
-    val batch = Dedup.combineDedupState(Seq(
-      (Dedup.dedupState(old), 1L), (Dedup.dedupState(removed), -1L),
-      (Dedup.dedupState(delta), 1L)))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    assert(streamed == batch,
-      "streaming dedup-state changelog drifted from the q186 batch combine")
-    assert(removed.count() > 0L, "fixture retracts nothing")
-  }
-
   test("raw-sink exactly-once ledger: a committed batchId is skipped wholesale, marker written after the data") {
     import spark.implicits._
     val store = new graft.streaming.InMemoryRawDocumentStore
@@ -2274,500 +1325,6 @@ class StreamingSpec extends SparkSpec {
       exactlyOnce = true, runNs = "ns2")(batch, 7L)
     assert(store.get("A").get.contains("other"))
   }
-
-  test("streaming vocab + IVF state: point-fix changelogs converge to the q188/q192 batch combines") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.operators.{Pq, Similarity, Tokenizer}
-    // --- vocab frequencies: three signed token-partial batches ---
-    val merges = Tokenizer.bpeTrain(Tokenizer.wordDict(spark, Sf))
-    val docs = Tables(spark, Sf, "documents")
-    def gateD(prefix: String) = substring(org.apache.spark.sql.functions.md5(
-      concat(lit(prefix), col("doc_id").cast("string"))), 1, 2)
-    val oldD = docs.filter(gateD("vdump:") < "cd")
-    val remD = oldD.filter(gateD("vretract:") < "10")
-    val newD = docs.filter(gateD("vdump:") >= "cd")
-    def parts(df: org.apache.spark.sql.DataFrame, w: Long) =
-      Tokenizer.tokenFreqPartials(df, merges)
-        .select(col("token"), (col("freq") * w).as("freq"))
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val msV = MemoryStream[(String, Long)]
-    val qv = graft.streaming.StreamOps.vocabFreqStream(
-        msV.toDF().toDF("token", "freq")).writeStream
-      .format("memory").queryName("vfreq_out").outputMode("complete").start()
-    msV.addData(parts(oldD, 1L)); qv.processAllAvailable()
-    msV.addData(parts(remD, -1L)); qv.processAllAvailable()
-    msV.addData(parts(newD, 1L)); qv.processAllAvailable()
-    qv.stop()
-    val streamedV = spark.table("vfreq_out")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val batchV = Tokenizer.combineTokenFreq(Seq(
-      (Tokenizer.tokenFreqPartials(oldD, merges), 1L),
-      (Tokenizer.tokenFreqPartials(remD, merges), -1L),
-      (Tokenizer.tokenFreqPartials(newD, merges), 1L)))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(streamedV == batchV, "streaming vocab freqs drifted from q188's combine")
-
-    // --- IVF inventory: three signed assignment batches ---
-    val base = graft.CachePool.track(
-      Similarity.withQuantized(Tables(spark, Sf, "embeddings")))
-    val coarse = Pq.trainSlice(base, 1, Pq.SubSpaces * Pq.SubDim, Pq.CoarseK)
-    val assigned = Pq.ivfAssign(base, coarse)
-    def gateV(prefix: String) = substring(org.apache.spark.sql.functions.md5(
-      concat(lit(prefix), col("vec_id").cast("string"))), 1, 2)
-    val oldA = assigned.filter(gateV("idump:") < "cd")
-    val remA = oldA.filter(gateV("iretract:") < "10")
-    val newA = assigned.filter(gateV("idump:") >= "cd")
-    def arows(df: org.apache.spark.sql.DataFrame, w: Long) =
-      df.select(col("cell"), col("vec_id"), lit(w).as("w"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val msI = MemoryStream[(Long, Long, Long)]
-    val qi = graft.streaming.StreamOps.ivfStateStream(
-        msI.toDF().toDF("cell", "vec_id", "w")).writeStream
-      .format("memory").queryName("ivfst_out").outputMode("update").start()
-    msI.addData(arows(oldA, 1L)); qi.processAllAvailable()
-    msI.addData(arows(remA, -1L)); qi.processAllAvailable()
-    msI.addData(arows(newA, 1L)); qi.processAllAvailable()
-    qi.stop()
-    val streamedI = spark.table("ivfst_out")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4)))
-      .groupBy(_._1).map { case (c, rows) =>
-        val last = rows.maxBy(_._5)
-        (c, last._2, last._3, last._4)
-      }.filter(_._2 > 0L).toSet
-    val batchI = Pq.combineIvfState(Seq(
-      (oldA, 1L), (remA, -1L), (newA, 1L)))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3))).toSet
-    assert(streamedI == batchI, "streaming IVF inventory drifted from q192's combine")
-  }
-
-  test("streaming count-min: live sketch converges to the batch q199 cells across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val docs = Tables(spark, Sf, "documents")
-    val toks = docs.filter(col("text").isNotNull)
-      .select(explode(split(col("text"), " ")).as("token"))
-      .filter(col("token") =!= "")
-      .collect().map(_.getString(0))
-    val ms = MemoryStream[String]
-    val q = graft.streaming.StreamOps.countMinStream(
-        ms.toDF().toDF("token")).writeStream
-      .format("memory").queryName("cm_out").outputMode("complete").start()
-    // three arrival waves — cell counts are a commutative monoid, so
-    // the running sketch must land exactly on the batch construction
-    val third = toks.length / 3
-    ms.addData(toks.take(third).toSeq); q.processAllAvailable()
-    ms.addData(toks.slice(third, 2 * third).toSeq); q.processAllAvailable()
-    ms.addData(toks.drop(2 * third).toSeq); q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("cm_out")
-      .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val batch = graft.operators.Aggregates.cmCells(docs)
-      .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(streamed == batch, "live count-min sketch drifted from the batch cells")
-    assert(batch.size <= 4 * 64, "sketch state exceeded d*w cells")
-  }
-
-  test("streaming KMV: live synopsis converges to the batch q203 sketch; re-delivery is free (idempotence)") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.operators.Sketches
-    val docs = Tables(spark, Sf, "documents")
-    val hs = Sketches.tokenStream(docs)
-      .select(Sketches.h60(col("token")).as("h"))
-      .collect().map(_.getLong(0))
-    val ms = MemoryStream[Long]
-    val q = graft.streaming.StreamOps.kmvStream(
-        ms.toDF().toDF("h")).writeStream
-      .format("memory").queryName("kmv_out").outputMode("complete").start()
-    val third = hs.length / 3
-    ms.addData(hs.take(third).toSeq); q.processAllAvailable()
-    ms.addData(hs.slice(third, 2 * third).toSeq); q.processAllAvailable()
-    // re-deliver wave 2 wholesale: min-k over a SET is idempotent, so
-    // the producer-retry case costs nothing and changes nothing
-    ms.addData(hs.slice(third, 2 * third).toSeq); q.processAllAvailable()
-    ms.addData(hs.drop(2 * third).toSeq); q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("kmv_out").collect()
-      .map(_.getSeq[Long](0)).head
-    val batch = Sketches.kmvSynopsis(
-        Sketches.tokenStream(docs).select(Sketches.h60(col("token")).as("h")))
-      .collect().map(_.getSeq[Long](0)).head
-    assert(streamed == batch, "live KMV synopsis drifted from the batch sketch")
-    assert(batch.length <= 128 && batch == batch.distinct.sorted,
-      "synopsis must be the k smallest DISTINCT hashes, ascending")
-  }
-
-  test("streaming EWMA: live per-user monitor converges to the batch q206 fold across in-order waves") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val ev = Tables(spark, Sf, "events")
-      .select(col("user_id"), unix_micros(col("ts")).as("us"),
-        col("event_id"), col("value"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .sortBy(t => (t._2, t._3)) // the per-key in-order arrival contract
-    val ms = MemoryStream[(Long, Long, Long, Double)]
-    val q = graft.streaming.StreamOps.ewmaStream(
-        ms.toDF().toDF("user_id", "usl", "event_id", "value")
-          .select(col("user_id"), timestamp_micros(col("usl")).as("ts"),
-            col("event_id"), col("value"))).writeStream
-      .format("memory").queryName("ewma_out").outputMode("update").start()
-    val third = ev.length / 3
-    ms.addData(ev.take(third).toSeq); q.processAllAvailable()
-    ms.addData(ev.slice(third, 2 * third).toSeq); q.processAllAvailable()
-    ms.addData(ev.drop(2 * third).toSeq); q.processAllAvailable()
-    q.stop()
-    // update mode: last row per user is the live state
-    val streamed = spark.table("ewma_out").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .groupBy(_._1).map { case (u, rs) => u -> rs.maxBy(_._2) }
-    val batch = SparkEntry.queries("q206_ewma_anomaly")(spark, Sf).collect()
-      .map(r => r.getLong(0) -> (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toMap
-    assert(streamed.toMap == batch,
-      "live EWMA state drifted from the batch fold")
-  }
-
-  test("streaming HLL: live registers converge to the batch q207 build; re-delivery is free") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.operators.Sketches
-    val hs = Sketches.tokenStream(Tables(spark, Sf, "documents"))
-      .select(Sketches.salted60("hll:", col("token")).as("h"))
-      .collect().map(_.getLong(0))
-    val ms = MemoryStream[Long]
-    val q = graft.streaming.StreamOps.hllStream(
-        ms.toDF().toDF("h")).writeStream
-      .format("memory").queryName("hll_out").outputMode("complete").start()
-    val half = hs.length / 2
-    ms.addData(hs.take(half).toSeq); q.processAllAvailable()
-    ms.addData(hs.take(half).toSeq); q.processAllAvailable() // idempotent
-    ms.addData(hs.drop(half).toSeq); q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("hll_out").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val batch = Sketches.hllRegisters(
-        Sketches.tokenStream(Tables(spark, Sf, "documents"))
-          .select(Sketches.salted60("hll:", col("token")).as("h")))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(streamed == batch, "live HLL registers drifted from the batch build")
-    assert(batch.size <= 256, "register state exceeded m")
-  }
-
-  test("streaming manifest: running per-source checksums converge to the batch q183 rollup") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val all = Tables(spark, Sf, "documents")
-      .select(col("doc_id"), col("text"), col("source"))
-      .collect().map(r => (r.getLong(0),
-        Option(r.getString(1)).orNull, r.getString(2)))
-    val ms = MemoryStream[(Long, String, String)]
-    val q = graft.streaming.StreamOps.manifestStream(
-        ms.toDF().toDF("doc_id", "text", "source")).writeStream
-      .format("memory").queryName("manifest_out")
-      .outputMode("complete").start()
-    val (b1, b2) = all.splitAt(all.length / 2)
-    ms.addData(b1.toSeq); q.processAllAvailable()
-    ms.addData(b2.toSeq); q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("manifest_out")
-      .collect().map(r => r.getString(0) -> (r.getLong(1),
-        if (r.isNullAt(2)) -1L else r.getLong(2),
-        if (r.isNullAt(3)) -1L else r.getLong(3),
-        if (r.isNullAt(4)) -1L else r.getLong(4))).toMap
-    val batch = SparkEntry.queries("q183_corpus_manifest")(spark, Sf)
-      .collect().map(r => r.getString(0) -> (r.getLong(1),
-        if (r.isNullAt(2)) -1L else r.getLong(2),
-        if (r.isNullAt(3)) -1L else r.getLong(3),
-        if (r.isNullAt(4)) -1L else r.getLong(4))).toMap
-    assert(streamed == batch,
-      "streaming running manifest drifted from batch q183")
-  }
-
-  test("streaming NFC normalization: ingest-time compose is batch-equal, stateless") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    // decomposed forms arriving on the stream compose exactly as the
-    // batch expression would — per-row equality incl. a mixed batch.
-    // Inputs spelled with escapes (decomposed) so no editor can
-    // silently re-normalize the source file.
-    val rows = Seq((1L, "cafe\u0301 latte"), (2L, "plain ascii"),
-      (3L, "nai\u0308ve mix cafe\u0301"))
-    val ms = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamOps.nfcNormalizeStream(
-        ms.toDF().toDF("doc_id", "text")).writeStream
-      .format("memory").queryName("nfc_out")
-      .outputMode("append").start()
-    ms.addData(rows); q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("nfc_out")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val batch = rows.toDF("doc_id", "text")
-      .select(col("doc_id"), graft.functions.TextOps.nfc(col("text")))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(streamed == batch, "stream/batch NFC drift")
-    assert(streamed(1L) == "caf\u00e9 latte" &&
-      streamed(3L) == "na\u00efve mix caf\u00e9",
-      s"decomposed input did not compose: $streamed")
-  }
-
-  test("streaming WARC ingest: per-file parse is batch-equal, malformed dump fails loudly") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.operators.Warc
-    val fileA = Warc.build(Seq((1L, "alpha beta"), (2L, "gamma")))
-    // fileB carries multi-byte UTF-8 (2- and 3-byte widths) — the
-    // octet-counted format must round-trip it on the stream path too
-    val fileB = Warc.build(Seq((5L, "delta epsilon zeta"),
-      (6L, "naïve 東京 ✓ résumé")))
-    val ms = MemoryStream[(Long, Array[Byte])]
-    val q = graft.streaming.StreamOps.warcExtractStream(
-        ms.toDF().toDF("file_id", "content")).writeStream
-      .format("memory").queryName("warc_out")
-      .outputMode("append").start()
-    ms.addData((10L, fileA)); q.processAllAvailable()
-    ms.addData((11L, fileB)); q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("warc_out")
-      .collect().map(r => (r.getLong(0), r.getString(3))).toMap
-    assert(rows == Map(1L -> "alpha beta", 2L -> "gamma",
-      5L -> "delta epsilon zeta", 6L -> "naïve 東京 ✓ résumé"),
-      s"extracted drift: $rows")
-    // a truncated dump must surface as a query failure, not silence
-    val ms2 = MemoryStream[(Long, Array[Byte])]
-    val q2 = graft.streaming.StreamOps.warcExtractStream(
-        ms2.toDF().toDF("file_id", "content")).writeStream
-      .format("memory").queryName("warc_bad_out")
-      .outputMode("append").start()
-    ms2.addData((12L, java.util.Arrays.copyOfRange(fileA, 0, fileA.length - 5)))
-    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      q2.processAllAvailable()
-    }
-    q2.stop()
-    assert(e.getMessage != null)
-  }
-
-  test("streaming clustered ingest: prunable mid-stream with the batch core; batch == stream results; replay appends nothing") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.operators.Footer
-    // three micro-batches of documents rows (the stream's arrival order
-    // deliberately interleaves the cluster key across batches)
-    val all = Tables(spark, Sf, "documents")
-      .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
-      .as[(Long, String, String, Long)].collect().toSeq
-    val batches = all.grouped((all.size + 2) / 3).toSeq
-    val table = new StreamOps.ClusteredTable
-    val ms = MemoryStream[(Long, String, String, Long)]
-    val q = StreamOps.clusteredIngestStream(
-      ms.toDF().toDF("doc_id", "source", "lang", "n_chars"),
-      table, "ci1").start()
-    batches.foreach { b => ms.addData(b); q.processAllAvailable() }
-    q.stop()
-    assert(table.units.nonEmpty)
-    val preds = Seq(
-      ("nchars_100_199",
-        (u: Footer.UnitStats) => u.lo("n_chars") <= 199L && u.hi("n_chars") >= 100L,
-        col("n_chars").between(100L, 199L)),
-      ("docid_100_149",
-        (u: Footer.UnitStats) => u.lo("doc_id") <= 149L && u.hi("doc_id") >= 100L,
-        col("doc_id").between(100L, 149L)))
-    val hashCols = Seq("doc_id", "source", "lang", "n_chars")
-    // 1. the ACCUMULATED table prunes with the exact batch core — the
-    // in-plan xor proof runs here, so a false skip would raise
-    val streamed = Footer.executePruned(spark, "ingest", table.units,
-      hashCols, preds).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getLong(5))).toMap
-    // the cluster-key predicate skips units even on batch-local runs
-    val (gTot, gRead, rowsRead, nMatch, _) = streamed("nchars_100_199")
-    assert(gRead < gTot, s"mid-stream pruning must skip units ($gRead/$gTot)")
-    assert(nMatch == all.count(r => r._4 >= 100L && r._4 <= 199L).toLong)
-    assert(rowsRead < all.size.toLong, "rows_read must undercut a full scan")
-    // 2. BATCH == STREAM on query RESULTS: the same rows ingested as one
-    // batch give identical (n_match, match_xor) per predicate (unit
-    // geometry differs — per-batch runs vs one global run — results must
-    // not)
-    val oneShot = Footer.writeUnits(
-      all.toDF("doc_id", "source", "lang", "n_chars"),
-      Seq(col("n_chars"), col("doc_id")), "ci1_oneshot",
-      Footer.adaptiveUnitRows(all.size.toLong))
-    val direct = Footer.executePruned(spark, "ingest", oneShot,
-      hashCols, preds).collect()
-      .map(r => r.getString(0) -> (r.getLong(4), r.getLong(5))).toMap
-    for ((p, (_, _, _, nm, xr)) <- streamed)
-      assert(direct(p) == ((nm, xr)), s"$p: stream results must equal batch")
-    // 3. REPLAY: a restarted query re-delivers batch 0 under the same
-    // runNs — the manifest must not grow and results must not change
-    val before = table.units.size
-    val ms2 = MemoryStream[(Long, String, String, Long)]
-    val q2 = StreamOps.clusteredIngestStream(
-      ms2.toDF().toDF("doc_id", "source", "lang", "n_chars"),
-      table, "ci1").start()
-    ms2.addData(batches.head); q2.processAllAvailable(); q2.stop()
-    assert(table.units.size == before, "a replayed batch must append nothing")
-    val replayed = Footer.executePruned(spark, "ingest", table.units,
-      hashCols, preds).collect()
-      .map(r => r.getString(0) -> (r.getLong(4), r.getLong(5))).toMap
-    for ((p, (_, _, _, nm, xr)) <- streamed)
-      assert(replayed(p) == ((nm, xr)), s"$p: replay must not change results")
-  }
-
-  test("clustered ingest OPTIMIZE trigger: fragmentation detected from the manifest alone, distributed rewrite inside the commit protocol, pruned-read improves, replay safe") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.operators.Footer
-    // q261's exact fragmentation fixture as a STREAM: 8 batches keyed
-    // doc_id mod 8, each one a single full-range sort run — every range
-    // predicate opens every unit, the q261 units_read measure reads 1.0
-    val all = Tables(spark, Sf, "documents")
-      .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
-      .as[(Long, String, String, Long)].collect().toSeq
-    val batches = (0L until 8L).map(b => all.filter(_._1 % 8L == b))
-    def ingest(runNs: String, factor: Double): StreamOps.ClusteredTable = {
-      val table = new StreamOps.ClusteredTable
-      val ms = MemoryStream[(Long, String, String, Long)]
-      val q = StreamOps.clusteredIngestStream(
-        ms.toDF().toDF("doc_id", "source", "lang", "n_chars"),
-        table, runNs, optimizeFactor = factor).start()
-      batches.foreach { b => ms.addData(b); q.processAllAvailable() }
-      q.stop()
-      table
-    }
-    // CONTROL: no trigger — the accumulated runs stay fully fragmented
-    val control = ingest("opt_ctl", 0.0)
-    assert(control.optimizeCount == 0L)
-    assert(math.abs(control.workloadReadFraction - 1.0) < 1e-9,
-      s"fixture premise: untreated ingest must read every unit " +
-        s"(${control.workloadReadFraction})")
-    // TRIGGERED: the q261 measure crosses 0.9 → OPTIMIZE fires inside
-    // the commit protocol and the read fraction drops
-    val table = ingest("opt_on", 0.9)
-    assert(table.optimizeCount >= 1L,
-      "the units_read regression must have triggered OPTIMIZE")
-    assert(table.workloadReadFraction < control.workloadReadFraction - 1e-9,
-      s"OPTIMIZE must improve the workload read fraction " +
-        s"(${table.workloadReadFraction} vs ${control.workloadReadFraction})")
-    // RESULTS unchanged by the rewrite: the optimized table's match
-    // legs equal the control's under the xor-proven scan
-    val preds = Footer.OptimizePredicates.map { case (name, lo, hi) =>
-      (name,
-        (u: Footer.UnitStats) => u.lo("n_chars") <= hi && u.hi("n_chars") >= lo,
-        col("n_chars").between(lo, hi))
-    }
-    val hashCols = Seq("doc_id", "source", "lang", "n_chars")
-    def legs(t: StreamOps.ClusteredTable) =
-      Footer.executePruned(spark, "optstream", t.units, hashCols, preds)
-        .collect().map(r => r.getString(0) -> (r.getLong(4), r.getLong(5)))
-        .toMap
-    assert(legs(table) == legs(control),
-      "OPTIMIZE must not change query results")
-    // REPLAY SAFETY across the rewrite: re-delivering an old batch
-    // appends nothing and re-delivering the trigger batch re-optimizes
-    // nothing (both marker-guarded)
-    val unitsBefore = table.units
-    val optBefore = table.optimizeCount
-    val ms2 = MemoryStream[(Long, String, String, Long)]
-    val q2 = StreamOps.clusteredIngestStream(
-      ms2.toDF().toDF("doc_id", "source", "lang", "n_chars"),
-      table, "opt_on", optimizeFactor = 0.9).start()
-    ms2.addData(batches.head); q2.processAllAvailable(); q2.stop()
-    assert(table.units == unitsBefore && table.optimizeCount == optBefore,
-      "replay across the rewrite must be a complete no-op")
-  }
-
-  test("maybeOptimize merges units appended between snapshot and swap; a concurrent rewrite aborts it (r15 ADVICE)") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    import graft.operators.Footer
-    val docs = Tables(spark, Sf, "documents")
-      .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
-    def unitsOf(tag: String, m: Long, r: Long) = {
-      val df = docs.filter(col("doc_id") % m === r)
-      Footer.writeUnits(df, Seq(col("n_chars"), col("doc_id")), tag,
-        Footer.adaptiveUnitRows(df.count()))
-    }
-    // LOST-APPEND direction: a batch lands after the optimize snapshots
-    // `units` but before it swaps — made deterministic via the test seam
-    val t1 = new StreamOps.ClusteredTable
-    assert(t1.append("race", 0L, unitsOf("race_b0", 2L, 0L)))
-    assert(t1.append("race", 1L, unitsOf("race_b1", 2L, 1L)))
-    val late = unitsOf("race_late", 97L, 0L)
-    t1.preSwapHook = () => { t1.append("race", 2L, late); () }
-    assert(t1.maybeOptimize(spark, "race", 2L, 0.1),
-      "the optimize must land (prefix intact — only an append raced it)")
-    t1.preSwapHook = () => ()
-    assert(late.forall(t1.units.contains),
-      "units appended between snapshot and swap were silently dropped")
-    assert(t1.optimizeCount == 1L)
-    assert(t1.units.takeRight(late.size) == late,
-      "the raced append must survive as the manifest's suffix")
-    // STALE-PREFIX direction: a concurrent REWRITE swapped the manifest
-    // while ours ran — ours must abandon, not clobber the newer layout
-    val t2 = new StreamOps.ClusteredTable
-    assert(t2.append("race2", 0L, unitsOf("race2_b0", 2L, 0L)))
-    assert(t2.append("race2", 1L, unitsOf("race2_b1", 2L, 1L)))
-    val winner = unitsOf("race2_winner", 1L, 0L)
-    t2.preSwapHook = () => { t2.units = winner }
-    assert(!t2.maybeOptimize(spark, "race2", 2L, 0.1),
-      "a stale optimize must report failure, not clobber the newer manifest")
-    t2.preSwapHook = () => ()
-    assert(t2.units == winner && t2.optimizeCount == 0L,
-      "the concurrent rewrite's manifest must survive untouched")
-  }
-
-  test("house streaming ingest: per-batch units are house bytes (blooms + created_by); pruned results identical to the parquet-emitter twin") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    import graft.operators.Footer
-    val all = Tables(spark, Sf, "documents")
-      .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
-      .as[(Long, String, String, Long)].collect().toSeq
-    val batches = (0L until 4L).map(b => all.filter(_._1 % 4L == b))
-    def ingest(runNs: String, house: Boolean): StreamOps.ClusteredTable = {
-      val table = new StreamOps.ClusteredTable
-      val ms = MemoryStream[(Long, String, String, Long)]
-      val q = StreamOps.clusteredIngestStream(
-        ms.toDF().toDF("doc_id", "source", "lang", "n_chars"),
-        table, runNs, house = house).start()
-      batches.foreach { b => ms.addData(b); q.processAllAvailable() }
-      q.stop()
-      table
-    }
-    val houseT = ingest("hstream", house = true)
-    val parqT = ingest("pstream", house = false)
-    assert(houseT.units.nonEmpty && houseT.units.size == parqT.units.size)
-    // every streamed unit is a complete HOUSE file carrying a doc_id
-    // bloom — no parquet-mr anywhere on the streaming engine path
-    houseT.units.foreach { u =>
-      val bytes = java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(u.path))
-      assert(new String(bytes, "ISO-8859-1").contains("graft-house"),
-        s"${u.path} was not written by the house kernel")
-      val (leaves, chunks) = Footer.parseFooter(u.path)
-      val li = leaves.indexWhere(_.name == "doc_id")
-      assert(chunks(li).forall(_.bloomOffset >= 0),
-        s"${u.path} is missing its doc_id SBBF bloom")
-    }
-    // the pruned, xor-proven read is emitter-agnostic: identical match
-    // legs across the house and parquet-mr streamed tables
-    val preds = Footer.OptimizePredicates.map { case (name, lo, hi) =>
-      (name,
-        (u: Footer.UnitStats) => u.lo("n_chars") <= hi && u.hi("n_chars") >= lo,
-        col("n_chars").between(lo, hi))
-    }
-    val hashCols = Seq("doc_id", "source", "lang", "n_chars")
-    def legs(t: StreamOps.ClusteredTable) =
-      Footer.executePruned(spark, "hstream", t.units, hashCols, preds)
-        .collect().map(r => r.getString(0) -> (r.getLong(4), r.getLong(5)))
-        .toMap
-    assert(legs(houseT) == legs(parqT),
-      "house and parquet streaming emitters must produce identical reads")
-  }
 }
 
 object StreamingSpec {
@@ -2788,8 +1345,6 @@ object StreamingSpec {
       next
     }
   }
-  case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
-      event_type: String, value: Double)
 
   /** The SQL executions Spark started, by the streaming run they ran in
     * (the run id is in the batch description the engine sets as the

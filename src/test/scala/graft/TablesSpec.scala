@@ -10,9 +10,10 @@ import org.apache.spark.{SparkException, SparkThrowable}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
 
-/** `Tables.apply` reads each schema from a parquet footer on the driver:
-  * no Spark job, the schema Spark's own inference gives, and the same
-  * errors in the same place.
+/** `Tables.apply`, and `Footer.executePruned`'s scans of the unit files a
+  * query has written, read each schema from a parquet footer on the
+  * driver: no Spark job, the schema Spark's own inference gives, and the
+  * same errors in the same place.
   */
 class TablesSpec extends SparkSpec {
 
@@ -148,5 +149,34 @@ class TablesSpec extends SparkSpec {
         assert(e.asInstanceOf[SparkThrowable].getCondition == cond)
       }
     } finally rm(dir)
+  }
+
+  test("Footer.executePruned builds its pruned and full scans without a job, with the schema inference gives") {
+    import org.apache.spark.sql.functions.col
+    import graft.operators.Footer
+    val docs = Tables(spark, Sf, "documents")
+      .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
+    val tag = s"tables_spec_${UUID.randomUUID()}"
+    try {
+      val units = Footer.writeUnits(docs, Seq(col("n_chars"), col("doc_id")),
+        tag, 64L)
+      val paths = units.map(_.path)
+      // few enough files that Spark lists them on the driver, so only a
+      // schema inference could start a job while the scans are built
+      assert(units.size >= 2 && units.size <= 32, s"${units.size} units")
+      val preds = Footer.prunePredicates
+      assert(preds.exists { case (_, keep, _) => units.exists(keep) },
+        "no predicate keeps a unit: every pruned scan would be the empty one")
+      val (out, jobs) = jobsOf(Footer.executePruned(spark, "tables-spec", units,
+        Seq("doc_id", "source", "lang", "n_chars"), preds))
+      assert(jobs == 0, s"building the scans started $jobs job(s)")
+      val inferred = spark.read.parquet(paths: _*)
+      assert(spark.read.schema(Tables.footerSchema(spark, paths.head))
+        .parquet(paths: _*).schema == inferred.schema)
+      // and the scans match what Spark's own inferring read matches
+      val matched = out.collect().map(r => r.getString(0) -> r.getLong(4)).toMap
+      for ((name, _, pred) <- preds)
+        assert(matched(name) == inferred.filter(pred).count(), name)
+    } finally rm(java.nio.file.Paths.get(Footer.layoutDirFor(tag)))
   }
 }
