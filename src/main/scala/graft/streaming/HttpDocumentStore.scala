@@ -9,34 +9,38 @@ import graft.streaming.AnsModel._
 
 /** JSON wire codec for [[AnsModel.AnsDoc]] — the Draft API speaks JSON
   * (`tag.py:12-29` GETs/PUTs ANS documents), so the HTTP store does too,
-  * unlike [[FileDocumentStore]]'s JVM-serialized stand-in. Encoding is a
-  * hand-rolled emitter (the doc model is four fields); decoding goes
-  * through jackson-databind (already on Spark's classpath) into untyped
-  * maps — no extra dependency, no reflection modules.
+  * unlike [[FileDocumentStore]]'s JVM-serialized stand-in. Both ways go
+  * through jackson-databind (already on Spark's classpath) — no extra
+  * dependency, no reflection modules.
   */
 private[streaming] object AnsJson {
+  import scala.jdk.CollectionConverters._
+  import com.fasterxml.jackson.databind.node.ObjectNode
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  private def esc(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  def write(doc: AnsDoc): String = {
-    val rev = doc.revision.map(r => s""","revision":$r""").getOrElse("")
-    val tax = doc.taxonomy.map { t =>
-      val tags = t.tags.map(_.map(tg =>
-          s"""{"slug":"${esc(tg.slug)}","text":"${esc(tg.text)}"}""")
-          .mkString(""""tags":[""", ",", "]"))
-        .getOrElse("")
-      s""","taxonomy":{$tags}"""
-    }.getOrElse("")
-    s"""{"_id":"${esc(doc._id)}"$rev$tax}"""
+  /** `doc`'s typed fields written over `stored` (a whole document as the
+    * store served it; by default none): `_id`, `revision` (set or
+    * removed) and `taxonomy.tags`. Every other member, at the top level
+    * and inside `taxonomy`, stays as stored, and a stored tag element
+    * that `doc` keeps (same slug and text) is written back unchanged —
+    * the reference PUTs the whole fetched document back (`tag.py:64`).
+    */
+  def write(doc: AnsDoc, stored: String = "{}"): String = {
+    val root = mapper.readTree(stored).asInstanceOf[ObjectNode]
+    root.put("_id", doc._id)
+    doc.revision.fold(root.remove("revision"))(root.put("revision", _))
+    doc.taxonomy match {
+      case None => root.remove("taxonomy")
+      case Some(Taxonomy(None)) => root.withObjectProperty("taxonomy").remove("tags")
+      case Some(Taxonomy(Some(tags))) =>
+        val tax = root.withObjectProperty("taxonomy")
+        val kept = tax.path("tags").elements.asScala
+          .map(n => (n.path("slug").asText, n.path("text").asText) -> n).toMap
+        val arr = tax.putArray("tags")
+        tags.foreach(tg => arr.add(kept.getOrElse((tg.slug, tg.text),
+          mapper.createObjectNode().put("slug", tg.slug).put("text", tg.text))))
+    }
+    mapper.writeValueAsString(root)
   }
 
   def read(body: String): AnsDoc = {
@@ -44,7 +48,6 @@ private[streaming] object AnsJson {
     val taxonomy = Option(m.get("taxonomy")).map { t =>
       val tm = t.asInstanceOf[java.util.Map[String, Object]]
       val tags = Option(tm.get("tags")).map { ts =>
-        import scala.jdk.CollectionConverters._
         ts.asInstanceOf[java.util.List[Object]].asScala.toSeq.map { tg =>
           val g = tg.asInstanceOf[java.util.Map[String, Object]]
           Tag(g.get("slug").asInstanceOf[String],
@@ -114,15 +117,16 @@ class HttpDocumentStore(
     HttpRetry.send(client, req, HttpResponse.BodyHandlers.ofString(),
       maxAttempts, backoffMs)
 
-  private def getWithTag(id: String): (Option[AnsDoc], Option[String]) = {
+  /** The stored document's body and ETag; None for a 404. */
+  private def getWithTag(id: String): Option[(String, Option[String])] = {
     val r = send(HttpRequest.newBuilder(docUri(id))
       .timeout(Duration.ofMillis(timeoutMs)).GET().build())
-    if (r.statusCode() == 404) (None, None)
-    else (Some(AnsJson.read(r.body())),
-      Option(r.headers().firstValue("ETag").orElse(null)))
+    if (r.statusCode() == 404) None
+    else Some((r.body(), Option(r.headers().firstValue("ETag").orElse(null))))
   }
 
-  override def get(id: String): Option[AnsDoc] = getWithTag(id)._1
+  override def get(id: String): Option[AnsDoc] =
+    getWithTag(id).map(g => AnsJson.read(g._1))
 
   /** Unconditional PUT — the reference's raw last-writer-wins write-back
     * (`tag.py:19-29`, no locking per `README.md:250`).
@@ -142,26 +146,28 @@ class HttpDocumentStore(
     * bound it throws [[DocumentConflict]]), any other status throws
     * [[DocumentWriteRejected]]. When `f` returns the document it read,
     * the update returns after the GET alone: there is nothing to write.
+    * The PUT carries the GET's document with `f`'s typed fields written
+    * over it ([[AnsJson.write]]).
     * The server enforces the version check atomically, so no
     * client-side lock file exists to break or leak — the production
     * answer to [[FileDocumentStore]]'s documented residual lock window.
     */
   override def update(id: String)(f: Option[AnsDoc] => AnsDoc): AnsDoc =
     DocumentStore.retryConflicts(id, backoffMs) {
-      val (cur, tag) = getWithTag(id)
+      val stored = getWithTag(id)
+      val cur = stored.map(g => AnsJson.read(g._1))
       val next = f(cur)
       if (cur.contains(next)) Some(next)
       else {
         val b = HttpRequest.newBuilder(docUri(id))
           .timeout(Duration.ofMillis(timeoutMs))
           .header("Content-Type", "application/json")
-        val cond = tag match {
+        val cond = stored.flatMap(_._2) match {
           case Some(t) => b.header("If-Match", t)
           case None    => b.header("If-None-Match", "*")
         }
-        val r = send(cond
-          .PUT(HttpRequest.BodyPublishers.ofString(AnsJson.write(next)))
-          .build())
+        val body = AnsJson.write(next, stored.fold("{}")(_._1))
+        val r = send(cond.PUT(HttpRequest.BodyPublishers.ofString(body)).build())
         val code = r.statusCode()
         if (code / 100 == 2) Some(next)
         else if (code == 412) None // lost the race — re-read, recompute

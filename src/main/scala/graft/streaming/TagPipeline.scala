@@ -15,8 +15,7 @@ import graft.streaming.AnsModel._
   * vs the reference's guarantees (SURVEY.md §0 bugs — all fixed here):
   *  - at-least-once with checkpointing instead of at-most-once LATEST with
   *    a dropped first batch (`app.py:18,22-24`); redelivery is safe because
-  *    the tag append is idempotent (`tag.py:39-40`) AND the pipeline
-  *    dedups event ids within the watermark;
+  *    the write is idempotent (`tag.py:39-40`, see below);
   *  - shard count is the source's partition count, not hard-coded 2
   *    (`app.py:92-93`);
   *  - a failed enrichment never fails the batch (`app.py:71-75`): rows
@@ -30,6 +29,16 @@ import graft.streaming.AnsModel._
   *    checkpoint, the idempotent tag append making the replay safe for
   *    the ids that did commit. There is no dead-letter: an id that is
   *    always refused stops the pipeline until it is fixed.
+  *
+  * Like the reference (`app.py:56-75`), the pipeline keeps no memory of
+  * event ids: on a plain wire the query is one stateless stage, source →
+  * [[EventDecoder.decodeAndFilter]] → sink, with no shuffle and no state
+  * store. A redelivered event reaches the store again, where the
+  * set-insert tag append under an optimistic update makes it a GET-only
+  * no-op; but if an editor removed the tag in between, the redelivery
+  * adds it back, as the reference's loop does. The one stateful stage a
+  * query can hold is the KPL wire's `(shard, seq, sub_seq)` dedup
+  * ([[WireSource.kinesisKpl]]), the KCL's subsequence contract.
   *
   * The Kinesis connector is a config swap on the source DataFrame; nothing
   * below the source is connector-specific. Trigger cadence and batch cap
@@ -63,10 +72,6 @@ import graft.streaming.AnsModel._
   *    (`QueryExecution.explainString`) re-plans the batch in a fresh
   *    `IncrementalExecution`, so the re-plan runs twice per trigger;
   *    `work_s` −7%.
-  * Spark 4.1's `stateStore.commitValidation` check (every state store of
-  * the batch committed) guards only `ForeachBatchSink`, whose body may
-  * leave partitions unread. This sink always runs every partition to its
-  * end, so every state store commits.
   */
 object TagPipeline {
 
@@ -129,11 +134,10 @@ object TagPipeline {
     * Each id's update goes to [[HttpRetry.wirePool]] as the partition's
     * iterator yields it, so a partition keeps all its updates in flight
     * (bounded by the pool's size) instead of paying its round trips one
-    * after another. No `distinct()` sits in front: the callers' id-dedup
-    * already makes ids unique per batch, and a blocking aggregate would
-    * hold every update back until the dedup's state commit finished. A
-    * duplicate id would still be safe: the optimistic update and the
-    * idempotent tag append serialize it.
+    * after another. Ids are not made unique first (a `distinct()` would
+    * add a shuffle that holds every update back): two updates of one id
+    * in a batch are serialized by the store's optimistic update, bounded
+    * by [[DocumentStore.retryConflicts]], and the second finds the tag.
     *
     * The partition returns only after every update has finished, then
     * rethrows the first failure unwrapped (the store's own exception,
@@ -192,28 +196,8 @@ object TagPipeline {
       .digest(checkpointDir.getBytes("UTF-8"))
       .take(6).map(b => f"$b%02x").mkString
 
-  /** The shared source half of [[start]]/[[startRaw]]: decode + the
-    * documented filter + watermarked id-dedup (exactly-once tagging
-    * under redelivery; state aged out by the watermark, 10 min ≫ any
-    * redelivery window). A source that already defined its own
-    * event-time watermark (e.g. the KPL-deaggregating consumer's
-    * subsequence dedup) keeps it — Spark disallows REdefining a
-    * watermark downstream of a stateful operator, and chaining the
-    * id-dedup under the existing watermark is exactly the intended
-    * semantics.
-    */
-  private def dedupedStream(wire: DataFrame): DataFrame = {
-    val hasWatermark = wire.queryExecution.logical.exists {
-      case _: org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark => true
-      case _ => false
-    }
-    val decoded = EventDecoder.decodeAndFilter(wire)
-    (if (hasWatermark) decoded else decoded.withWatermark("ts", "10 minutes"))
-      .dropDuplicatesWithinWatermark("id")
-  }
-
-  /** The shared writer half of [[start]]/[[startRaw]]: starts the
-    * deduped stream into the tag sink configured by `sinkOptions`
+  /** The shared half of [[start]]/[[startRaw]]: starts the decoded and
+    * filtered stream into the tag sink configured by `sinkOptions`
     * ([[TagSinkProvider.options]]), checkpointed at `checkpointDir`
     * through [[LocalCheckpointFileManager]].
     *
@@ -222,12 +206,10 @@ object TagPipeline {
     * starts. The file manager is set on `spark` unless it already names
     * one.
     *
-    * What a checkpoint pins: the state-store provider and the state
-    * partition count (`spark.sql.shuffle.partitions` when the checkpoint
-    * was created) are recorded in the offset log's metadata and win over
-    * the session's confs on every restart. The file manager is not
-    * pinned: a checkpoint written under Spark's default manager restarts
-    * under this one and back again.
+    * What a checkpoint pins: on a KPL wire, the state-store provider and
+    * state partition count of its subsequence dedup. The file manager is
+    * not pinned: a checkpoint written under Spark's default manager
+    * restarts under this one and back again.
     */
   private def startTagSink(spark: SparkSession, wire: DataFrame,
       checkpointDir: String, trigger: Trigger,
@@ -239,7 +221,7 @@ object TagPipeline {
     if (conf.getOption(CheckpointFileManagerKey).isEmpty)
       conf.set(CheckpointFileManagerKey,
         classOf[LocalCheckpointFileManager].getName)
-    dedupedStream(wire).writeStream
+    EventDecoder.decodeAndFilter(wire).writeStream
       .format(classOf[TagSinkProvider].getName)
       .options(sinkOptions)
       .outputMode("append")
@@ -296,7 +278,7 @@ object TagPipeline {
           RawAns.minimalDoc(commitMarkerId(storeKey, batchId, runNs)))
   }
 
-  /** [[start]]'s open-schema twin: same source/decode/dedup stages, but
+  /** [[start]]'s open-schema twin: same source and decode stages, but
     * the sink edits RAW documents via the byte-preserving splice — the
     * write path a production consumer runs when stored documents carry
     * fields the pipeline does not declare (ANS schemas evolve; the
@@ -314,14 +296,13 @@ object TagPipeline {
         runNamespace(checkpointDir)))
   }
 
-  /** Batch twin of [[start]] for a bounded event log (same expressions —
-    * Structured Streaming's batch≡stream unification).
+  /** Batch twin of [[start]] for a bounded event log: the same
+    * expressions and the same sink body, so it leaves the store as the
+    * stream does (Structured Streaming's batch ≡ stream unification).
     */
   def runBatch(wire: DataFrame, store: DocumentStore, tag: Tag = AutoTag,
       storeKey: String = "default-batch"): Unit = {
     DocumentStore.register(storeKey, store)
-    val projected = EventDecoder.decodeAndFilter(wire)
-      .dropDuplicates("id")
-    enrichAndUpsert(storeKey, tag)(projected.toDF(), 0L)
+    enrichAndUpsert(storeKey, tag)(EventDecoder.decodeAndFilter(wire), 0L)
   }
 }

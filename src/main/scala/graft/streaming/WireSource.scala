@@ -50,19 +50,18 @@ object WireSource {
     * watermark-bounded dedup on (shard, sequence, subsequence), so a
     * restart or replay that RE-READS the same Kinesis record (same
     * sequence number, partially-processed aggregate) never re-delivers
-    * a user record inside the horizon. A producer RETRY that re-ships
-    * an aggregate is a different case — Kinesis assigns the re-shipped
-    * record a NEW sequence number, so this dedup cannot absorb it; that
-    * duplicate is handled downstream by the pipeline's event-id dedup
-    * and the idempotent tag append (exactly the KCL's contract too:
-    * subsequence checkpoints cover consumer-side replays, producer
-    * dedup is the application's job). Deaggregation is per-row expression work
+    * a user record inside the [[KplDedupHorizon]]. A producer RETRY that
+    * re-ships an aggregate is a different case — Kinesis assigns the
+    * re-shipped record a NEW sequence number, so this dedup cannot absorb
+    * it; that duplicate reaches the tag sink, whose idempotent write
+    * turns it into a no-op (exactly the KCL's contract too: subsequence
+    * checkpoints cover consumer-side replays, producer dedup is the
+    * application's job). Deaggregation is per-row expression work
     * (stateless, partition-local); only the dedup carries state, aged
     * out by the watermark.
     */
   def kinesisKpl(spark: SparkSession, streamName: String, region: String,
-      maxFetchPerShard: Int = 20,
-      dedupHorizon: String = "10 minutes"): DataFrame = {
+      maxFetchPerShard: Int = 20): DataFrame = {
     import spark.implicits._
     val raw = spark.readStream
       .format("aws-kinesis")
@@ -79,10 +78,13 @@ object WireSource {
       Kpl.deaggregate(data, pk).map(ur =>
         (ur.data, shard, seq, ur.subSeq, ts))
     }.toDF("data", "shard", "seq", "sub_seq", "ts")
-      .withWatermark("ts", dedupHorizon)
+      .withWatermark("ts", KplDedupHorizon)
       .dropDuplicatesWithinWatermark("shard", "seq", "sub_seq")
       .select(col("data"), col("shard"), col("ts"))
   }
+
+  /** How long [[kinesisKpl]]'s dedup remembers a user record. */
+  private val KplDedupHorizon = "10 minutes"
 
   /** Bounded replay of an event-log parquet (batch ≡ stream): re-encodes
     * the events table as wire frames — the test/backfill source.

@@ -192,21 +192,22 @@ class FormatSpec extends SparkSpec {
         col("value"), col("props"),
         // serialize ts explicitly: json/csv carry it as text
         date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts_s"))
-    val dir = Files.createTempDirectory("fmt-").toString
-    base.write.orc(s"$dir/orc")
-    base.write.json(s"$dir/json")
-    base.write.option("header", true).csv(s"$dir/csv")
+    withTempDir("fmt-") { dir =>
+      base.write.orc(s"$dir/orc")
+      base.write.json(s"$dir/json")
+      base.write.option("header", true).csv(s"$dir/csv")
 
-    val fromOrc = spark.read.orc(s"$dir/orc")
-    val fromJson = spark.read.schema(base.schema).json(s"$dir/json")
-    val fromCsv = spark.read.schema(base.schema)
-      .option("header", true).csv(s"$dir/csv")
+      val fromOrc = spark.read.orc(s"$dir/orc")
+      val fromJson = spark.read.schema(base.schema).json(s"$dir/json")
+      val fromCsv = spark.read.schema(base.schema)
+        .option("header", true).csv(s"$dir/csv")
 
-    val n = base.count()
-    for ((df, fmt) <- Seq((fromOrc, "orc"), (fromJson, "json"), (fromCsv, "csv"))) {
-      assert(df.count() == n, s"$fmt row count")
-      assert(df.exceptAll(base).count() == 0, s"$fmt content drift")
-      assert(base.exceptAll(df).count() == 0, s"$fmt content drift (reverse)")
+      val n = base.count()
+      for ((df, fmt) <- Seq((fromOrc, "orc"), (fromJson, "json"), (fromCsv, "csv"))) {
+        assert(df.count() == n, s"$fmt row count")
+        assert(df.exceptAll(base).count() == 0, s"$fmt content drift")
+        assert(base.exceptAll(df).count() == 0, s"$fmt content drift (reverse)")
+      }
     }
   }
 
@@ -265,75 +266,77 @@ class FormatSpec extends SparkSpec {
     import spark.implicits._
     // 2021-03-04T05:06:07.123456Z in epoch units
     val micros = 1614834367123456L
-    val root = Files.createTempDirectory("events-ts-")
-    def events(enc: String) = { val d = root.resolve(enc); Files.createDirectories(d); d }
-    // parquet-hadoop, no Spark row metadata: the converter decides the type
-    def hadoopWrite(enc: String, tsType: String, v: Long): Unit = {
-      val schema = MessageTypeParser.parseMessageType(
-        s"message events { required int64 event_id; optional int64 ts ($tsType); }")
-      val w = ExampleParquetWriter.builder(
-        new LocalOutputFile(events(enc).resolve("events.parquet")))
-        .withType(schema).build()
-      try w.write(new SimpleGroupFactory(schema).newGroup()
-        .append("event_id", 1L).append("ts", v))
-      finally w.close()
-    }
-    hadoopWrite("nanos", "TIMESTAMP(NANOS,true)", micros * 1000L)
-    hadoopWrite("ntz_hadoop", "TIMESTAMP(MICROS,false)", micros)
-    // Spark, with its row metadata: TIMESTAMP_MICROS NTZ and UTC
-    val utc = Seq(micros).toDF("us").select(lit(1L).as("event_id"),
-      timestamp_micros(col("us")).as("ts"))
-    for ((enc, df) <- Seq("ntz" -> utc.withColumn("ts", col("ts").cast(TimestampNTZType)),
-        "utc" -> utc)) {
-      val tmp = root.resolve(s"$enc-tmp").toString
-      df.coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
-      Files.copy(part.toPath, events(enc).resolve("events.parquet"))
-    }
-    // Tables must build the converter AFTER setting its confs: start
-    // from the opposite values, which read nanos as an error and micros
-    // NTZ as TimestampNTZType
-    val confs = Seq("spark.sql.legacy.parquet.nanosAsLong",
-      "spark.sql.parquet.inferTimestampNTZ.enabled")
-    val saved = confs.map(k => k -> spark.conf.get(k))
-    try {
-      for (enc <- Seq("nanos", "ntz_hadoop", "ntz", "utc")) {
-        spark.conf.set(confs(0), "false")
-        spark.conf.set(confs(1), "true")
-        val dir = root.resolve(enc).toString
-        val df = Tables(spark, dir, "events")
-        val path = s"$dir/events.parquet"
-        assert(spark.read.schema(Tables.footerSchema(spark, path)).parquet(path).schema ==
-          spark.read.parquet(path).schema, enc)
-        assert(df.schema("ts").dataType == TimestampType, s"$enc dtype")
-        assert(df.select(unix_micros(col("ts"))).as[Long].head() == micros,
-          s"$enc must land on the same UTC instant")
+    withTempDir("events-ts-") { tmp =>
+      val root = java.nio.file.Paths.get(tmp)
+      def events(enc: String) = { val d = root.resolve(enc); Files.createDirectories(d); d }
+      // parquet-hadoop, no Spark row metadata: the converter decides the type
+      def hadoopWrite(enc: String, tsType: String, v: Long): Unit = {
+        val schema = MessageTypeParser.parseMessageType(
+          s"message events { required int64 event_id; optional int64 ts ($tsType); }")
+        val w = ExampleParquetWriter.builder(
+          new LocalOutputFile(events(enc).resolve("events.parquet")))
+          .withType(schema).build()
+        try w.write(new SimpleGroupFactory(schema).newGroup()
+          .append("event_id", 1L).append("ts", v))
+        finally w.close()
       }
-      assert(spark.read.parquet(root.resolve("nanos").resolve("events.parquet").toString)
-        .schema("ts").dataType == LongType)
-    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
-    Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => { Files.delete(p); () })
+      hadoopWrite("nanos", "TIMESTAMP(NANOS,true)", micros * 1000L)
+      hadoopWrite("ntz_hadoop", "TIMESTAMP(MICROS,false)", micros)
+      // Spark, with its row metadata: TIMESTAMP_MICROS NTZ and UTC
+      val utc = Seq(micros).toDF("us").select(lit(1L).as("event_id"),
+        timestamp_micros(col("us")).as("ts"))
+      for ((enc, df) <- Seq("ntz" -> utc.withColumn("ts", col("ts").cast(TimestampNTZType)),
+          "utc" -> utc)) {
+        val tmp = root.resolve(s"$enc-tmp").toString
+        df.coalesce(1).write.parquet(tmp)
+        val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
+        Files.copy(part.toPath, events(enc).resolve("events.parquet"))
+      }
+      // Tables must build the converter AFTER setting its confs: start
+      // from the opposite values, which read nanos as an error and micros
+      // NTZ as TimestampNTZType
+      val confs = Seq("spark.sql.legacy.parquet.nanosAsLong",
+        "spark.sql.parquet.inferTimestampNTZ.enabled")
+      val saved = confs.map(k => k -> spark.conf.get(k))
+      try {
+        for (enc <- Seq("nanos", "ntz_hadoop", "ntz", "utc")) {
+          spark.conf.set(confs(0), "false")
+          spark.conf.set(confs(1), "true")
+          val dir = root.resolve(enc).toString
+          val df = Tables(spark, dir, "events")
+          val path = s"$dir/events.parquet"
+          assert(spark.read.schema(Tables.footerSchema(spark, path)).parquet(path).schema ==
+            spark.read.parquet(path).schema, enc)
+          assert(df.schema("ts").dataType == TimestampType, s"$enc dtype")
+          assert(df.select(unix_micros(col("ts"))).as[Long].head() == micros,
+            s"$enc must land on the same UTC instant")
+        }
+        assert(spark.read.parquet(root.resolve("nanos").resolve("events.parquet").toString)
+          .schema("ts").dataType == LongType)
+      } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
   }
 
   test("binaryFile source feeds the multimodal pipeline (media ingestion path)") {
     import graft.operators.Multimodal
     // stage some opaque "media" blobs on disk, as a real manifest would
-    val dir = Files.createTempDirectory("media-")
-    val blobs = (1 to 5).map(i => i.toLong -> Array.fill(10 * i)(i.toByte))
-    blobs.foreach { case (i, b) =>
-      Files.write(dir.resolve(s"clip-$i.bin"), b)
+    withTempDir("media-") { tmp =>
+      val dir = java.nio.file.Paths.get(tmp)
+      val blobs = (1 to 5).map(i => i.toLong -> Array.fill(10 * i)(i.toByte))
+      blobs.foreach { case (i, b) =>
+        Files.write(dir.resolve(s"clip-$i.bin"), b)
+      }
+      import spark.implicits._
+      val media = spark.read.format("binaryFile").load(dir.toString)
+        .select(
+          regexp_extract(col("path"), "clip-(\\d+)\\.bin", 1).cast("long")
+            .as("doc_id"),
+          col("content").as("media"))
+        .as[Multimodal.MediaRow]
+      val feats = Multimodal.extractFeatures(spark, media).collect()
+        .map(f => f.doc_id -> f.n_bytes).toMap
+      assert(feats == blobs.map { case (i, b) => i -> b.length.toLong }.toMap)
     }
-    import spark.implicits._
-    val media = spark.read.format("binaryFile").load(dir.toString)
-      .select(
-        regexp_extract(col("path"), "clip-(\\d+)\\.bin", 1).cast("long")
-          .as("doc_id"),
-        col("content").as("media"))
-      .as[Multimodal.MediaRow]
-    val feats = Multimodal.extractFeatures(spark, media).collect()
-      .map(f => f.doc_id -> f.n_bytes).toMap
-    assert(feats == blobs.map { case (i, b) => i -> b.length.toLong }.toMap)
   }
 
   test("HouseSource loads v2-generation AND list-of-string house files; pushdown rides beside the list chunk (r15 verdict #3)") {

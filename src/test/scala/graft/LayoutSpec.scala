@@ -60,25 +60,26 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("partitioned corpus write: split filter prunes partitions at planning time") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part-").toString
-    val bucket = substring(md5(concat(lit("split:"),
-      col("doc_id").cast("string"))), 1, 2)
-    val curated = Tables(spark, Sf, "documents")
-      .select(col("doc_id"), col("text"), col("lang"),
-        when(bucket < "cd", lit("train")).otherwise(lit("val")).as("split"))
-    Layout.partitionedWrite(curated, dir, "split", "lang")
+    withTempDir("graft-part-") { dir =>
+      val bucket = substring(md5(concat(lit("split:"),
+        col("doc_id").cast("string"))), 1, 2)
+      val curated = Tables(spark, Sf, "documents")
+        .select(col("doc_id"), col("text"), col("lang"),
+          when(bucket < "cd", lit("train")).otherwise(lit("val")).as("split"))
+      Layout.partitionedWrite(curated, dir, "split", "lang")
 
-    val train = spark.read.parquet(dir).filter(col("split") === "train")
-    train.collect()
-    val p = train.queryExecution.executedPlan.toString
-    // the split predicate must land in PartitionFilters (directory-level
-    // prune), NOT PushedFilters (row-level) — and never a post-scan Filter
-    assert(p.contains("PartitionFilters"), s"no partition filters:\n$p")
-    assert(p.replaceAll("\\s", "").contains("PartitionFilters:[isnotnull(split"),
-      s"split filter did not reach the partition prune:\n$p")
-    // correctness: pruned read == filtered full read
-    val expected = curated.filter(col("split") === "train").count()
-    assert(train.count() == expected && expected > 0)
+      val train = spark.read.parquet(dir).filter(col("split") === "train")
+      train.collect()
+      val p = train.queryExecution.executedPlan.toString
+      // the split predicate must land in PartitionFilters (directory-level
+      // prune), NOT PushedFilters (row-level) — and never a post-scan Filter
+      assert(p.contains("PartitionFilters"), s"no partition filters:\n$p")
+      assert(p.replaceAll("\\s", "").contains("PartitionFilters:[isnotnull(split"),
+        s"split filter did not reach the partition prune:\n$p")
+      // correctness: pruned read == filtered full read
+      val expected = curated.filter(col("split") === "train").count()
+      assert(train.count() == expected && expected > 0)
+    }
   }
 
   test("z-order chunks prune point predicates on BOTH dimensions; 1-D sorts on only one") {

@@ -1253,25 +1253,26 @@ class OperatorSpec extends SparkSpec {
     // ws_tokens); the naive rule's running cum for that doc equals `prior`
     // (NULL adds nothing), so the verdict must coalesce the cumsum to +0,
     // not let NULL poison the comparison into kept=0.
-    val dir = java.nio.file.Files.createTempDirectory("q147-null-").toString
-    // One source: class (s,100) consumes the 800-token budget exactly;
-    // boundary class (s,50) opens with a NULL-text doc.
-    Seq(
-      (1L, ("w " * 400).trim, "en", "s", 100L),
-      (2L, ("w " * 400).trim, "en", "s", 100L),
-      (3L, null.asInstanceOf[String], "en", "s", 50L),
-      (4L, ("w " * 100).trim, "en", "s", 50L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.parquet(s"$dir/documents.parquet")
-    val kept = SparkEntry.queries("q147_source_budget_scalable")(spark, dir)
-      .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
-    assert(kept == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 0L),
-      s"NULL-head boundary class drifted from the naive rule: $kept")
-    // cross-check against q133's window rule on the same fixture
-    val naive = SparkEntry.queries("q133_token_budget")(spark, dir)
-      .collect().map(_.getLong(0)).toSet
-    assert(kept.filter(_._2 == 1L).keySet == naive,
-      "q147 kept set must equal q133's on the NULL-text fixture")
+    withTempDir("q147-null-") { dir =>
+      // One source: class (s,100) consumes the 800-token budget exactly;
+      // boundary class (s,50) opens with a NULL-text doc.
+      Seq(
+        (1L, ("w " * 400).trim, "en", "s", 100L),
+        (2L, ("w " * 400).trim, "en", "s", 100L),
+        (3L, null.asInstanceOf[String], "en", "s", 50L),
+        (4L, ("w " * 100).trim, "en", "s", 50L))
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.parquet(s"$dir/documents.parquet")
+      val kept = SparkEntry.queries("q147_source_budget_scalable")(spark, dir)
+        .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
+      assert(kept == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 0L),
+        s"NULL-head boundary class drifted from the naive rule: $kept")
+      // cross-check against q133's window rule on the same fixture
+      val naive = SparkEntry.queries("q133_token_budget")(spark, dir)
+        .collect().map(_.getLong(0)).toSet
+      assert(kept.filter(_._2 == 1L).keySet == naive,
+        "q147 kept set must equal q133's on the NULL-text fixture")
+    }
   }
 
   test("frame sampler caps at MaxFrames so q150's fkey packing stays bijective") {
@@ -4448,8 +4449,7 @@ class OperatorSpec extends SparkSpec {
     // the testdata files are single-row-group arrow writes; exercise the
     // per-group accumulation path AND cross-writer interop by writing a
     // multi-group file through Spark's parquet-mr with a tiny block size
-    val tmp = java.nio.file.Files.createTempDirectory("graft_rg").toString
-    try {
+    withTempDir("graft_rg") { tmp =>
       Tables(spark, Sf, "documents").select(col("doc_id"), col("source"))
         .coalesce(1)
         .write.option("parquet.block.size", "2048")
@@ -4474,11 +4474,6 @@ class OperatorSpec extends SparkSpec {
       assert(stats("source").min_value == rows.map(_._2).min)
       assert(stats("source").max_value == rows.map(_._2).max)
       assert(stats("source").codec == "SNAPPY")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(tmp))
     }
   }
 

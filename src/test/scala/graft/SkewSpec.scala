@@ -13,44 +13,45 @@ class SkewSpec extends SparkSpec {
     // r8 verdict item 5: Spark's OWN runtime skew split on the engine's
     // q10 join shape — the mechanism a 100 TB run leans on first, before
     // any hand salting.
-    val dir = java.nio.file.Files.createTempDirectory("graft-skewaqe-").toString
-    // one hot order owns 30k lineitems (non-sequential linenumbers so the
-    // shuffle blocks don't compress away), the other 49 are tiny
-    val hot = (1 to 30000).map(i => (1L, i.toLong * 2654435761L % 1000000L))
-    val cold = for (k <- 2L to 50L; i <- 1 to 10) yield (k, i.toLong)
-    (hot ++ cold).toDF("l_orderkey", "l_linenumber")
-      .repartition(4)
-      .write.parquet(s"$dir/lineitem.parquet")
-    (1L to 50L).map(k => (k, k * 10.0, "O"))
-      .toDF("o_orderkey", "o_totalprice", "o_orderstatus")
-      .write.parquet(s"$dir/orders.parquet")
-    val confs = Seq(
-      "spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.adaptive.skewJoin.enabled" -> "true",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8k",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8k",
-      // q10 ends in a presentation sort whose range shuffle would veto
-      // the split under AQE's no-extra-shuffle heuristic; force records
-      // that the split is worth it (the sort re-shuffles regardless)
-      "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      val skewed = SparkEntry.queries("q10_sortmerge_join")(spark, dir)
-      skewed.collect()
-      val p = skewed.queryExecution.executedPlan.toString
-      assert(p.contains("skew=true"),
-        s"expected the AQE skew-split SMJ node, got:\n${p.linesIterator.take(30).mkString("\n")}")
-      // semantics: the split must change nothing vs the plain SMJ
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-      val plain = SparkEntry.queries("q10_sortmerge_join")(spark, dir)
-      assert(plain.count() == 30000L + 49L * 10L)
-      assert(skewed.exceptAll(plain).count() == 0)
-      assert(plain.exceptAll(skewed).count() == 0)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
+    withTempDir("graft-skewaqe-") { dir =>
+      // one hot order owns 30k lineitems (non-sequential linenumbers so the
+      // shuffle blocks don't compress away), the other 49 are tiny
+      val hot = (1 to 30000).map(i => (1L, i.toLong * 2654435761L % 1000000L))
+      val cold = for (k <- 2L to 50L; i <- 1 to 10) yield (k, i.toLong)
+      (hot ++ cold).toDF("l_orderkey", "l_linenumber")
+        .repartition(4)
+        .write.parquet(s"$dir/lineitem.parquet")
+      (1L to 50L).map(k => (k, k * 10.0, "O"))
+        .toDF("o_orderkey", "o_totalprice", "o_orderstatus")
+        .write.parquet(s"$dir/orders.parquet")
+      val confs = Seq(
+        "spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8k",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8k",
+        // q10 ends in a presentation sort whose range shuffle would veto
+        // the split under AQE's no-extra-shuffle heuristic; force records
+        // that the split is worth it (the sort re-shuffles regardless)
+        "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true")
+      val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      try {
+        confs.foreach { case (k, v) => spark.conf.set(k, v) }
+        val skewed = SparkEntry.queries("q10_sortmerge_join")(spark, dir)
+        skewed.collect()
+        val p = skewed.queryExecution.executedPlan.toString
+        assert(p.contains("skew=true"),
+          s"expected the AQE skew-split SMJ node, got:\n${p.linesIterator.take(30).mkString("\n")}")
+        // semantics: the split must change nothing vs the plain SMJ
+        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
+        val plain = SparkEntry.queries("q10_sortmerge_join")(spark, dir)
+        assert(plain.count() == 30000L + 49L * 10L)
+        assert(skewed.exceptAll(plain).count() == 0)
+        assert(plain.exceptAll(skewed).count() == 0)
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
+      }
     }
   }
 

@@ -6,7 +6,9 @@ import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.streaming.operators.stateful.StatefulOperator
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -17,8 +19,8 @@ import graft.streaming.AnsModel._
 /** Streaming-semantics tests (SURVEY.md §5 rule 4): MemoryStream- and
   * Kinesis-stub-driven micro-batches through the real StreamExecution
   * engine — the end-to-end tag pipeline (decode, first-publish filter,
-  * watermarked id dedup, idempotent upsert sink), its checkpoints and
-  * restarts, and the document stores it writes to.
+  * idempotent upsert sink), its checkpoints and restarts, and the
+  * document stores it writes to.
   */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -53,33 +55,34 @@ class StreamingSpec extends SparkSpec {
     val ms = MemoryStream[Wire]
     val store = new InMemoryDocumentStore
     store.upsert(AnsDoc("A", Some(3L), Some(Taxonomy(Some(Seq(Tag("x", "x")))))))
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
-    // ProcessingTime(0): continuous micro-batches, so data added AFTER
-    // start is reliably picked up (AvailableNow snapshots its offsets at
-    // start — racing addData against it is flaky under load); prod
-    // cadence is 3 s ≙ app.py:78.
-    val q = TagPipeline.start(spark, ms.toDF(), store, ckpt,
-      trigger = Trigger.ProcessingTime(0))
+    withTempDir("graft-ckpt-") { ckpt =>
+      // ProcessingTime(0): continuous micro-batches, so data added AFTER
+      // start is reliably picked up (AvailableNow snapshots its offsets at
+      // start — racing addData against it is flaky under load); prod
+      // cadence is 3 s ≙ app.py:78.
+      val q = TagPipeline.start(spark, ms.toDF(), store, ckpt,
+        trigger = Trigger.ProcessingTime(0))
 
-    // batch 1: A (already in store, has other tag), B (unknown → created),
-    // an unpublished story and an update op (both filtered out).
-    ms.addData(
-      ev(story("A"), 0), ev(story("B"), 1),
-      ev("""{"id":"C","operation":"insert-story","published":false}""", 2),
-      ev("""{"id":"D","operation":"update-story","published":true}""", 3))
-    q.processAllAvailable()
+      // batch 1: A (already in store, has other tag), B (unknown → created),
+      // an unpublished story and an update op (both filtered out).
+      ms.addData(
+        ev(story("A"), 0), ev(story("B"), 1),
+        ev("""{"id":"C","operation":"insert-story","published":false}""", 2),
+        ev("""{"id":"D","operation":"update-story","published":true}""", 3))
+      q.processAllAvailable()
 
-    // batch 2: A redelivered (dedup + idempotence ⇒ no double tag).
-    ms.addData(ev(story("A"), 4))
-    q.processAllAvailable()
-    q.stop()
+      // batch 2: A redelivered (idempotence ⇒ no double tag).
+      ms.addData(ev(story("A"), 4))
+      q.processAllAvailable()
+      q.stop()
 
-    val a = store.get("A").get
-    assert(a.taxonomy.get.tags.get == Seq(Tag("x", "x"), AutoTag)) // appended once, order kept
-    val b = store.get("B").get
-    assert(b.taxonomy.get.tags.get == Seq(AutoTag)) // created from nothing
-    assert(store.get("C").isEmpty && store.get("D").isEmpty) // filtered out
-    assert(store.size == 2)
+      val a = store.get("A").get
+      assert(a.taxonomy.get.tags.get == Seq(Tag("x", "x"), AutoTag)) // appended once, order kept
+      val b = store.get("B").get
+      assert(b.taxonomy.get.tags.get == Seq(AutoTag)) // created from nothing
+      assert(store.get("C").isEmpty && store.get("D").isEmpty) // filtered out
+      assert(store.size == 2)
+    }
   }
 
   test("open-schema tag pipeline: raw store docs keep unknown fields BYTE-identical across streaming tag write-back") {
@@ -91,25 +94,26 @@ class StreamingSpec extends SparkSpec {
     val seeded = """{"_id":"A","unknown":{"deep":[1,{"s":"tax\"onomy ]}"}],"u":"π café"},""" +
       """"taxonomy":{"rev":9,"tags":[{"slug":"x","text":"x"}]},"later":null}"""
     store.upsert("A", seeded)
-    val ckpt = Files.createTempDirectory("graft-raw-ckpt-").toString
-    val q = TagPipeline.startRaw(spark, ms.toDF(), store, ckpt,
-      trigger = Trigger.ProcessingTime(0), storeKey = "raw-test")
-    ms.addData(ev(story("A"), 0), ev(story("B"), 1))
-    q.processAllAvailable()
-    // redelivery: dedup + splice idempotence ⇒ byte-stable
-    ms.addData(ev(story("A"), 2))
-    q.processAllAvailable()
-    q.stop()
-    // hand-written expected bytes (NOT derived via RawAns — a circular
-    // check would pass on any splice bug): the tag lands before the
-    // tags array's ']', every other byte identical
-    val expectedA = """{"_id":"A","unknown":{"deep":[1,{"s":"tax\"onomy ]}"}],"u":"π café"},""" +
-      """"taxonomy":{"rev":9,"tags":[{"slug":"x","text":"x"},""" +
-      """{"slug":"kinesis-autotag","text":"kinesis autotag"}]},"later":null}"""
-    assert(store.get("A").get == expectedA, "unknown fields not byte-preserved")
-    assert(store.get("B").get ==
-      """{"_id":"B","taxonomy":{"tags":[{"slug":"kinesis-autotag","text":"kinesis autotag"}]}}""")
-    assert(store.size == 2)
+    withTempDir("graft-raw-ckpt-") { ckpt =>
+      val q = TagPipeline.startRaw(spark, ms.toDF(), store, ckpt,
+        trigger = Trigger.ProcessingTime(0), storeKey = "raw-test")
+      ms.addData(ev(story("A"), 0), ev(story("B"), 1))
+      q.processAllAvailable()
+      // redelivery: splice idempotence ⇒ byte-stable
+      ms.addData(ev(story("A"), 2))
+      q.processAllAvailable()
+      q.stop()
+      // hand-written expected bytes (NOT derived via RawAns — a circular
+      // check would pass on any splice bug): the tag lands before the
+      // tags array's ']', every other byte identical
+      val expectedA = """{"_id":"A","unknown":{"deep":[1,{"s":"tax\"onomy ]}"}],"u":"π café"},""" +
+        """"taxonomy":{"rev":9,"tags":[{"slug":"x","text":"x"},""" +
+        """{"slug":"kinesis-autotag","text":"kinesis autotag"}]},"later":null}"""
+      assert(store.get("A").get == expectedA, "unknown fields not byte-preserved")
+      assert(store.get("B").get ==
+        """{"_id":"B","taxonomy":{"tags":[{"slug":"kinesis-autotag","text":"kinesis autotag"}]}}""")
+      assert(store.size == 2)
+    }
   }
 
   test("kinesis contract: WireSource.kinesis end-to-end through TagPipeline (LATEST skip + per-shard fetch cap)") {
@@ -119,37 +123,38 @@ class StreamingSpec extends SparkSpec {
     KinesisStubRegistry.put(stream, "shardId-000000000000",
       gz(story("PRE")), t(0))
     val store = new InMemoryDocumentStore
-    val ckpt = Files.createTempDirectory("graft-kinesis-ckpt-").toString
-    val wire = WireSource.kinesis(spark, stream, "us-east-1",
-      maxFetchPerShard = 2)
-    val q = TagPipeline.start(spark, wire, store, ckpt,
-      trigger = Trigger.ProcessingTime(0), storeKey = "kinesis-test")
-    try {
-      // LATEST initial offset snapshots at stream start; enqueue after
-      q.processAllAvailable()
-      (1 to 5).foreach { i =>
-        KinesisStubRegistry.put(stream, "shardId-000000000000",
-          gz(story(s"K$i")), t(i))
+    withTempDir("graft-kinesis-ckpt-") { ckpt =>
+      val wire = WireSource.kinesis(spark, stream, "us-east-1",
+        maxFetchPerShard = 2)
+      val q = TagPipeline.start(spark, wire, store, ckpt,
+        trigger = Trigger.ProcessingTime(0), storeKey = "kinesis-test")
+      try {
+        // LATEST initial offset snapshots at stream start; enqueue after
+        q.processAllAvailable()
+        (1 to 5).foreach { i =>
+          KinesisStubRegistry.put(stream, "shardId-000000000000",
+            gz(story(s"K$i")), t(i))
+        }
+        KinesisStubRegistry.put(stream, "shardId-000000000001",
+          gz(story("K6")), t(6))
+        q.processAllAvailable()
+        assert(store.get("PRE").isEmpty, "LATEST must skip pre-start records")
+        (1 to 6).foreach { i =>
+          assert(store.get(s"K$i").exists(_.taxonomy.get.tags.get == Seq(AutoTag)),
+            s"K$i not tagged")
+        }
+        // the Limit governor (app.py:22): no micro-batch read more than
+        // maxFetchPerShard records from any shard — 5 records on shard 0
+        // under cap 2 force ≥ 3 batches, each ≤ cap × shards rows
+        val batches = q.recentProgress.filter(_.numInputRows > 0)
+        assert(batches.length >= 3,
+          s"5 records under a per-shard cap of 2 need >= 3 fetches, got ${batches.length}")
+        assert(batches.forall(_.numInputRows <= 2 * 2),
+          "a micro-batch exceeded maxFetchRecordsPerShard x shards")
+      } finally {
+        q.stop()
+        KinesisStubRegistry.clear(stream)
       }
-      KinesisStubRegistry.put(stream, "shardId-000000000001",
-        gz(story("K6")), t(6))
-      q.processAllAvailable()
-      assert(store.get("PRE").isEmpty, "LATEST must skip pre-start records")
-      (1 to 6).foreach { i =>
-        assert(store.get(s"K$i").exists(_.taxonomy.get.tags.get == Seq(AutoTag)),
-          s"K$i not tagged")
-      }
-      // the Limit governor (app.py:22): no micro-batch read more than
-      // maxFetchPerShard records from any shard — 5 records on shard 0
-      // under cap 2 force ≥ 3 batches, each ≤ cap × shards rows
-      val batches = q.recentProgress.filter(_.numInputRows > 0)
-      assert(batches.length >= 3,
-        s"5 records under a per-shard cap of 2 need >= 3 fetches, got ${batches.length}")
-      assert(batches.forall(_.numInputRows <= 2 * 2),
-        "a micro-batch exceeded maxFetchRecordsPerShard x shards")
-    } finally {
-      q.stop()
-      KinesisStubRegistry.clear(stream)
     }
   }
 
@@ -160,31 +165,32 @@ class StreamingSpec extends SparkSpec {
     (1 to n).foreach(i => KinesisStubRegistry.put(stream, s"shard-${i % shards}",
       gz(story(s"AN$i")), t(i)))
     val store = new InMemoryDocumentStore
-    val ckpt = Files.createTempDirectory("graft-kinesis-an-").toString
-    val wire = spark.readStream.format("aws-kinesis")
-      .option("kinesis.streamName", stream)
-      .option("kinesis.startingPosition", "TRIM_HORIZON")
-      .option("kinesis.executor.maxFetchRecordsPerShard", cap)
-      .load()
-      .select(col("data"), col("shardId").as("shard"),
-        col("approximateArrivalTimestamp").as("ts"))
-    val q = TagPipeline.start(spark, wire, store, ckpt,
-      trigger = Trigger.AvailableNow(), storeKey = "kinesis-an")
-    try {
-      assert(q.awaitTermination(120000), "AvailableNow must end on its own")
-      assert(q.exception.isEmpty)
-      (1 to n).foreach(i => assert(
-        store.get(s"AN$i").exists(_.taxonomy.get.tags.get == Seq(AutoTag)),
-        s"AN$i not tagged"))
-      val data = q.recentProgress.filter(_.numInputRows > 0)
-      val expected = math.ceil(n.toDouble / (shards * cap)).toInt
-      assert(data.length == expected,
-        s"expected $expected capped triggers, got ${data.map(_.numInputRows).toSeq}")
-      assert(data.forall(_.numInputRows <= shards * cap))
-      assert(data.map(_.numInputRows).sum == n)
-    } finally {
-      q.stop()
-      KinesisStubRegistry.clear(stream)
+    withTempDir("graft-kinesis-an-") { ckpt =>
+      val wire = spark.readStream.format("aws-kinesis")
+        .option("kinesis.streamName", stream)
+        .option("kinesis.startingPosition", "TRIM_HORIZON")
+        .option("kinesis.executor.maxFetchRecordsPerShard", cap)
+        .load()
+        .select(col("data"), col("shardId").as("shard"),
+          col("approximateArrivalTimestamp").as("ts"))
+      val q = TagPipeline.start(spark, wire, store, ckpt,
+        trigger = Trigger.AvailableNow(), storeKey = "kinesis-an")
+      try {
+        assert(q.awaitTermination(120000), "AvailableNow must end on its own")
+        assert(q.exception.isEmpty)
+        (1 to n).foreach(i => assert(
+          store.get(s"AN$i").exists(_.taxonomy.get.tags.get == Seq(AutoTag)),
+          s"AN$i not tagged"))
+        val data = q.recentProgress.filter(_.numInputRows > 0)
+        val expected = math.ceil(n.toDouble / (shards * cap)).toInt
+        assert(data.length == expected,
+          s"expected $expected capped triggers, got ${data.map(_.numInputRows).toSeq}")
+        assert(data.forall(_.numInputRows <= shards * cap))
+        assert(data.map(_.numInputRows).sum == n)
+      } finally {
+        q.stop()
+        KinesisStubRegistry.clear(stream)
+      }
     }
   }
 
@@ -211,84 +217,101 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[Wire]
     val store = new InMemoryDocumentStore
-    val ckpt = Files.createTempDirectory("graft-recover-").toString
+    withTempDir("graft-recover-") { ckpt =>
 
-    // data added BEFORE start: AvailableNow snapshots available offsets
-    // at query start, so adding afterwards races the snapshot
-    ms.addData(ev(story("R1"), 0), ev(story("R2"), 1))
-    val q1 = TagPipeline.start(spark, ms.toDF(), store, ckpt,
-      trigger = Trigger.AvailableNow(), storeKey = "recover-test")
-    q1.processAllAvailable()
-    q1.stop()
-    assert(store.size == 2)
-    val r1Before = store.get("R1").get
+      // data added BEFORE start: AvailableNow snapshots available offsets
+      // at query start, so adding afterwards races the snapshot
+      ms.addData(ev(story("R1"), 0), ev(story("R2"), 1))
+      val q1 = TagPipeline.start(spark, ms.toDF(), store, ckpt,
+        trigger = Trigger.AvailableNow(), storeKey = "recover-test")
+      q1.processAllAvailable()
+      q1.stop()
+      assert(store.size == 2)
+      val r1Before = store.get("R1").get
 
-    // restart from the same checkpoint; new data plus (simulated) source
-    // replay of R1 — the state store must carry the dedup across restart
-    ms.addData(ev(story("R1"), 2), ev(story("R3"), 3))
-    val q2 = TagPipeline.start(spark, ms.toDF(), store, ckpt,
-      trigger = Trigger.AvailableNow(), storeKey = "recover-test")
-    q2.processAllAvailable()
-    q2.stop()
+      // restart from the same checkpoint; new data plus (simulated) source
+      // replay of R1 — the replay finds R1 tagged and changes nothing
+      ms.addData(ev(story("R1"), 2), ev(story("R3"), 3))
+      val q2 = TagPipeline.start(spark, ms.toDF(), store, ckpt,
+        trigger = Trigger.AvailableNow(), storeKey = "recover-test")
+      q2.processAllAvailable()
+      q2.stop()
 
-    assert(store.size == 3) // R3 added
-    assert(store.get("R1").get == r1Before) // replayed R1: no change at all
-    assert(store.get("R1").get.taxonomy.get.tags.get.count(_ == AutoTag) == 1)
+      assert(store.size == 3) // R3 added
+      assert(store.get("R1").get == r1Before) // replayed R1: no change at all
+      assert(store.get("R1").get.taxonomy.get.tags.get.count(_ == AutoTag) == 1)
+    }
   }
 
   test("file-backed store: upserts survive a process-restart boundary, idempotently") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-docstore-").toString
-    val ckpt = Files.createTempDirectory("graft-docstore-ckpt-").toString
-    val ms = MemoryStream[Wire]
-    ms.addData(ev(story("D1"), 0), ev(story("D2"), 1))
-    val q1 = TagPipeline.start(spark, ms.toDF(), new FileDocumentStore(dir),
-      ckpt, trigger = Trigger.AvailableNow(), storeKey = "file-store-test")
-    q1.processAllAvailable(); q1.stop()
+    withTempDir("graft-docstore-") { dir =>
+      withTempDir("graft-docstore-ckpt-") { ckpt =>
+        val ms = MemoryStream[Wire]
+        ms.addData(ev(story("D1"), 0), ev(story("D2"), 1))
+        val q1 = TagPipeline.start(spark, ms.toDF(), new FileDocumentStore(dir),
+          ckpt, trigger = Trigger.AvailableNow(), storeKey = "file-store-test")
+        q1.processAllAvailable(); q1.stop()
 
-    // a FRESH store instance on the same root sees the documents — the
-    // durability the in-memory store cannot provide
-    val reopened = new FileDocumentStore(dir)
-    assert(reopened.size == 2)
-    val d1Before = reopened.get("D1").get
-    assert(d1Before.taxonomy.get.tags.get == Seq(AutoTag))
+        // a FRESH store instance on the same root sees the documents — the
+        // durability the in-memory store cannot provide
+        val reopened = new FileDocumentStore(dir)
+        assert(reopened.size == 2)
+        val d1Before = reopened.get("D1").get
+        assert(d1Before.taxonomy.get.tags.get == Seq(AutoTag))
 
-    // redelivery after "restart": checkpoint + idempotent upsert → no
-    // double tag, byte-identical doc
-    ms.addData(ev(story("D1"), 2))
-    val q2 = TagPipeline.start(spark, ms.toDF(), reopened, ckpt,
-      trigger = Trigger.AvailableNow(), storeKey = "file-store-test")
-    q2.processAllAvailable(); q2.stop()
-    assert(new FileDocumentStore(dir).get("D1").get == d1Before)
+        // redelivery after "restart": checkpoint + idempotent upsert → no
+        // double tag, byte-identical doc
+        ms.addData(ev(story("D1"), 2))
+        val q2 = TagPipeline.start(spark, ms.toDF(), reopened, ckpt,
+          trigger = Trigger.AvailableNow(), storeKey = "file-store-test")
+        q2.processAllAvailable(); q2.stop()
+        assert(new FileDocumentStore(dir).get("D1").get == d1Before)
+      }
+    }
   }
 
   test("tag pipeline under the RocksDB state store (the at-scale state backend)") {
-    // The HDFS-backed default state store holds every in-watermark dedup
-    // key on-heap — at 100 TB event volume that state must spill; RocksDB
-    // is the production backend. Same pipeline, same assertions, state
-    // provider swapped by config only.
-    implicit val sqlCtx = spark.sqlContext
+    // The one stateful stage a tag query can hold is the KPL wire's
+    // subsequence dedup. The HDFS-backed default state store holds its
+    // in-watermark keys on-heap; RocksDB is the production backend. Same
+    // pipeline, state provider swapped by config only.
     val key = "spark.sql.streaming.stateStore.providerClass"
     val saved = spark.conf.getOption(key)
+    val stream = "unit-rocksdb-stream"
+    KinesisStubRegistry.clear(stream)
     try {
       spark.conf.set(key,
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val ms = MemoryStream[Wire]
       val store = new InMemoryDocumentStore
-      val ckpt = Files.createTempDirectory("graft-rocksdb-").toString
-      val q = TagPipeline.start(spark, ms.toDF(), store, ckpt,
-        trigger = Trigger.ProcessingTime(0), storeKey = "rocksdb-test")
-      ms.addData(ev(story("RD1"), 0), ev(story("RD2"), 1))
-      q.processAllAvailable()
-      ms.addData(ev(story("RD1"), 2)) // redelivery dedups via RocksDB state
-      q.processAllAvailable()
-      q.stop()
-      assert(store.size == 2)
-      assert(store.get("RD1").get.taxonomy.get.tags.get == Seq(AutoTag),
-        "redelivered id must stay single-tagged under the RocksDB store")
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
+      withTempDir("graft-rocksdb-") { ckpt =>
+        val q = TagPipeline.start(spark,
+          WireSource.kinesisKpl(spark, stream, "us-east-1"), store, ckpt,
+          trigger = Trigger.ProcessingTime(0), storeKey = "rocksdb-test")
+        try {
+          q.processAllAvailable() // LATEST snapshots the (empty) stream head
+          KinesisStubRegistry.put(stream, "shard-a",
+            Kpl.aggregate(Seq("RD1", "RD2").map(id => id -> gz(story(id)))), t(0))
+          q.processAllAvailable()
+          // a producer retry re-ships RD1 under a new sequence number
+          KinesisStubRegistry.put(stream, "shard-a", gz(story("RD1")), t(2))
+          q.processAllAvailable()
+          val stateful = q.recentProgress.filter(_.numInputRows > 0)
+            .flatMap(_.stateOperators)
+          assert(stateful.nonEmpty &&
+            stateful.forall(_.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb"))),
+            "the KPL dedup did not run on the RocksDB state store")
+        } finally q.stop()
+        assert(store.size == 2)
+        assert(store.get("RD1").get.taxonomy.get.tags.get == Seq(AutoTag),
+          "redelivered id must stay single-tagged under the RocksDB store")
+      }
+    } finally {
+      KinesisStubRegistry.clear(stream)
+      saved match {
+        case Some(v) => spark.conf.set(key, v)
+        case None    => spark.conf.unset(key)
+      }
     }
   }
 
@@ -302,99 +325,110 @@ class StreamingSpec extends SparkSpec {
     val stream = "unit-recover-stream"
     KinesisStubRegistry.clear(stream)
     val store = new InMemoryDocumentStore
-    val ckpt = Files.createTempDirectory("graft-kinesis-recover-").toString
-    def startQuery() = TagPipeline.start(spark,
-      WireSource.kinesis(spark, stream, "us-east-1", maxFetchPerShard = 2),
-      store, ckpt, trigger = Trigger.ProcessingTime(0),
-      storeKey = "kinesis-recover")
-    val q1 = startQuery()
-    try {
-      q1.processAllAvailable() // LATEST snapshots the (empty) stream head
-      (1 to 3).foreach(i => KinesisStubRegistry.put(stream,
+    withTempDir("graft-kinesis-recover-") { ckpt =>
+      def startQuery() = TagPipeline.start(spark,
+        WireSource.kinesis(spark, stream, "us-east-1", maxFetchPerShard = 2),
+        store, ckpt, trigger = Trigger.ProcessingTime(0),
+        storeKey = "kinesis-recover")
+      val q1 = startQuery()
+      try {
+        q1.processAllAvailable() // LATEST snapshots the (empty) stream head
+        (1 to 3).foreach(i => KinesisStubRegistry.put(stream,
+          "shardId-000000000000", gz(story(s"R$i")), t(i)))
+        q1.processAllAvailable()
+        assert(store.size == 3, "pre-kill records must be tagged")
+      } finally q1.stop() // the mid-stream kill
+      // records arrive while the consumer is down — the reference would
+      // lose these on restart
+      (4 to 6).foreach(i => KinesisStubRegistry.put(stream,
         "shardId-000000000000", gz(story(s"R$i")), t(i)))
-      q1.processAllAvailable()
-      assert(store.size == 3, "pre-kill records must be tagged")
-    } finally q1.stop() // the mid-stream kill
-    // records arrive while the consumer is down — the reference would
-    // lose these on restart
-    (4 to 6).foreach(i => KinesisStubRegistry.put(stream,
-      "shardId-000000000000", gz(story(s"R$i")), t(i)))
-    val q2 = startQuery()
-    try {
-      q2.processAllAvailable()
-      (1 to 6).foreach { i =>
-        assert(store.get(s"R$i").exists(
-          _.taxonomy.get.tags.get == Seq(AutoTag)),
-          s"R$i lost across the restart or double-tagged")
+      val q2 = startQuery()
+      try {
+        q2.processAllAvailable()
+        (1 to 6).foreach { i =>
+          assert(store.get(s"R$i").exists(
+            _.taxonomy.get.tags.get == Seq(AutoTag)),
+            s"R$i lost across the restart or double-tagged")
+        }
+        assert(store.size == 6)
+      } finally {
+        q2.stop()
+        KinesisStubRegistry.clear(stream)
       }
-      assert(store.size == 6)
-    } finally {
-      q2.stop()
-      KinesisStubRegistry.clear(stream)
     }
   }
 
-  test("checkpoint file managers: a kinesis checkpoint restarts default → local → default with no loss and no re-tag") {
+  test("checkpoint file managers: a kinesis checkpoint restarts default → local → default with no loss and no re-read") {
     // The file manager is not pinned by the checkpoint: each restart may
-    // switch it, and the offsets and dedup state written under one are
-    // read under the other. A redelivered id after each switch proves
-    // the dedup state crossed it (the counting store would see a second
-    // update otherwise).
+    // switch it, and the offsets written under one are read under the
+    // other. The counting store sees exactly one update per record put
+    // (a redelivered id is put again while the query is down, so it is
+    // updated again): a source that re-read its offsets after a switch
+    // would show as an extra update.
     val stream = "unit-fm-restart-stream"
     KinesisStubRegistry.clear(stream)
     val store = new CountingStore(new InMemoryDocumentStore)
-    val ckpt = Files.createTempDirectory("graft-fm-restart-").toString
-    def put(i: Int): Unit = KinesisStubRegistry.put(stream,
-      "shardId-000000000000", gz(story(s"R$i")), t(i))
-    def phase(manager: Option[String])(whileUp: => Unit): Unit =
-      withCheckpointFileManager(manager) {
-        val q = TagPipeline.start(spark,
-          WireSource.kinesis(spark, stream, "us-east-1", maxFetchPerShard = 2),
-          store, ckpt, trigger = Trigger.ProcessingTime(0),
-          storeKey = "fm-restart")
-        try {
-          q.processAllAvailable()
-          whileUp
-          q.processAllAvailable()
-          assert(checkpointFileManager(ckpt).getClass.getName ==
-            manager.getOrElse(classOf[LocalCheckpointFileManager].getName))
-        } finally q.stop()
-      }
-    try {
-      phase(Some(DefaultCheckpointFileManager)) { put(1); put(2) }
-      put(3); put(1) // while down: a new id and a redelivered one
-      phase(None) { put(4) }
-      put(5); put(3)
-      phase(Some(DefaultCheckpointFileManager)) {}
-      (1 to 5).foreach { i =>
-        assert(store.get(s"R$i").exists(_.taxonomy.get.tags.get == Seq(AutoTag)),
-          s"R$i lost across a file-manager switch")
-      }
-      assert(store.updates.get == 5,
-        s"a redelivered id was tagged again: ${store.updates.get} updates")
-    } finally KinesisStubRegistry.clear(stream)
+    withTempDir("graft-fm-restart-") { ckpt =>
+      def put(i: Int): Unit = KinesisStubRegistry.put(stream,
+        "shardId-000000000000", gz(story(s"R$i")), t(i))
+      def phase(manager: Option[String])(whileUp: => Unit): Unit =
+        withCheckpointFileManager(manager) {
+          val q = TagPipeline.start(spark,
+            WireSource.kinesis(spark, stream, "us-east-1", maxFetchPerShard = 2),
+            store, ckpt, trigger = Trigger.ProcessingTime(0),
+            storeKey = "fm-restart")
+          try {
+            q.processAllAvailable()
+            whileUp
+            q.processAllAvailable()
+            assert(checkpointFileManager(ckpt).getClass.getName ==
+              manager.getOrElse(classOf[LocalCheckpointFileManager].getName))
+          } finally q.stop()
+        }
+      try {
+        phase(Some(DefaultCheckpointFileManager)) { put(1); put(2) }
+        put(3); put(1) // while down: a new id and a redelivered one
+        phase(None) { put(4) }
+        put(5); put(3)
+        phase(Some(DefaultCheckpointFileManager)) {}
+        (1 to 5).foreach { i =>
+          assert(store.get(s"R$i").exists(_.taxonomy.get.tags.get == Seq(AutoTag)),
+            s"R$i lost across a file-manager switch")
+        }
+        assert(store.updates.get == 7,
+          s"7 records put, ${store.updates.get} updates: a file-manager switch lost or re-read records")
+      } finally KinesisStubRegistry.clear(stream)
+    }
   }
 
   test("local checkpoint file manager: the pipeline writes the default manager's file set, every file checksummed") {
     import org.apache.hadoop.fs.{ChecksumException, FileSystem, Path => HPath}
-    implicit val sqlCtx = spark.sqlContext
+    // the KPL wire, so that the query holds a stateful stage (its
+    // subsequence dedup) and writes state files
+    val stream = "unit-fm-files-stream"
+    def start(ckpt: String) = TagPipeline.start(spark,
+      WireSource.kinesisKpl(spark, stream, "us-east-1"),
+      new InMemoryDocumentStore, ckpt, trigger = Trigger.ProcessingTime(0),
+      storeKey = "fm-files")
+    def put(id: String, minute: Int): Unit =
+      KinesisStubRegistry.put(stream, "shard-a", gz(story(id)), t(minute))
     // two runs of one query on one checkpoint, the second a restart with
     // a redelivered id
-    def run(manager: Option[String]): String = {
-      val ckpt = Files.createTempDirectory("graft-fm-files-").toString
-      val ms = MemoryStream[Wire]
+    def run(manager: Option[String], ckpt: String): Unit = {
+      KinesisStubRegistry.clear(stream)
       withCheckpointFileManager(manager) {
-        Seq(Seq(ev(story("F1"), 0), ev(story("F2"), 1)),
-            Seq(ev(story("F1"), 2), ev(story("F3"), 3))).foreach { events =>
-          ms.addData(events: _*)
-          val q = TagPipeline.start(spark, ms.toDF(), new InMemoryDocumentStore,
-            ckpt, trigger = Trigger.AvailableNow(), storeKey = "fm-files")
-          q.processAllAvailable(); q.stop()
-        }
+        val q1 = start(ckpt)
+        try {
+          q1.processAllAvailable() // LATEST snapshots the (empty) stream head
+          put("F1", 0); put("F2", 1)
+          q1.processAllAvailable()
+        } finally q1.stop()
+        put("F1", 2); put("F3", 3) // while down
+        val q2 = start(ckpt)
+        try q2.processAllAvailable() finally q2.stop()
         assert(checkpointFileManager(ckpt).getClass.getName ==
           manager.getOrElse(classOf[LocalCheckpointFileManager].getName))
       }
-      ckpt
     }
     def files(dir: String): Seq[java.nio.file.Path] = {
       val s = Files.walk(java.nio.file.Paths.get(dir))
@@ -405,40 +439,43 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Paths.get(dir).relativize(p).toString
         .replaceAll("[0-9]+", "N")).toSet
 
-    val default = run(Some(DefaultCheckpointFileManager))
-    val local = run(None)
-    assert(masked(local) == masked(default))
-    Seq("offsets/.N.crc", "commits/.N.crc", "state/N/N/N.delta",
-        "state/N/N/.N.delta.crc", "state/N/N/N.delta.crc").foreach { f =>
-      assert(masked(local).contains(f), s"$f missing from ${masked(local)}")
-    }
+    withTempDir("graft-fm-files-") { default =>
+      withTempDir("graft-fm-files-") { local =>
+        run(Some(DefaultCheckpointFileManager), default)
+        run(None, local)
+        assert(masked(local) == masked(default))
+        Seq("offsets/.N.crc", "commits/.N.crc", "state/N/N/N.delta",
+            "state/N/N/.N.delta.crc", "state/N/N/N.delta.crc").foreach { f =>
+          assert(masked(local).contains(f), s"$f missing from ${masked(local)}")
+        }
 
-    // every file reads back through Hadoop with its checksum verified
-    val lfs = FileSystem.getLocal(spark.sessionState.newHadoopConf())
-    lfs.setVerifyChecksum(true)
-    files(local).filterNot(p => p.getFileName.toString.startsWith(".") &&
-        p.getFileName.toString.endsWith(".crc")).foreach { p =>
-      val in = lfs.open(new HPath(p.toUri))
-      try in.readAllBytes() finally in.close()
-    }
+        // every file reads back through Hadoop with its checksum verified
+        val lfs = FileSystem.getLocal(spark.sessionState.newHadoopConf())
+        lfs.setVerifyChecksum(true)
+        files(local).filterNot(p => p.getFileName.toString.startsWith(".") &&
+            p.getFileName.toString.endsWith(".crc")).foreach { p =>
+          val in = lfs.open(new HPath(p.toUri))
+          try in.readAllBytes() finally in.close()
+        }
 
-    // a flipped byte in the latest offset-log entry stops the restart
-    val offsets = files(local).filter(p =>
-      p.getParent.getFileName.toString == "offsets" &&
-        p.getFileName.toString.forall(_.isDigit))
-      .maxBy(_.getFileName.toString.toLong)
-    val bytes = Files.readAllBytes(offsets)
-    bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 1).toByte
-    Files.write(offsets, bytes)
-    val ms = MemoryStream[Wire]
-    ms.addData(ev(story("F4"), 4))
-    val e = intercept[Throwable] {
-      val q = TagPipeline.start(spark, ms.toDF(), new InMemoryDocumentStore,
-        local, trigger = Trigger.AvailableNow(), storeKey = "fm-files")
-      try q.processAllAvailable() finally q.stop()
+        // a flipped byte in the latest offset-log entry stops the restart
+        val offsets = files(local).filter(p =>
+          p.getParent.getFileName.toString == "offsets" &&
+            p.getFileName.toString.forall(_.isDigit))
+          .maxBy(_.getFileName.toString.toLong)
+        val bytes = Files.readAllBytes(offsets)
+        bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 1).toByte
+        Files.write(offsets, bytes)
+        put("F4", 4)
+        val e = intercept[Throwable] {
+          val q = start(local)
+          try q.processAllAvailable() finally q.stop()
+        }
+        KinesisStubRegistry.clear(stream)
+        assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+          .exists(_.isInstanceOf[ChecksumException]), e)
+      }
     }
-    assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
-      .exists(_.isInstanceOf[ChecksumException]), e)
   }
 
   test("local checkpoint file manager: atomic writes refuse an existing file, cancel without a trace, and overwrite the checksum too") {
@@ -446,51 +483,55 @@ class StreamingSpec extends SparkSpec {
     import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path => HPath}
     import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager}
     val conf = new Configuration()
-    val dir = Files.createTempDirectory("graft-fm-atomic-")
-    val ref = Files.createTempDirectory("graft-fm-atomic-ref-")
-    val fm = new LocalCheckpointFileManager(new HPath(dir.toUri), conf)
-    val refFm = new FileContextBasedCheckpointFileManager(new HPath(ref.toUri), conf)
-    def write(m: CheckpointFileManager, root: java.nio.file.Path,
-        bytes: Array[Byte], overwrite: Boolean): Unit = {
-      val out = m.createAtomic(new HPath(root.resolve("0").toUri), overwrite)
-      out.write(bytes); out.close()
+    withTempDir("graft-fm-atomic-") { d =>
+      val dir = java.nio.file.Paths.get(d)
+      withTempDir("graft-fm-atomic-ref-") { r =>
+        val ref = java.nio.file.Paths.get(r)
+        val fm = new LocalCheckpointFileManager(new HPath(dir.toUri), conf)
+        val refFm = new FileContextBasedCheckpointFileManager(new HPath(ref.toUri), conf)
+        def write(m: CheckpointFileManager, root: java.nio.file.Path,
+            bytes: Array[Byte], overwrite: Boolean): Unit = {
+          val out = m.createAtomic(new HPath(root.resolve("0").toUri), overwrite)
+          out.write(bytes); out.close()
+        }
+        def listing: Set[String] = {
+          val s = Files.list(dir)
+          try s.iterator().asScala.map(_.getFileName.toString).toSet
+          finally s.close()
+        }
+        def bytesOf(name: String, root: java.nio.file.Path = dir) =
+          Files.readAllBytes(root.resolve(name)).toSeq
+
+        // 1300 bytes: two full 512-byte chunks and a partial one
+        val first = Array.tabulate[Byte](1300)(i => (i * 7).toByte)
+        write(fm, dir, first, overwrite = false)
+        write(refFm, ref, first, overwrite = false)
+        assert(listing == Set("0", ".0.crc"))
+        assert(bytesOf(".0.crc") == bytesOf(".0.crc", ref),
+          "the side file must be Hadoop's own checksum file")
+
+        intercept[FileAlreadyExistsException](
+          write(fm, dir, "late writer".getBytes(UTF_8), overwrite = false))
+        assert(bytesOf("0") == first.toSeq && bytesOf(".0.crc") == bytesOf(".0.crc", ref))
+        assert(listing == Set("0", ".0.crc"))
+
+        val cancelled = fm.createAtomic(new HPath(dir.resolve("1").toUri), false)
+        cancelled.write(first)
+        cancelled.cancel()
+        assert(listing == Set("0", ".0.crc"), "cancel left a file behind")
+
+        val second = "overwritten".getBytes(UTF_8)
+        write(fm, dir, second, overwrite = true)
+        write(refFm, ref, second, overwrite = true)
+        assert(listing == Set("0", ".0.crc"))
+        assert(bytesOf(".0.crc") == bytesOf(".0.crc", ref),
+          "an overwrite must replace the stale checksum")
+        val lfs = FileSystem.getLocal(conf)
+        lfs.setVerifyChecksum(true)
+        val in = lfs.open(new HPath(dir.resolve("0").toUri))
+        try assert(in.readAllBytes().toSeq == second.toSeq) finally in.close()
+      }
     }
-    def listing: Set[String] = {
-      val s = Files.list(dir)
-      try s.iterator().asScala.map(_.getFileName.toString).toSet
-      finally s.close()
-    }
-    def bytesOf(name: String, root: java.nio.file.Path = dir) =
-      Files.readAllBytes(root.resolve(name)).toSeq
-
-    // 1300 bytes: two full 512-byte chunks and a partial one
-    val first = Array.tabulate[Byte](1300)(i => (i * 7).toByte)
-    write(fm, dir, first, overwrite = false)
-    write(refFm, ref, first, overwrite = false)
-    assert(listing == Set("0", ".0.crc"))
-    assert(bytesOf(".0.crc") == bytesOf(".0.crc", ref),
-      "the side file must be Hadoop's own checksum file")
-
-    intercept[FileAlreadyExistsException](
-      write(fm, dir, "late writer".getBytes(UTF_8), overwrite = false))
-    assert(bytesOf("0") == first.toSeq && bytesOf(".0.crc") == bytesOf(".0.crc", ref))
-    assert(listing == Set("0", ".0.crc"))
-
-    val cancelled = fm.createAtomic(new HPath(dir.resolve("1").toUri), false)
-    cancelled.write(first)
-    cancelled.cancel()
-    assert(listing == Set("0", ".0.crc"), "cancel left a file behind")
-
-    val second = "overwritten".getBytes(UTF_8)
-    write(fm, dir, second, overwrite = true)
-    write(refFm, ref, second, overwrite = true)
-    assert(listing == Set("0", ".0.crc"))
-    assert(bytesOf(".0.crc") == bytesOf(".0.crc", ref),
-      "an overwrite must replace the stale checksum")
-    val lfs = FileSystem.getLocal(conf)
-    lfs.setVerifyChecksum(true)
-    val in = lfs.open(new HPath(dir.resolve("0").toUri))
-    try assert(in.readAllBytes().toSeq == second.toSeq) finally in.close()
   }
 
   test("ranged blob fetch: Range honored, ignored-Range degraded, 5xx absorbed, 404 loud") {
@@ -562,59 +603,60 @@ class StreamingSpec extends SparkSpec {
     val stream = "unit-reshard-stream"
     KinesisStubRegistry.clear(stream)
     val store = new InMemoryDocumentStore
-    val ckpt = Files.createTempDirectory("graft-kinesis-reshard-").toString
-    def startQuery() = TagPipeline.start(spark,
-      WireSource.kinesis(spark, stream, "us-east-1", maxFetchPerShard = 2),
-      store, ckpt, trigger = Trigger.ProcessingTime(0),
-      storeKey = "kinesis-reshard")
-    // two shards exist before start, like the reference's fixed pair
-    KinesisStubRegistry.put(stream, "shard-a", gz(story("PRE")), t(0))
-    KinesisStubRegistry.put(stream, "shard-b", gz(story("PRE2")), t(0))
-    val q1 = startQuery()
-    try {
-      q1.processAllAvailable() // LATEST snapshot: PRE/PRE2 never read
+    withTempDir("graft-kinesis-reshard-") { ckpt =>
+      def startQuery() = TagPipeline.start(spark,
+        WireSource.kinesis(spark, stream, "us-east-1", maxFetchPerShard = 2),
+        store, ckpt, trigger = Trigger.ProcessingTime(0),
+        storeKey = "kinesis-reshard")
+      // two shards exist before start, like the reference's fixed pair
+      KinesisStubRegistry.put(stream, "shard-a", gz(story("PRE")), t(0))
+      KinesisStubRegistry.put(stream, "shard-b", gz(story("PRE2")), t(0))
+      val q1 = startQuery()
+      try {
+        q1.processAllAvailable() // LATEST snapshot: PRE/PRE2 never read
+        (1 to 3).foreach(i =>
+          KinesisStubRegistry.put(stream, "shard-a", gz(story(s"A$i")), t(i)))
+        KinesisStubRegistry.put(stream, "shard-b", gz(story("B1")), t(1))
+        q1.processAllAvailable()
+        // SPLIT with an in-flight tail: A4 lands on the parent, the split
+        // closes it, then records land on the children — all must arrive
+        KinesisStubRegistry.put(stream, "shard-a", gz(story("A4")), t(4))
+        KinesisStubRegistry.splitShard(stream, "shard-a", "shard-a1", "shard-a2")
+        intercept[IllegalArgumentException] {
+          KinesisStubRegistry.put(stream, "shard-a", gz(story("DEAD")), t(5))
+        }
+        (1 to 3).foreach(i =>
+          KinesisStubRegistry.put(stream, "shard-a1", gz(story(s"C$i")), t(5 + i)))
+        KinesisStubRegistry.put(stream, "shard-a2", gz(story("D1")), t(9))
+        q1.processAllAvailable()
+        (Seq("A4", "D1") ++ (1 to 3).map(i => s"C$i")).foreach(id =>
+          assert(store.get(id).exists(_.taxonomy.get.tags.get == Seq(AutoTag)),
+            s"$id lost across the split"))
+      } finally q1.stop()
+      // MERGE while the consumer is DOWN, with unread tails on both
+      // parents — the restart must drain both from the checkpoint and
+      // find the merged child at cursor 0
+      KinesisStubRegistry.put(stream, "shard-a1", gz(story("C4")), t(10))
+      KinesisStubRegistry.put(stream, "shard-b", gz(story("B2")), t(10))
+      KinesisStubRegistry.mergeShards(stream, "shard-a1", "shard-a2", "shard-m")
       (1 to 3).foreach(i =>
-        KinesisStubRegistry.put(stream, "shard-a", gz(story(s"A$i")), t(i)))
-      KinesisStubRegistry.put(stream, "shard-b", gz(story("B1")), t(1))
-      q1.processAllAvailable()
-      // SPLIT with an in-flight tail: A4 lands on the parent, the split
-      // closes it, then records land on the children — all must arrive
-      KinesisStubRegistry.put(stream, "shard-a", gz(story("A4")), t(4))
-      KinesisStubRegistry.splitShard(stream, "shard-a", "shard-a1", "shard-a2")
-      intercept[IllegalArgumentException] {
-        KinesisStubRegistry.put(stream, "shard-a", gz(story("DEAD")), t(5))
+        KinesisStubRegistry.put(stream, "shard-m", gz(story(s"M$i")), t(10 + i)))
+      val q2 = startQuery()
+      try {
+        q2.processAllAvailable()
+        (Seq("C4", "B2") ++ (1 to 3).map(i => s"M$i")).foreach(id =>
+          assert(store.get(id).exists(_.taxonomy.get.tags.get == Seq(AutoTag)),
+            s"$id lost across the merge/restart"))
+        // exactly-once inventory: every post-start record tagged once,
+        // neither pre-start record ever read
+        assert(store.get("PRE").isEmpty && store.get("PRE2").isEmpty,
+          "LATEST must not read pre-start records")
+        assert(store.size == 14,
+          s"expected 14 tagged docs (A1-3+B1 pre-split, A4+C1-3+D1 split-era, C4+B2+M1-3 merge-era), got ${store.size}")
+      } finally {
+        q2.stop()
+        KinesisStubRegistry.clear(stream)
       }
-      (1 to 3).foreach(i =>
-        KinesisStubRegistry.put(stream, "shard-a1", gz(story(s"C$i")), t(5 + i)))
-      KinesisStubRegistry.put(stream, "shard-a2", gz(story("D1")), t(9))
-      q1.processAllAvailable()
-      (Seq("A4", "D1") ++ (1 to 3).map(i => s"C$i")).foreach(id =>
-        assert(store.get(id).exists(_.taxonomy.get.tags.get == Seq(AutoTag)),
-          s"$id lost across the split"))
-    } finally q1.stop()
-    // MERGE while the consumer is DOWN, with unread tails on both
-    // parents — the restart must drain both from the checkpoint and
-    // find the merged child at cursor 0
-    KinesisStubRegistry.put(stream, "shard-a1", gz(story("C4")), t(10))
-    KinesisStubRegistry.put(stream, "shard-b", gz(story("B2")), t(10))
-    KinesisStubRegistry.mergeShards(stream, "shard-a1", "shard-a2", "shard-m")
-    (1 to 3).foreach(i =>
-      KinesisStubRegistry.put(stream, "shard-m", gz(story(s"M$i")), t(10 + i)))
-    val q2 = startQuery()
-    try {
-      q2.processAllAvailable()
-      (Seq("C4", "B2") ++ (1 to 3).map(i => s"M$i")).foreach(id =>
-        assert(store.get(id).exists(_.taxonomy.get.tags.get == Seq(AutoTag)),
-          s"$id lost across the merge/restart"))
-      // exactly-once inventory: every post-start record tagged once,
-      // neither pre-start record ever read
-      assert(store.get("PRE").isEmpty && store.get("PRE2").isEmpty,
-        "LATEST must not read pre-start records")
-      assert(store.size == 14,
-        s"expected 14 tagged docs (A1-3+B1 pre-split, A4+C1-3+D1 split-era, C4+B2+M1-3 merge-era), got ${store.size}")
-    } finally {
-      q2.stop()
-      KinesisStubRegistry.clear(stream)
     }
   }
 
@@ -634,74 +676,64 @@ class StreamingSpec extends SparkSpec {
         updates.incrementAndGet(); super.update(id)(f)
       }
     }
-    // the crash is simulated by checkpoint surgery (below), which leaves
-    // the state store one version ahead of the commit log — exactly a
-    // real crash's on-disk state, but 4.1's per-run commit COUNTER
-    // validation (which only knows about commits it watched this run)
-    // misreads the surgery; disable it for the restart under test
-    val validationConf = "spark.sql.streaming.stateStore.commitValidation.enabled"
-    val prevValidation = spark.conf.getOption(validationConf)
-    spark.conf.set(validationConf, "false")
-    val ckpt = Files.createTempDirectory("graft-exactly-once-").toString
-    def startQuery() = TagPipeline.start(spark, ms.toDF(), store, ckpt,
-      trigger = Trigger.ProcessingTime(0), storeKey = "exactly-once",
-      exactlyOnce = true)
-    val q1 = startQuery()
-    ms.addData(ev(story("X"), 0), ev(story("Y"), 1))
-    q1.processAllAvailable()
-    q1.stop()
-    val afterFirst = updates.get()
-    assert(afterFirst >= 2, s"expected the two docs tagged, got $afterFirst updates")
-    assert(store.get(TagPipeline.commitMarkerId("exactly-once", 0L,
-        TagPipeline.runNamespace(ckpt))).nonEmpty,
-      "batch 0 commit marker missing")
-    // crash window: sink writes landed, engine commit did not
-    val commits = java.nio.file.Paths.get(ckpt, "commits")
-    val last = {
-      import scala.jdk.CollectionConverters._
-      val s = java.nio.file.Files.list(commits)
-      try s.iterator().asScala
-        .filter(!_.getFileName.toString.startsWith("."))
-        .toSeq.maxBy(_.getFileName.toString)
-      finally s.close()
+    withTempDir("graft-exactly-once-") { ckpt =>
+      def startQuery() = TagPipeline.start(spark, ms.toDF(), store, ckpt,
+        trigger = Trigger.ProcessingTime(0), storeKey = "exactly-once",
+        exactlyOnce = true)
+      val q1 = startQuery()
+      ms.addData(ev(story("X"), 0), ev(story("Y"), 1))
+      q1.processAllAvailable()
+      q1.stop()
+      val afterFirst = updates.get()
+      assert(afterFirst >= 2, s"expected the two docs tagged, got $afterFirst updates")
+      assert(store.get(TagPipeline.commitMarkerId("exactly-once", 0L,
+          TagPipeline.runNamespace(ckpt))).nonEmpty,
+        "batch 0 commit marker missing")
+      // crash window: sink writes landed, engine commit did not
+      val commits = java.nio.file.Paths.get(ckpt, "commits")
+      val last = {
+        import scala.jdk.CollectionConverters._
+        val s = java.nio.file.Files.list(commits)
+        try s.iterator().asScala
+          .filter(!_.getFileName.toString.startsWith("."))
+          .toSeq.maxBy(_.getFileName.toString)
+        finally s.close()
+      }
+      java.nio.file.Files.delete(last)
+      // local FS keeps a ChecksumFileSystem sidecar; a stale .crc would
+      // make the replay's re-commit look like a concurrent writer
+      java.nio.file.Files.deleteIfExists(
+        last.resolveSibling("." + last.getFileName.toString + ".crc"))
+      val q2 = startQuery()
+      q2.processAllAvailable() // replays the batch; the marker must gate it
+      assert(updates.get() == afterFirst,
+        s"replayed batch re-executed the sink: ${updates.get()} != $afterFirst updates")
+      assert(store.get("X").exists(_.taxonomy.get.tags.get == Seq(AutoTag)))
+      // fresh data after recovery still flows (a new batchId has no marker)
+      ms.addData(ev(story("Z"), 2))
+      q2.processAllAvailable()
+      q2.stop()
+      assert(store.get("Z").exists(_.taxonomy.get.tags.get == Seq(AutoTag)),
+        "post-recovery batch lost")
+      assert(updates.get() > afterFirst, "post-recovery batch never ran")
+      // FRESH checkpoint dir against the SAME store: batchIds reset to 0,
+      // so without the run-namespaced marker key the stale batch-0 marker
+      // above would silently swallow the new run's first batch (r11
+      // advisory). The checkpoint-path namespace keeps the ledgers apart.
+      val beforeFresh = updates.get()
+      withTempDir("graft-exactly-once2-") { ckpt2 =>
+        val ms2 = MemoryStream[Wire]
+        val q3 = TagPipeline.start(spark, ms2.toDF(), store, ckpt2,
+          trigger = Trigger.ProcessingTime(0), storeKey = "exactly-once",
+          exactlyOnce = true)
+        ms2.addData(ev(story("W"), 3))
+        q3.processAllAvailable()
+        q3.stop()
+        assert(store.get("W").exists(_.taxonomy.get.tags.get == Seq(AutoTag)),
+          "fresh-checkpoint run's batch 0 swallowed by a stale marker")
+        assert(updates.get() > beforeFresh, "fresh-checkpoint batch never ran")
+      }
     }
-    java.nio.file.Files.delete(last)
-    // local FS keeps a ChecksumFileSystem sidecar; a stale .crc would
-    // make the replay's re-commit look like a concurrent writer
-    java.nio.file.Files.deleteIfExists(
-      last.resolveSibling("." + last.getFileName.toString + ".crc"))
-    val q2 = startQuery()
-    q2.processAllAvailable() // replays the batch; the marker must gate it
-    assert(updates.get() == afterFirst,
-      s"replayed batch re-executed the sink: ${updates.get()} != $afterFirst updates")
-    assert(store.get("X").exists(_.taxonomy.get.tags.get == Seq(AutoTag)))
-    // fresh data after recovery still flows (a new batchId has no marker)
-    ms.addData(ev(story("Z"), 2))
-    q2.processAllAvailable()
-    q2.stop()
-    prevValidation match {
-      case Some(v) => spark.conf.set(validationConf, v)
-      case None    => spark.conf.unset(validationConf)
-    }
-    assert(store.get("Z").exists(_.taxonomy.get.tags.get == Seq(AutoTag)),
-      "post-recovery batch lost")
-    assert(updates.get() > afterFirst, "post-recovery batch never ran")
-    // FRESH checkpoint dir against the SAME store: batchIds reset to 0,
-    // so without the run-namespaced marker key the stale batch-0 marker
-    // above would silently swallow the new run's first batch (r11
-    // advisory). The checkpoint-path namespace keeps the ledgers apart.
-    val beforeFresh = updates.get()
-    val ckpt2 = Files.createTempDirectory("graft-exactly-once2-").toString
-    val ms2 = MemoryStream[Wire]
-    val q3 = TagPipeline.start(spark, ms2.toDF(), store, ckpt2,
-      trigger = Trigger.ProcessingTime(0), storeKey = "exactly-once",
-      exactlyOnce = true)
-    ms2.addData(ev(story("W"), 3))
-    q3.processAllAvailable()
-    q3.stop()
-    assert(store.get("W").exists(_.taxonomy.get.tags.get == Seq(AutoTag)),
-      "fresh-checkpoint run's batch 0 swallowed by a stale marker")
-    assert(updates.get() > beforeFresh, "fresh-checkpoint batch never ran")
   }
 
   test("KPL aggregation: wire-format round trip, digest loud, non-aggregated passthrough") {
@@ -735,49 +767,50 @@ class StreamingSpec extends SparkSpec {
     val stream = "unit-kpl-stream"
     KinesisStubRegistry.clear(stream)
     val store = new InMemoryDocumentStore
-    val ckpt = Files.createTempDirectory("graft-kinesis-kpl-").toString
-    def agg(ids: String*): Array[Byte] =
-      Kpl.aggregate(ids.map(id => id -> gz(story(id))))
-    def startQuery() = TagPipeline.start(spark,
-      WireSource.kinesisKpl(spark, stream, "us-east-1", maxFetchPerShard = 2),
-      store, ckpt, trigger = Trigger.ProcessingTime(0),
-      storeKey = "kinesis-kpl")
-    KinesisStubRegistry.put(stream, "shard-a", agg("PRE"), t(0))
-    val q1 = startQuery()
-    try {
-      q1.processAllAvailable() // LATEST: the pre-start aggregate is skipped
-      // aggregated + plain records interleaved on one shard
-      KinesisStubRegistry.put(stream, "shard-a", agg("A1", "A2", "A3"), t(1))
-      KinesisStubRegistry.put(stream, "shard-a", gz(story("P1")), t(2))
-      KinesisStubRegistry.put(stream, "shard-b", agg("B1", "B2"), t(1))
-      q1.processAllAvailable()
-      // split with an in-flight aggregated tail on the parent
-      KinesisStubRegistry.put(stream, "shard-a", agg("A4", "A5"), t(3))
-      KinesisStubRegistry.splitShard(stream, "shard-a", "shard-a1", "shard-a2")
-      KinesisStubRegistry.put(stream, "shard-a1", agg("C1", "C2"), t(4))
-      q1.processAllAvailable()
-      Seq("A1", "A2", "A3", "A4", "A5", "P1", "B1", "B2", "C1", "C2")
-        .foreach(id => assert(store.get(id).nonEmpty, s"$id lost pre-restart"))
-    } finally q1.stop()
-    // consumer DOWN: an aggregate lands on the child and one parent-era
-    // aggregate is re-shipped by a "producer retry" (same user records —
-    // the idempotent tag sink + id dedup must absorb it)
-    KinesisStubRegistry.put(stream, "shard-a2", agg("D1", "D2", "D3"), t(5))
-    KinesisStubRegistry.put(stream, "shard-b", agg("B1", "B2"), t(6))
-    val q2 = startQuery()
-    try {
-      q2.processAllAvailable()
-      val all = Seq("A1", "A2", "A3", "A4", "A5", "P1", "B1", "B2",
-        "C1", "C2", "D1", "D2", "D3")
-      all.foreach(id =>
-        assert(store.get(id).exists(_.taxonomy.get.tags.get == Seq(AutoTag)),
-          s"$id lost or double-tagged across restart"))
-      assert(store.get("PRE").isEmpty, "LATEST must not read the pre-start aggregate")
-      assert(store.size == all.size,
-        s"expected ${all.size} docs, got ${store.size}")
-    } finally {
-      q2.stop()
-      KinesisStubRegistry.clear(stream)
+    withTempDir("graft-kinesis-kpl-") { ckpt =>
+      def agg(ids: String*): Array[Byte] =
+        Kpl.aggregate(ids.map(id => id -> gz(story(id))))
+      def startQuery() = TagPipeline.start(spark,
+        WireSource.kinesisKpl(spark, stream, "us-east-1", maxFetchPerShard = 2),
+        store, ckpt, trigger = Trigger.ProcessingTime(0),
+        storeKey = "kinesis-kpl")
+      KinesisStubRegistry.put(stream, "shard-a", agg("PRE"), t(0))
+      val q1 = startQuery()
+      try {
+        q1.processAllAvailable() // LATEST: the pre-start aggregate is skipped
+        // aggregated + plain records interleaved on one shard
+        KinesisStubRegistry.put(stream, "shard-a", agg("A1", "A2", "A3"), t(1))
+        KinesisStubRegistry.put(stream, "shard-a", gz(story("P1")), t(2))
+        KinesisStubRegistry.put(stream, "shard-b", agg("B1", "B2"), t(1))
+        q1.processAllAvailable()
+        // split with an in-flight aggregated tail on the parent
+        KinesisStubRegistry.put(stream, "shard-a", agg("A4", "A5"), t(3))
+        KinesisStubRegistry.splitShard(stream, "shard-a", "shard-a1", "shard-a2")
+        KinesisStubRegistry.put(stream, "shard-a1", agg("C1", "C2"), t(4))
+        q1.processAllAvailable()
+        Seq("A1", "A2", "A3", "A4", "A5", "P1", "B1", "B2", "C1", "C2")
+          .foreach(id => assert(store.get(id).nonEmpty, s"$id lost pre-restart"))
+      } finally q1.stop()
+      // consumer DOWN: an aggregate lands on the child and one parent-era
+      // aggregate is re-shipped by a "producer retry" (same user records —
+      // the idempotent tag sink must absorb it)
+      KinesisStubRegistry.put(stream, "shard-a2", agg("D1", "D2", "D3"), t(5))
+      KinesisStubRegistry.put(stream, "shard-b", agg("B1", "B2"), t(6))
+      val q2 = startQuery()
+      try {
+        q2.processAllAvailable()
+        val all = Seq("A1", "A2", "A3", "A4", "A5", "P1", "B1", "B2",
+          "C1", "C2", "D1", "D2", "D3")
+        all.foreach(id =>
+          assert(store.get(id).exists(_.taxonomy.get.tags.get == Seq(AutoTag)),
+            s"$id lost or double-tagged across restart"))
+        assert(store.get("PRE").isEmpty, "LATEST must not read the pre-start aggregate")
+        assert(store.size == all.size,
+          s"expected ${all.size} docs, got ${store.size}")
+      } finally {
+        q2.stop()
+        KinesisStubRegistry.clear(stream)
+      }
     }
   }
 
@@ -787,30 +820,58 @@ class StreamingSpec extends SparkSpec {
     // the same pipeline the file/in-memory stores pass. Two injected
     // 500s land mid-batch: the retry/backoff must absorb them without
     // failing the micro-batch (the error-continue stance of app.py:71-75,
-    // minus the reference's silent record drop).
+    // minus the reference's silent record drop). A is seeded as a Draft
+    // API document with members the typed model does not declare: the
+    // write-back must PUT the whole fetched document (tag.py:64).
     implicit val sqlCtx = spark.sqlContext
     val stub = new DraftApiStub
     try {
       val store = new HttpDocumentStore(stub.baseUrl, backoffMs = 5L)
-      store.upsert(AnsDoc("A", Some(3L),
-        Some(Taxonomy(Some(Seq(Tag("x", "x")))))))
+      val client = java.net.http.HttpClient.newHttpClient()
+      def docUri = java.net.URI.create(s"${stub.baseUrl}/documents/A")
+      val headlines = """{"basic":"h-A","meta_title":"m"}"""
+      val contentElements = """[{"type":"text","content":"body \"quoted\""}]"""
+      val sections = """[{"_id":"/news"}]"""
+      val storedTag = """{"slug":"x","text":"x","score":0.5}"""
+      val seeded = s"""{"_id":"A","revision":3,"headlines":$headlines,""" +
+        s""""content_elements":$contentElements,""" +
+        s""""taxonomy":{"sections":$sections,"tags":[$storedTag]}}"""
+      assert(client.send(java.net.http.HttpRequest.newBuilder(docUri)
+        .PUT(java.net.http.HttpRequest.BodyPublishers.ofString(seeded)).build(),
+        java.net.http.HttpResponse.BodyHandlers.discarding()).statusCode() == 200)
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      def json(s: String) = mapper.readTree(s)
+      def assertUndeclaredKept(when: String): Unit = {
+        val a = json(client.send(java.net.http.HttpRequest.newBuilder(docUri).GET().build(),
+          java.net.http.HttpResponse.BodyHandlers.ofString()).body())
+        assert(a.get("headlines") == json(headlines), s"headlines lost $when: $a")
+        assert(a.get("content_elements") == json(contentElements),
+          s"content_elements lost $when: $a")
+        assert(a.path("taxonomy").get("sections") == json(sections),
+          s"taxonomy.sections lost $when: $a")
+        assert(a.path("taxonomy").path("tags").get(0) == json(storedTag),
+          s"the stored tag element was rewritten $when: $a")
+      }
       val ms = MemoryStream[Wire]
-      val ckpt = Files.createTempDirectory("graft-http-ckpt-").toString
-      val q = TagPipeline.start(spark, ms.toDF(), store, ckpt,
-        trigger = Trigger.ProcessingTime(0), storeKey = "http-test")
-      stub.failNext.set(2)
-      ms.addData(ev(story("A"), 0), ev(story("B"), 1))
-      q.processAllAvailable()
-      ms.addData(ev(story("A"), 2)) // redelivery
-      q.processAllAvailable()
-      q.stop()
-      val a = store.get("A").get
-      assert(a.taxonomy.get.tags.get == Seq(Tag("x", "x"), AutoTag),
-        "existing tags preserved, auto tag appended exactly once")
-      assert(a.revision.contains(3L), "untouched fields survive the round-trip")
-      assert(store.get("B").get.taxonomy.get.tags.get == Seq(AutoTag))
-      assert(store.size == 2)
-      assert(stub.hits.get() > 2, "the injected failures must have been retried")
+      withTempDir("graft-http-ckpt-") { ckpt =>
+        val q = TagPipeline.start(spark, ms.toDF(), store, ckpt,
+          trigger = Trigger.ProcessingTime(0), storeKey = "http-test")
+        stub.failNext.set(2)
+        ms.addData(ev(story("A"), 0), ev(story("B"), 1))
+        q.processAllAvailable()
+        assertUndeclaredKept("by tagging")
+        ms.addData(ev(story("A"), 2)) // redelivery
+        q.processAllAvailable()
+        q.stop()
+        assertUndeclaredKept("by the redelivery")
+        val a = store.get("A").get
+        assert(a.taxonomy.get.tags.get == Seq(Tag("x", "x"), AutoTag),
+          "existing tags preserved, auto tag appended exactly once")
+        assert(a.revision.contains(3L), "untouched fields survive the round-trip")
+        assert(store.get("B").get.taxonomy.get.tags.get == Seq(AutoTag))
+        assert(store.size == 2)
+        assert(stub.hits.get() > 2, "the injected failures must have been retried")
+      }
     } finally stub.stop()
   }
 
@@ -848,19 +909,20 @@ class StreamingSpec extends SparkSpec {
       assert(e2.id == "Y" && e2.status == 403)
       val store = new CountingStore(http)
       val ms = MemoryStream[Wire]
-      val ckpt = Files.createTempDirectory("graft-http-403-").toString
-      val q = TagPipeline.start(spark, ms.toDF(), store, ckpt,
-        trigger = Trigger.ProcessingTime(0), storeKey = "http-403")
-      try {
-        ms.addData(ev(story("A"), 0), ev(story("B"), 1))
-        val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
-          q.processAllAvailable())
-        val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-          .map(_.getMessage).mkString(" | ")
-        assert(chain.contains("rejected with HTTP 403"), chain)
-      } finally q.stop()
-      assert(puts.get() > 2, "the pipeline's PUTs must have reached the server")
-      assert(store.updates.get() == 0, "a refused write was reported as done")
+      withTempDir("graft-http-403-") { ckpt =>
+        val q = TagPipeline.start(spark, ms.toDF(), store, ckpt,
+          trigger = Trigger.ProcessingTime(0), storeKey = "http-403")
+        try {
+          ms.addData(ev(story("A"), 0), ev(story("B"), 1))
+          val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+            q.processAllAvailable())
+          val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .map(_.getMessage).mkString(" | ")
+          assert(chain.contains("rejected with HTTP 403"), chain)
+        } finally q.stop()
+        assert(puts.get() > 2, "the pipeline's PUTs must have reached the server")
+        assert(store.updates.get() == 0, "a refused write was reported as done")
+      }
     } finally server.stop(0)
   }
 
@@ -941,9 +1003,10 @@ class StreamingSpec extends SparkSpec {
 
   test("bounded conflicts: an always-moving file document ends in DocumentConflict") {
     // the file store re-checks under its lock file
-    val dir = Files.createTempDirectory("graft-file-conflict-").toString
-    assertConflictsAreBounded(new FileDocumentStore(dir), "Z")
-    assertNoLockHeld(dir)
+    withTempDir("graft-file-conflict-") { dir =>
+      assertConflictsAreBounded(new FileDocumentStore(dir), "Z")
+      assertNoLockHeld(dir)
+    }
   }
 
   /** Every `.lock` file under `dir` is free: a `tryLock` from this JVM
@@ -993,29 +1056,37 @@ class StreamingSpec extends SparkSpec {
     val rounds = 3
     for (raw <- Seq(false, true)) {
       val ms = MemoryStream[Wire]
-      val ckpt = Files.createTempDirectory("graft-exec-ckpt-").toString
-      val execs = new SqlExecutionLog
-      spark.sparkContext.addSparkListener(execs)
-      try {
-        val q =
-          if (raw) TagPipeline.startRaw(spark, ms.toDF(),
-            new InMemoryRawDocumentStore, ckpt,
-            trigger = Trigger.ProcessingTime(0), storeKey = "exec-count-raw")
-          else TagPipeline.start(spark, ms.toDF(), new InMemoryDocumentStore,
-            ckpt, trigger = Trigger.ProcessingTime(0), storeKey = "exec-count")
-        // processAllAvailable returns only once no batch (no-data
-        // batches included) is left to run, so stop() cuts none short
-        try (1 to rounds).foreach { i =>
-          ms.addData(ev(story(s"E$i"), i))
-          q.processAllAvailable()
-        } finally q.stop()
-        execs.drain(spark)
-        val sinkRuns = q.recentProgress.filter(_.durationMs.containsKey("addBatch"))
-        assert(sinkRuns.count(_.numInputRows > 0) == rounds)
-        assert(execs.of(q.runId) == sinkRuns.length,
-          s"raw=$raw: ${execs.of(q.runId)} SQL executions for " +
-            s"${sinkRuns.length} triggers that ran the sink")
-      } finally spark.sparkContext.removeSparkListener(execs)
+      withTempDir("graft-exec-ckpt-") { ckpt =>
+        val execs = new SqlExecutionLog
+        spark.sparkContext.addSparkListener(execs)
+        try {
+          val q =
+            if (raw) TagPipeline.startRaw(spark, ms.toDF(),
+              new InMemoryRawDocumentStore, ckpt,
+              trigger = Trigger.ProcessingTime(0), storeKey = "exec-count-raw")
+            else TagPipeline.start(spark, ms.toDF(), new InMemoryDocumentStore,
+              ckpt, trigger = Trigger.ProcessingTime(0), storeKey = "exec-count")
+          // processAllAvailable returns only once no batch (no-data
+          // batches included) is left to run, so stop() cuts none short
+          try (1 to rounds).foreach { i =>
+            ms.addData(ev(story(s"E$i"), i))
+            q.processAllAvailable()
+          } finally q.stop()
+          execs.drain(spark)
+          val sinkRuns = q.recentProgress.filter(_.durationMs.containsKey("addBatch"))
+          assert(sinkRuns.count(_.numInputRows > 0) == rounds)
+          assert(execs.of(q.runId) == sinkRuns.length,
+            s"raw=$raw: ${execs.of(q.runId)} SQL executions for " +
+              s"${sinkRuns.length} triggers that ran the sink")
+          // on a plain wire the query is one stateless stage: the last data
+          // trigger ran no state store and no shuffle
+          val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+            .lastExecution.executedPlan
+          assert(plan.collectFirst { case s: StatefulOperator => s }.isEmpty &&
+            plan.collectFirst { case e: Exchange => e }.isEmpty,
+            s"raw=$raw: a stateful operator or an exchange in\n$plan")
+        } finally spark.sparkContext.removeSparkListener(execs)
+      }
     }
   }
 
@@ -1076,94 +1147,98 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("optimistic update: concurrent tagger and editor never drop either change") {
-    val fileDir = Files.createTempDirectory("graft-cas-").toString
-    val sharedDir = Files.createTempDirectory("graft-cas-shared-").toString
-    val stub = new DraftApiStub
-    def same(s: DocumentStore) = (s, s)
-    // (tagger's store, editor's store); the last pair is two file stores
-    // over one root, which must exclude each other like one store does
-    try for ((store, editorStore) <- Seq(same(new InMemoryDocumentStore),
-        same(new FileDocumentStore(fileDir)),
-        same(new HttpDocumentStore(stub.baseUrl, backoffMs = 5L)),
-        (new FileDocumentStore(sharedDir), new FileDocumentStore(sharedDir)))) {
-      store.upsert(AnsDoc("X", Some(0L), None))
-      val tags = (1 to 40).map(i => Tag(s"t$i", s"text $i"))
-      val tagger = new Thread(() =>
-        tags.foreach(t => store.update("X")(c =>
-          DocumentStore.modifyAns(c.get, t))))
-      val editor = new Thread(() =>
-        (1 to 40).foreach(_ => editorStore.update("X")(c =>
-          c.get.copy(revision = c.get.revision.map(_ + 1)))))
-      tagger.start(); editor.start()
-      tagger.join(60000); editor.join(60000)
-      val fin = store.get("X").get
-      // under raw last-writer-wins PUT, interleaved read-modify-writes
-      // drop one side's changes; update() must keep every one of both
-      assert(fin.revision.contains(40L),
-        s"${store.getClass.getSimpleName}: edits dropped (rev ${fin.revision})")
-      assert(fin.taxonomy.get.tags.get == tags,
-        s"${store.getClass.getSimpleName}: tags dropped or reordered " +
-          s"(${fin.taxonomy.get.tags.get.size}/40 kept)")
-    } finally stub.stop()
+    withTempDir("graft-cas-") { fileDir =>
+      withTempDir("graft-cas-shared-") { sharedDir =>
+        val stub = new DraftApiStub
+        def same(s: DocumentStore) = (s, s)
+        // (tagger's store, editor's store); the last pair is two file stores
+        // over one root, which must exclude each other like one store does
+        try for ((store, editorStore) <- Seq(same(new InMemoryDocumentStore),
+            same(new FileDocumentStore(fileDir)),
+            same(new HttpDocumentStore(stub.baseUrl, backoffMs = 5L)),
+            (new FileDocumentStore(sharedDir), new FileDocumentStore(sharedDir)))) {
+          store.upsert(AnsDoc("X", Some(0L), None))
+          val tags = (1 to 40).map(i => Tag(s"t$i", s"text $i"))
+          val tagger = new Thread(() =>
+            tags.foreach(t => store.update("X")(c =>
+              DocumentStore.modifyAns(c.get, t))))
+          val editor = new Thread(() =>
+            (1 to 40).foreach(_ => editorStore.update("X")(c =>
+              c.get.copy(revision = c.get.revision.map(_ + 1)))))
+          tagger.start(); editor.start()
+          tagger.join(60000); editor.join(60000)
+          val fin = store.get("X").get
+          // under raw last-writer-wins PUT, interleaved read-modify-writes
+          // drop one side's changes; update() must keep every one of both
+          assert(fin.revision.contains(40L),
+            s"${store.getClass.getSimpleName}: edits dropped (rev ${fin.revision})")
+          assert(fin.taxonomy.get.tags.get == tags,
+            s"${store.getClass.getSimpleName}: tags dropped or reordered " +
+              s"(${fin.taxonomy.get.tags.get.size}/40 kept)")
+        } finally stub.stop()
+      }
+    }
   }
 
   test("orphaned lock file: a dead writer's stale lock is broken, not spun on forever") {
-    val dir = Files.createTempDirectory("graft-lock-").toString
-    val store = new FileDocumentStore(dir)
-    store.upsert(AnsDoc("X", Some(0L), None))
-    // a dead writer's leftover: the lock file exists, nobody holds it
-    // (the kernel dropped the lock with its process), and it carries an
-    // earlier build's owner stamp
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    val hex = md.digest("X".getBytes("UTF-8")).map("%02x".format(_)).mkString
-    Files.write(java.nio.file.Paths.get(dir, hex + ".doc.lock"),
-      java.util.UUID.randomUUID().toString.getBytes(UTF_8))
-    val t0 = System.nanoTime()
-    val out = store.update("X")(c => c.get.copy(
-      revision = c.get.revision.map(_ + 1)))
-    val secs = (System.nanoTime() - t0) / 1e9
-    assert(out.revision.contains(1L))
-    assert(secs < 8.0, s"a leftover lock file delayed the update $secs s")
-    assertNoLockHeld(dir)
+    withTempDir("graft-lock-") { dir =>
+      val store = new FileDocumentStore(dir)
+      store.upsert(AnsDoc("X", Some(0L), None))
+      // a dead writer's leftover: the lock file exists, nobody holds it
+      // (the kernel dropped the lock with its process), and it carries an
+      // earlier build's owner stamp
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      val hex = md.digest("X".getBytes("UTF-8")).map("%02x".format(_)).mkString
+      Files.write(java.nio.file.Paths.get(dir, hex + ".doc.lock"),
+        java.util.UUID.randomUUID().toString.getBytes(UTF_8))
+      val t0 = System.nanoTime()
+      val out = store.update("X")(c => c.get.copy(
+        revision = c.get.revision.map(_ + 1)))
+      val secs = (System.nanoTime() - t0) / 1e9
+      assert(out.revision.contains(1L))
+      assert(secs < 8.0, s"a leftover lock file delayed the update $secs s")
+      assertNoLockHeld(dir)
+    }
   }
 
   test("file store lock: another process's writer excludes this one, and its death frees the key") {
-    val dir = Files.createTempDirectory("graft-lockproc-").toString
-    val store = new FileDocumentStore(dir)
-    store.upsert(AnsDoc("X", Some(0L), None))
-    // the child takes X's lock, prints "held", and dies inside the
-    // critical section without writing (see FileLockHolder)
-    val child = new ProcessBuilder(
-      java.nio.file.Paths.get(sys.props("java.home"), "bin", "java").toString,
-      "-Xmx64m", "-cp", sys.props("java.class.path"),
-      FileLockHolder.getClass.getName.stripSuffix("$"), dir, "X")
-      .redirectErrorStream(true).start()
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration._
-    try {
-      val reader = new java.io.BufferedReader(
-        new java.io.InputStreamReader(child.getInputStream, UTF_8))
-      val output = Vector.newBuilder[String]
-      val held = Await.result(Future {
-        var line = reader.readLine()
-        while (line != null && line != "held") {
-          output += line; line = reader.readLine()
-        }
-        line != null
-      }, 60.seconds)
-      assert(held, "the child never took the lock: " +
-        output.result().mkString(" | "))
-      val t0 = System.nanoTime()
-      val out = Await.result(Future(store.update("X")(c => c.get.copy(
-        revision = c.get.revision.map(_ + 1)))), 8.seconds)
-      val secs = (System.nanoTime() - t0) / 1e9
-      assert(out == AnsDoc("X", Some(1L), None))
-      assert(store.get("X").contains(AnsDoc("X", Some(1L), None)),
-        "the final document must hold exactly this update's change")
-      assert(secs >= FileLockHolder.HoldMs / 2000.0,
-        s"the update committed after $secs s, inside the other process's hold")
-    } finally child.destroyForcibly()
+    withTempDir("graft-lockproc-") { dir =>
+      val store = new FileDocumentStore(dir)
+      store.upsert(AnsDoc("X", Some(0L), None))
+      // the child takes X's lock, prints "held", and dies inside the
+      // critical section without writing (see FileLockHolder)
+      val child = new ProcessBuilder(
+        java.nio.file.Paths.get(sys.props("java.home"), "bin", "java").toString,
+        "-Xmx64m", "-cp", sys.props("java.class.path"),
+        FileLockHolder.getClass.getName.stripSuffix("$"), dir, "X")
+        .redirectErrorStream(true).start()
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.duration._
+      try {
+        val reader = new java.io.BufferedReader(
+          new java.io.InputStreamReader(child.getInputStream, UTF_8))
+        val output = Vector.newBuilder[String]
+        val held = Await.result(Future {
+          var line = reader.readLine()
+          while (line != null && line != "held") {
+            output += line; line = reader.readLine()
+          }
+          line != null
+        }, 60.seconds)
+        assert(held, "the child never took the lock: " +
+          output.result().mkString(" | "))
+        val t0 = System.nanoTime()
+        val out = Await.result(Future(store.update("X")(c => c.get.copy(
+          revision = c.get.revision.map(_ + 1)))), 8.seconds)
+        val secs = (System.nanoTime() - t0) / 1e9
+        assert(out == AnsDoc("X", Some(1L), None))
+        assert(store.get("X").contains(AnsDoc("X", Some(1L), None)),
+          "the final document must hold exactly this update's change")
+        assert(secs >= FileLockHolder.HoldMs / 2000.0,
+          s"the update committed after $secs s, inside the other process's hold")
+      } finally child.destroyForcibly()
+    }
   }
 
   test("start refuses a wire frame built on another session before any query starts") {
@@ -1172,12 +1247,13 @@ class StreamingSpec extends SparkSpec {
       implicit val otherCtx = other.sqlContext
       MemoryStream[Wire]
     }
-    val ckpt = Files.createTempDirectory("graft-ckpt-other-").toString
-    val e = intercept[IllegalArgumentException](TagPipeline.start(spark,
-      ms.toDF(), new InMemoryDocumentStore, ckpt, storeKey = "other-session"))
-    assert(e.getMessage.contains("build the wire on that session"), e.getMessage)
-    assert(spark.streams.active.isEmpty && other.streams.active.isEmpty,
-      "a query started on a mismatched session")
+    withTempDir("graft-ckpt-other-") { ckpt =>
+      val e = intercept[IllegalArgumentException](TagPipeline.start(spark,
+        ms.toDF(), new InMemoryDocumentStore, ckpt, storeKey = "other-session"))
+      assert(e.getMessage.contains("build the wire on that session"), e.getMessage)
+      assert(spark.streams.active.isEmpty && other.streams.active.isEmpty,
+        "a query started on a mismatched session")
+    }
   }
 
   test("kinesis offset json round-trips shard names containing quotes and backslashes") {
@@ -1208,24 +1284,96 @@ class StreamingSpec extends SparkSpec {
     assert(decoded.filter(col("url").isNotNull).count() == 0)
   }
 
+  test("stream ≡ batch with redeliveries: AvailableNow and runBatch leave the same store, in memory and over HTTP") {
+    // one fixed wire over two shards, drained two records per shard per
+    // trigger: N1 twice in the first trigger and again in the third, O1
+    // on both shards in the second, T1 in the first and the third, plus
+    // a corrupt record, a >1 MB URL record, an unpublished and a
+    // non-insert event
+    val wire = Seq(
+      "shard-0" -> Seq(gz(story("N1")), gz(story("N1")), Array[Byte](1, 2, 3, 4),
+        gz(story("O1")), gz(story("N1")), gz("s3://ans-bucket/large/L1.json")),
+      "shard-1" -> Seq(gz(story("T1")),
+        gz("""{"id":"U1","operation":"insert-story","published":false}"""),
+        gz("""{"id":"X1","operation":"update-story","published":true}"""),
+        gz(story("O1")), gz(story("N2")), gz(story("T1"))))
+    val records = wire.flatMap { case (shard, rs) =>
+      rs.zipWithIndex.map { case (r, i) => Wire(r, shard, t(i)) } }
+    // N1 and N2 are absent, O1 carries another tag, T1 is already tagged
+    def seeded(store: DocumentStore): DocumentStore = {
+      store.upsert(AnsDoc("O1", Some(5L), Some(Taxonomy(Some(Seq(Tag("x", "x")))))))
+      store.upsert(AnsDoc("T1", Some(2L), Some(Taxonomy(Some(Seq(AutoTag))))))
+      store
+    }
+    val expected = Seq(
+      AnsDoc("N1", None, Some(Taxonomy(Some(Seq(AutoTag))))),
+      AnsDoc("N2", None, Some(Taxonomy(Some(Seq(AutoTag))))),
+      AnsDoc("O1", Some(5L), Some(Taxonomy(Some(Seq(Tag("x", "x"), AutoTag))))),
+      AnsDoc("T1", Some(2L), Some(Taxonomy(Some(Seq(AutoTag))))))
+    def streamed(store: DocumentStore, key: String): Seq[AnsDoc] = {
+      val stream = s"unit-equiv-$key"
+      KinesisStubRegistry.clear(stream)
+      records.foreach(w => KinesisStubRegistry.put(stream, w.shard, w.data, w.ts))
+      withTempDir("graft-equiv-") { ckpt =>
+        val q = TagPipeline.start(spark, spark.readStream.format("aws-kinesis")
+            .option("kinesis.streamName", stream)
+            .option("kinesis.startingPosition", "TRIM_HORIZON")
+            .option("kinesis.executor.maxFetchRecordsPerShard", 2)
+            .load()
+            .select(col("data"), col("shardId").as("shard"),
+              col("approximateArrivalTimestamp").as("ts")),
+          store, ckpt, trigger = Trigger.AvailableNow(), storeKey = s"equiv-$key")
+        try {
+          assert(q.awaitTermination(120000), "AvailableNow must end on its own")
+          assert(q.exception.isEmpty)
+          assert(q.recentProgress.count(_.numInputRows > 0) == 3)
+        } finally {
+          q.stop()
+          KinesisStubRegistry.clear(stream)
+        }
+      }
+      store.snapshot.sortBy(_._id)
+    }
+    def batched(store: DocumentStore, key: String): Seq[AnsDoc] = {
+      TagPipeline.runBatch(records.toDF(), store, storeKey = s"equiv-batch-$key")
+      store.snapshot.sortBy(_._id)
+    }
+    val mem = streamed(seeded(new InMemoryDocumentStore), "mem")
+    assert(mem == expected)
+    assert(batched(seeded(new InMemoryDocumentStore), "mem") == mem)
+    // over HTTP, two updates of one id in one trigger can race on the
+    // wire pool: the loser's conditional PUT gets 412, and its re-read
+    // finds the tag already there
+    val stubs = Seq(new DraftApiStub, new DraftApiStub)
+    try {
+      val http = streamed(
+        seeded(new HttpDocumentStore(stubs(0).baseUrl, backoffMs = 5L)), "http")
+      assert(http == expected)
+      assert(batched(
+        seeded(new HttpDocumentStore(stubs(1).baseUrl, backoffMs = 5L)), "http") == http)
+    } finally stubs.foreach(_.stop())
+  }
+
   test("streaming file-source replay: full decode pipeline throughput ≫ the reference's ~13 rec/s ceiling") {
     // the file source tails a directory; stage the single fixture file
-    val dir = Files.createTempDirectory("replay-events-")
-    Files.copy(java.nio.file.Paths.get("/root/testdata/sf0.01/events.parquet"),
-      dir.resolve("events.parquet"))
-    val wire = WireSource.eventLogReplayStream(spark, dir.toString)
-    assert(wire.isStreaming)
-    val decoded = EventDecoder.decode(wire)
-    val t0 = System.nanoTime()
-    val q = decoded.writeStream.format("memory").queryName("replay_out")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val secs = (System.nanoTime() - t0) / 1e9
-    val n = spark.table("replay_out").count()
-    assert(n == 10000) // sf0.01 events, all decoded, none dropped
-    val rate = n / secs
-    info(f"streamed $n events in $secs%.1f s = $rate%.0f rec/s (reference envelope: ~13 rec/s)")
-    assert(rate > 100, f"unexpectedly slow: $rate%.0f rec/s")
+    withTempDir("replay-events-") { tmp =>
+      val dir = java.nio.file.Paths.get(tmp)
+      Files.copy(java.nio.file.Paths.get(new java.io.File(Sf).getParent, "sf0.01", "events.parquet"),
+        dir.resolve("events.parquet"))
+      val wire = WireSource.eventLogReplayStream(spark, dir.toString)
+      assert(wire.isStreaming)
+      val decoded = EventDecoder.decode(wire)
+      val t0 = System.nanoTime()
+      val q = decoded.writeStream.format("memory").queryName("replay_out")
+        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      val secs = (System.nanoTime() - t0) / 1e9
+      val n = spark.table("replay_out").count()
+      assert(n == 10000) // sf0.01 events, all decoded, none dropped
+      val rate = n / secs
+      info(f"streamed $n events in $secs%.1f s = $rate%.0f rec/s (reference envelope: ~13 rec/s)")
+      assert(rate > 100, f"unexpectedly slow: $rate%.0f rec/s")
+    }
   }
 
   test("q236 commit protocol: adversarial two-writer races, vacuum refusals, exactly-one-winner") {

@@ -54,10 +54,6 @@ class TablesSpec extends SparkSpec {
     } finally sc.removeSparkListener(log)
   }
 
-  def rm(p: JPath): Unit = if (Files.exists(p))
-    Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-      .forEach(f => { Files.delete(f); () })
-
   test("Tables.apply starts no job and gives the inferred schema, every table at sf0.001, sf0.01 and sf0.1") {
     for (sf <- Seq("0.001", "0.01", "0.1"); t <- Tables.all) {
       val dir = s"${new java.io.File(Sf).getParent}/sf$sf"
@@ -73,8 +69,8 @@ class TablesSpec extends SparkSpec {
 
   test("a Spark-written multi-part directory: same schema as inference, summaries first, hidden files skipped, no job") {
     import org.apache.spark.sql.functions._
-    val root = Files.createTempDirectory("tables-dir-")
-    try {
+    withTempDir("tables-dir-") { tmp =>
+      val root = java.nio.file.Paths.get(tmp)
       // several part files beside _SUCCESS and .crc side files; `id` is
       // non-nullable in the file, nullable in any read of it
       val dir = root.resolve("parts").toString
@@ -122,12 +118,12 @@ class TablesSpec extends SparkSpec {
       agrees("meta_col")
       Files.copy(common, pick.resolve("_common_metadata"))
       agrees("common_col")
-    } finally rm(root)
+    }
   }
 
   test("a missing table, a file that is not parquet and an empty directory fail inside Tables.apply, naming the path") {
-    val dir = Files.createTempDirectory("tables-bad-")
-    try {
+    withTempDir("tables-bad-") { tmp =>
+      val dir = java.nio.file.Paths.get(tmp)
       val missing = intercept[AnalysisException](Tables(spark, dir.toString, "absent"))
       assert(missing.getCondition == "PATH_NOT_FOUND")
       assert(missing.getMessage.contains(s"$dir/absent.parquet"), missing.getMessage)
@@ -148,7 +144,7 @@ class TablesSpec extends SparkSpec {
         val e = intercept[Exception](spark.read.parquet(s"$dir/$name.parquet"))
         assert(e.asInstanceOf[SparkThrowable].getCondition == cond)
       }
-    } finally rm(dir)
+    }
   }
 
   test("Footer.executePruned builds its pruned and full scans without a job, with the schema inference gives") {
