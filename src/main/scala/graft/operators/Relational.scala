@@ -683,7 +683,8 @@ object Relational extends QueryGroup {
         (col("value") > 50.0).as("published")))
       Tables(spark, dir, "events")
         .withColumn("ev", graft.streaming.EventDecoder.parseEvent(payload))
-        .filter(graft.streaming.EventDecoder.firstPublishPredicate(col("ev")))
+        .filter(graft.streaming.EventDecoder.firstPublishFilter(
+          col("ev.operation"), col("ev.published"), col("ev.created")))
         .select(col("event_id"),
           col("ev.id").as("id"),
           col("ev.operation").as("operation"),

@@ -2,10 +2,10 @@ package graft.streaming
 
 /** Typed model of the ANS content-operation surface the reference touches
   * (shapes per FIXTURES.md §B; every field cites where the reference reads
-  * it). Only fields the reference reads are typed; the rest of the ANS
-  * document rides along as raw JSON (see [[TagPipeline]]), reproducing the
-  * reference's "modify only what you understand, preserve the rest"
-  * behavior (`tag.py:64`).
+  * it). Only fields the reference reads are typed; on an HTTP write-back
+  * the rest of the ANS document rides along as the stored JSON (see
+  * `AnsJson.write`), reproducing the reference's "modify only what you
+  * understand, preserve the rest" behavior (`tag.py:64`).
   */
 object AnsModel {
 

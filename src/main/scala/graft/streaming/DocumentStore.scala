@@ -51,24 +51,21 @@ class DocumentConflict(val id: String, val attempts: Int)
     extends RuntimeException(
       s"update of document '$id' lost the version race $attempts times")
 
-/** Shared internals for the two JVM-local stores (typed AnsDoc and raw
-  * JSON): ONE implementation of the optimistic read-modify-write loop
-  * and of the executor-side registry, so a fix to either semantics
-  * applies to both stores (extracted r12 after the raw store initially
-  * copy-pasted them).
+/** JVM-local store (driver + executors share the JVM under local[k], the
+  * same reachability a sink's HTTP client has on a cluster).
   *
-  * The CAS: commit succeeds only if the entry still VALUE-equals the
-  * snapshot `f` was computed from (an ABA with equal values is a no-op
-  * by definition here, since `f` depends only on the value).
+  * Its [[update]] is a compare-and-set: the commit succeeds only if the
+  * entry still VALUE-equals the snapshot `f` was computed from (an ABA
+  * with equal values is a no-op by definition here, since `f` depends
+  * only on the value).
   */
-private[streaming] class CasMap[V <: AnyRef] extends Serializable {
-  private val m = new ConcurrentHashMap[String, V]()
-  def get(id: String): Option[V] = Option(m.get(id))
-  def put(id: String, v: V): Unit = m.put(id, v)
-  def values: Seq[V] = m.values.asScala.toSeq
-  def entries: Map[String, V] = m.asScala.toMap
+class InMemoryDocumentStore extends DocumentStore {
+  private val m = new ConcurrentHashMap[String, AnsDoc]()
+  def get(id: String): Option[AnsDoc] = Option(m.get(id))
+  def upsert(doc: AnsDoc): Unit = m.put(doc._id, doc)
+  def snapshot: Seq[AnsDoc] = m.values.asScala.toSeq
   def size: Int = m.size
-  def update(id: String)(f: Option[V] => V): V =
+  override def update(id: String)(f: Option[AnsDoc] => AnsDoc): AnsDoc =
     DocumentStore.retryConflicts(id, 1L) {
       val cur = Option(m.get(id))
       val next = f(cur)
@@ -78,64 +75,6 @@ private[streaming] class CasMap[V <: AnyRef] extends Serializable {
       }
       if (committed) Some(next) else None
     }
-}
-
-/** Executor-side store registry — task closures capture a KEY and
-  * resolve it partition-locally (see [[DocumentStore.resolve]]'s
-  * scaladoc for why stores must never ride a task closure).
-  */
-private[streaming] class StoreRegistry[S](what: String) {
-  private val r = new ConcurrentHashMap[String, S]()
-  def register(key: String, store: S): Unit = r.put(key, store)
-  def resolve(key: String): S = {
-    val s = r.get(key)
-    require(s != null,
-      s"no $what registered under '$key' in this JVM — on a real " +
-        "cluster, register a connection-backed store in an executor plugin")
-    s
-  }
-}
-
-/** JVM-local store (driver + executors share the JVM under local[k], the
-  * same reachability a sink's HTTP client has on a cluster).
-  */
-class InMemoryDocumentStore extends DocumentStore {
-  private val m = new CasMap[AnsDoc]
-  def get(id: String): Option[AnsDoc] = m.get(id)
-  def upsert(doc: AnsDoc): Unit = m.put(doc._id, doc)
-  def snapshot: Seq[AnsDoc] = m.values
-  def size: Int = m.size
-  override def update(id: String)(f: Option[AnsDoc] => AnsDoc): AnsDoc =
-    m.update(id)(f)
-}
-
-/** Raw-JSON document store — the open-schema production shape: the
-  * store holds the WHOLE ANS document as TEXT (fields the pipeline has
-  * never heard of included), and the tagger edits it via [[RawAns]]'s
-  * byte-preserving splice instead of a typed round trip (`tag.py:64`'s
-  * "modify only what you understand, preserve the rest"; the
-  * [[InMemoryDocumentStore]]'s typed AnsDoc model would silently drop
-  * every undeclared field on write-back). Same CAS `update` contract.
-  */
-class InMemoryRawDocumentStore extends Serializable {
-  private val m = new CasMap[String]
-  def get(id: String): Option[String] = m.get(id)
-  def upsert(id: String, doc: String): Unit = m.put(id, doc)
-  def snapshot: Map[String, String] = m.entries
-  def size: Int = m.size
-
-  /** Optimistic read-modify-write, value-equality CAS (shared
-    * [[CasMap]] semantics with the typed store).
-    */
-  def update(id: String)(f: Option[String] => String): String = m.update(id)(f)
-}
-
-object InMemoryRawDocumentStore {
-  private val registry = new StoreRegistry[InMemoryRawDocumentStore](
-    "raw document store")
-  def register(key: String, store: InMemoryRawDocumentStore): Unit =
-    registry.register(key, store)
-  def resolve(key: String): InMemoryRawDocumentStore = registry.resolve(key)
 }
 
 /** Durable file-backed store: one file per document under `root`,
@@ -270,12 +209,18 @@ object DocumentStore {
     * connection pools. Local mode shares one JVM, so tests observe the
     * same instance the driver registered.
     */
-  private val registry = new StoreRegistry[DocumentStore]("DocumentStore")
+  private val registry = new ConcurrentHashMap[String, DocumentStore]()
 
   def register(key: String, store: DocumentStore): Unit =
-    registry.register(key, store)
+    registry.put(key, store)
 
-  def resolve(key: String): DocumentStore = registry.resolve(key)
+  def resolve(key: String): DocumentStore = {
+    val s = registry.get(key)
+    require(s != null,
+      s"no DocumentStore registered under '$key' in this JVM — on a real " +
+        "cluster, register a connection-backed store in an executor plugin")
+    s
+  }
 
   /** Reads an optimistic update makes before it gives up with
     * [[DocumentConflict]]: without a bound, a document other writers

@@ -67,15 +67,11 @@ object EventDecoder {
   }
 
   /** The documented stream predicate (`README.md:227-233`) — single
-    * source of truth; both the struct form and the flattened form below
-    * delegate here.
+    * source of truth: [[decodeAndFilter]] and [[firstPublishFilter]] both
+    * apply it.
     */
   def documentedFilter(operation: Column, published: Column): Column =
     operation === "insert-story" && published === true
-
-  /** [[documentedFilter]] over the parsed event struct. */
-  def filterPredicate(ev: Column): Column =
-    documentedFilter(ev.getField("operation"), ev.getField("published"))
 
   /** The first-publish variant the reference documents but leaves
     * commented out (`app.py:51-54`: checking `created == True` "can be
@@ -86,11 +82,6 @@ object EventDecoder {
   def firstPublishFilter(operation: Column, published: Column,
       created: Column): Column =
     documentedFilter(operation, published) && created === true
-
-  /** [[firstPublishFilter]] over the parsed event struct. */
-  def firstPublishPredicate(ev: Column): Column =
-    firstPublishFilter(ev.getField("operation"), ev.getField("published"),
-      ev.getField("created"))
 
   /** The 9-field projection (`app.py:57-67`); `shard` rides in from the
     * source (shard id ≙ `spark_partition_id` for non-Kinesis sources).

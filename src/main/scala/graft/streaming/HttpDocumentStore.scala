@@ -86,11 +86,11 @@ private[streaming] object AnsJson {
   *    HTTP conditionals. An update that changes nothing (`f(cur) ==
   *    cur`, e.g. a tag the document already carries) sends no PUT;
   *  - a write is done only on a 2xx answer. Any other status below 500
-  *    (except a conditional write's 412) throws [[DocumentWriteRejected]]
-  *    naming the id and status, and a 5xx that outlasts [[HttpRetry]]'s
-  *    bound throws IOException: either way the micro-batch fails and no
-  *    id is reported as tagged (the reference discards the PUT response,
-  *    `tag.py:28`).
+  *    (except a conditional write's 412, or a GET's 404) throws
+  *    [[DocumentWriteRejected]] naming the id, method and status, and a
+  *    5xx that outlasts [[HttpRetry]]'s bound throws IOException: either
+  *    way the micro-batch fails and no id is reported as tagged (the
+  *    reference discards the PUT response, `tag.py:28`).
   *
   * Paths: `GET/PUT {base}/documents/{id}`, `GET {base}/documents`.
   */
@@ -117,12 +117,18 @@ class HttpDocumentStore(
     HttpRetry.send(client, req, HttpResponse.BodyHandlers.ofString(),
       maxAttempts, backoffMs)
 
-  /** The stored document's body and ETag; None for a 404. */
+  /** The stored document's body and ETag; None for a 404. Any other
+    * status that is not 2xx throws [[DocumentWriteRejected]]: its body
+    * is an error, not a document.
+    */
   private def getWithTag(id: String): Option[(String, Option[String])] = {
     val r = send(HttpRequest.newBuilder(docUri(id))
       .timeout(Duration.ofMillis(timeoutMs)).GET().build())
-    if (r.statusCode() == 404) None
-    else Some((r.body(), Option(r.headers().firstValue("ETag").orElse(null))))
+    val code = r.statusCode()
+    if (code == 404) None
+    else if (code / 100 == 2)
+      Some((r.body(), Option(r.headers().firstValue("ETag").orElse(null))))
+    else throw new DocumentWriteRejected(id, code, "GET")
   }
 
   override def get(id: String): Option[AnsDoc] =
@@ -137,7 +143,7 @@ class HttpDocumentStore(
       .header("Content-Type", "application/json")
       .PUT(HttpRequest.BodyPublishers.ofString(AnsJson.write(doc))).build())
     if (r.statusCode() / 100 != 2)
-      throw new DocumentWriteRejected(doc._id, r.statusCode())
+      throw new DocumentWriteRejected(doc._id, r.statusCode(), "PUT")
   }
 
   /** Conditional read-modify-write: `If-Match` on the GET's ETag (or
@@ -147,10 +153,10 @@ class HttpDocumentStore(
     * [[DocumentWriteRejected]]. When `f` returns the document it read,
     * the update returns after the GET alone: there is nothing to write.
     * The PUT carries the GET's document with `f`'s typed fields written
-    * over it ([[AnsJson.write]]).
-    * The server enforces the version check atomically, so no
-    * client-side lock file exists to break or leak — the production
-    * answer to [[FileDocumentStore]]'s documented residual lock window.
+    * over it ([[AnsJson.write]]). A GET answered with neither 2xx nor 404
+    * throws [[DocumentWriteRejected]] before `f` runs.
+    * The server enforces the version check atomically, so the client
+    * holds no lock.
     */
   override def update(id: String)(f: Option[AnsDoc] => AnsDoc): AnsDoc =
     DocumentStore.retryConflicts(id, backoffMs) {
@@ -171,13 +177,16 @@ class HttpDocumentStore(
         val code = r.statusCode()
         if (code / 100 == 2) Some(next)
         else if (code == 412) None // lost the race — re-read, recompute
-        else throw new DocumentWriteRejected(id, code)
+        else throw new DocumentWriteRejected(id, code, "PUT")
       }
     }
 
   override def snapshot: Seq[AnsDoc] = {
     val r = send(HttpRequest.newBuilder(URI.create(s"$baseUrl/documents"))
       .timeout(Duration.ofMillis(timeoutMs)).GET().build())
+    if (r.statusCode() / 100 != 2)
+      throw new java.io.IOException(
+        s"GET $baseUrl/documents answered HTTP ${r.statusCode()}")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     import scala.jdk.CollectionConverters._
     mapper.readValue(r.body(), classOf[java.util.List[Object]]).asScala.toSeq
@@ -187,11 +196,13 @@ class HttpDocumentStore(
   def size: Int = snapshot.size
 }
 
-/** The Draft API answered a PUT with a status that is neither 2xx nor
-  * (for a conditional write) 412: the write did not happen.
+/** The Draft API answered a request for document `id` with a status the
+  * store cannot act on: a PUT's that is neither 2xx nor (for a
+  * conditional write) 412, or a GET's that is neither 2xx nor 404. The
+  * write did not happen.
   */
-class DocumentWriteRejected(val id: String, val status: Int)
-    extends RuntimeException(s"PUT of document '$id' rejected with HTTP $status")
+class DocumentWriteRejected(val id: String, val status: Int, val method: String)
+    extends RuntimeException(s"$method of document '$id' rejected with HTTP $status")
 
 /** In-process Draft-API stub (JDK `com.sun.net.httpserver`, no deps):
   * versioned documents with atomic `If-Match`/`If-None-Match` PUT

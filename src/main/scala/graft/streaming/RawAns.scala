@@ -9,11 +9,13 @@ import graft.streaming.AnsModel.Tag
   * `taxonomy.tags` touched; SURVEY §1.3's raw-JSON passthrough). ANS
   * schemas evolve; a consumer that round-trips documents through a
   * typed model silently drops every field the model has never heard
-  * of. The production write path therefore edits the raw TEXT: this
-  * splicer parses just enough JSON to locate the `taxonomy.tags`
-  * subtree and inserts the tag as ONE contiguous splice, leaving every
-  * other byte of the document untouched (pinned byte-level in
-  * ReferenceSemanticsSpec, StreamingSpec, and the q189 oracle).
+  * of. This splicer edits the raw TEXT instead: it parses just enough
+  * JSON to locate the `taxonomy.tags` subtree and inserts the tag as ONE
+  * contiguous splice, leaving every other byte of the document untouched
+  * (pinned byte-level in ReferenceSemanticsSpec, PropertySpec, and the
+  * q189 oracle). q189's `JsonTagAppend` and `JsonSchemaProfile` run it;
+  * the tag sink's HTTP write-back keeps undeclared members through
+  * `AnsJson.write` instead, member for member rather than byte for byte.
   *
   * Splice contract (deterministic — the q189 oracle recomputes it):
   *  - tag already present (any `taxonomy.tags` element whose `slug`
@@ -192,12 +194,6 @@ object RawAns {
   /** The tag's canonical JSON form (`tag.py:60-61`'s two-field shape). */
   def tagJson(tag: Tag): String =
     s"""{"slug":${quote(tag.slug)},"text":${quote(tag.text)}}"""
-
-  /** The minimal fresh document an unknown id initializes to (the
-    * raw-path analogue of `AnsDoc(id, None, None)` — `app.py:71-75`'s
-    * never-fail-the-batch contract).
-    */
-  def minimalDoc(id: String): String = s"""{"_id":${quote(id)}}"""
 
   private def isNull(s: String, m: Member): Boolean =
     s.substring(m.vStart, m.vEnd) == "null"

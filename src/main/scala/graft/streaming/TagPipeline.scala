@@ -18,8 +18,8 @@ import graft.streaming.AnsModel._
   *    the write is idempotent (`tag.py:39-40`, see below);
   *  - shard count is the source's partition count, not hard-coded 2
   *    (`app.py:92-93`);
-  *  - a failed enrichment never fails the batch (`app.py:71-75`): rows
-  *    missing from the store pass through untagged (left join semantics);
+  *  - a failed enrichment never fails the batch (`app.py:71-75`): an id
+  *    missing from the store gets a fresh document that carries the tag;
   *  - a write the store refuses is never dropped, where the reference's
   *    fire-and-forget PUT (`tag.py:28`) discards the answer. A rejected
   *    id — [[DocumentWriteRejected]] (a non-2xx answer),
@@ -36,9 +36,14 @@ import graft.streaming.AnsModel._
   * store. A redelivered event reaches the store again, where the
   * set-insert tag append under an optimistic update makes it a GET-only
   * no-op; but if an editor removed the tag in between, the redelivery
-  * adds it back, as the reference's loop does. The one stateful stage a
-  * query can hold is the KPL wire's `(shard, seq, sub_seq)` dedup
-  * ([[WireSource.kinesisKpl]]), the KCL's subsequence contract.
+  * adds it back, as the reference's loop does. A batch the engine replays
+  * after a crash between the sink's writes and its commit is the same
+  * case: the sink keeps no ledger of committed batches, so the replay
+  * re-runs every update of the batch, and each finds its tag (Structured
+  * Streaming's exactly-once recipe: a replayable source plus an
+  * idempotent sink). The one stateful stage a query can hold is the KPL
+  * wire's `(shard, seq, sub_seq)` dedup ([[WireSource.kinesisKpl]]), the
+  * KCL's subsequence contract.
   *
   * The Kinesis connector is a config swap on the source DataFrame; nothing
   * below the source is connector-specific. Trigger cadence and batch cap
@@ -48,13 +53,12 @@ import graft.streaming.AnsModel._
   * The checkpoint is written through [[LocalCheckpointFileManager]]: on
   * a machine without `libhadoop`, Spark's default manager forks a
   * `chmod` for every checkpoint file it creates (38-66 ms per atomic
-  * write, about ten per trigger). [[startTagSink]] says what a
-  * checkpoint pins.
+  * write; a data trigger on a plain wire writes an offset-log and a
+  * commit-log entry). [[start]] says what a checkpoint pins.
   *
   * The sink is [[TagSinkProvider]]'s `Sink`: the engine calls
   * `addBatch(batchId, batch)` inside the trigger's one SQL execution, and
-  * `addBatch` runs [[enrichAndUpsert]] (or [[enrichAndUpsertRaw]]) on
-  * that batch: marker check, the updates, then the marker. The updates
+  * `addBatch` runs [[enrichAndUpsert]] on that batch. The updates
   * read the ids off `batch.queryExecution.toRdd`, the RDD the engine
   * already planned, so a data trigger runs one SQL execution and one job.
   * On `tag_live_mem` (4-core VM) the median time from the start of
@@ -80,76 +84,36 @@ object TagPipeline {
 
   /** Enrich + tag one micro-batch against the store, write back.
     *
-    * This is the tag sink's `addBatch` body: the reference's EP3 shape
-    * (`tag.py:49-66` — GET by id, modify, PUT), executed PARTITION-LOCALLY
-    * on the executors with no driver collect; each partition keeps all
-    * its ids' updates in flight at once ([[updateEach]]), so upsert
-    * parallelism is the wire pool's size, not the partition count. Task
-    * closures capture only the store's registry key
-    * (see [[DocumentStore.resolve]]); each partition resolves its
+    * This is the tag sink's `addBatch` body and [[runBatch]]'s: the
+    * reference's EP3 shape (`tag.py:49-66` — GET by id, modify, PUT),
+    * executed PARTITION-LOCALLY on the executors with no driver collect.
+    * Task closures capture only the store's registry key (see
+    * [[DocumentStore.resolve]]); each partition resolves its
     * executor-local handle, the way a production sink resolves a pooled
-    * HTTP/DB connection. A failed lookup never fails the batch
+    * HTTP/DB connection. Every id goes through the optimistic
+    * [[DocumentStore.update]], so a concurrent editor's change and this
+    * tag append both survive. A failed lookup never fails the batch
     * (`app.py:71-75`): unknown ids create fresh docs.
-    */
-  def enrichAndUpsert(storeKey: String, tag: Tag,
-      exactlyOnce: Boolean = false, runNs: String = "")(
-      batch: DataFrame, batchId: Long): Unit = {
-    // EXACTLY-ONCE tier (r11, closing the delivery-semantics gap vs the
-    // reference's fire-and-forget PUT, tag.py:28): the sink is
-    // at-least-once — after a crash between the sink writes and the
-    // engine's checkpoint commit, the whole batch REPLAYS with the same
-    // batchId. The standard recipe is a batchId-keyed idempotent commit
-    // marker IN THE SINK STORE (same failure domain as the writes): a
-    // replayed batch whose marker exists is skipped wholesale, so even
-    // NON-idempotent effects run once per batchId. Marker is written
-    // strictly AFTER the data writes — a crash inside the batch leaves
-    // no marker and the replay re-runs it (which is why the per-row
-    // update stays idempotent too: markers make replays cheap and give
-    // once-per-batch semantics; idempotence covers the partial-batch
-    // crash window).
-    if (exactlyOnce &&
-        DocumentStore.resolve(storeKey)
-          .get(commitMarkerId(storeKey, batchId, runNs)).nonEmpty)
-      return
-    updateEach(batch) { () =>
-      val store = DocumentStore.resolve(storeKey)
-      // optimistic read-modify-write (not raw PUT): a concurrent
-      // editor's change and this tag append both survive; see
-      // DocumentStore.update
-      id => store.update(id)(cur =>
-        DocumentStore.modifyAns(cur.getOrElse(AnsDoc(id, None, None)), tag))
-    }
-    if (exactlyOnce)
-      DocumentStore.resolve(storeKey)
-        .upsert(AnsDoc(commitMarkerId(storeKey, batchId, runNs),
-          Some(batchId), None))
-  }
-
-  /** The sink loop of both sinks: `update(id)` for every non-null id of
-    * `batch`; `forPartition` runs once per partition on the executor and
-    * resolves the store handle. The ids are read as `InternalRow`s off
-    * `batch.queryExecution.toRdd`: a job on the batch's own plan, with no
-    * second query to analyze, plan and code-generate.
     *
-    * Each id's update goes to [[HttpRetry.wirePool]] as the partition's
-    * iterator yields it, so a partition keeps all its updates in flight
-    * (bounded by the pool's size) instead of paying its round trips one
-    * after another. Ids are not made unique first (a `distinct()` would
-    * add a shuffle that holds every update back): two updates of one id
-    * in a batch are serialized by the store's optimistic update, bounded
-    * by [[DocumentStore.retryConflicts]], and the second finds the tag.
+    * The ids are read as `InternalRow`s off `batch.queryExecution.toRdd`:
+    * a job on the batch's own plan, with no second query to analyze, plan
+    * and code-generate. Each id's update goes to [[HttpRetry.wirePool]] as
+    * the partition's iterator yields it, so a partition keeps all its
+    * updates in flight (bounded by the pool's size) instead of paying its
+    * round trips one after another. Ids are not made unique first (a
+    * `distinct()` would add a shuffle that holds every update back): two
+    * updates of one id in a batch are serialized by the store's
+    * optimistic update, bounded by [[DocumentStore.retryConflicts]], and
+    * the second finds the tag.
     *
     * The partition returns only after every update has finished, then
-    * rethrows the first failure unwrapped (the store's own exception,
-    * not a `CompletionException`): a failed batch leaves no update
-    * running, and the exactly-once marker, written after this returns,
-    * is never written for it.
+    * rethrows the first failure unwrapped (the store's own exception, not
+    * a `CompletionException`): a failed batch leaves no update running.
     */
-  private def updateEach(batch: DataFrame)(
-      forPartition: () => String => Any): Unit = {
+  def enrichAndUpsert(storeKey: String, tag: Tag)(batch: DataFrame): Unit = {
     val idIdx = batch.schema.fieldIndex("id")
     batch.queryExecution.toRdd.foreachPartition { rows: Iterator[InternalRow] =>
-      val update = forPartition()
+      val store = DocumentStore.resolve(storeKey)
       val inFlight = Vector.newBuilder[CompletableFuture[Void]]
       val readFailure =
         try {
@@ -157,8 +121,9 @@ object TagPipeline {
             if (!row.isNullAt(idIdx)) {
               // copied out here: the row's buffer is reused for the next one
               val id = row.getUTF8String(idIdx).toString
-              inFlight += CompletableFuture.runAsync(
-                () => update(id), HttpRetry.wirePool)
+              inFlight += CompletableFuture.runAsync(() => store.update(id)(cur =>
+                DocumentStore.modifyAns(cur.getOrElse(AnsDoc(id, None, None)), tag)),
+                HttpRetry.wirePool)
             }
           }
           None
@@ -171,35 +136,12 @@ object TagPipeline {
     }
   }
 
-  /** Reserved-id commit marker for the exactly-once ledger — lives in
-    * the sink store itself so marker and data share a failure domain.
-    * The key is (storeKey, runNs, batchId): batchIds are per-CHECKPOINT
-    * counters that reset to 0 when a query restarts against a fresh or
-    * cleared checkpoint dir, so without the run namespace stale markers
-    * from a prior run against the same store would silently swallow the
-    * new run's batches (r11 advisory). [[start]] derives runNs from the
-    * checkpoint path — same checkpoint ⇒ same namespace (replays
-    * dedup), new checkpoint ⇒ fresh namespace (nothing swallowed).
-    * One storeKey still belongs to one streaming query at a time — two
-    * CONCURRENT queries sharing a storeKey+checkpoint would collide.
-    */
-  private[graft] def commitMarkerId(storeKey: String, batchId: Long,
-      runNs: String = ""): String =
-    s"__batch_commit:$storeKey:$runNs:$batchId"
+  private[graft] val CheckpointFileManagerKey =
+    "spark.sql.streaming.checkpointFileManagerClass"
 
-  /** Run namespace for the exactly-once marker ledger: a stable digest
-    * of the checkpoint location (the object whose lifetime defines the
-    * batchId counter's lifetime).
-    */
-  private[graft] def runNamespace(checkpointDir: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes("UTF-8"))
-      .take(6).map(b => f"$b%02x").mkString
-
-  /** The shared half of [[start]]/[[startRaw]]: starts the decoded and
-    * filtered stream into the tag sink configured by `sinkOptions`
-    * ([[TagSinkProvider.options]]), checkpointed at `checkpointDir`
-    * through [[LocalCheckpointFileManager]].
+  /** Full streaming job: wire frame in, upserts out. Starts the decoded
+    * and filtered stream into the tag sink ([[TagSinkProvider]]),
+    * checkpointed at `checkpointDir` through [[LocalCheckpointFileManager]].
     *
     * The query runs on `wire`'s session, so `wire` must be built on
     * `spark`: a wire from another session is refused before any query
@@ -210,30 +152,6 @@ object TagPipeline {
     * state partition count of its subsequence dedup. The file manager is
     * not pinned: a checkpoint written under Spark's default manager
     * restarts under this one and back again.
-    */
-  private def startTagSink(spark: SparkSession, wire: DataFrame,
-      checkpointDir: String, trigger: Trigger,
-      sinkOptions: Map[String, String]): StreamingQuery = {
-    require(wire.sparkSession eq spark,
-      s"the wire frame belongs to session ${wire.sparkSession}, not to " +
-        s"the session $spark passed in: build the wire on that session")
-    val conf = spark.conf
-    if (conf.getOption(CheckpointFileManagerKey).isEmpty)
-      conf.set(CheckpointFileManagerKey,
-        classOf[LocalCheckpointFileManager].getName)
-    EventDecoder.decodeAndFilter(wire).writeStream
-      .format(classOf[TagSinkProvider].getName)
-      .options(sinkOptions)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-  }
-
-  private[graft] val CheckpointFileManagerKey =
-    "spark.sql.streaming.checkpointFileManagerClass"
-
-  /** Full streaming job: wire frame in, upserts out.
     *
     * @param wire streaming DataFrame with (data binary, shard string,
     *             ts timestamp) — MemoryStream in tests, Kinesis in prod.
@@ -241,59 +159,22 @@ object TagPipeline {
   def start(spark: SparkSession, wire: DataFrame, store: DocumentStore,
       checkpointDir: String, tag: Tag = AutoTag,
       trigger: Trigger = PollInterval,
-      storeKey: String = "default",
-      exactlyOnce: Boolean = false): StreamingQuery = {
+      storeKey: String = "default"): StreamingQuery = {
+    require(wire.sparkSession eq spark,
+      s"the wire frame belongs to session ${wire.sparkSession}, not to " +
+        s"the session $spark passed in: build the wire on that session")
     DocumentStore.register(storeKey, store)
-    startTagSink(spark, wire, checkpointDir, trigger,
-      TagSinkProvider.options(storeKey, raw = false, tag, exactlyOnce,
-        runNamespace(checkpointDir)))
-  }
-
-  /** Raw-JSON sink body: the OPEN-SCHEMA write-back (`tag.py:64`
-    * / q189's splice) against a store of WHOLE documents — every byte a
-    * previous writer stored survives, including fields this pipeline
-    * does not declare. Unknown ids initialize to the minimal `{_id}`
-    * doc, then the splice creates `taxonomy.tags` (`app.py:71-75`'s
-    * never-fail-the-batch contract). Same partition-local registry
-    * resolution as [[enrichAndUpsert]].
-    */
-  def enrichAndUpsertRaw(storeKey: String, tag: Tag,
-      exactlyOnce: Boolean = false, runNs: String = "")(
-      batch: DataFrame, batchId: Long): Unit = {
-    // same exactly-once ledger as the typed sink ([[enrichAndUpsert]]):
-    // a batchId-keyed commit marker in the SAME store, namespaced by the
-    // checkpoint-derived run id, written strictly after the data writes
-    if (exactlyOnce &&
-        InMemoryRawDocumentStore.resolve(storeKey)
-          .get(commitMarkerId(storeKey, batchId, runNs)).nonEmpty)
-      return
-    updateEach(batch) { () =>
-      val store = InMemoryRawDocumentStore.resolve(storeKey)
-      id => store.update(id)(cur => RawAns.appendTagIfAbsent(
-        cur.getOrElse(RawAns.minimalDoc(id)), tag))
-    }
-    if (exactlyOnce)
-      InMemoryRawDocumentStore.resolve(storeKey)
-        .upsert(commitMarkerId(storeKey, batchId, runNs),
-          RawAns.minimalDoc(commitMarkerId(storeKey, batchId, runNs)))
-  }
-
-  /** [[start]]'s open-schema twin: same source and decode stages, but
-    * the sink edits RAW documents via the byte-preserving splice — the
-    * write path a production consumer runs when stored documents carry
-    * fields the pipeline does not declare (ANS schemas evolve; the
-    * typed sink would drop them). Byte-level preservation under
-    * streaming redelivery is pinned in StreamingSpec.
-    */
-  def startRaw(spark: SparkSession, wire: DataFrame,
-      store: InMemoryRawDocumentStore, checkpointDir: String,
-      tag: Tag = AutoTag, trigger: Trigger = PollInterval,
-      storeKey: String = "default-raw",
-      exactlyOnce: Boolean = false): StreamingQuery = {
-    InMemoryRawDocumentStore.register(storeKey, store)
-    startTagSink(spark, wire, checkpointDir, trigger,
-      TagSinkProvider.options(storeKey, raw = true, tag, exactlyOnce,
-        runNamespace(checkpointDir)))
+    val conf = spark.conf
+    if (conf.getOption(CheckpointFileManagerKey).isEmpty)
+      conf.set(CheckpointFileManagerKey,
+        classOf[LocalCheckpointFileManager].getName)
+    EventDecoder.decodeAndFilter(wire).writeStream
+      .format(classOf[TagSinkProvider].getName)
+      .options(TagSinkProvider.options(storeKey, tag))
+      .outputMode("append")
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .start()
   }
 
   /** Batch twin of [[start]] for a bounded event log: the same
@@ -303,6 +184,6 @@ object TagPipeline {
   def runBatch(wire: DataFrame, store: DocumentStore, tag: Tag = AutoTag,
       storeKey: String = "default-batch"): Unit = {
     DocumentStore.register(storeKey, store)
-    enrichAndUpsert(storeKey, tag)(EventDecoder.decodeAndFilter(wire), 0L)
+    enrichAndUpsert(storeKey, tag)(EventDecoder.decodeAndFilter(wire))
   }
 }

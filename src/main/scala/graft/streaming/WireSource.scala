@@ -24,6 +24,17 @@ object WireSource {
     */
   def kinesis(spark: SparkSession, streamName: String, region: String,
       maxFetchPerShard: Int = 20): DataFrame =
+    kinesisRecords(spark, streamName, region, maxFetchPerShard)
+      .select(col("data"),
+        col("shardId").as("shard"),
+        col("approximateArrivalTimestamp").as("ts"))
+
+  /** The `aws-kinesis` source with the reference's five connector
+    * options; connector schema: data, streamName, partitionKey, shardId,
+    * sequenceNumber, approximateArrivalTimestamp.
+    */
+  private def kinesisRecords(spark: SparkSession, streamName: String,
+      region: String, maxFetchPerShard: Int): DataFrame =
     spark.readStream
       .format("aws-kinesis")
       .option("kinesis.streamName", streamName)
@@ -34,11 +45,6 @@ object WireSource {
       // ≙ get_records(Limit=20) (`app.py:22`)
       .option("kinesis.executor.maxFetchRecordsPerShard", maxFetchPerShard)
       .load()
-      // connector schema: data, streamName, partitionKey, shardId,
-      // sequenceNumber, approximateArrivalTimestamp
-      .select(col("data"),
-        col("shardId").as("shard"),
-        col("approximateArrivalTimestamp").as("ts"))
 
   /** [[kinesis]] with KCL-equivalent KPL DEAGGREGATION (r11): a real
     * high-throughput stream ships KPL-aggregated records (many user
@@ -63,14 +69,7 @@ object WireSource {
   def kinesisKpl(spark: SparkSession, streamName: String, region: String,
       maxFetchPerShard: Int = 20): DataFrame = {
     import spark.implicits._
-    val raw = spark.readStream
-      .format("aws-kinesis")
-      .option("kinesis.streamName", streamName)
-      .option("kinesis.region", region)
-      .option("kinesis.consumerType", "GetRecords")
-      .option("kinesis.startingPosition", "LATEST")
-      .option("kinesis.executor.maxFetchRecordsPerShard", maxFetchPerShard)
-      .load()
+    val raw = kinesisRecords(spark, streamName, region, maxFetchPerShard)
       .select(col("data"), col("partitionKey"), col("shardId"),
         col("sequenceNumber"), col("approximateArrivalTimestamp"))
       .as[(Array[Byte], String, String, String, java.sql.Timestamp)]
@@ -130,16 +129,4 @@ object WireSource {
         spark_partition_id().cast("string").as("shard"),
         col("ts"))
   }
-
-  /** Synthetic rate source shaped like the wire (throughput testing). */
-  def rate(spark: SparkSession, rowsPerSecond: Int): DataFrame =
-    spark.readStream.format("rate")
-      .option("rowsPerSecond", rowsPerSecond).load()
-      .select(
-        graft.functions.Codec.gzip(
-          to_json(struct(col("value").cast("string").as("id"),
-            lit("insert-story").as("operation"), lit(true).as("published"))))
-          .as("data"),
-        (col("value") % 2).cast("string").as("shard"),
-        col("timestamp").as("ts"))
 }

@@ -85,37 +85,6 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("open-schema tag pipeline: raw store docs keep unknown fields BYTE-identical across streaming tag write-back") {
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[Wire]
-    val store = new graft.streaming.InMemoryRawDocumentStore
-    // the stored doc carries fields this pipeline has never heard of —
-    // including decoy structure inside string values
-    val seeded = """{"_id":"A","unknown":{"deep":[1,{"s":"tax\"onomy ]}"}],"u":"π café"},""" +
-      """"taxonomy":{"rev":9,"tags":[{"slug":"x","text":"x"}]},"later":null}"""
-    store.upsert("A", seeded)
-    withTempDir("graft-raw-ckpt-") { ckpt =>
-      val q = TagPipeline.startRaw(spark, ms.toDF(), store, ckpt,
-        trigger = Trigger.ProcessingTime(0), storeKey = "raw-test")
-      ms.addData(ev(story("A"), 0), ev(story("B"), 1))
-      q.processAllAvailable()
-      // redelivery: splice idempotence ⇒ byte-stable
-      ms.addData(ev(story("A"), 2))
-      q.processAllAvailable()
-      q.stop()
-      // hand-written expected bytes (NOT derived via RawAns — a circular
-      // check would pass on any splice bug): the tag lands before the
-      // tags array's ']', every other byte identical
-      val expectedA = """{"_id":"A","unknown":{"deep":[1,{"s":"tax\"onomy ]}"}],"u":"π café"},""" +
-        """"taxonomy":{"rev":9,"tags":[{"slug":"x","text":"x"},""" +
-        """{"slug":"kinesis-autotag","text":"kinesis autotag"}]},"later":null}"""
-      assert(store.get("A").get == expectedA, "unknown fields not byte-preserved")
-      assert(store.get("B").get ==
-        """{"_id":"B","taxonomy":{"tags":[{"slug":"kinesis-autotag","text":"kinesis autotag"}]}}""")
-      assert(store.size == 2)
-    }
-  }
-
   test("kinesis contract: WireSource.kinesis end-to-end through TagPipeline (LATEST skip + per-shard fetch cap)") {
     val stream = "unit-tag-events"
     KinesisStubRegistry.clear(stream)
@@ -660,35 +629,39 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("exactly-once sink: a crash between sink write and engine commit never re-executes the batch") {
-    // r10 verdict item 9: foreachBatch is at-least-once — kill the
-    // query AFTER the sink writes but BEFORE the engine's checkpoint
-    // commit (simulated by deleting the last commits/ entry, exactly
-    // the on-disk state such a crash leaves) and the batch REPLAYS with
-    // the same batchId. The batchId-keyed marker in the sink store must
-    // swallow the replay: zero re-executed effects, not merely
-    // idempotent ones.
+  test("crash replay: a batch replayed between sink write and engine commit re-runs its updates as no-ops") {
+    // kill the query AFTER the sink writes but BEFORE the engine's
+    // checkpoint commit (simulated by deleting the last commits/ entry,
+    // exactly the on-disk state such a crash leaves) and the batch
+    // REPLAYS. The sink keeps no ledger of committed batches: the replay
+    // re-runs every update of the batch, and the idempotent tag append
+    // makes each one return the document it read, so the store ends as
+    // it was before the replay.
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[Wire]
-    val updates = new java.util.concurrent.atomic.AtomicInteger(0)
+    // (id, the document the committing read saw, the document committed)
+    val log = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, Option[AnsDoc], AnsDoc)]()
     val store = new InMemoryDocumentStore {
       override def update(id: String)(f: Option[AnsDoc] => AnsDoc): AnsDoc = {
-        updates.incrementAndGet(); super.update(id)(f)
+        var read: Option[AnsDoc] = None
+        val next = super.update(id) { cur => read = cur; f(cur) }
+        log.add((id, read, next))
+        next
       }
     }
-    withTempDir("graft-exactly-once-") { ckpt =>
+    def sorted = store.snapshot.sortBy(_._id)
+    withTempDir("graft-crash-replay-") { ckpt =>
       def startQuery() = TagPipeline.start(spark, ms.toDF(), store, ckpt,
-        trigger = Trigger.ProcessingTime(0), storeKey = "exactly-once",
-        exactlyOnce = true)
+        trigger = Trigger.ProcessingTime(0), storeKey = "crash-replay")
       val q1 = startQuery()
       ms.addData(ev(story("X"), 0), ev(story("Y"), 1))
       q1.processAllAvailable()
       q1.stop()
-      val afterFirst = updates.get()
+      val afterFirst = log.size
       assert(afterFirst >= 2, s"expected the two docs tagged, got $afterFirst updates")
-      assert(store.get(TagPipeline.commitMarkerId("exactly-once", 0L,
-          TagPipeline.runNamespace(ckpt))).nonEmpty,
-        "batch 0 commit marker missing")
+      val beforeReplay = sorted
+      assert(beforeReplay.map(_._id) == Seq("X", "Y"))
       // crash window: sink writes landed, engine commit did not
       val commits = java.nio.file.Paths.get(ckpt, "commits")
       val last = {
@@ -705,34 +678,19 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Files.deleteIfExists(
         last.resolveSibling("." + last.getFileName.toString + ".crc"))
       val q2 = startQuery()
-      q2.processAllAvailable() // replays the batch; the marker must gate it
-      assert(updates.get() == afterFirst,
-        s"replayed batch re-executed the sink: ${updates.get()} != $afterFirst updates")
-      assert(store.get("X").exists(_.taxonomy.get.tags.get == Seq(AutoTag)))
-      // fresh data after recovery still flows (a new batchId has no marker)
+      q2.processAllAvailable() // replays the batch
+      val replayed = log.asScala.drop(afterFirst).toSeq
+      assert(replayed.map(_._1).sorted == Seq("X", "Y"),
+        s"the replay did not re-run the batch's updates: $replayed")
+      assert(replayed.forall { case (_, read, next) => read.contains(next) },
+        s"a replayed update changed its document: $replayed")
+      assert(sorted == beforeReplay, "the replay changed the store")
+      // fresh data after recovery still flows
       ms.addData(ev(story("Z"), 2))
       q2.processAllAvailable()
       q2.stop()
       assert(store.get("Z").exists(_.taxonomy.get.tags.get == Seq(AutoTag)),
         "post-recovery batch lost")
-      assert(updates.get() > afterFirst, "post-recovery batch never ran")
-      // FRESH checkpoint dir against the SAME store: batchIds reset to 0,
-      // so without the run-namespaced marker key the stale batch-0 marker
-      // above would silently swallow the new run's first batch (r11
-      // advisory). The checkpoint-path namespace keeps the ledgers apart.
-      val beforeFresh = updates.get()
-      withTempDir("graft-exactly-once2-") { ckpt2 =>
-        val ms2 = MemoryStream[Wire]
-        val q3 = TagPipeline.start(spark, ms2.toDF(), store, ckpt2,
-          trigger = Trigger.ProcessingTime(0), storeKey = "exactly-once",
-          exactlyOnce = true)
-        ms2.addData(ev(story("W"), 3))
-        q3.processAllAvailable()
-        q3.stop()
-        assert(store.get("W").exists(_.taxonomy.get.tags.get == Seq(AutoTag)),
-          "fresh-checkpoint run's batch 0 swallowed by a stale marker")
-        assert(updates.get() > beforeFresh, "fresh-checkpoint batch never ran")
-      }
     }
   }
 
@@ -820,9 +778,9 @@ class StreamingSpec extends SparkSpec {
     // the same pipeline the file/in-memory stores pass. Two injected
     // 500s land mid-batch: the retry/backoff must absorb them without
     // failing the micro-batch (the error-continue stance of app.py:71-75,
-    // minus the reference's silent record drop). A is seeded as a Draft
-    // API document with members the typed model does not declare: the
-    // write-back must PUT the whole fetched document (tag.py:64).
+    // minus the reference's silent record drop). A and R are seeded as
+    // Draft API documents with members the typed model does not declare:
+    // the write-back must PUT the whole fetched document (tag.py:64).
     implicit val sqlCtx = spark.sqlContext
     val stub = new DraftApiStub
     try {
@@ -836,11 +794,26 @@ class StreamingSpec extends SparkSpec {
       val seeded = s"""{"_id":"A","revision":3,"headlines":$headlines,""" +
         s""""content_elements":$contentElements,""" +
         s""""taxonomy":{"sections":$sections,"tags":[$storedTag]}}"""
-      assert(client.send(java.net.http.HttpRequest.newBuilder(docUri)
-        .PUT(java.net.http.HttpRequest.BodyPublishers.ofString(seeded)).build(),
-        java.net.http.HttpResponse.BodyHandlers.discarding()).statusCode() == 200)
+      // R carries decoy structure inside a string value, non-ASCII text,
+      // a null member and a sibling of taxonomy.tags
+      val seededR = """{"_id":"R","unknown":{"deep":[1,{"s":"tax\"onomy ]}"}],"u":"π café"},""" +
+        """"taxonomy":{"rev":9,"tags":[{"slug":"x","text":"x"}]},"later":null}"""
+      def put(uri: java.net.URI, body: String): Unit =
+        assert(client.send(java.net.http.HttpRequest.newBuilder(uri)
+          .PUT(java.net.http.HttpRequest.BodyPublishers.ofString(body)).build(),
+          java.net.http.HttpResponse.BodyHandlers.discarding()).statusCode() == 200)
+      put(docUri, seeded)
+      put(java.net.URI.create(s"${stub.baseUrl}/documents/R"), seededR)
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       def json(s: String) = mapper.readTree(s)
+      // every member of R as seeded, with the tag appended: compared as
+      // members, since the write-back re-serializes the document
+      val expectedR = json("""{"_id":"R","unknown":{"deep":[1,{"s":"tax\"onomy ]}"}],"u":"π café"},""" +
+        """"taxonomy":{"rev":9,"tags":[{"slug":"x","text":"x"},""" +
+        """{"slug":"kinesis-autotag","text":"kinesis autotag"}]},"later":null}""")
+      def storedR = json(client.send(java.net.http.HttpRequest.newBuilder(
+        java.net.URI.create(s"${stub.baseUrl}/documents/R")).GET().build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString(UTF_8)).body())
       def assertUndeclaredKept(when: String): Unit = {
         val a = json(client.send(java.net.http.HttpRequest.newBuilder(docUri).GET().build(),
           java.net.http.HttpResponse.BodyHandlers.ofString()).body())
@@ -857,19 +830,21 @@ class StreamingSpec extends SparkSpec {
         val q = TagPipeline.start(spark, ms.toDF(), store, ckpt,
           trigger = Trigger.ProcessingTime(0), storeKey = "http-test")
         stub.failNext.set(2)
-        ms.addData(ev(story("A"), 0), ev(story("B"), 1))
+        ms.addData(ev(story("A"), 0), ev(story("B"), 1), ev(story("R"), 2))
         q.processAllAvailable()
         assertUndeclaredKept("by tagging")
-        ms.addData(ev(story("A"), 2)) // redelivery
+        assert(storedR == expectedR, s"R's members changed by tagging: $storedR")
+        ms.addData(ev(story("A"), 3), ev(story("R"), 4)) // redelivery
         q.processAllAvailable()
         q.stop()
         assertUndeclaredKept("by the redelivery")
+        assert(storedR == expectedR, s"R's members changed by the redelivery: $storedR")
         val a = store.get("A").get
         assert(a.taxonomy.get.tags.get == Seq(Tag("x", "x"), AutoTag),
           "existing tags preserved, auto tag appended exactly once")
         assert(a.revision.contains(3L), "untouched fields survive the round-trip")
         assert(store.get("B").get.taxonomy.get.tags.get == Seq(AutoTag))
-        assert(store.size == 2)
+        assert(store.size == 3)
         assert(stub.hits.get() > 2, "the injected failures must have been retried")
       }
     } finally stub.stop()
@@ -923,6 +898,37 @@ class StreamingSpec extends SparkSpec {
         assert(puts.get() > 2, "the pipeline's PUTs must have reached the server")
         assert(store.updates.get() == 0, "a refused write was reported as done")
       }
+    } finally server.stop(0)
+  }
+
+  test("http-backed store: a GET answered 429 throws, and its error body is never PUT as a document") {
+    import com.sun.net.httpserver.{HttpExchange, HttpServer}
+    val puts = new java.util.concurrent.atomic.AtomicInteger(0)
+    // every GET is rate-limited with a JSON error body; a PUT would commit
+    val server = HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/documents", (x: HttpExchange) => {
+      if (x.getRequestMethod == "PUT") {
+        puts.incrementAndGet()
+        x.getRequestBody.readAllBytes()
+        x.sendResponseHeaders(200, -1)
+      } else {
+        val body = """{"error":"rate limited"}""".getBytes(UTF_8)
+        x.getResponseHeaders.set("Content-Type", "application/json")
+        x.sendResponseHeaders(429, body.length)
+        x.getResponseBody.write(body)
+      }
+      x.close()
+    })
+    server.start()
+    try {
+      val http = new HttpDocumentStore(
+        s"http://127.0.0.1:${server.getAddress.getPort}", backoffMs = 5L)
+      val e = intercept[DocumentWriteRejected](
+        http.update("X")(cur => DocumentStore.modifyAns(
+          cur.getOrElse(AnsDoc("X", None, None)), AutoTag)))
+      assert(e.id == "X" && e.status == 429 && e.method == "GET", e.getMessage)
+      assert(puts.get() == 0, s"${puts.get()} PUTs reached the server")
     } finally server.stop(0)
   }
 
@@ -1046,56 +1052,49 @@ class StreamingSpec extends SparkSpec {
     DocumentStore.register("overlap", store)
     val batch = Seq("A", "B", "C", "D").toDF("id").coalesce(1)
     assert(batch.rdd.getNumPartitions == 1)
-    TagPipeline.enrichAndUpsert("overlap", AutoTag)(batch, 0L)
+    TagPipeline.enrichAndUpsert("overlap", AutoTag)(batch)
     assert(Seq("A", "B", "C", "D").forall(id =>
       store.get(id).exists(_.taxonomy.get.tags.get == Seq(AutoTag))))
   }
 
-  test("tag sinks: one SQL execution per trigger, typed and raw") {
+  test("tag sink: one SQL execution per trigger") {
     implicit val sqlCtx = spark.sqlContext
     val rounds = 3
-    for (raw <- Seq(false, true)) {
-      val ms = MemoryStream[Wire]
-      withTempDir("graft-exec-ckpt-") { ckpt =>
-        val execs = new SqlExecutionLog
-        spark.sparkContext.addSparkListener(execs)
-        try {
-          val q =
-            if (raw) TagPipeline.startRaw(spark, ms.toDF(),
-              new InMemoryRawDocumentStore, ckpt,
-              trigger = Trigger.ProcessingTime(0), storeKey = "exec-count-raw")
-            else TagPipeline.start(spark, ms.toDF(), new InMemoryDocumentStore,
-              ckpt, trigger = Trigger.ProcessingTime(0), storeKey = "exec-count")
-          // processAllAvailable returns only once no batch (no-data
-          // batches included) is left to run, so stop() cuts none short
-          try (1 to rounds).foreach { i =>
-            ms.addData(ev(story(s"E$i"), i))
-            q.processAllAvailable()
-          } finally q.stop()
-          execs.drain(spark)
-          val sinkRuns = q.recentProgress.filter(_.durationMs.containsKey("addBatch"))
-          assert(sinkRuns.count(_.numInputRows > 0) == rounds)
-          assert(execs.of(q.runId) == sinkRuns.length,
-            s"raw=$raw: ${execs.of(q.runId)} SQL executions for " +
-              s"${sinkRuns.length} triggers that ran the sink")
-          // on a plain wire the query is one stateless stage: the last data
-          // trigger ran no state store and no shuffle
-          val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
-            .lastExecution.executedPlan
-          assert(plan.collectFirst { case s: StatefulOperator => s }.isEmpty &&
-            plan.collectFirst { case e: Exchange => e }.isEmpty,
-            s"raw=$raw: a stateful operator or an exchange in\n$plan")
-        } finally spark.sparkContext.removeSparkListener(execs)
-      }
+    val ms = MemoryStream[Wire]
+    withTempDir("graft-exec-ckpt-") { ckpt =>
+      val execs = new SqlExecutionLog
+      spark.sparkContext.addSparkListener(execs)
+      try {
+        val q = TagPipeline.start(spark, ms.toDF(), new InMemoryDocumentStore,
+          ckpt, trigger = Trigger.ProcessingTime(0), storeKey = "exec-count")
+        // processAllAvailable returns only once no batch (no-data
+        // batches included) is left to run, so stop() cuts none short
+        try (1 to rounds).foreach { i =>
+          ms.addData(ev(story(s"E$i"), i))
+          q.processAllAvailable()
+        } finally q.stop()
+        execs.drain(spark)
+        val sinkRuns = q.recentProgress.filter(_.durationMs.containsKey("addBatch"))
+        assert(sinkRuns.count(_.numInputRows > 0) == rounds)
+        assert(execs.of(q.runId) == sinkRuns.length,
+          s"${execs.of(q.runId)} SQL executions for " +
+            s"${sinkRuns.length} triggers that ran the sink")
+        // on a plain wire the query is one stateless stage: the last data
+        // trigger ran no state store and no shuffle
+        val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+          .lastExecution.executedPlan
+        assert(plan.collectFirst { case s: StatefulOperator => s }.isEmpty &&
+          plan.collectFirst { case e: Exchange => e }.isEmpty,
+          s"a stateful operator or an exchange in\n$plan")
+      } finally spark.sparkContext.removeSparkListener(execs)
     }
   }
 
-  test("tag sink: one refused id fails the batch with DocumentWriteRejected, after every other update finished, and writes no marker") {
+  test("tag sink: one refused id fails the batch with DocumentWriteRejected, after every other update finished") {
     import spark.implicits._
     import com.sun.net.httpserver.{HttpExchange, HttpServer}
     // GETs find nothing; the PUT of "B" is refused at once, every other
     // PUT commits after a pause, so they are still on the wire when B fails
-    val putIds = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val server = HttpServer.create(
       new java.net.InetSocketAddress("127.0.0.1", 0), 0)
     server.setExecutor(HttpRetry.daemonPool(8))
@@ -1104,7 +1103,6 @@ class StreamingSpec extends SparkSpec {
         x.getRequestURI.getPath.stripPrefix("/documents/"), UTF_8)
       if (x.getRequestMethod == "PUT") {
         x.getRequestBody.readAllBytes()
-        putIds.add(id)
         if (id != "B") Thread.sleep(300)
         x.sendResponseHeaders(if (id == "B") 403 else 200, -1)
       } else x.sendResponseHeaders(404, -1)
@@ -1130,8 +1128,8 @@ class StreamingSpec extends SparkSpec {
       // return while C..F are still on the wire
       val ids = Seq("B", "C", "D", "E", "F")
       val batch = ids.toDF("id").coalesce(1)
-      val e = intercept[Exception](TagPipeline.enrichAndUpsert(
-        "refuse-one", AutoTag, exactlyOnce = true, runNs = "r")(batch, 3L))
+      val e = intercept[Exception](
+        TagPipeline.enrichAndUpsert("refuse-one", AutoTag)(batch))
       assert(running.get() == 0, s"${running.get()} updates still running")
       assert(done.get() == ids.size - 1, s"only ${done.get()} updates finished")
       val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
@@ -1141,8 +1139,6 @@ class StreamingSpec extends SparkSpec {
       }, chain.map(_.toString).mkString(" | "))
       assert(!chain.exists(_.isInstanceOf[java.util.concurrent.CompletionException]),
         chain.map(_.toString).mkString(" | "))
-      assert(!putIds.asScala.exists(_.startsWith("__batch_commit")),
-        s"a failed batch wrote its exactly-once marker: $putIds")
     } finally server.stop(0)
   }
 
@@ -1447,31 +1443,6 @@ class StreamingSpec extends SparkSpec {
     assert(post3.toSeq == preVacuum.toSeq,
       "a checkpointed read must equal the full-history read")
     assert(log3.readAsOf(2L).collect().map(_.getLong(1)).toSeq == Seq(2L))
-  }
-
-  test("raw-sink exactly-once ledger: a committed batchId is skipped wholesale, marker written after the data") {
-    import spark.implicits._
-    val store = new graft.streaming.InMemoryRawDocumentStore
-    graft.streaming.InMemoryRawDocumentStore.register("raw-eo", store)
-    val batch = Seq("A", "B").toDF("id")
-    TagPipeline.enrichAndUpsertRaw("raw-eo", AutoTag,
-      exactlyOnce = true, runNs = "ns1")(batch, 7L)
-    assert(store.get("A").nonEmpty && store.get("B").nonEmpty)
-    assert(store.get(TagPipeline.commitMarkerId("raw-eo", 7L, "ns1")).nonEmpty,
-      "commit marker missing after the batch")
-    val sizeAfter = store.size
-    // the replayed batch (same batchId, same run) is skipped WHOLESALE —
-    // even a tag change (a non-idempotent stand-in) leaves no trace
-    TagPipeline.enrichAndUpsertRaw("raw-eo", Tag("other", "other"),
-      exactlyOnce = true, runNs = "ns1")(batch, 7L)
-    assert(store.size == sizeAfter)
-    assert(!store.get("A").get.contains("other"),
-      "replayed committed batch re-executed its effects")
-    // a FRESH run namespace (new checkpoint dir) is not swallowed by the
-    // stale marker (the r11 advisory case, raw tier)
-    TagPipeline.enrichAndUpsertRaw("raw-eo", Tag("other", "other"),
-      exactlyOnce = true, runNs = "ns2")(batch, 7L)
-    assert(store.get("A").get.contains("other"))
   }
 }
 
