@@ -186,7 +186,7 @@ object Pipeline extends QueryGroup {
       df.select(col("doc_id"), col("text"), col("lang"), col("source"))
     // r17 (guide §5 — the driver is part of the budget): `clean` ends a
     // six-boundary funnel whose logical plan is ~0.5 MB; every one of
-    // the MANY downstream jobs (wordDict collect, tokenize pass, the
+    // the MANY downstream jobs (wordDictOf collect, tokenize pass, the
     // scan-pack totals/offsets sequence, q180's rollup) re-canonicalized
     // and re-planned that whole lineage — profiled at ~3.5 s of
     // between-stage driver gaps on q185 against 5.1 s of stage wall.
@@ -380,8 +380,9 @@ object Pipeline extends QueryGroup {
       val oldD = docs.filter(gateDoc("rdump:") < "cd")
       val remD = oldD.filter(gateDoc("rretract:") < "10")
       val newD = docs.filter(gateDoc("rdump:") >= "cd")
-      val merges = Tokenizer.bpeTrain(Tokenizer.wordDictOf(docs))
-      val vocab = Tokenizer.vocabTable(spark, docs, merges)
+      val (dict, alphabet) = Tokenizer.vocabInputs(docs)
+      val merges = Tokenizer.bpeTrain(dict)
+      val vocab = Tokenizer.vocabTable(spark, alphabet, merges)
         .join(Tokenizer.combineTokenFreq(Seq(
           (Tokenizer.tokenFreqPartials(oldD, merges, spread = false), 1L),
           (Tokenizer.tokenFreqPartials(remD, merges, spread = false), -1L),

@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Tables
 import graft.functions.TextOps
@@ -14,9 +16,11 @@ import graft.functions.TextOps
   * Scale shape (the part that must survive 100 TB):
   *  - the ONLY corpus-sized work in training is the word-frequency
   *    aggregation — one `groupBy(word).count` with map-side partial
-  *    aggregation, the same shuffle q44 does. BPE training proper runs
-  *    on the word-TYPE frequency dict, never on the corpus: the dict is
-  *    capped to the top-`VocabCap` types (frequency-desc, word-asc —
+  *    aggregation, the same shuffle q44 does; the base alphabet comes
+  *    from its word TYPES in the same SQL execution ([[vocabInputs]]).
+  *    BPE training proper runs on the word-TYPE frequency dict, never
+  *    on the corpus: the dict is capped to the top-`VocabCap` types
+  *    (frequency-desc, word-asc —
   *    deterministic), collected as bounded MODEL STATE (the kmeansCore /
   *    q154 discipline), and the `MergeRounds` greedy rounds are pure
   *    driver arithmetic over ≤ VocabCap short strings. This is how
@@ -127,23 +131,44 @@ object Tokenizer extends QueryGroup {
     merges.result()
   }
 
-  /** The distributed trainer front half: corpus → word-type frequency
-    * dict, capped to [[VocabCap]] (one map-side-combining shuffle; the
-    * orderBy+limit is a TakeOrdered over word TYPES, not corpus rows).
-    */
-  private[graft] def wordDict(spark: SparkSession, dir: String): Seq[(String, Long)] =
-    wordDictOf(Tables(spark, dir, "documents"))
-
-  /** [[wordDict]] over an arbitrary (doc_id, text) frame — q174 trains
-    * on its gated+deduped pipeline stage.
+  /** The distributed trainer front half: a (doc_id, text) frame → word-
+    * type frequency dict, capped to [[VocabCap]] (one map-side-combining
+    * shuffle; the orderBy+limit is a TakeOrdered over word TYPES, not
+    * corpus rows). q174 trains on its gated+deduped pipeline stage.
     */
   private[graft] def wordDictOf(docs: DataFrame): Seq[(String, Long)] =
-    docs
-      .select(explode(TextOps.tokens(col("text"))).as("word"))
+    topWords(wordFreq(docs)).collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+
+  /** The word-type aggregate (word, f) and its capped top rows. */
+  private def wordFreq(docs: DataFrame): DataFrame =
+    docs.select(explode(TextOps.tokens(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("f"))
-      .orderBy(col("f").desc, col("word"))
-      .limit(VocabCap)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+  private def topWords(freq: DataFrame): DataFrame =
+    freq.orderBy(col("f").desc, col("word")).limit(VocabCap)
+
+  /** Spark's string order, UTF-8 bytes: `String.compareTo` (UTF-16)
+    * disagrees on astral chars against U+E000..U+FFFF. */
+  private val utf8Order: Ordering[String] =
+    Ordering.by[String, UTF8String](UTF8String.fromString)
+
+  /** Both inputs of a vocab from ONE SQL execution over one word-type
+    * aggregate: the capped dict and the base alphabet, the distinct
+    * chars of the word TYPES under the chain's '(.)' split (the chars of
+    * the occurrences). The union's rows come back in no defined order
+    * (an alphabet row has a NULL `f`), so the driver sorts the dict.
+    */
+  private[graft] def vocabInputs(docs: DataFrame): (Seq[(String, Long)], Set[String]) = {
+    val freq = wordFreq(docs)
+    val chars = freq.select(explode(filter(
+        split(regexp_replace(col("word"), "(.)", "$1 "), " "),
+        c => c =!= "")).as("word"))
+      .distinct().select(col("word"), lit(null).cast("long").as("f"))
+    val (dict, alphabet) = topWords(freq).unionByName(chars).collect()
+      .partition(r => !r.isNullAt(1))
+    (dict.map(r => (r.getString(0), r.getLong(1))).toSeq
+      .sortBy { case (w, f) => (-f, w) }(Ordering.Tuple2(Ordering.Long, utf8Order)),
+     alphabet.map(_.getString(0)).toSet)
+  }
 
   /** Per-word BPE token count as a codegen'd expression chain: spaced
     * chars, then the k learned merges as literal replaces, then count
@@ -185,7 +210,7 @@ object Tokenizer extends QueryGroup {
     // (all-integer/string → bit-deterministic).
     "q166_bpe_train" -> ((spark, dir) => {
       import spark.implicits._
-      bpeTrain(wordDict(spark, dir))
+      bpeTrain(wordDictOf(Tables(spark, dir, "documents")))
         .toDF("rank", "pair_left", "pair_right", "merged", "pair_count")
         .orderBy("rank")
     }),
@@ -195,8 +220,8 @@ object Tokenizer extends QueryGroup {
     // is embedded literals; no join, no shuffle, per-doc row out).
     // NULL text → NULL counts (wsTokenCount discipline).
     "q167_bpe_tokenize" -> ((spark, dir) => {
-      val merges = bpeTrain(wordDict(spark, dir))
-      tokenized(Tables(spark, dir, "documents"), merges).orderBy("doc_id")
+      val docs = Tables(spark, dir, "documents")
+      tokenized(docs, bpeTrain(wordDictOf(docs))).orderBy("doc_id")
     }),
 
     // q178 [north star, r11]: the PRODUCTION-vocab apply shape q167's
@@ -212,10 +237,9 @@ object Tokenizer extends QueryGroup {
     // the hash match proves the fast path computes exactly what the
     // reference chain computes.
     "q178_bpe_tokenize_vocab" -> ((spark, dir) => {
-      val dict = wordDict(spark, dir)
-      val merges = bpeTrain(dict)
-      tokenizedVocab(Tables(spark, dir, "documents"), merges, dict)
-        .orderBy("doc_id")
+      val docs = Tables(spark, dir, "documents")
+      val dict = wordDictOf(docs)
+      tokenizedVocab(docs, bpeTrain(dict), dict).orderBy("doc_id")
     }),
 
     // q181 [north star, r11]: VOCAB EXPORT — the artifact a tokenizer
@@ -231,9 +255,10 @@ object Tokenizer extends QueryGroup {
     // Exactness: Σ freq ≡ Σ q167.n_bpe by construction — pinned in
     // OperatorSpec as a cross-query conservation law.
     "q181_vocab_export" -> ((spark, dir) => {
-      val merges = bpeTrain(wordDict(spark, dir))
       val docs = Tables(spark, dir, "documents")
-      vocabTable(spark, docs, merges)
+      val (dict, alphabet) = vocabInputs(docs)
+      val merges = bpeTrain(dict)
+      vocabTable(spark, alphabet, merges)
         .join(tokenFreqPartials(docs, merges), Seq("token"), "left")
         .select(col("token_id"), col("token"),
           coalesce(col("freq"), lit(0L)).as("freq"))
@@ -255,8 +280,9 @@ object Tokenizer extends QueryGroup {
     // hash match proves combine ≡ rescan exactly; OperatorSpec freezes
     // the partials to driver rows before combining.
     "q188_vocab_incremental" -> ((spark, dir) => {
-      val merges = bpeTrain(wordDict(spark, dir))
       val docs = Tables(spark, dir, "documents")
+      val (dict, alphabet) = vocabInputs(docs)
+      val merges = bpeTrain(dict)
       def gate(prefix: String) =
         substring(md5(concat(lit(prefix), col("doc_id").cast("string"))), 1, 2)
       val old = docs.filter(gate("vdump:") < "cd")
@@ -266,7 +292,7 @@ object Tokenizer extends QueryGroup {
         (tokenFreqPartials(old, merges, spread = false), 1L),
         (tokenFreqPartials(removed, merges, spread = false), -1L),
         (tokenFreqPartials(delta, merges, spread = false), 1L)))
-      vocabTable(spark, docs, merges)
+      vocabTable(spark, alphabet, merges)
         .join(net, Seq("token"), "left")
         .select(col("token_id"), col("token"),
           coalesce(col("freq"), lit(0L)).as("freq"))
@@ -350,9 +376,8 @@ object Tokenizer extends QueryGroup {
     // the same deterministic walk, one hash.
     "q215_wordpiece" -> ((spark, dir) => {
       val docs = Tables(spark, dir, "documents")
-      val merges = bpeTrain(wordDict(spark, dir))
-      val inv = vocabTable(spark, docs, merges)
-        .orderBy("token_id").collect().map(_.getString(0)).toSeq
+      val (dict, alphabet) = vocabInputs(docs)
+      val inv = vocabIds(alphabet, bpeTrain(dict)).map(_._1)
       wordpieceSegmented(docs, inv, inv).orderBy("doc_id")
     }))
 
@@ -396,19 +421,18 @@ object Tokenizer extends QueryGroup {
     * exact-integer monotone surrogate of −log p (libm logs are not
     * bit-portable cross-engine; rank preserves the order structure the
     * DP's preferences read). Bounded model state: |alphabet| + merge
-    * count rows, collected once on the driver. Tie-freeness: tokens
-    * are distinct (vocabTable's loud guards), so (freq desc, token asc)
+    * count token frequencies, collected once. Tie-freeness: tokens
+    * are distinct (vocabIds' loud guards), so (freq desc, token asc)
     * is a total order on BOTH engines — BMP-only tokens make Scala's
     * UTF-16 compareTo, Spark's UTF8String byte order, and DuckDB's
     * VARCHAR byte order all agree with code-point order.
     */
-  private[graft] def unigramCosts(spark: SparkSession, docs: DataFrame,
+  private[graft] def unigramCosts(docs: DataFrame, alphabet: Set[String],
       merges: Seq[Merge]): Seq[(String, Long)] = {
-    val withFreq = vocabTable(spark, docs, merges)
-      .join(tokenFreqPartials(docs, merges), Seq("token"), "left")
-      .select(col("token"), coalesce(col("freq"), lit(0L)).as("freq"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    withFreq.sortBy { case (t, f) => (-f, t) }
+    val freq = tokenFreqPartials(docs, merges).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    vocabIds(alphabet, merges).map { case (t, _) => (t, freq.getOrElse(t, 0L)) }
+      .sortBy { case (t, f) => (-f, t) }
       .zipWithIndex.map { case ((t, _), i) => (t, i + 1L) }
   }
 
@@ -427,8 +451,7 @@ object Tokenizer extends QueryGroup {
   private[graft] def unigramEmRound(docs: DataFrame,
       costs: Seq[(String, Long)]): (Seq[(String, Long)], Map[String, Long]) = {
     import org.apache.spark.sql.graftbridge.{toColumn, toExpression}
-    val toks = costs.map(_._1).toArray
-    val cs = costs.map(_._2).toArray
+    val (toks, cs) = (costs.map(_._1).toArray, costs.map(_._2).toArray)
     val wordFreq = docs.filter(col("text").isNotNull)
       .select(explode(filter(TextOps.tokens(gatedText), w => w =!= "")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("f"))
@@ -461,8 +484,8 @@ object Tokenizer extends QueryGroup {
       dir: String): (Seq[(String, Long)], Map[String, Long]) =
     emMemo.computeIfAbsent(dir, _ => {
       val docs = Tables(spark, dir, "documents")
-      val merges = bpeTrain(wordDict(spark, dir))
-      var cur = unigramCosts(spark, docs, merges)
+      val (dict, alphabet) = vocabInputs(docs)
+      var cur = unigramCosts(docs, alphabet, bpeTrain(dict))
       var cnts = Map.empty[String, Long]
       (1 to UnigramEmRounds).foreach { _ =>
         val (next, c) = unigramEmRound(docs, cur)
@@ -471,72 +494,59 @@ object Tokenizer extends QueryGroup {
       (cur, cnts)
     })
 
-  /** The map-only corpus pass of q198: per word (same whitespace split
-    * and loud alphabet gate as the BPE path, empties dropped), the
-    * UnigramViterbi expression computes struct(cost, ways); per doc the
-    * two are summed by one `aggregate` fold. The struct lands behind a
-    * non-cheap alias in its own projection so CollapseProject cannot
-    * inline it twice (SPARK-36718) — the DP runs once per word. Docs
-    * with NULL text or zero non-empty words yield NULL cost/ways (the
-    * wsTokenCount discipline; the oracle's per-doc join misses the same
-    * rows).
+  /** The map-only corpus pass of q198: per word, the UnigramViterbi
+    * expression computes struct(cost, ways), summed per doc.
     */
   private[graft] def unigramSegmented(docs: DataFrame,
       vocabCosts: Seq[(String, Long)]): DataFrame = {
-    import org.apache.spark.sql.graftbridge.{toColumn, toExpression}
-    val toks = vocabCosts.map(_._1).toArray
-    val cs = vocabCosts.map(_._2).toArray
-    def vit(w: Column): Column =
-      toColumn(graft.expressions.UnigramViterbi(toExpression(w), toks, cs))
-    val words = filter(TextOps.tokens(gatedText), w => w =!= "")
-    val agg = aggregate(
-      transform(words, w => vit(w)),
-      struct(lit(0L).as("c"), lit(0L).as("w")),
-      (acc, x) => struct(
-        (acc.getField("c") + x.getField("cost")).as("c"),
-        (acc.getField("w") + x.getField("ways")).as("w")))
-    graft.Tables.spread(docs)
-      .select(col("doc_id"), TextOps.wsTokenCount(col("text")).as("n_ws"),
-        when(col("text").isNotNull && size(words) > 0, agg).as("v"))
-      .select(col("doc_id"), col("n_ws"),
-        col("v.c").as("vit_cost"), col("v.w").as("vit_ways"))
+    val (toks, cs) = (vocabCosts.map(_._1).toArray, vocabCosts.map(_._2).toArray)
+    perWordSums(docs, graft.expressions.UnigramViterbi(_, toks, cs),
+      "cost" -> "vit_cost", "ways" -> "vit_ways")
   }
 
-  /** The map-only corpus pass of q215: per word (same whitespace split
-    * and loud alphabet gate as the BPE/unigram paths, empties dropped),
-    * the WordpieceGreedy expression computes struct(pieces, unk); per
-    * doc both are summed by one `aggregate` fold. Same SPARK-36718
-    * projection discipline and NULL-text contract as
-    * [[unigramSegmented]].
+  /** The map-only corpus pass of q215: per word, the WordpieceGreedy
+    * expression computes struct(pieces, unk), summed per doc.
     */
   private[graft] def wordpieceSegmented(docs: DataFrame,
       initial: Seq[String], continuation: Seq[String]): DataFrame = {
+    val (ini, con) = (initial.toArray, continuation.toArray)
+    perWordSums(docs, graft.expressions.WordpieceGreedy(_, ini, con),
+      "pieces" -> "n_wp", "unk" -> "n_unk")
+  }
+
+  /** Per doc: doc_id, n_ws, and the sums, by one `aggregate` fold, of
+    * the two long fields `a` and `b` (field -> output column) of the
+    * struct `perWord` gives each word (same whitespace split and loud
+    * alphabet gate as the BPE path, empties dropped). The struct lands
+    * behind a non-cheap alias in its own projection so CollapseProject
+    * cannot inline it twice (SPARK-36718): `perWord` runs once per word.
+    * Docs with NULL text or zero non-empty words yield NULL sums (the
+    * wsTokenCount discipline; the oracle's per-doc join misses the same
+    * rows).
+    */
+  private def perWordSums(docs: DataFrame, perWord: Expression => Expression,
+      a: (String, String), b: (String, String)): DataFrame = {
     import org.apache.spark.sql.graftbridge.{toColumn, toExpression}
-    val ini = initial.toArray
-    val con = continuation.toArray
-    def wp(w: Column): Column =
-      toColumn(graft.expressions.WordpieceGreedy(toExpression(w), ini, con))
     val words = filter(TextOps.tokens(gatedText), w => w =!= "")
     val agg = aggregate(
-      transform(words, w => wp(w)),
-      struct(lit(0L).as("p"), lit(0L).as("u")),
+      transform(words, w => toColumn(perWord(toExpression(w)))),
+      struct(lit(0L).as("a"), lit(0L).as("b")),
       (acc, x) => struct(
-        (acc.getField("p") + x.getField("pieces")).as("p"),
-        (acc.getField("u") + x.getField("unk")).as("u")))
+        (acc.getField("a") + x.getField(a._1)).as("a"),
+        (acc.getField("b") + x.getField(b._1)).as("b")))
     graft.Tables.spread(docs)
       .select(col("doc_id"), TextOps.wsTokenCount(col("text")).as("n_ws"),
         when(col("text").isNotNull && size(words) > 0, agg).as("v"))
-      .select(col("doc_id"), col("n_ws"),
-        col("v.p").as("n_wp"), col("v.u").as("n_unk"))
+      .select(col("doc_id"), col("n_ws"), col("v.a").as(a._2), col("v.b").as(b._2))
   }
 
   /** The token→id inventory (base alphabet in binary order, then merged
     * tokens in merge-rank order — the standard BPE id assignment), with
-    * the loud ambiguity guards. Shared by q181 and q188 (the frozen
-    * vocab a point fix must NOT retrain).
+    * the loud ambiguity guards: the frozen vocab of q181, q188 (a point
+    * fix must NOT retrain it), q195, q198/q237 and q215.
     */
-  private[graft] def vocabTable(spark: SparkSession, docs: DataFrame,
-      merges: Seq[Merge]): DataFrame = {
+  private[graft] def vocabIds(alphabet: Set[String],
+      merges: Seq[Merge]): Seq[(String, Long)] = {
     // LOUD guard (r11 advisory): the export's token→id map and the
     // Σfreq≡Σn_bpe conservation law both assume merged token STRINGS
     // are distinct — two merges CAN produce the same string (a+bc and
@@ -547,16 +557,6 @@ object Tokenizer extends QueryGroup {
       "vocab export: duplicate merged token strings in the merge " +
         s"table (${merges.map(_.merged).mkString(", ")}) — token ids " +
         "would be ambiguous and corpus freqs double-joined")
-    // base alphabet: distinct chars over corpus words via the SAME
-    // '(.)' split the chain uses, binary-sorted; bounded model state
-    val alphabet = docs
-      .filter(col("text").isNotNull)
-      .select(explode(TextOps.tokens(col("text"))).as("w"))
-      .select(explode(filter(
-        split(regexp_replace(col("w"), "(.)", "$1 "), " "),
-        c => c =!= "")).as("ch"))
-      .distinct().orderBy("ch")
-      .collect().map(_.getString(0)).toSeq
     require(alphabet.size <= 4096,
       s"alphabet of ${alphabet.size} chars exceeds the model-state cap — " +
         "a byte-level base vocab is the production answer past this")
@@ -567,11 +567,15 @@ object Tokenizer extends QueryGroup {
     require(merges.forall(m => !alphabet.contains(m.merged)),
       "vocab export: a merged token collides with a base-alphabet " +
         "char — token ids would be ambiguous")
-    val ids: Seq[(String, Long)] =
-      alphabet.zipWithIndex.map { case (c, i) => (c, i.toLong) } ++
-        merges.map(m => (m.merged, alphabet.size + m.rank - 1))
-    spark.createDataFrame(ids).toDF("token", "token_id")
+    val base = alphabet.toSeq.sorted(utf8Order)
+    base.zipWithIndex.map { case (c, i) => (c, i.toLong) } ++
+      merges.map(m => (m.merged, base.size + m.rank - 1))
   }
+
+  /** [[vocabIds]] as a (token, token_id) frame, for q181/q188/q195's joins. */
+  private[graft] def vocabTable(spark: SparkSession, alphabet: Set[String],
+      merges: Seq[Merge]): DataFrame =
+    spark.createDataFrame(vocabIds(alphabet, merges)).toDF("token", "token_id")
 
   /** The tokenize projection itself (q167's corpus pass). The text
     * feeding the BPE chain passes the loud alphabet gate first (one
@@ -593,10 +597,12 @@ object Tokenizer extends QueryGroup {
   // (r17) floors the stage at session parallelism; at production row
   // group counts it is the identity.
   private[graft] def tokenized(docs: DataFrame, merges: Seq[Merge]): DataFrame =
-    graft.Tables.spread(docs)
-      .select(col("doc_id"), TextOps.wsTokenCount(col("text")).as("n_ws"),
-      aggregate(
-        transform(TextOps.tokens(gatedText), w => bpeTokenCount(w, merges)),
+    bpeCounts(graft.Tables.spread(docs), w => bpeTokenCount(w, merges))
+
+  /** doc_id, n_ws, and n_bpe: the sum of `perWord` over the gated words. */
+  private def bpeCounts(docs: DataFrame, perWord: Column => Column): DataFrame =
+    docs.select(col("doc_id"), TextOps.wsTokenCount(col("text")).as("n_ws"),
+      aggregate(transform(TextOps.tokens(gatedText), perWord),
         lit(0L), (acc, x) => acc + x).as("n_bpe"))
 
   /** q178's projection: per word, a literal-map lookup of the
@@ -610,11 +616,7 @@ object Tokenizer extends QueryGroup {
     val vocabMap = map(dict.flatMap { case (w, _) =>
       Seq(lit(w), lit(segmentCount(w, merges)))
     }: _*)
-    docs.select(col("doc_id"), TextOps.wsTokenCount(col("text")).as("n_ws"),
-      aggregate(
-        transform(TextOps.tokens(gatedText), w =>
-          coalesce(element_at(vocabMap, w), bpeTokenCount(w, merges))),
-        lit(0L), (acc, x) => acc + x).as("n_bpe"))
+    bpeCounts(docs, w => coalesce(element_at(vocabMap, w), bpeTokenCount(w, merges)))
   }
 
   /** The q166 chain as DuckDB CTEs: d0 = the capped dict in spaced form,

@@ -88,21 +88,22 @@ object WireSource {
   /** Bounded replay of an event-log parquet (batch ≡ stream): re-encodes
     * the events table as wire frames — the test/backfill source.
     */
-  def eventLogReplay(spark: SparkSession, dir: String): DataFrame = {
-    import graft.Tables
-    Tables(spark, dir, "events")
-      .select(
-        graft.functions.Codec.gzip(col("props")).as("data"),
-        spark_partition_id().cast("string").as("shard"),
-        col("ts"))
-  }
+  def eventLogReplay(spark: SparkSession, dir: String): DataFrame =
+    wireShaped(graft.Tables(spark, dir, "events"))
+
+  /** Events as wire frames: gzipped props, the partition as the shard. */
+  private def wireShaped(events: DataFrame): DataFrame =
+    events.select(
+      graft.functions.Codec.gzip(col("props")).as("data"),
+      spark_partition_id().cast("string").as("shard"),
+      col("ts"))
 
   /** STREAMING replay of the event-log parquet: a real file-source stream
     * (micro-batched by the engine), wire-shaped like [[eventLogReplay]].
     * Backfill-through-the-same-pipeline is exactly how a 100 TB history
     * reload runs: same query, streaming source pointed at the archive.
-    */
-  /** @param eventsDir a DIRECTORY of event-log parquet files (the file
+    *
+    * @param eventsDir a DIRECTORY of event-log parquet files (the file
     *                   streaming source tails directories, not files).
     * @param maxFilesPerTrigger bound each micro-batch to this many files —
     *                   the file-source analog of the reference's bounded
@@ -123,10 +124,6 @@ object WireSource {
     val raw = graft.Tables.footerSchema(spark, eventsDir)
     val reader = spark.readStream.schema(raw)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    graft.Tables.normalizeEventsTs(reader.parquet(eventsDir))
-      .select(
-        graft.functions.Codec.gzip(col("props")).as("data"),
-        spark_partition_id().cast("string").as("shard"),
-        col("ts"))
+    wireShaped(graft.Tables.normalizeEventsTs(reader.parquet(eventsDir)))
   }
 }

@@ -361,9 +361,8 @@ class ExpressionParitySpec extends SparkSpec {
     import org.apache.spark.unsafe.types.UTF8String
     import graft.operators.Tokenizer
     val docs = Tables(spark, Sf, "documents")
-    val merges = Tokenizer.bpeTrain(Tokenizer.wordDict(spark, Sf))
-    val inv = Tokenizer.vocabTable(spark, docs, merges)
-      .orderBy("token_id").collect().map(_.getString(0))
+    val (dict, alphabet) = Tokenizer.vocabInputs(docs)
+    val inv = Tokenizer.vocabIds(alphabet, Tokenizer.bpeTrain(dict)).map(_._1).toArray
     val words = docs.filter(col("text").isNotNull)
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(col("w") =!= "").distinct().collect().map(_.getString(0))
@@ -388,8 +387,8 @@ class ExpressionParitySpec extends SparkSpec {
     import org.apache.spark.unsafe.types.UTF8String
     import graft.operators.Tokenizer
     val docs = Tables(spark, Sf, "documents")
-    val merges = Tokenizer.bpeTrain(Tokenizer.wordDict(spark, Sf))
-    val costs = Tokenizer.unigramCosts(spark, docs, merges)
+    val (dict, alphabet) = Tokenizer.vocabInputs(docs)
+    val costs = Tokenizer.unigramCosts(docs, alphabet, Tokenizer.bpeTrain(dict))
     val toks = costs.map(_._1).toArray
     val cs = costs.map(_._2).toArray
     val words = docs.filter(col("text").isNotNull)
@@ -418,8 +417,8 @@ class ExpressionParitySpec extends SparkSpec {
     import org.apache.spark.unsafe.types.UTF8String
     import graft.operators.Tokenizer
     val docs = Tables(spark, Sf, "documents")
-    val merges = Tokenizer.bpeTrain(Tokenizer.wordDict(spark, Sf))
-    val costs = Tokenizer.unigramCosts(spark, docs, merges)
+    val (dict, alphabet) = Tokenizer.vocabInputs(docs)
+    val costs = Tokenizer.unigramCosts(docs, alphabet, Tokenizer.bpeTrain(dict))
     val toks = costs.map(_._1).toArray
     val cs = costs.map(_._2).toArray
     val words = docs.filter(col("text").isNotNull)

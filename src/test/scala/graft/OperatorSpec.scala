@@ -2403,7 +2403,7 @@ class OperatorSpec extends SparkSpec {
 
   test("q167 BPE tokenize: expression chain == driver-side reference segmenter") {
     import graft.operators.Tokenizer
-    val merges = Tokenizer.bpeTrain(Tokenizer.wordDict(spark, Sf))
+    val merges = Tokenizer.bpeTrain(Tokenizer.wordDictOf(Tables(spark, Sf, "documents")))
     // reference: same spaced-replace pipeline in plain Scala
     def refCount(text: String): Long = text.split(" ", -1).map { w =>
       if (w.isEmpty) 0L
@@ -2468,7 +2468,7 @@ class OperatorSpec extends SparkSpec {
     assert(vocab == chain, "vocab-map tokenize diverged from the chain")
     // every dict word's precomputed segment count == the chain's result
     // for that word in isolation (the map's honesty, word by word)
-    val dict = Tokenizer.wordDict(spark, Sf)
+    val dict = Tokenizer.wordDictOf(Tables(spark, Sf, "documents"))
     val merges = Tokenizer.bpeTrain(dict)
     dict.foreach { case (w, _) =>
       var s = " " + w.map(_.toString).mkString(" ") + " "
@@ -2485,7 +2485,7 @@ class OperatorSpec extends SparkSpec {
 
   test("q181 vocab export: id layout honest, token conservation vs q167, segmentation closed over the vocab") {
     import graft.operators.Tokenizer
-    val merges = Tokenizer.bpeTrain(Tokenizer.wordDict(spark, Sf))
+    val merges = Tokenizer.bpeTrain(Tokenizer.wordDictOf(Tables(spark, Sf, "documents")))
     // the fixture's merged strings are distinct — the Σfreq conservation
     // below relies on it (a duplicate string would double-join its freq)
     assert(merges.map(_.merged).distinct.size == merges.size)
@@ -2506,6 +2506,49 @@ class OperatorSpec extends SparkSpec {
     // base chars all appear in the corpus (freq > 0 by construction —
     // the alphabet is corpus-derived)
     assert(base.forall(_._3 >= 0L) && out.map(_._3).sum > 0L)
+  }
+
+  test("vocabInputs: one SQL execution gives the two-query dict and alphabet; q181 and q215 build with it alone; vocabIds orders chars as Spark's orderBy") {
+    import graft.operators.Tokenizer
+    import spark.implicits._
+    val docs = Tables(spark, Sf, "documents")
+    // a corpus whose only U+03A9 is in a word below the dict cap
+    val toy = ((1 to 30).map(i => s"w$i w$i") :+ "\u03a9")
+      .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    for (d <- Seq(docs, toy)) {
+      // the independent two-query reference: the word dict, and the
+      // alphabet as distinct chars over every token OCCURRENCE
+      val refDict = Tokenizer.wordDictOf(d)
+      val refAlphabet = d.filter(col("text").isNotNull)
+        .select(explode(split(col("text"), " ")).as("w"))
+        .select(explode(filter(split(regexp_replace(col("w"), "(.)", "$1 "), " "),
+          c => c =!= "")).as("ch"))
+        .distinct().orderBy("ch").collect().map(_.getString(0)).toSeq
+      val ((dict, alphabet), _, execs) = startedBy(Tokenizer.vocabInputs(d))
+      assert(execs.size == 1, s"vocabInputs ran ${execs.size} SQL executions: $execs")
+      assert(dict == refDict)
+      assert(alphabet == refAlphabet.toSet && alphabet.size == refAlphabet.size)
+      assert(Tokenizer.vocabIds(alphabet, Tokenizer.bpeTrain(dict))
+        .take(alphabet.size).map(_._1) == refAlphabet)
+    }
+    assert(!Tokenizer.wordDictOf(toy).exists(_._1 == "\u03a9"),
+      "the toy corpus must keep its rare word out of the dict")
+    for (q <- Seq("q181_vocab_export", "q215_wordpiece")) {
+      // Tables.spread's partition count is an execution with no job
+      val (_, _, built) = startedBy(SparkEntry.queries(q)(spark, Sf))
+      val vocab = built.filterNot(_.startsWith("rdd at Tables.scala"))
+      assert(vocab.size == 1 && vocab.head.startsWith("collect at Tokenizer.scala"),
+        s"building $q ran SQL executions $built")
+    }
+    // U+FF21 sorts before U+1F600 in UTF-16 and after it in UTF-8: ids
+    // follow Spark's orderBy, not String.compareTo
+    val hand = Set("\uff21", "\ud83d\ude00", "b", "\u00e9")
+    val sparkOrder = spark.createDataFrame(hand.toSeq.map(Tuple1(_))).toDF("ch")
+      .orderBy("ch").collect().map(_.getString(0)).toSeq
+    assert(sparkOrder != hand.toSeq.sorted, "the chars must tell the two orders apart")
+    val merge = Tokenizer.Merge(1L, "b", "\u00e9", "b\u00e9", 1L)
+    assert(Tokenizer.vocabIds(hand, Seq(merge)) ==
+      (sparkOrder :+ "b\u00e9").zipWithIndex.map { case (t, i) => (t, i.toLong) })
   }
 
   test("q183 manifest: partition-order-stable checksum, flips on any single-doc tamper") {
@@ -2537,7 +2580,7 @@ class OperatorSpec extends SparkSpec {
 
   test("q188 incremental vocab: frozen-partial combine == frozen-vocab re-segmentation; conservation holds") {
     import graft.operators.Tokenizer
-    val merges = Tokenizer.bpeTrain(Tokenizer.wordDict(spark, Sf))
+    val merges = Tokenizer.bpeTrain(Tokenizer.wordDictOf(Tables(spark, Sf, "documents")))
     val docs = Tables(spark, Sf, "documents")
     def gate(prefix: String) = substring(org.apache.spark.sql.functions.md5(
       concat(lit(prefix), col("doc_id").cast("string"))), 1, 2)
@@ -2985,7 +3028,7 @@ class OperatorSpec extends SparkSpec {
   test("q198 unigram viterbi: DP == exponential enumeration; BPE-path dominance; NULL discipline") {
     import graft.operators.Tokenizer
     val docs = Tables(spark, Sf, "documents")
-    val merges = Tokenizer.bpeTrain(Tokenizer.wordDict(spark, Sf))
+    val merges = Tokenizer.bpeTrain(Tokenizer.wordDictOf(Tables(spark, Sf, "documents")))
     // r13: q198 runs under the q237-TRAINED table, so the enumeration must
     // too (the BPE-dominance invariant below holds under ANY cost table:
     // the BPE path is one candidate segmentation)
@@ -3370,9 +3413,12 @@ class OperatorSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.unsafe.types.UTF8String
     val docs = Tables(spark, Sf, "documents")
-    val merges = Tokenizer.bpeTrain(Tokenizer.wordDict(spark, Sf))
-    val inv = Tokenizer.vocabTable(spark, docs, merges)
-      .orderBy("token_id").collect().map(_.getString(0)).toSeq
+    val (dict, alphabet) = Tokenizer.vocabInputs(docs)
+    val merges = Tokenizer.bpeTrain(dict)
+    val inv = Tokenizer.vocabIds(alphabet, merges).map(_._1)
+    // the DataFrame form, ordered by id, is the same inventory
+    assert(Tokenizer.vocabTable(spark, alphabet, merges).orderBy("token_id")
+      .collect().map(_.getString(0)).toSeq == inv)
     val invSet = inv.toSet
     val maxTok = inv.map(_.length).max
     // THIRD implementation (after the engine expression and the
@@ -4670,10 +4716,10 @@ class OperatorSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.get(2), r.get(3))).toSeq
     assert(viaTable == q198, "q198 must read exactly the q237 artifact")
     // EM moved the table: at least one token's cost changed from the seed
-    val merges = graft.operators.Tokenizer.bpeTrain(
-      graft.operators.Tokenizer.wordDict(spark, Sf))
-    val seed = graft.operators.Tokenizer.unigramCosts(spark,
-      Tables(spark, Sf, "documents"), merges).toMap
+    val docs = Tables(spark, Sf, "documents")
+    val (dict, alphabet) = graft.operators.Tokenizer.vocabInputs(docs)
+    val seed = graft.operators.Tokenizer.unigramCosts(docs, alphabet,
+      graft.operators.Tokenizer.bpeTrain(dict)).toMap
     assert(trained.exists { case (t, c) => seed(t) != c },
       "EM rounds must actually move at least one rank on this corpus")
   }

@@ -1062,7 +1062,7 @@ class StreamingSpec extends SparkSpec {
     val rounds = 3
     val ms = MemoryStream[Wire]
     withTempDir("graft-exec-ckpt-") { ckpt =>
-      val execs = new SqlExecutionLog
+      val execs = new SparkLog
       spark.sparkContext.addSparkListener(execs)
       try {
         val q = TagPipeline.start(spark, ms.toDF(), new InMemoryDocumentStore,
@@ -1073,11 +1073,12 @@ class StreamingSpec extends SparkSpec {
           ms.addData(ev(story(s"E$i"), i))
           q.processAllAvailable()
         } finally q.stop()
-        execs.drain(spark)
+        execs.drain()
         val sinkRuns = q.recentProgress.filter(_.durationMs.containsKey("addBatch"))
         assert(sinkRuns.count(_.numInputRows > 0) == rounds)
-        assert(execs.of(q.runId) == sinkRuns.length,
-          s"${execs.of(q.runId)} SQL executions for " +
+        val runExecs = execs.executions.count(_.contains(s"runId = ${q.runId}"))
+        assert(runExecs == sinkRuns.length,
+          s"$runExecs SQL executions for " +
             s"${sinkRuns.length} triggers that ran the sink")
         // on a plain wire the query is one stateless stage: the last data
         // trigger ran no state store and no shuffle
@@ -1463,40 +1464,5 @@ object StreamingSpec {
       updates.incrementAndGet()
       next
     }
-  }
-
-  /** The SQL executions Spark started, by the streaming run they ran in
-    * (the run id is in the batch description the engine sets as the
-    * execution's description).
-    */
-  class SqlExecutionLog extends org.apache.spark.scheduler.SparkListener {
-    import org.apache.spark.scheduler.{SparkListenerEvent, SparkListenerJobStart}
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-    private val descriptions =
-      new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    private val marker = s"drain-${java.util.UUID.randomUUID()}"
-    private val drained = new java.util.concurrent.CountDownLatch(1)
-    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-      case s: SparkListenerSQLExecutionStart => descriptions.add(s.description)
-      case _ =>
-    }
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      if (Option(e.properties).exists(
-          _.getProperty("spark.job.description") == marker))
-        drained.countDown()
-
-    /** Waits until every event posted so far has reached this listener:
-      * the bus delivers in order, so it waits for a marker job's start. */
-    def drain(spark: org.apache.spark.sql.SparkSession): Unit = {
-      val sc = spark.sparkContext
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS),
-        "the listener bus did not drain")
-    }
-
-    def of(runId: java.util.UUID): Int =
-      descriptions.asScala.count(_.contains(s"runId = $runId"))
   }
 }

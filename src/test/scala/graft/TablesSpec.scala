@@ -2,12 +2,10 @@ package graft
 
 import java.nio.file.{Files, Path => JPath}
 import java.util.UUID
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.{SparkException, SparkThrowable}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
 
 /** `Tables.apply`, and `Footer.executePruned`'s scans of the unit files a
@@ -17,48 +15,11 @@ import org.apache.spark.sql.AnalysisException
   */
 class TablesSpec extends SparkSpec {
 
-  /** Job groups of every job Spark started while this listener was on. */
-  class JobLog extends SparkListener {
-    val groups = new ConcurrentLinkedQueue[String]()
-    private val marker = s"drain-${UUID.randomUUID()}"
-    private val drained = new CountDownLatch(1)
-    override def onJobStart(e: SparkListenerJobStart): Unit = {
-      val props = Option(e.properties)
-      if (props.exists(_.getProperty("spark.job.description") == marker))
-        drained.countDown()
-      else groups.add(props.flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        .getOrElse(""))
-    }
-    /** Waits until every event posted so far has reached this listener:
-      * the bus delivers in order, so it waits for a marker job's start. */
-    def drain(): Unit = {
-      val sc = spark.sparkContext
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-      assert(drained.await(30, TimeUnit.SECONDS), "the listener bus did not drain")
-    }
-  }
-
-  /** The jobs `body` started on this thread (its job group), bus drained. */
-  def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val log = new JobLog
-    val group = s"tables-spec-${UUID.randomUUID()}"
-    sc.addSparkListener(log)
-    try {
-      sc.setJobGroup(group, "tables spec")
-      val out = try body finally sc.clearJobGroup()
-      log.drain()
-      (out, log.groups.asScala.count(_ == group))
-    } finally sc.removeSparkListener(log)
-  }
-
   test("Tables.apply starts no job and gives the inferred schema, every table at sf0.001, sf0.01 and sf0.1") {
     for (sf <- Seq("0.001", "0.01", "0.1"); t <- Tables.all) {
       val dir = s"${new java.io.File(Sf).getParent}/sf$sf"
       val path = s"$dir/$t.parquet"
-      val (df, jobs) = jobsOf(Tables(spark, dir, t))
+      val (df, jobs, _) = startedBy(Tables(spark, dir, t))
       assert(jobs == 0, s"Tables($dir, $t) started $jobs job(s)")
       // the reference: Spark's own inference, under the confs Tables set
       val inferred = spark.read.parquet(path)
@@ -81,7 +42,7 @@ class TablesSpec extends SparkSpec {
       val names = new java.io.File(dir).list().toSeq
       assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")) &&
         names.count(_.endsWith(".parquet")) >= 2, names)
-      val (read, jobs) = jobsOf(spark.read.schema(Tables.footerSchema(spark, dir)).parquet(dir))
+      val (read, jobs, _) = startedBy(spark.read.schema(Tables.footerSchema(spark, dir)).parquet(dir))
       assert(jobs == 0)
       assert(read.schema == spark.read.parquet(dir).schema)
       assert(read.count() == 100)
@@ -163,7 +124,7 @@ class TablesSpec extends SparkSpec {
       val preds = Footer.prunePredicates
       assert(preds.exists { case (_, keep, _) => units.exists(keep) },
         "no predicate keeps a unit: every pruned scan would be the empty one")
-      val (out, jobs) = jobsOf(Footer.executePruned(spark, "tables-spec", units,
+      val (out, jobs, _) = startedBy(Footer.executePruned(spark, "tables-spec", units,
         Seq("doc_id", "source", "lang", "n_chars"), preds))
       assert(jobs == 0, s"building the scans started $jobs job(s)")
       val inferred = spark.read.parquet(paths: _*)
