@@ -92,21 +92,22 @@ object Pq extends QueryGroup {
   private[graft] def trainSub(base: DataFrame, m: Int): Seq[(Long, Array[Double])] =
     trainSlice(base, m * SubDim + 1, SubDim, K)
 
-  /** Run independent trainings CONCURRENTLY (r18, guide §2.6 job
-    * overlap — the q248 pattern): each Lloyd loop is `Iters` tiny
-    * driver-coordinated collect jobs over K·SubDim model rows, so run
-    * serially the tier pays every loop's job latencies end to end.
-    * The loops are independent and share only the read-only cached base
-    * (Spark's block manager serializes the first materialization), so
-    * each loop's arithmetic — and every downstream code — is
-    * bit-identical to the sequential order. Finite wait + shutdownNow
-    * so a wedged job fails loud rather than hanging (the q248
-    * discipline).
+  /** Run independent driver-side legs CONCURRENTLY on `threads` threads
+    * and give their results in `thunks`' order (guide §2.6 job overlap):
+    * FIFO scheduling back-fills one leg's task tail with the next leg's
+    * tasks. The one runner for q248's seven count legs and for this
+    * tier's Lloyd loops, each of which is `Iters` tiny driver-coordinated
+    * collect jobs over K·SubDim model rows, so run serially the tier
+    * pays every loop's job latencies end to end. The loops are
+    * independent and share only the read-only cached base (Spark's block
+    * manager serializes the first materialization), so each loop's
+    * arithmetic — and every downstream code — is bit-identical to the
+    * sequential order. The wait is finite (10 min, not Duration.Inf) and
+    * `shutdownNow` then interrupts the remaining legs, so a wedged leg
+    * fails loud rather than hanging the query (r17 advice).
     */
-  private[graft] def trainConcurrently(
-      thunks: Seq[() => Seq[(Long, Array[Double])]])
-      : Seq[Seq[(Long, Array[Double])]] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
+  private[graft] def concurrently[T](threads: Int)(thunks: Seq[() => T]): Seq[T] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
     try {
@@ -118,14 +119,14 @@ object Pq extends QueryGroup {
 
   /** All four subspace codebooks, trained concurrently. */
   private[graft] def trainSubs(base: DataFrame): Seq[Seq[(Long, Array[Double])]] =
-    trainConcurrently((0 until SubSpaces).map(m => () => trainSub(base, m)))
+    concurrently(SubSpaces)((0 until SubSpaces).map(m => () => trainSub(base, m)))
 
   /** Coarse quantizer + the four subspace codebooks — five independent
     * loops over the same cached base, overlapped (q173/q177).
     */
   private[graft] def trainCoarseAndSubs(base: DataFrame)
       : (Seq[(Long, Array[Double])], Seq[Seq[(Long, Array[Double])]]) = {
-    val all = trainConcurrently(
+    val all = concurrently(SubSpaces + 1)(
       (() => trainSlice(base, 1, SubSpaces * SubDim, CoarseK)) +:
         (0 until SubSpaces).map(m => () => trainSub(base, m)))
     (all.head, all.tail)
@@ -395,7 +396,7 @@ object Pq extends QueryGroup {
         .withColumn("resid",
           zip_with(col("xd"), element_at(centMap, col("cell")),
             (a, b) => a - b)))
-    val residBooks = trainConcurrently((0 until SubSpaces).map(m => () =>
+    val residBooks = concurrently(SubSpaces)((0 until SubSpaces).map(m => () =>
       trainVecD(withResid.select(col("vec_id"),
         slice(col("resid"), m * SubDim + 1, SubDim).as("xd")), K)))
     (withResid, residBooks)

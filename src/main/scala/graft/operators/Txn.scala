@@ -436,22 +436,9 @@ object Txn extends QueryGroup {
     // tasks (guide §2.6). 4 in flight saturates the box without
     // starving any single leg.
     val pending = chainPending :+ dimProbe :+ selfJoin :+ logDocs
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val rowsOut = try {
-      val futures = pending.map { case (meta, leg) =>
-        scala.concurrent.Future((meta, leg.count()))
-      }
-      // finite (generous) wait, not Duration.Inf: a wedged leg fails
-      // LOUD after 10 min instead of hanging the query forever, and the
-      // shutdownNow below then interrupts the remaining legs (r17
-      // advice)
-      futures.map(f => scala.concurrent.Await.result(
-        f, scala.concurrent.duration.Duration(10, "min")))
-    } finally pool.shutdownNow()
-
-    rowsOut
+    Pq.concurrently(4)(pending.map { case (meta, leg) =>
+      () => (meta, leg.count())
+    })
       .map { case ((js, step, bt, el, er, eo, adv), actual) =>
         (js, step, bt, el, er, eo, actual, adv)
       }
@@ -461,9 +448,9 @@ object Txn extends QueryGroup {
   }
 
   /** The executed plan's base-table scan order, leftmost-deep first —
-    * the observation leg of q267 (AQE is pinned OFF in its scope, so
-    * the executed plan is the planned left-deep tree and pre-order
-    * leaf collection IS the join order).
+    * the observation leg of q267 (AQE is pinned OFF on its legs'
+    * session, so the executed plan is the planned left-deep tree and
+    * pre-order leaf collection IS the join order).
     */
   private[graft] def scanOrderOf(df: DataFrame): String = {
     import org.apache.spark.sql.execution.FileSourceScanExec
@@ -480,66 +467,74 @@ object Txn extends QueryGroup {
     names.mkString(",")
   }
 
+  private val NoAqe = "spark.sql.adaptive.enabled" -> "false"
+
+  /** A session of its own for one query's pinned legs: a new session of
+    * `spark` with both broadcast thresholds at -1, `pins` on top, and
+    * `rule` as its only `experimental.extraOptimizations`. A new session
+    * has its own SQL conf and experimental methods and shares the
+    * SparkContext, the cache and the session extensions, so nothing is
+    * saved or restored and a query running concurrently on `spark` plans
+    * as before. A frame is optimized by the session that built it: every
+    * frame a leg executes is built on the returned session.
+    *
+    * Both thresholds: AQE's adaptive threshold only FALLS BACK to the
+    * non-adaptive conf when unset (r14 ADVICE), so a session that set it
+    * would let the final adaptive plan broadcast un-hinted joins.
+    */
+  private def pinnedSession(spark: org.apache.spark.sql.SparkSession,
+      rule: org.apache.spark.sql.catalyst.rules.Rule[
+        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan],
+      pins: (String, String)*): org.apache.spark.sql.SparkSession = {
+    val s = spark.newSession()
+    (Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") ++ pins)
+      .foreach { case (k, v) => s.conf.set(k, v) }
+    s.experimental.extraOptimizations = Seq(rule)
+    s
+  }
+
   /** q267: JOIN ORDER driven by the catalog INSIDE Catalyst — the rule
     * form of q248's greedy smallest-first advice ([[
-    * graft.plans.JoinReorderRule]], registered per-query via
-    * `spark.experimental.extraOptimizations` with save/restore, the
-    * q252 discipline). The user writes the chain LARGEST-FIRST (the
-    * worst order: every intermediate result is corpus-sized) and the
-    * planner rebuilds it smallest-first from footer row counts; the
-    * `observed_order` column reads the EXECUTED plan's scan order, and
-    * the oracle re-derives it from COUNT(*) arithmetic alone — the
-    * q168 self-validating leg: a rule that reorders wrongly, fails to
-    * fire, or fires on the hinted control lands as a red row. AQE and
-    * both broadcast thresholds are pinned inside the scope so the
-    * executed tree is the planned left-deep SMJ chain.
+    * graft.plans.JoinReorderRule]], the only extra optimizer rule of the
+    * query's [[pinnedSession]], the q252 discipline). The user writes
+    * the chain LARGEST-FIRST (the worst order: every intermediate result
+    * is corpus-sized) and the planner rebuilds it smallest-first from
+    * footer row counts; the `observed_order` column reads the EXECUTED
+    * plan's scan order, and the oracle re-derives it from COUNT(*)
+    * arithmetic alone — the q168 self-validating leg: a rule that
+    * reorders wrongly, fails to fire, or fires on the hinted control
+    * lands as a red row. AQE and both broadcast thresholds are pinned on
+    * the legs' session so the executed tree is the planned left-deep SMJ
+    * chain.
     */
   private[graft] def catalystJoinReorder(
       spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def t(n: String) = graft.Tables(spark, dir, n)
     val catalog = graft.Tables.all
       .map(n => n -> Footer.tableStats(dir, n).values.map(_.n_values).max)
       .toMap
-    val rule = graft.plans.JoinReorderRule(catalog)
-    val exp = spark.experimental
-    val prevRules = exp.extraOptimizations
-    val pins = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.enabled" -> "false")
-    val prev = pins.map { case (k, _) =>
-      k -> (try Option(spark.conf.get(k)) catch { case _: Exception => None })
-    }
-    val rows = try {
-      pins.foreach { case (k, v) => spark.conf.set(k, v) }
-      exp.extraOptimizations = prevRules :+ rule
-      val cases = Seq(
-        ("chain3", t("lineitem")
-          .join(t("orders"), col("l_orderkey") === col("o_orderkey"))
-          .join(t("customer"), col("o_custkey") === col("c_custkey"))),
-        ("chain4", t("orders")
-          .join(t("customer"), col("o_custkey") === col("c_custkey"))
-          .join(t("nation"), col("c_nationkey") === col("n_nationkey"))
-          .join(t("region"), col("n_regionkey") === col("r_regionkey"))),
-        // the CONTROL: a user hint anywhere in the chain is a user
-        // decision — the rule must abstain and the user order executes
-        ("hinted", t("lineitem")
-          .join(t("orders"), col("l_orderkey") === col("o_orderkey"))
-          .hint("merge")
-          .join(t("customer"), col("o_custkey") === col("c_custkey"))))
-      cases.map { case (name, joined) =>
-        val cdf = joined.groupBy().count()
-        val n = cdf.head().getLong(0)
-        (name, scanOrderOf(cdf), n)
-      }
-    } finally {
-      exp.extraOptimizations = prevRules
-      prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
-    }
-    rows.toDF("join_set", "observed_order", "n_out").orderBy("join_set")
+    val legs = pinnedSession(spark, graft.plans.JoinReorderRule(catalog), NoAqe)
+    def t(n: String) = graft.Tables(legs, dir, n)
+    val cases = Seq(
+      ("chain3", t("lineitem")
+        .join(t("orders"), col("l_orderkey") === col("o_orderkey"))
+        .join(t("customer"), col("o_custkey") === col("c_custkey"))),
+      ("chain4", t("orders")
+        .join(t("customer"), col("o_custkey") === col("c_custkey"))
+        .join(t("nation"), col("c_nationkey") === col("n_nationkey"))
+        .join(t("region"), col("n_regionkey") === col("r_regionkey"))),
+      // the CONTROL: a user hint anywhere in the chain is a user
+      // decision — the rule must abstain and the user order executes
+      ("hinted", t("lineitem")
+        .join(t("orders"), col("l_orderkey") === col("o_orderkey"))
+        .hint("merge")
+        .join(t("customer"), col("o_custkey") === col("c_custkey"))))
+    cases.map { case (name, joined) =>
+      val cdf = joined.groupBy().count()
+      val n = cdf.head().getLong(0)
+      (name, scanOrderOf(cdf), n)
+    }.toDF("join_set", "observed_order", "n_out").orderBy("join_set")
   }
 
   /** q274: SELECTIVITY-AWARE JOIN ORDER — the r15 verdict's #5: raw
@@ -561,49 +556,30 @@ object Txn extends QueryGroup {
   private[graft] def selectivityJoinReorder(
       spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def t(n: String) = graft.Tables(spark, dir, n)
     val cat = graft.plans.PlannerRules.catalogStatsFor(dir)
-    val rule = graft.plans.JoinReorderRule(cat.rows, cat.ranges)
     val (loK, hiK) = cat.ranges("lineitem")("l_orderkey")
     val cut = loK + (hiK - loK) / 100L
-    val exp = spark.experimental
-    val prevRules = exp.extraOptimizations
-    // constraintPropagation is pinned OFF in this scope: Catalyst also
+    // constraintPropagation is pinned OFF on the legs' session: Catalyst also
     // infers `o_orderkey <= cut` on ORDERS from the equi-join condition
     // (measured — the inferred filter discounted orders below lineitem
     // and the greedy started there), which is version-dependent
     // optimizer behavior the closed-form oracle must not have to
     // mirror. At scale the inference only discounts MORE (better
     // plans); the flip this query grades is the USER predicate's.
-    val pins = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.constraintPropagation.enabled" -> "false")
-    val prev = pins.map { case (k, _) =>
-      k -> (try Option(spark.conf.get(k)) catch { case _: Exception => None })
-    }
-    val rows = try {
-      pins.foreach { case (k, v) => spark.conf.set(k, v) }
-      exp.extraOptimizations = prevRules :+ rule
-      def chain(lineitem: DataFrame) = lineitem
-        .join(t("orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t("customer"), col("o_custkey") === col("c_custkey"))
-      val cases = Seq(
-        ("control", chain(t("lineitem"))),
-        ("selective", chain(t("lineitem").filter(col("l_orderkey") <= cut))))
-      cases.map { case (name, joined) =>
-        val cdf = joined.groupBy().count()
-        val n = cdf.head().getLong(0)
-        (name, scanOrderOf(cdf), n)
-      }
-    } finally {
-      exp.extraOptimizations = prevRules
-      prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
-    }
-    rows.toDF("join_set", "observed_order", "n_out").orderBy("join_set")
+    val legs = pinnedSession(spark, graft.plans.JoinReorderRule(cat.rows, cat.ranges),
+      NoAqe, "spark.sql.constraintPropagation.enabled" -> "false")
+    def t(n: String) = graft.Tables(legs, dir, n)
+    def chain(lineitem: DataFrame) = lineitem
+      .join(t("orders"), col("l_orderkey") === col("o_orderkey"))
+      .join(t("customer"), col("o_custkey") === col("c_custkey"))
+    val cases = Seq(
+      ("control", chain(t("lineitem"))),
+      ("selective", chain(t("lineitem").filter(col("l_orderkey") <= cut))))
+    cases.map { case (name, joined) =>
+      val cdf = joined.groupBy().count()
+      val n = cdf.head().getLong(0)
+      (name, scanOrderOf(cdf), n)
+    }.toDF("join_set", "observed_order", "n_out").orderBy("join_set")
   }
 
   /** Each table's designated key column — the numeric envelope leg the
@@ -694,43 +670,25 @@ object Txn extends QueryGroup {
     val rows = Map(layoutName -> n, "orders" -> nOrders)
     val fileStats = Map(layoutName -> units.map(u =>
       (u.nRows, u.lo.keys.map(c => c -> (u.lo(c), u.hi(c))).toMap)))
-    val rule = graft.plans.StatsBroadcastRule(rows, fileStats)
+    val legs = pinnedSession(spark, graft.plans.StatsBroadcastRule(rows, fileStats),
+      NoAqe)
     val loK = units.map(_.lo("k")).min
     val hiK = units.map(_.hi("k")).max
     val cut = loK + (hiK - loK) / 8L
     val bound = units.filter(_.lo("k") <= cut).map(_.nRows).sum
-    val layout = spark.read.parquet(layoutDir)
-    val orders = graft.Tables(spark, dir, "orders")
+    val layout = legs.read.parquet(layoutDir)
+    val orders = graft.Tables(legs, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"))
-    val exp = spark.experimental
-    val prevRules = exp.extraOptimizations
-    val pins = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.enabled" -> "false")
-    val prev = pins.map { case (k, _) =>
-      k -> (try Option(spark.conf.get(k)) catch { case _: Exception => None })
-    }
-    val out = try {
-      pins.foreach { case (k, v) => spark.conf.set(k, v) }
-      exp.extraOptimizations = prevRules :+ rule
-      val cases = Seq(
-        ("bounded", n, layout.filter(col("k") <= cut), bound),
-        ("control", n, layout, n))
-      cases.map { case (name, raw, side, est) =>
-        val joined = side
-          .join(orders, col("user_id") === col("o_custkey"))
-          .groupBy().count()
-        val nOut = joined.head().getLong(0)
-        (name, est, nOrders, physicalJoinOf(joined), nOut)
-      }
-    } finally {
-      exp.extraOptimizations = prevRules
-      prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
-    }
-    out.toDF("join_set", "est_left", "est_right", "physical", "n_out")
+    val cases = Seq(
+      ("bounded", layout.filter(col("k") <= cut), bound),
+      ("control", layout, n))
+    cases.map { case (name, side, est) =>
+      val joined = side
+        .join(orders, col("user_id") === col("o_custkey"))
+        .groupBy().count()
+      val nOut = joined.head().getLong(0)
+      (name, est, nOrders, physicalJoinOf(joined), nOut)
+    }.toDF("join_set", "est_left", "est_right", "physical", "n_out")
       .orderBy("join_set")
   }
 
@@ -758,11 +716,10 @@ object Txn extends QueryGroup {
   /** q252: the stats catalog wired INTO Catalyst — see
     * [[graft.plans.StatsBroadcastRule]]. q248 executed its advice BY
     * HAND (`exec` picked the broadcast side imperatively); here the
-    * user code is a stock un-hinted `l.join(r, cond)` and the RULE,
-    * registered for the scope of this query via
-    * `spark.experimental.extraOptimizations` (save/restore), makes the
-    * planner pick the strategy from the q239 footer catalog. The
-    * autoBroadcastJoinThreshold is pinned to -1 inside the scope — the
+    * user code is a stock un-hinted `l.join(r, cond)` and the RULE, the
+    * only extra optimizer rule of the query's [[pinnedSession]], makes
+    * the planner pick the strategy from the q239 footer catalog. The
+    * autoBroadcastJoinThreshold is pinned to -1 on that session — the
     * 100 TB posture where byte-size auto-broadcast guesses are off and
     * every broadcast must be justified by catalog stats — so every
     * `broadcast_hash` in the `physical` column is the rule's doing,
@@ -775,54 +732,32 @@ object Txn extends QueryGroup {
   private[graft] def catalystAdvisedJoins(
       spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def t(n: String) = graft.Tables(spark, dir, n)
     val catalog = graft.Tables.all
       .map(n => n -> Footer.tableStats(dir, n).values.map(_.n_values).max)
       .toMap
-    val rule = graft.plans.StatsBroadcastRule(catalog)
-    val exp = spark.experimental
-    val prevRules = exp.extraOptimizations
-    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    // AQE's adaptive threshold only FALLS BACK to the non-adaptive conf
-    // when unset (r14 ADVICE) — a session that set it explicitly would
-    // let the final adaptive plan broadcast un-hinted joins; pin both.
-    val adaptiveKey = "spark.sql.adaptive.autoBroadcastJoinThreshold"
-    val prevAdaptive = // unset reads back as null, not an exception
-      try Option(spark.conf.get(adaptiveKey)) catch { case _: Exception => None }
-    val rows = try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set(adaptiveKey, "-1")
-      exp.extraOptimizations = prevRules :+ rule
-      val cases = Seq(
-        ("chain_dim", "nation", "customer",
-          t("nation").join(t("customer"),
-            col("n_nationkey") === col("c_nationkey"))),
-        ("dim_probe", "customer", "nation",
-          t("customer").join(t("nation"),
-            col("c_nationkey") === col("n_nationkey"))),
-        ("selfjoin", "lineitem", "lineitem",
-          t("lineitem").select(col("l_orderkey").as("ka"),
-              col("l_linenumber").as("la"))
-            .join(t("lineitem").select(col("l_orderkey").as("kb"),
-              col("l_linenumber").as("lb")), col("ka") === col("kb"))))
-      cases.map { case (name, lt, rt, joined) =>
-        // count THROUGH the join plan, then read the final physical plan
-        // of the executed count — the join node it contains is the one
-        // that actually ran
-        val cdf = joined.groupBy().count()
-        val n = cdf.head().getLong(0)
-        (name, catalog(lt), catalog(rt), joinAdvice(catalog(lt), catalog(rt)),
-          physicalJoinOf(cdf), n)
-      }
-    } finally {
-      exp.extraOptimizations = prevRules
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
-      prevAdaptive match {
-        case Some(v) => spark.conf.set(adaptiveKey, v)
-        case None    => spark.conf.unset(adaptiveKey)
-      }
-    }
-    rows.toDF("join_set", "est_left", "est_right", "advice", "physical",
+    val legs = pinnedSession(spark, graft.plans.StatsBroadcastRule(catalog))
+    def t(n: String) = graft.Tables(legs, dir, n)
+    val cases = Seq(
+      ("chain_dim", "nation", "customer",
+        t("nation").join(t("customer"),
+          col("n_nationkey") === col("c_nationkey"))),
+      ("dim_probe", "customer", "nation",
+        t("customer").join(t("nation"),
+          col("c_nationkey") === col("n_nationkey"))),
+      ("selfjoin", "lineitem", "lineitem",
+        t("lineitem").select(col("l_orderkey").as("ka"),
+            col("l_linenumber").as("la"))
+          .join(t("lineitem").select(col("l_orderkey").as("kb"),
+            col("l_linenumber").as("lb")), col("ka") === col("kb"))))
+    cases.map { case (name, lt, rt, joined) =>
+      // count THROUGH the join plan, then read the final physical plan
+      // of the executed count — the join node it contains is the one
+      // that actually ran
+      val cdf = joined.groupBy().count()
+      val n = cdf.head().getLong(0)
+      (name, catalog(lt), catalog(rt), joinAdvice(catalog(lt), catalog(rt)),
+        physicalJoinOf(cdf), n)
+    }.toDF("join_set", "est_left", "est_right", "advice", "physical",
       "n_out").orderBy("join_set")
   }
 

@@ -38,8 +38,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *    LESS eagerly, never more;
   *  - joins already carrying any hint are respected, never overridden.
   *
-  * Registered per-query via `spark.experimental.extraOptimizations`
-  * (save/restore — the scoped-override stance of the r13 advice fix);
+  * Registered per-query as the only `experimental.extraOptimizations`
+  * of a session of the query's own (`Txn.pinnedSession`);
   * the single `graft.GraftExtensions` entry point installs it session-wide (PlannerRules.inject).
   */
 case class StatsBroadcastRule(catalog: Map[String, Long],

@@ -8,7 +8,7 @@ import java.time.Duration
 /** Bounded-retry HTTP send shared by [[HttpDocumentStore]] and
   * [[HttpBlobFetcher]]: 4xx returns to the caller (client errors are
   * semantic, not transient), 5xx and I/O faults retry with exponential
-  * backoff until `maxAttempts`, then surface as IOException — failing
+  * backoff until [[MaxAttempts]], then surface as IOException — failing
   * the task, which Spark then retries (at-least-once, safe under
   * idempotent consumers).
   */
@@ -35,9 +35,12 @@ private[graft] object HttpRetry {
     * keep-alives.
     */
   lazy val wirePool: java.util.concurrent.ExecutorService = daemonPool(64)
+
+  /** Attempts per request, the first one included. */
+  val MaxAttempts = 4
+
   def send[T](client: HttpClient, req: HttpRequest,
-      handler: HttpResponse.BodyHandler[T],
-      maxAttempts: Int, backoffMs: Long): HttpResponse[T] = {
+      handler: HttpResponse.BodyHandler[T], backoffMs: Long): HttpResponse[T] = {
     var attempt = 0
     while (true) {
       attempt += 1
@@ -45,7 +48,7 @@ private[graft] object HttpRetry {
         try Some(client.send(req, handler))
         catch {
           case e: java.io.IOException =>
-            if (attempt >= maxAttempts)
+            if (attempt >= MaxAttempts)
               throw new java.io.IOException(
                 s"endpoint unreachable after $attempt attempts: " +
                   s"${req.method()} ${req.uri()}", e)
@@ -53,7 +56,7 @@ private[graft] object HttpRetry {
         }
       resp match {
         case Some(r) if r.statusCode() < 500 => return r
-        case Some(r) if attempt >= maxAttempts =>
+        case Some(r) if attempt >= MaxAttempts =>
           throw new java.io.IOException(
             s"endpoint failed after $attempt attempts: " +
               s"${req.method()} ${req.uri()} -> ${r.statusCode()}")
@@ -82,7 +85,6 @@ private[graft] object HttpRetry {
   */
 class HttpBlobFetcher(
     baseUrl: String,
-    maxAttempts: Int = 4,
     backoffMs: Long = 50L,
     timeoutMs: Long = 5000L) extends Serializable {
 
@@ -107,7 +109,7 @@ class HttpBlobFetcher(
       .header("Range", s"bytes=$offset-${offset + length - 1}")
       .GET().build()
     val r = HttpRetry.send(client, req,
-      HttpResponse.BodyHandlers.ofByteArray(), maxAttempts, backoffMs)
+      HttpResponse.BodyHandlers.ofByteArray(), backoffMs)
     val bytes = r.statusCode() match {
       case 206 => r.body()
       case 200 =>

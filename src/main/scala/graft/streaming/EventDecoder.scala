@@ -23,18 +23,20 @@ import graft.functions.Codec
   */
 object EventDecoder {
 
-  /** Spark schema of [[AnsModel.ContentEvent]] (declared once; permissive
-    * parse tolerates absent fields like the reference's `.get()` probes).
+  /** The Kinesis event envelope (`app.py:56-67`), declared once; the
+    * permissive parse tolerates absent fields like the reference's
+    * `.get()` probes. [[parseEvent]] adds the >1 MB S3-pointer `url`
+    * (`app.py:43-46`).
     */
   val EventSchema: StructType = StructType(Seq(
-    StructField("id", StringType),
-    StructField("operation", StringType),
-    StructField("created", BooleanType),
-    StructField("type", StringType),
-    StructField("published", BooleanType),
-    StructField("trigger", StructType(Seq(
+    StructField("id", StringType),          // app.py:56,59
+    StructField("operation", StringType),   // app.py:56,60 — e.g. "insert-story"
+    StructField("created", BooleanType),    // app.py:61
+    StructField("type", StringType),        // app.py:62
+    StructField("published", BooleanType),  // app.py:56,63
+    StructField("trigger", StructType(Seq(  // null-guarded at app.py:64
       StructField("referent_update", BooleanType)))),
-    StructField("body", StructType(Seq(
+    StructField("body", StructType(Seq(     // app.py:65-66
       StructField("headlines", StructType(Seq(
         StructField("basic", StringType)))),
       StructField("revision", LongType)))),

@@ -96,7 +96,6 @@ private[streaming] object AnsJson {
   */
 class HttpDocumentStore(
     baseUrl: String,
-    maxAttempts: Int = 4,
     backoffMs: Long = 50L,
     timeoutMs: Long = 5000L) extends DocumentStore {
 
@@ -114,8 +113,7 @@ class HttpDocumentStore(
     * retry.
     */
   private def send(req: HttpRequest): HttpResponse[String] =
-    HttpRetry.send(client, req, HttpResponse.BodyHandlers.ofString(),
-      maxAttempts, backoffMs)
+    HttpRetry.send(client, req, HttpResponse.BodyHandlers.ofString(), backoffMs)
 
   /** The stored document's body and ETag; None for a 404. Any other
     * status that is not 2xx throws [[DocumentWriteRejected]]: its body

@@ -82,7 +82,8 @@ object TagPipeline {
   /** Reference poll cadence (`app.py:29,78`). */
   val PollInterval: Trigger = Trigger.ProcessingTime("3 seconds")
 
-  /** Enrich + tag one micro-batch against the store, write back.
+  /** Enrich + tag one micro-batch against the store, write back. The
+    * tag is the reference's constant [[AutoTag]] (`tag.py:59-62`).
     *
     * This is the tag sink's `addBatch` body and [[runBatch]]'s: the
     * reference's EP3 shape (`tag.py:49-66` — GET by id, modify, PUT),
@@ -110,7 +111,7 @@ object TagPipeline {
     * rethrows the first failure unwrapped (the store's own exception, not
     * a `CompletionException`): a failed batch leaves no update running.
     */
-  def enrichAndUpsert(storeKey: String, tag: Tag)(batch: DataFrame): Unit = {
+  def enrichAndUpsert(storeKey: String)(batch: DataFrame): Unit = {
     val idIdx = batch.schema.fieldIndex("id")
     batch.queryExecution.toRdd.foreachPartition { rows: Iterator[InternalRow] =>
       val store = DocumentStore.resolve(storeKey)
@@ -122,7 +123,7 @@ object TagPipeline {
               // copied out here: the row's buffer is reused for the next one
               val id = row.getUTF8String(idIdx).toString
               inFlight += CompletableFuture.runAsync(() => store.update(id)(cur =>
-                DocumentStore.modifyAns(cur.getOrElse(AnsDoc(id, None, None)), tag)),
+                DocumentStore.modifyAns(cur.getOrElse(AnsDoc(id, None, None)), AutoTag)),
                 HttpRetry.wirePool)
             }
           }
@@ -157,8 +158,7 @@ object TagPipeline {
     *             ts timestamp) — MemoryStream in tests, Kinesis in prod.
     */
   def start(spark: SparkSession, wire: DataFrame, store: DocumentStore,
-      checkpointDir: String, tag: Tag = AutoTag,
-      trigger: Trigger = PollInterval,
+      checkpointDir: String, trigger: Trigger = PollInterval,
       storeKey: String = "default"): StreamingQuery = {
     require(wire.sparkSession eq spark,
       s"the wire frame belongs to session ${wire.sparkSession}, not to " +
@@ -170,7 +170,7 @@ object TagPipeline {
         classOf[LocalCheckpointFileManager].getName)
     EventDecoder.decodeAndFilter(wire).writeStream
       .format(classOf[TagSinkProvider].getName)
-      .options(TagSinkProvider.options(storeKey, tag))
+      .option("storeKey", storeKey)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -181,9 +181,9 @@ object TagPipeline {
     * expressions and the same sink body, so it leaves the store as the
     * stream does (Structured Streaming's batch ≡ stream unification).
     */
-  def runBatch(wire: DataFrame, store: DocumentStore, tag: Tag = AutoTag,
+  def runBatch(wire: DataFrame, store: DocumentStore,
       storeKey: String = "default-batch"): Unit = {
     DocumentStore.register(storeKey, store)
-    enrichAndUpsert(storeKey, tag)(EventDecoder.decodeAndFilter(wire))
+    enrichAndUpsert(storeKey)(EventDecoder.decodeAndFilter(wire))
   }
 }

@@ -105,13 +105,8 @@ object WireSource {
     *
     * @param eventsDir a DIRECTORY of event-log parquet files (the file
     *                   streaming source tails directories, not files).
-    * @param maxFilesPerTrigger bound each micro-batch to this many files —
-    *                   the file-source analog of the reference's bounded
-    *                   fetch (`get_records(Limit=20)`, `app.py:22`) and of
-    *                   the kinesis option above; None = engine default.
     */
-  def eventLogReplayStream(spark: SparkSession, eventsDir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+  def eventLogReplayStream(spark: SparkSession, eventsDir: String): DataFrame = {
     // legacy ns timestamps need the same conf batch reads use; the tz
     // pin keeps an NTZ-encoded ts on the same UTC instant as batch
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -122,8 +117,7 @@ object WireSource {
     // dispatch Tables uses for batch, so batch ≡ stream holds across
     // testdata regenerations; read from a footer, so no inference job
     val raw = graft.Tables.footerSchema(spark, eventsDir)
-    val reader = spark.readStream.schema(raw)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    wireShaped(graft.Tables.normalizeEventsTs(reader.parquet(eventsDir)))
+    wireShaped(graft.Tables.normalizeEventsTs(
+      spark.readStream.schema(raw).parquet(eventsDir)))
   }
 }

@@ -227,6 +227,36 @@ class LayoutSpec extends SparkSpec {
     assert(out.last.getLong(1) <= ur && out.last.getLong(1) > 0L)
   }
 
+  test("both layout writers cluster a sort key with ties: every unit once, full units, one geometry (r16 ADVICE)") {
+    import graft.operators.{Footer, HouseWriter}
+    val docs = Tables(spark, Sf, "documents").select(col("doc_id"), col("n_chars"))
+    val n = docs.count()
+    val perUnit = 64L
+    // n_chars alone has many ties, some across unit boundaries: only the
+    // unit id leading the in-partition sort keeps each unit contiguous
+    val sortCols = Seq(col("n_chars"))
+    val parquet = Footer.writeUnits(docs, sortCols, "ties_parquet", perUnit)
+    val (house, _) = Footer.writeUnitsHouse(docs, sortCols, "ties_house",
+      perUnit, HouseWriter.HouseSpec())
+    val numUnits = (n + perUnit - 1L) / perUnit
+    assert(numUnits > 2L, "fixture must produce several units")
+    for ((writer, units) <- Seq("parquet" -> parquet, "house" -> house)) {
+      assert(units.size == numUnits && units.map(_.path).distinct.size == units.size,
+        s"$writer wrote ${units.size} unit files, want $numUnits")
+      assert(units.map(_.nRows) ==
+        Seq.fill(numUnits.toInt - 1)(perUnit) :+ (n - perUnit * (numUnits - 1L)),
+        s"$writer unit sizes: ${units.map(_.nRows)}")
+      val back = spark.read.parquet(units.map(_.path): _*)
+      assert(back.count() == n && back.select("doc_id").distinct().count() == n,
+        s"$writer must write every row exactly once")
+    }
+    // which tied row lands in which unit depends on placement, so the
+    // geometry compared is the sort key's envelope
+    def geometry(units: Seq[Footer.UnitStats]) =
+      units.map(u => (u.nRows, u.lo("n_chars"), u.hi("n_chars")))
+    assert(geometry(parquet) == geometry(house))
+  }
+
   test("appendManifest CREATEs the manifest when absent (r15 ADVICE: IVM append into a fresh layout)") {
     import graft.operators.{Footer, HouseWriter}
     val dir = new java.io.File(

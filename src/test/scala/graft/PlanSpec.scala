@@ -1182,6 +1182,44 @@ class PlanSpec extends SparkSpec {
         "the unsound under-estimate)")
   }
 
+  test("pinned join-advisor legs run on a session of their own: the caller's session never sees their pins or rules") {
+    val keys = Seq("spark.sql.adaptive.enabled",
+      "spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    def seen(): (Seq[Option[String]], Seq[AnyRef]) =
+      (keys.map(spark.conf.getOption), spark.experimental.extraOptimizations)
+    val before = seen()
+    // per query: (reads, reads that differed from `before`, the first of
+    // them, the session after the query)
+    val runs = Seq("q252_catalyst_stats_broadcast", "q267_catalyst_join_reorder",
+        "q274_selectivity_reorder", "q277_selectivity_broadcast").map { q =>
+      val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+      val leg = new Thread(() =>
+        try SparkEntry.queries(q)(spark, Sf).collect()
+        catch { case e: Throwable => failure.set(e) })
+      leg.start()
+      // poll the caller's session while the query's legs plan and run
+      var reads = 0
+      var changed = 0
+      var first = Option.empty[(Seq[Option[String]], Seq[AnyRef])]
+      while (leg.isAlive) {
+        val now = seen()
+        reads += 1
+        if (now != before) { changed += 1; if (first.isEmpty) first = Some(now) }
+        Thread.sleep(1L)
+      }
+      leg.join()
+      assert(failure.get() == null, s"$q failed: ${failure.get()}")
+      q -> ((reads, changed, first, seen()))
+    }
+    assert(runs.forall(_._2._1 > 0), "the poll must overlap each query")
+    val wrote = runs.collect { case (q, (reads, changed, first, after))
+        if changed > 0 || after != before =>
+      s"$q: $changed of $reads reads differed (first: $first), after: $after"
+    }
+    assert(wrote.isEmpty, s"the caller's session was written: ${wrote.mkString("; ")}")
+  }
+
   test("q252 side bound: a join-free multi-leaf side (Union) is bounded by the SUM of its leaves, not the max (r16 ADVICE)") {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join}

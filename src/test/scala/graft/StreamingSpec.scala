@@ -510,7 +510,7 @@ class StreamingSpec extends SparkSpec {
       if (name == "packed/shard-0.bin") Some(payload.getBytes("UTF-8")) else None)
     try {
       val fetcher = new graft.streaming.HttpBlobFetcher(
-        stub.baseUrl, maxAttempts = 4, backoffMs = 5L)
+        stub.baseUrl, backoffMs = 5L)
       // 206 path: exactly the requested slice
       assert(new String(fetcher.fetchRange("/blobs/packed/shard-0.bin", 16, 16),
         "UTF-8") == payload.substring(16, 32))
@@ -854,9 +854,9 @@ class StreamingSpec extends SparkSpec {
     val stub = new DraftApiStub
     val url = stub.baseUrl
     stub.stop() // nothing listening — every attempt is a connect error
-    val store = new HttpDocumentStore(url, maxAttempts = 2, backoffMs = 5L)
+    val store = new HttpDocumentStore(url, backoffMs = 5L)
     val e = intercept[java.io.IOException](store.get("X"))
-    assert(e.getMessage.contains("2 attempts"),
+    assert(e.getMessage.contains("4 attempts"),
       s"retries must be bounded and reported, got: ${e.getMessage}")
   }
 
@@ -1052,7 +1052,7 @@ class StreamingSpec extends SparkSpec {
     DocumentStore.register("overlap", store)
     val batch = Seq("A", "B", "C", "D").toDF("id").coalesce(1)
     assert(batch.rdd.getNumPartitions == 1)
-    TagPipeline.enrichAndUpsert("overlap", AutoTag)(batch)
+    TagPipeline.enrichAndUpsert("overlap")(batch)
     assert(Seq("A", "B", "C", "D").forall(id =>
       store.get(id).exists(_.taxonomy.get.tags.get == Seq(AutoTag))))
   }
@@ -1130,7 +1130,7 @@ class StreamingSpec extends SparkSpec {
       val ids = Seq("B", "C", "D", "E", "F")
       val batch = ids.toDF("id").coalesce(1)
       val e = intercept[Exception](
-        TagPipeline.enrichAndUpsert("refuse-one", AutoTag)(batch))
+        TagPipeline.enrichAndUpsert("refuse-one")(batch))
       assert(running.get() == 0, s"${running.get()} updates still running")
       assert(done.get() == ids.size - 1, s"only ${done.get()} updates finished")
       val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
